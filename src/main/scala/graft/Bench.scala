@@ -319,7 +319,7 @@ object Bench {
           // (PairGraph / ClassifierArtifacts / BM25 scorer) — later
           // consumers run memo-warm, so per-query numbers are only
           // interpretable with the payer named in the line
-          val b0 = graft.operators.SharedBuilds.count
+          val b0 = graft.operators.SharedBuilds.timingCount
           val ce0 = cacheEvents.snapshot
           try {
             val iterRs = (1 to famIters).map { _ =>
@@ -352,7 +352,8 @@ object Bench {
             iterRs.minBy(_._1)._2.foreach { case (first, nb) =>
               sSplit ::= (short, (steady, first, nb))
             }
-            val tags = graft.operators.SharedBuilds.since(b0)
+            val tags = graft.operators.SharedBuilds.timingsSince(b0)
+              .map(_._1).distinct
             if (tags.nonEmpty)
               sharedBuilds ::= (short, tags)
             val ce1 = cacheEvents.snapshot

@@ -16,71 +16,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the persisted feature frame; this registry expresses that shape
   * in-process.
   *
-  * Mechanics are PairGraph's: memoized per (session, sfDir),
-  * materialized via EAGER `localCheckpoint` so the harness's per-query
-  * `TrackedCaches.releaseAll()` cannot drop the shared frame; entries
-  * die with their session, stopped-session keys are evicted on access.
-  * On a real cluster the same role is a durable parquet feature index
-  * (localCheckpoint blocks die with an executor). `buildCount` exists
-  * so a test can PROVE one gram build per session rather than trusting
-  * this comment; builds are also noted in [[SharedBuilds]] so the
-  * bench line names the consumer that paid.
+  * Memo, timing and release: [[SharedArtifact]]. Only the gram build is
+  * timed: the small weight and prior tables stay in their consumer's
+  * published per-query seconds.
   */
 object ClassifierArtifacts {
-  private val gramsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private val weightsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private val priorMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  @volatile private var builds = 0
-
-  /** Number of from-scratch gram-frame builds this JVM (test hook). */
-  def buildCount: Int = builds
-
-  private def evictStopped(): Unit = {
-    gramsMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    weightsMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    priorMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-  }
-
   /** The gram-occurrence frame (doc_id, source, good, b), built at most
     * once per (session, sfDir). */
-  def grams(s: SparkSession, dir: String): DataFrame = synchronized {
-    evictStopped()
-    gramsMemo.getOrElseUpdate((s, dir), {
-      builds += 1
-      System.err.println(
-        s"[classifier] building gram frame for $dir (build #$builds this JVM)")
-      SharedBuilds.timed("grams") {
-        Profiling.classifierGrams(s, dir).localCheckpoint(true)
-      }
-    })
-  }
+  def grams(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("grams", s, dir) {
+      Profiling.classifierGrams(s, dir).localCheckpoint(true)
+    }
 
   /** Smoothed per-bucket P(good) weight table (≤4096 rows), derived
     * from [[grams]], built at most once per (session, sfDir). */
-  def weights(s: SparkSession, dir: String): DataFrame = synchronized {
-    evictStopped()
-    weightsMemo.getOrElseUpdate((s, dir),
-      Profiling.classifierWeights(grams(s, dir)).localCheckpoint(true))
-  }
+  def weights(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("classifier-weights", s, dir, timed = false) {
+      Profiling.classifierWeights(grams(s, dir)).localCheckpoint(true)
+    }
 
   /** The gram-occurrence prior threshold (single row), built at most
     * once per (session, sfDir). */
-  def prior(s: SparkSession, dir: String): DataFrame = synchronized {
-    evictStopped()
-    priorMemo.getOrElseUpdate((s, dir),
-      Profiling.classifierPrior(grams(s, dir)).localCheckpoint(true))
-  }
+  def prior(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("classifier-prior", s, dir, timed = false) {
+      Profiling.classifierPrior(grams(s, dir)).localCheckpoint(true)
+    }
 
-  /** Drop all memoized artifacts and their blocks (test isolation). */
-  def reset(): Unit = synchronized {
-    (gramsMemo.values ++ weightsMemo.values ++ priorMemo.values)
-      .foreach(df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    gramsMemo.clear()
-    weightsMemo.clear()
-    priorMemo.clear()
-  }
+  /** Drop all memoized artifacts and free their blocks (test isolation). */
+  def reset(): Unit =
+    SharedArtifact.reset("grams", "classifier-weights", "classifier-prior")
 }

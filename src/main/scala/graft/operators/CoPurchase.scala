@@ -18,69 +18,35 @@ import org.apache.spark.sql.functions._
   * per snapshot and derives every downstream graph/recommendation
   * artifact from it; this registry expresses that shape in-process.
   *
-  * Mechanics are PairGraph's verbatim: memoized per (session, sfDir),
-  * materialized via EAGER `localCheckpoint` so the harness's per-query
-  * `TrackedCaches.releaseAll()` cannot drop the shared frames; entries
-  * die with their session, stopped-session keys are evicted on access;
-  * builds are charged to their own bench line via [[SharedBuilds]].
   * `pairSup` is UNthresholded (support rides as a column) so every
   * consumer applies its own threshold — the values are identical to
   * each query's former inline build, so the oracles are untouched.
+  * Memo, timing and release: [[SharedArtifact]].
   */
 object CoPurchase {
-  private val itemsMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private val pairSupMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  @volatile private var builds = 0
-
-  /** Number of from-scratch pair-support builds this JVM (test hook). */
-  def buildCount: Int = builds
-
-  private def evictStopped(): Unit = {
-    itemsMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    pairSupMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-  }
-
   /** Distinct (ok, pk) basket item table, built at most once per
     * (session, sfDir). */
-  def items(s: SparkSession, dir: String): DataFrame = synchronized {
-    evictStopped()
-    itemsMemo.getOrElseUpdate((s, dir), {
-      SharedBuilds.timed("copurchase-items") {
-        graft.Tables(s, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-          .localCheckpoint(true)
-      }
-    })
-  }
+  def items(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("copurchase-items", s, dir) {
+      graft.Tables(s, dir, "lineitem")
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
+        .localCheckpoint(true)
+    }
 
   /** Per-(u, v) co-purchase support counts (u < v, column `sup`),
     * UNthresholded, built at most once per (session, sfDir). */
-  def pairSup(s: SparkSession, dir: String): DataFrame = synchronized {
-    evictStopped()
-    pairSupMemo.getOrElseUpdate((s, dir), {
-      builds += 1
-      SharedBuilds.timed("copurchase-pairs") {
-        val it = items(s, dir)
-        it.as("a")
-          .join(it.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-          .agg(count(lit(1)).as("sup"))
-          .localCheckpoint(true)
-      }
-    })
-  }
-
-  /** Drop all memoized artifacts and their blocks (test isolation). */
-  def reset(): Unit = synchronized {
-    (itemsMemo.values ++ pairSupMemo.values).foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      CheckpointBlocks.release(df)
+  def pairSup(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("copurchase-pairs", s, dir) {
+      val it = items(s, dir)
+      it.as("a")
+        .join(it.as("b"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
+        .agg(count(lit(1)).as("sup"))
+        .localCheckpoint(true)
     }
-    itemsMemo.clear()
-    pairSupMemo.clear()
-  }
+
+  /** Drop all memoized artifacts and free their blocks (test isolation). */
+  def reset(): Unit = SharedArtifact.reset("copurchase-items", "copurchase-pairs")
 }

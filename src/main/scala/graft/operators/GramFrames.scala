@@ -17,52 +17,28 @@ import org.apache.spark.sql.functions._
   * sha2 pipeline from scratch — the q255-gram-frame rebuild smell the
   * round-8 verdict flagged.
   *
-  * Mechanics mirror [[PairGraph]]: memoized per (session, sfDir),
-  * materialized via EAGER `localCheckpoint` so the per-query
-  * TrackedCaches release leaves it alive; entries die with their session
-  * and stopped-session keys evict on access. At 100 TB this frame IS the
-  * persisted passage index a corpus snapshot builds once (the 32-byte
-  * digest, never the passage text, is what shuffles or stores).
-  * `buildCount` lets tests prove single-build rather than trusting this
-  * comment.
+  * At 100 TB this frame IS the persisted passage index a corpus
+  * snapshot builds once (the 32-byte digest, never the passage text, is
+  * what shuffles or stores). Memo, timing and release: [[SharedArtifact]].
   */
 object GramFrames {
-  private val word8Memo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  @volatile private var builds = 0
-
-  /** Number of from-scratch word-8-gram frame builds this JVM. */
-  def buildCount: Int = builds
-
   /** The corpus-wide (doc_id, source, h) frame: per-doc DISTINCT word
     * 8-grams as 32-byte sha2 digests, built at most once per
     * (session, sfDir). */
-  def word8(s: SparkSession, dir: String): DataFrame = synchronized {
-    word8Memo.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    word8Memo.getOrElseUpdate((s, dir), {
-      builds += 1
-      SharedBuilds.timed("word8-grams") {
-        graft.plans.GraftFunctions.register(s)
-        // spread: single-row-group fixture scan = one task for the
-        // explode + sha2 below (guide §2.5, r14)
-        graft.Tables.spread(
-            graft.Tables(s, dir, "documents")
-              .select("doc_id", "source", "text"), col("doc_id"))
-          .select(col("doc_id"), col("source"),
-            explode(array_distinct(
-              call_function("graft_word_ngrams", col("text"), lit(8)))).as("g"))
-          .select(col("doc_id"), col("source"), sha2(col("g"), 256).as("h"))
-          .localCheckpoint(true)
-      }
-    })
-  }
-
-  private val word8PosMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  @volatile private var posBuilds = 0
-
-  /** Number of from-scratch POSITIONAL gram frame builds this JVM. */
-  def posBuildCount: Int = posBuilds
+  def word8(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("word8-grams", s, dir) {
+      graft.plans.GraftFunctions.register(s)
+      // spread: single-row-group fixture scan = one task for the
+      // explode + sha2 below (guide §2.5, r14)
+      graft.Tables.spread(
+          graft.Tables(s, dir, "documents")
+            .select("doc_id", "source", "text"), col("doc_id"))
+        .select(col("doc_id"), col("source"),
+          explode(array_distinct(
+            call_function("graft_word_ngrams", col("text"), lit(8)))).as("g"))
+        .select(col("doc_id"), col("source"), sha2(col("g"), 256).as("h"))
+        .localCheckpoint(true)
+    }
 
   /** The corpus-wide POSITIONAL gram frame (doc_id, source, pos, h):
     * every sliding word-8-gram of every document with its 0-based word
@@ -72,37 +48,22 @@ object GramFrames {
     * positional sibling, built at most once per (session, sfDir) under
     * the same registry discipline. At 100 TB this is the positional
     * passage index (32-byte digest + two longs per gram, never text). */
-  def word8Pos(s: SparkSession, dir: String): DataFrame = synchronized {
-    word8PosMemo.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    word8PosMemo.getOrElseUpdate((s, dir), {
-      posBuilds += 1
-      SharedBuilds.timed("word8-grams-pos") {
-        graft.plans.GraftFunctions.register(s)
-        // spread: same single-task-scan rationale as [[word8]] (r14)
-        graft.Tables.spread(
-            graft.Tables(s, dir, "documents")
-              .select("doc_id", "source", "text"), col("doc_id"))
-          .select(col("doc_id"), col("source"),
-            posexplode(call_function("graft_word_ngrams", col("text"), lit(8)))
-              .as(Seq("pos", "g")))
-          .select(col("doc_id"), col("source"),
-            col("pos").cast("long").as("pos"),
-            sha2(col("g"), 256).as("h"))
-          .localCheckpoint(true)
-      }
-    })
-  }
-
-  /** Drop the memoized frames and their blocks (test isolation hook).
-    * The frames are backed by `localCheckpoint`, whose RDD blocks
-    * `Dataset.unpersist` does NOT release (ADVICE r10) — so free them at
-    * the RDD level via [[CheckpointBlocks.release]]. */
-  def reset(): Unit = synchronized {
-    (word8Memo.values ++ word8PosMemo.values).foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      CheckpointBlocks.release(df)
+  def word8Pos(s: SparkSession, dir: String): DataFrame =
+    SharedArtifact("word8-grams-pos", s, dir) {
+      graft.plans.GraftFunctions.register(s)
+      // spread: same single-task-scan rationale as [[word8]] (r14)
+      graft.Tables.spread(
+          graft.Tables(s, dir, "documents")
+            .select("doc_id", "source", "text"), col("doc_id"))
+        .select(col("doc_id"), col("source"),
+          posexplode(call_function("graft_word_ngrams", col("text"), lit(8)))
+            .as(Seq("pos", "g")))
+        .select(col("doc_id"), col("source"),
+          col("pos").cast("long").as("pos"),
+          sha2(col("g"), 256).as("h"))
+        .localCheckpoint(true)
     }
-    word8Memo.clear()
-    word8PosMemo.clear()
-  }
+
+  /** Drop the memoized frames and free their blocks (test isolation hook). */
+  def reset(): Unit = SharedArtifact.reset("word8-grams", "word8-grams-pos")
 }

@@ -22,50 +22,6 @@ final case class QueryDef(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None)
 
-/** Registry of DataFrames persisted INSIDE query definitions (shingle sets,
-  * staged corpora, …). Queries `track` what they persist; the harness
-  * (Verify/Bench) calls `releaseAll()` after each query's final action so
-  * cached blocks don't accumulate across a 59-query session — within one
-  * query the cache still prevents recomputation of expensive intermediates.
-  */
-object TrackedCaches {
-  private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  def track(df: DataFrame): DataFrame = synchronized { frames += df; df }
-  def releaseAll(): Unit = synchronized {
-    frames.foreach { f =>
-      try f.unpersist(blocking = false) catch { case _: Throwable => () }
-      CheckpointBlocks.release(f)
-    }
-    frames.clear()
-  }
-}
-
-/** Frees the executor blocks behind an eagerly `localCheckpoint`ed frame.
-  *
-  * `Dataset.unpersist` only clears CacheManager (plan-cache) entries; a
-  * checkpointed Dataset's plan is a `LogicalRDD` leaf whose BACKING RDD
-  * holds the blocks, so unpersist is a no-op on it and the blocks live
-  * until session stop (ADVICE r10: GramFrames.reset leaked them).
-  *
-  * Release ONLY when the frame's ROOT is the checkpoint leaf — i.e. the
-  * frame is itself the result of `localCheckpoint` (exactly what callers
-  * track/memoize). Walking ALL LogicalRDD leaves instead would also
-  * free session-shared artifacts EMBEDDED in a tracked frame's plan
-  * (a query that tracks `pairGraphMemo.join(...)` has the memo's leaf in
-  * its tree), killing every later consumer of the memo with
-  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — caught by the round-11 plan
-  * snapshot on q261/q307 before it shipped.
-  */
-object CheckpointBlocks {
-  def release(df: DataFrame): Unit =
-    try df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        try lr.rdd.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-      case _ => ()
-    } catch { case _: Throwable => () }
-}
-
 /** Exact-arithmetic helpers shared by the operator definitions.
   *
   * Why: the driver's correctness gate hash-compares cell values against

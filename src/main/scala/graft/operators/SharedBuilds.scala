@@ -5,13 +5,12 @@ package graft.operators
   * artifact absorbs the whole build while later consumers run warm, so
   * a per-query number is only interpretable if the line says who paid).
   *
-  * Every memoized registry ([[PairGraph]], [[ClassifierArtifacts]],
-  * [[graft.operators.TextAnalysis.retrievalScores]]) wraps its
-  * from-scratch build in [[timed]], which notes a tag AND records the
-  * build's wall seconds (SELF time — a nested timed build, e.g. pairs
-  * inside cc-labels, is charged to its own tag, not the parent's, so
-  * summing tags never double-counts). [[graft.Bench]] snapshots the
-  * event count around each timed query, emits a
+  * Every memoized registry builds through [[SharedArtifact]], which
+  * wraps each from-scratch build in [[timed]]: that records the tag and
+  * the build's wall seconds (SELF time — a nested timed build, e.g.
+  * pairs inside cc-labels, is charged to its own tag, not the parent's,
+  * so summing tags never double-counts). [[graft.Bench]] snapshots the
+  * record count around each timed query, emits a
   * `"shared_builds":{"q114":"pairs",...}` payer map, and (VERDICT r13
   * item 2) SUBTRACTS the slot's build seconds from the published
   * per-query value — slots record steady-state; builds get their own
@@ -20,7 +19,6 @@ package graft.operators
   * round-over-round trends read apples-to-apples again.
   */
 object SharedBuilds {
-  private val events = scala.collection.mutable.ArrayBuffer.empty[String]
   private val timings =
     scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
   // per-thread accumulator of completed CHILD build seconds, so a
@@ -28,10 +26,6 @@ object SharedBuilds {
   private val childSecs = new ThreadLocal[Double] {
     override def initialValue(): Double = 0.0
   }
-
-  /** Record one from-scratch build of the named shared artifact
-    * (tag only — prefer [[timed]], which also records seconds). */
-  def note(tag: String): Unit = synchronized { events += tag }
 
   /** Run `body` (the from-scratch build, including its eager
     * materialization) and record (tag, self seconds). */
@@ -43,18 +37,14 @@ object SharedBuilds {
     finally {
       val wall = (System.nanoTime() - t0) / 1e9
       val self = (wall - childSecs.get()).max(0.0)
-      synchronized { events += tag; timings += ((tag, self)) }
+      synchronized { timings += ((tag, self)) }
       childSecs.set(before + wall) // report full wall to OUR parent
     }
   }
 
-  /** Total build events this JVM (snapshot handle for [[since]]). */
-  def count: Int = synchronized { events.size }
-
-  /** Tags recorded after snapshot `n` (deduplicated, order kept). */
-  def since(n: Int): Seq[String] = synchronized {
-    events.drop(n).toList.distinct
-  }
+  /** Builds of the artifact `tag` this JVM — how tests prove a shared
+    * artifact was built once. */
+  def count(tag: String): Int = synchronized { timings.count(_._1 == tag) }
 
   /** Total timed-build records this JVM (handle for [[timingsSince]]). */
   def timingCount: Int = synchronized { timings.size }

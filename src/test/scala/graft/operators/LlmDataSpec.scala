@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, expr, lit, max, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +17,28 @@ class LlmDataSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def run(name: String) = SparkEntry.queries(name)(spark, dir)
+
+  /** Runs `consumers` from a freshly reset registry and proves they
+    * paid exactly one `tag` build between them; then proves the
+    * registry's reset frees the blocks behind every frame it memoizes
+    * (`memo`, read back through its accessors), checkpoint leaves
+    * included. */
+  private def assertBuildsOnce(tag: String, reset: () => Unit,
+      memo: Seq[(SparkSession, String) => DataFrame],
+      consumers: Seq[String], why: String): Unit = {
+    reset()
+    val before = SharedBuilds.count(tag)
+    consumers.foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
+    assert(SharedBuilds.count(tag) == before + 1, why)
+    def persisted = spark.sparkContext.getPersistentRDDs.keys.toSet
+    val ids = memo.map(_(spark, dir).queryExecution.analyzed)
+      .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    assert(ids.size == memo.size && ids.subsetOf(persisted),
+      s"every memoized frame must be a persisted checkpoint: $ids")
+    reset()
+    val kept = ids.intersect(persisted)
+    assert(kept.isEmpty, s"reset left RDDs ${kept.toSeq.sorted} persisted")
+  }
 
   test("q25 exact dedup finds exactly the re-crawled doc groups") {
     import spark.implicits._
@@ -272,13 +296,12 @@ class LlmDataSpec extends AnyFunSuite {
   test("pair graph builds ONCE and is shared by q26/q50/q96/q241/q246") {
     // VERDICT r7 item 2: the MinHash fixpoint must execute once per run,
     // with every consumer deriving from the shared intermediate. Proven
-    // by counter, not by reading the design comment.
-    PairGraph.reset()
-    val before = PairGraph.buildCount
-    Seq("q26_minhash_neardup", "q50_dup_clusters", "q96_neardup_materialize",
-      "q241_crosssource_neardup_matrix", "q246_cluster_modularity")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(PairGraph.buildCount == before + 1,
+    // by build count, not by reading the design comment.
+    assertBuildsOnce("pairs", () => PairGraph.reset(),
+      Seq(PairGraph.shingles, PairGraph.bandIndex, PairGraph.pairs,
+        PairGraph.labels),
+      Seq("q26_minhash_neardup", "q50_dup_clusters", "q96_neardup_materialize",
+        "q241_crosssource_neardup_matrix", "q246_cluster_modularity"),
       "five pair-graph consumers must trigger exactly one from-scratch build")
   }
 
@@ -286,12 +309,11 @@ class LlmDataSpec extends AnyFunSuite {
     // VERDICT r8 item 2: the corpus-wide char-3gram explode was rebuilt
     // by each consumer inside one session; the registry must make it a
     // single shared artifact — proven by counter, not by comment.
-    ClassifierArtifacts.reset()
-    val before = ClassifierArtifacts.buildCount
-    Seq("q255_hashed_ngram_classifier", "q262_perceptron_training",
-      "q264_dsir_importance_selection", "q268_score_calibration")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(ClassifierArtifacts.buildCount == before + 1,
+    assertBuildsOnce("grams", () => ClassifierArtifacts.reset(),
+      Seq(ClassifierArtifacts.grams, ClassifierArtifacts.weights,
+        ClassifierArtifacts.prior),
+      Seq("q255_hashed_ngram_classifier", "q262_perceptron_training",
+        "q264_dsir_importance_selection", "q268_score_calibration"),
       "four gram-frame consumers must trigger exactly one from-scratch build")
   }
 
@@ -299,13 +321,11 @@ class LlmDataSpec extends AnyFunSuite {
     // r14 optimization round: seven queries re-ran the 600 k-row
     // distinct + items self-join inline; the registry must make it one
     // shared artifact — proven by counter, not by comment.
-    CoPurchase.reset()
-    val before = CoPurchase.buildCount
-    Seq("q115_part_pair_support", "q129_triangle_count",
-      "q189_clustering_coefficient", "q192_kcore_peeling",
-      "q204_apriori_triples", "q225_also_bought", "q234_copurchase_bfs")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(CoPurchase.buildCount == before + 1,
+    assertBuildsOnce("copurchase-pairs", () => CoPurchase.reset(),
+      Seq(CoPurchase.items, CoPurchase.pairSup),
+      Seq("q115_part_pair_support", "q129_triangle_count",
+        "q189_clustering_coefficient", "q192_kcore_peeling",
+        "q204_apriori_triples", "q225_also_bought", "q234_copurchase_bfs"),
       "seven co-purchase consumers must trigger exactly one from-scratch build")
   }
 
@@ -313,12 +333,10 @@ class LlmDataSpec extends AnyFunSuite {
     // round 9: the passage-grain gram index joins the registry family —
     // three consumers (repeated-passage audit, novelty audit, streaming
     // novelty's static side) must share one explode → sha2 build.
-    GramFrames.reset()
-    val before = GramFrames.buildCount
-    Seq("q103_corpus_ngram_dedup", "q279_ingest_novelty_audit",
-      "s45_stream_ingest_novelty")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(GramFrames.buildCount == before + 1,
+    assertBuildsOnce("word8-grams", () => GramFrames.reset(),
+      Seq(GramFrames.word8),
+      Seq("q103_corpus_ngram_dedup", "q279_ingest_novelty_audit",
+        "s45_stream_ingest_novelty"),
       "three gram-frame consumers must trigger exactly one from-scratch build")
   }
 
@@ -326,11 +344,9 @@ class LlmDataSpec extends AnyFunSuite {
     // round 10: the run-coalescing family rides one positional gram
     // build — the corpus-wide audit and its streaming probe must share
     // it, proven by counter.
-    GramFrames.reset()
-    val before = GramFrames.posBuildCount
-    Seq("q318_exact_substring_runs", "s51_stream_substring_probe")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(GramFrames.posBuildCount == before + 1,
+    assertBuildsOnce("word8-grams-pos", () => GramFrames.reset(),
+      Seq(GramFrames.word8Pos),
+      Seq("q318_exact_substring_runs", "s51_stream_substring_probe"),
       "both run-audit consumers must trigger exactly one positional build")
   }
 
@@ -1784,11 +1800,9 @@ class LlmDataSpec extends AnyFunSuite {
     // round 9: the 6-round merge learning (6 driver actions over the
     // exploded word frame) is the offline tokenizer artifact — it must
     // not be relearned by every consumer in one session.
-    TextAnalysis.bpeReset()
-    val before = TextAnalysis.bpeBuildCount
-    Seq("q254_bpe_encode_token_costs", "q276_bpe_pack_accounting")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(TextAnalysis.bpeBuildCount == before + 1,
+    assertBuildsOnce("bpe-merges", () => TextAnalysis.bpeReset(),
+      Seq(TextAnalysis.bpeWordsShared),
+      Seq("q254_bpe_encode_token_costs", "q276_bpe_pack_accounting"),
       "two tokenizer consumers must trigger exactly one merges learn")
   }
 
@@ -1808,11 +1822,9 @@ class LlmDataSpec extends AnyFunSuite {
   test("BM25 retrieval scorer builds ONCE, shared by q263/q271") {
     // VERDICT r8 item 4: the scaladoc claimed "persisted once per run"
     // while each consumer rebuilt the scorer; now memoized for real.
-    TextAnalysis.retrievalReset()
-    val before = TextAnalysis.retrievalBuildCount
-    Seq("q263_retrieval_eval", "q271_hard_negative_mining")
-      .foreach(n => assert(run(n).count() > 0, s"$n returned no rows"))
-    assert(TextAnalysis.retrievalBuildCount == before + 1,
+    assertBuildsOnce("bm25", () => TextAnalysis.retrievalReset(),
+      Seq(TextAnalysis.retrievalScores),
+      Seq("q263_retrieval_eval", "q271_hard_negative_mining"),
       "two scorer consumers must trigger exactly one from-scratch build")
   }
 
