@@ -120,7 +120,7 @@ object Tables {
         finally r.close()
       } catch {
         // unreadable footer: do not block the no-op path on it
-        case _: Throwable => Int.MaxValue.toLong
+        case scala.util.control.NonFatal(_) => Int.MaxValue.toLong
       }
     })
 }

@@ -160,8 +160,8 @@ object Compaction {
     // in CompactionSpec). The write carries
     // `partitionOverwriteMode=dynamic` as a PER-WRITE option, so only
     // partitions present in the corrected frame are replaced — static
-    // mode would wipe the whole table. Backfill is marker-guarded and
-    // sf-keyed (both writes derive from the immutable source table, so
+    // mode would wipe the whole table. Backfill is staged once per
+    // fixture content (both writes derive from the source table, so
     // unlike q62's rewrite-every-run staging the result is reusable
     // across sessions); constructions after it stay lazy.
     QueryDef(

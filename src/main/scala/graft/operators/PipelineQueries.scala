@@ -28,23 +28,6 @@ import graft.pipeline.{Pipeline, PipelineConfig}
   */
 object PipelineQueries {
 
-  /** Isolated staging area per (query, fixture) so re-runs and
-    * concurrent queries never interfere. Files are (over)written
-    * idempotently. The key includes a FINGERPRINT of the fixture's
-    * documents.parquet (size + mtime): the at-most-once staging memo
-    * assumed fixtures are immutable, and a corpus regenerated in
-    * place (the r14 sf1 generator iterating) silently served the
-    * previous corpus's file bytes while the oracle read the new
-    * n_chars — the staging must invalidate with the data it stages. */
-  private def baseDir(name: String, dir: String): String = {
-    val sf = Paths.get(dir).getFileName.toString
-    val docs = Paths.get(dir, "documents.parquet")
-    val fp =
-      try s"${Files.size(docs)}_${Files.getLastModifiedTime(docs).toMillis}"
-      catch { case _: Throwable => "nofp" }
-    s"${System.getProperty("java.io.tmpdir")}/graft_pipeline/$name/${sf}_$fp"
-  }
-
   /** Registry for the local→local workloads. */
   private def localConfig: PipelineConfig = PipelineConfig(
     "LOCALSRC_TYPE" -> "local", "LOCALSRC_HOST" -> "localhost",
@@ -53,55 +36,15 @@ object PipelineQueries {
     // path, base.py:100-105):
     "TAPE_TYPE" -> "s3", "TAPE_HOST" -> "localhost")
 
-  /** Distributed staging: write each document's text as a source file
-    * (executor-side nio, no driver collect).
-    *
-    * Staged AT MOST ONCE per directory per JVM: the fixture content for a
-    * given (query, sf) staging dir never changes, so re-writing ~5000
-    * files on every bench iteration measured test scaffolding, not the
-    * pipeline (VERDICT r9 item 6 — the p-phase "creep" was re-staging
-    * cost riding every drain). Queries that stage INCREMENTALLY into one
-    * dir (p07's fix step) or use a fresh createTempDirectory per
-    * invocation anyway (p06, p07) pass memoize = false. */
-  private val stagedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def stageSourceFiles(docs: DataFrame, srcDir: String,
-      memoize: Boolean = true): Unit = {
-    // ADVICE r10: mark the dir staged only AFTER the write completes —
-    // the former add-first fast path let a partially-staged dir (write
-    // threw, or a second thread raced past the add) masquerade as
-    // complete for the rest of the JVM. The whole stage runs under one
-    // coarse lock (staging is at-most-once per dir, so contention is
-    // nil), and a SIBLING marker file records cross-JVM completion so a
-    // crashed prior stager's partial dir is re-staged, not trusted. The
-    // marker sits NEXT TO the dir, never inside it, so dir listings see
-    // only fixture files.
-    val marker = Paths.get(srcDir + "._staged")
-    stagedDirs.synchronized {
-      if (memoize && stagedDirs.contains(srcDir)) return
-      if (memoize && Files.exists(marker)) { stagedDirs.add(srcDir); return }
-      Files.deleteIfExists(marker)
-      Files.createDirectories(Paths.get(srcDir))
-      // spread before the write (r15, guide §2.5): the single-row-group
-      // fixture scan is ONE task, so the per-doc file writes ran
-      // serially on one core — P08Probe measured the p08 stage phase at
-      // 1.7 s single-task of its ~3 s committed slot. The guard keeps
-      // this a no-op on many-file production inputs.
-      Tables.spread(docs.select("doc_id", "text"), col("doc_id"))
-        .foreachPartition {
-        (rows: Iterator[org.apache.spark.sql.Row]) =>
-          rows.foreach { r =>
-            Files.write(
-              Paths.get(s"$srcDir/doc_${r.getLong(0)}.txt"),
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-      }
-      if (memoize) {
-        Files.write(marker, Array.emptyByteArray)
-        stagedDirs.add(srcDir)
-      }
-    }
-  }
+  /** `docs` staged once per fixture content as `<base>/src/doc_<id>.txt`;
+    * returns `<base>` (the pipeline writes its outputs to `<base>/dst`).
+    * Once, not per run: re-writing ~5000 files on every bench iteration
+    * measured test scaffolding, not the pipeline (VERDICT r9 item 6). */
+  private def stagedBase(name: String, dir: String, docs: DataFrame): String =
+    Staging.ensure(name, dir, s"$dir/documents.parquet") { d =>
+      Staging.writeDocFiles(docs, d.resolve("src").toString, "txt")
+      ""
+    }.toString
 
   /** Build raw JSON job messages (the Kafka value strings of S1) from
     * documents; host/path arguments are SQL column expressions so error
@@ -136,9 +79,8 @@ object PipelineQueries {
     QueryDef(
       "p01_local_roundtrip_status_counts",
       (s, dir) => {
-        val base = baseDir("p01", dir)
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs, s"$base/src")
+        val base = stagedBase("p01", dir, docs)
         val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
           concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
           concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
@@ -156,9 +98,8 @@ object PipelineQueries {
     QueryDef(
       "p02_dlq_on_missing_source",
       (s, dir) => {
-        val base = baseDir("p02", dir)
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs.filter(col("doc_id") % 10 =!= 0), s"$base/src")
+        val base = stagedBase("p02", dir, docs.filter(col("doc_id") % 10 =!= 0))
         val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
           concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
           concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
@@ -180,9 +121,8 @@ object PipelineQueries {
     QueryDef(
       "p03_dlq_on_corrupt_json",
       (s, dir) => {
-        val base = baseDir("p03", dir)
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs.filter(col("doc_id") % 7 =!= 0), s"$base/src")
+        val base = stagedBase("p03", dir, docs.filter(col("doc_id") % 7 =!= 0))
         val good = jobMessages(docs.filter(col("doc_id") % 7 =!= 0), lit("localsrc"), lit("localdst"),
           concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
           concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
@@ -217,9 +157,8 @@ object PipelineQueries {
     QueryDef(
       "p04_unknown_host_to_dlq",
       (s, dir) => {
-        val base = baseDir("p04", dir)
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs, s"$base/src")
+        val base = stagedBase("p04", dir, docs)
         val raw = jobMessages(docs,
           lit("localsrc"),
           when(col("doc_id") % 5 === 0, "mystery").otherwise("localdst"),
@@ -243,9 +182,8 @@ object PipelineQueries {
     QueryDef(
       "p05_unsupported_type_to_dlq",
       (s, dir) => {
-        val base = baseDir("p05", dir)
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs, s"$base/src")
+        val base = stagedBase("p05", dir, docs)
         val raw = jobMessages(docs,
           lit("localsrc"),
           when(col("doc_id") % 4 === 0, "tape").otherwise("localdst"),
@@ -280,7 +218,7 @@ object PipelineQueries {
           val docs = Tables(s, dir, "documents").filter(col("doc_id") < 1000)
           // stage source files inside the FTP server's root (driver-local
           // disk IS the remote server's storage here)
-          stageSourceFiles(docs, s"$root/src", memoize = false)
+          Staging.writeDocFiles(docs, s"$root/src", "txt")
           val pc = PipelineConfig(
             "BULKFTP_TYPE" -> "ftp", "BULKFTP_HOST" -> "127.0.0.1",
             "BULKFTP_PORT" -> server.port.toString,
@@ -319,8 +257,7 @@ object PipelineQueries {
         // would hand the next invocation an already-fixed first pass
         val base = Files.createTempDirectory("graft-p07").toString
         val docs = Tables(s, dir, "documents")
-        stageSourceFiles(docs.filter(col("doc_id") % 10 =!= 0), s"$base/src",
-          memoize = false)
+        Staging.writeDocFiles(docs.filter(col("doc_id") % 10 =!= 0), s"$base/src", "txt")
         val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
           concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
           concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
@@ -328,8 +265,7 @@ object PipelineQueries {
         val r1 = TrackedCaches.track(results1.toDF().persist(StorageLevel.MEMORY_AND_DISK))
         r1.count() // first pass executes here, BEFORE the fix below
         // operator intervention: the missing files appear
-        stageSourceFiles(docs.filter(col("doc_id") % 10 === 0), s"$base/src",
-          memoize = false)
+        Staging.writeDocFiles(docs.filter(col("doc_id") % 10 === 0), s"$base/src", "txt")
         val (results2, dlq2) = Pipeline.replayDlq(dlq1, localConfig)
         val r2 = TrackedCaches.track(results2.toDF().persist(StorageLevel.MEMORY_AND_DISK))
         r2.count()
@@ -392,7 +328,7 @@ object PipelineQueries {
         }
         try {
           val docs = Tables(s, dir, "documents").filter(col("doc_id") < 10000)
-          stageSourceFiles(docs, s"$root/src", memoize = false)
+          Staging.writeDocFiles(docs, s"$root/src", "txt")
           val pc = PipelineConfig(
             "BULKFTP_TYPE" -> "ftp", "BULKFTP_HOST" -> "127.0.0.1",
             "BULKFTP_PORT" -> server.port.toString,

@@ -8,10 +8,11 @@ import graft.Tables
 
 /** Non-parquet source coverage (SURVEY §2.9 row 1: CSV / JSON / binary
   * scans): each query materializes a deterministic derived copy of a
-  * fixture table in the target format (one-time staging per sf), reads it
-  * back through the corresponding Spark source, and aggregates — the
-  * DuckDB oracle computes the same result from the original parquet, so
-  * the round-trip through the format is what's being checked.
+  * fixture table in the target format (staged once per fixture content
+  * through [[Staging.ensure]]), reads it back through the corresponding
+  * Spark source, and aggregates — the DuckDB oracle computes the same
+  * result from the original parquet, so the round-trip through the
+  * format is what's being checked.
   *
   * 100 TB scale: CSV/JSON sources split by line across executors
   * (maxPartitionBytes), schema is always explicit (never inferSchema —
@@ -21,11 +22,6 @@ import graft.Tables
   */
 object Sources {
 
-  private def stagingDir(name: String, dir: String): String = {
-    val sf = Paths.get(dir).getFileName.toString
-    s"${System.getProperty("java.io.tmpdir")}/graft_sources/$name/$sf"
-  }
-
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- q36
@@ -33,15 +29,13 @@ object Sources {
     QueryDef(
       "q36_csv_scan",
       (s, dir) => {
-        val out = stagingDir("csv", dir)
-        // _SUCCESS marker (written by Spark's committer) guards against a
-        // half-staged dir left by an interrupted prior run
-        if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+        val out = Staging.ensure("csv", dir, s"$dir/orders.parquet") { d =>
           Tables(s, dir, "orders")
             .select(col("o_orderkey"), col("o_orderstatus"),
               col("o_totalprice"), col("o_orderpriority"))
-            .write.mode("overwrite").option("header", "true").csv(out)
-        }
+            .write.mode("overwrite").option("header", "true").csv(d.resolve("csv").toString)
+          ""
+        }.resolve("csv").toString
         s.read
           .schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, o_orderpriority STRING")
           .option("header", "true")
@@ -62,12 +56,12 @@ object Sources {
     QueryDef(
       "q37_json_scan",
       (s, dir) => {
-        val out = stagingDir("json", dir)
-        if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+        val out = Staging.ensure("json", dir, s"$dir/documents.parquet") { d =>
           Tables(s, dir, "documents")
             .select(col("doc_id"), col("lang"), col("n_chars"))
-            .write.mode("overwrite").json(out)
-        }
+            .write.mode("overwrite").json(d.resolve("json").toString)
+          ""
+        }.resolve("json").toString
         s.read
           .schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
           .json(out)
@@ -89,22 +83,10 @@ object Sources {
     QueryDef(
       "q38_binaryfile_scan",
       (s, dir) => {
-        val out = stagingDir("bin", dir)
-        if (!Files.exists(Paths.get(out, "_STAGED"))) {
-          Files.createDirectories(Paths.get(out))
-          // staging is scaffolding, but single-task it still bills the
-          // slot (r15: the docs scan is one row group — spread it)
-          graft.Tables.spread(
-            Tables(s, dir, "documents").select("doc_id", "text"),
-            col("doc_id"))
-            .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-              rows.foreach { r =>
-                Files.write(Paths.get(s"$out/doc_${r.getLong(0)}.bin"),
-                  r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              }
-            }
-          Files.write(Paths.get(out, "_STAGED"), Array.emptyByteArray)
-        }
+        val out = Staging.ensure("bin", dir, s"$dir/documents.parquet") { d =>
+          Staging.writeDocFiles(Tables(s, dir, "documents"), d.resolve("bin").toString, "bin")
+          ""
+        }.resolve("bin").toString
         s.read.format("binaryFile")
           .option("pathGlobFilter", "*.bin")
           .load(out)
@@ -131,19 +113,7 @@ object Sources {
         val root = Files.createTempDirectory("graft-q47-ftp")
         val server = new graft.pipeline.testkit.FakeFtpServer(root)
         try {
-          val docsDir = s"$root/docs" // String: the closure must not capture the Path
-          Files.createDirectories(Paths.get(docsDir))
-          // staging is scaffolding, but single-task it still bills the
-          // slot (r15: the docs scan is one row group — spread it)
-          graft.Tables.spread(
-            Tables(s, dir, "documents").select("doc_id", "text"),
-            col("doc_id"))
-            .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-              rows.foreach { r =>
-                Files.write(Paths.get(s"$docsDir/doc_${r.getLong(0)}.bin"),
-                  r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              }
-            }
+          Staging.writeDocFiles(Tables(s, dir, "documents"), s"$root/docs", "bin")
           val df = s.read.format("graft-ftp")
             .option("host", "127.0.0.1").option("port", server.port.toString)
             .option("username", "u").option("password", "p")
@@ -230,19 +200,7 @@ object Sources {
         val cp = Files.createTempDirectory("graft-s14-cp").toString
         val server = new graft.pipeline.testkit.FakeFtpServer(root)
         try {
-          val docsDir = s"$root/docs"
-          Files.createDirectories(Paths.get(docsDir))
-          // staging is scaffolding, but single-task it still bills the
-          // slot (r15: the docs scan is one row group — spread it)
-          graft.Tables.spread(
-            Tables(s, dir, "documents").select("doc_id", "text"),
-            col("doc_id"))
-            .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-              rows.foreach { r =>
-                Files.write(Paths.get(s"$docsDir/doc_${r.getLong(0)}.bin"),
-                  r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              }
-            }
+          Staging.writeDocFiles(Tables(s, dir, "documents"), s"$root/docs", "bin")
           val ftpStream = s.readStream.format("graft-ftp")
             .option("host", "127.0.0.1").option("port", server.port.toString)
             .option("username", "u").option("password", "p")
@@ -290,13 +248,13 @@ object Sources {
     QueryDef(
       "q61_orc_scan",
       (s, dir) => {
-        val out = stagingDir("orc", dir)
-        if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+        val out = Staging.ensure("orc", dir, s"$dir/lineitem.parquet") { d =>
           Tables(s, dir, "lineitem")
             .select(col("l_orderkey"), col("l_returnflag"),
               col("l_quantity"), col("l_extendedprice"))
-            .write.mode("overwrite").orc(out)
-        }
+            .write.mode("overwrite").orc(d.resolve("orc").toString)
+          ""
+        }.resolve("orc").toString
         s.read.orc(out)
           .groupBy("l_returnflag")
           .agg(
@@ -326,16 +284,16 @@ object Sources {
     QueryDef(
       "q68_schema_evolution_scan",
       (s, dir) => {
-        val base = stagingDir("schema_evo", dir)
-        if (!Files.exists(Paths.get(base, "gen=2", "_SUCCESS"))) {
+        val base = Staging.ensure("schema_evo", dir, s"$dir/orders.parquet") { d =>
           val orders = Tables(s, dir, "orders")
           orders.filter(col("o_orderkey") % 2 === 0)
             .select(col("o_orderkey"), col("o_totalprice"))
-            .write.mode("overwrite").parquet(s"$base/gen=1")
+            .write.mode("overwrite").parquet(d.resolve("lake/gen=1").toString)
           orders.filter(col("o_orderkey") % 2 === 1)
             .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-            .write.mode("overwrite").parquet(s"$base/gen=2")
-        }
+            .write.mode("overwrite").parquet(d.resolve("lake/gen=2").toString)
+          ""
+        }.resolve("lake").toString
         s.read.option("mergeSchema", "true").parquet(base)
           .groupBy(coalesce(col("o_orderpriority"), lit("missing")).as("prio"))
           .agg(count(lit(1)).as("n"), Exact.dsum(col("o_totalprice")).as("sum_total"))
@@ -359,15 +317,15 @@ object Sources {
     QueryDef(
       "q85_xml_scan",
       (s, dir) => {
-        val out = stagingDir("xml", dir)
-        if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+        val out = Staging.ensure("xml", dir, s"$dir/part.parquet") { d =>
           Tables(s, dir, "part")
             .select(col("p_partkey"), col("p_brand"), col("p_size"),
               col("p_retailprice"))
             .write.mode("overwrite")
             .option("rootTag", "parts").option("rowTag", "part")
-            .format("xml").save(out)
-        }
+            .format("xml").save(d.resolve("xml").toString)
+          ""
+        }.resolve("xml").toString
         s.read
           .schema("p_partkey BIGINT, p_brand STRING, p_size INT, p_retailprice DOUBLE")
           .option("rowTag", "part")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.operators.{CurationRules, Exact, QueryDef}
+import graft.operators.{CurationRules, Exact, QueryDef, Staging, StagingCleanup}
 
 /** Event-time streaming operators over the `events` fixture — the
   * streaming twins of q19 (tumbling window) and q20 (sessionization),
@@ -291,109 +291,90 @@ object StreamingQueries {
       .withColumn("event_id", lit(-1L))
   }
 
-  // Staging discipline (ADVICE r5): landing dirs are keyed by fixture
-  // CONTENT (regenerated fixtures restage fresh), markers are placed by
-  // atomic move, and concurrent stagers of the same keyed dir write
-  // byte-identical files via atomic per-file moves — shared with the
-  // batch-side staging in graft.operators.Staging.
-  private def fixtureKey(path: String): String =
-    graft.operators.Staging.fixtureKey(path)
-  private def placeMarker(marker: java.nio.file.Path): Unit =
-    graft.operators.Staging.placeMarker(marker)
+  /** One slice of a streaming landing: `df`, already partitioned into
+    * `files` parts, lands its k-th part file as `name(k)`. */
+  private final case class Slice(df: DataFrame, files: Int, name: Int => String)
 
-  /** Write `df` into a process-private temp dir and return its parquet
-    * part files sorted by name (partition order). The temp dir is
-    * created by `createTempDirectory` (pid-unique), so concurrent JVMs
-    * staging the same landing dir can never see each other's
-    * half-written files — only the atomic per-file moves that follow. */
-  private def parquetParts(df: org.apache.spark.sql.DataFrame): Seq[java.nio.file.Path] = {
-    import java.nio.file.Files
+  /** Stage `slices` once per content of `fixture` as the landing `name`
+    * and open it as a parquet file stream (layout, file naming and the
+    * `ascending` mtime rule: [[graft.operators.Staging]]). */
+  private def landing(s: SparkSession, name: String, dir: String, fixture: String,
+      schema: org.apache.spark.sql.types.StructType, ascending: Boolean = false,
+      maxFilesPerTrigger: Option[Int] = None)(slices: => Seq[Slice]): DataFrame = {
+    import java.nio.file.{Files, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
     import scala.jdk.CollectionConverters._
-    val tmpOut = Files.createTempDirectory("graft_stage").resolve("out")
-    df.write.mode("overwrite").parquet(tmpOut.toString)
-    Files.list(tmpOut).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
-  }
-
-  private def eventsStream(s: SparkSession, dir: String, copies: Int = 1,
-      flushSentinel: Boolean = false): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val path = s"$dir/events.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    // "-p4" suffix (r15): the staging FORMAT changed (see below) — a new
-    // landing key keeps any pre-r15 single-file staging from mixing with
-    // the 4-part staging in one directory (the file source reads every
-    // parquet file it finds, so a stale extra copy would duplicate rows)
-    val variant = s"x$copies${if (flushSentinel) "s" else ""}-p4"
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_events/$sf-${fixtureKey(path)}/$variant")
-    val marker = landing.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      // Each copy is staged as FOUR parquet part-files rather than a
-      // verbatim copy of the single-file fixture (r15): the fixture is
-      // ONE row group, so a verbatim copy makes every micro-batch scan
-      // run as ONE task no matter the split size — s15's whole 1M-row
-      // Complete-mode aggregate ran single-task (first batch 2.8 s of
-      // its 3.6 s slot, guide §2.5 "one huge unsplittable file"). Four
-      // part files give the batch scan four independent splits. All
-      // files land before the marker, so the drain still sees one
-      // arrival set (the batch structure is unchanged: AvailableNow
-      // with no maxFilesPerTrigger reads them in one batch); per-file
-      // atomic moves + the marker keep the at-most-once discipline.
-      for (i <- 1 to copies) {
-        val parts = parquetParts(s.read.parquet(path).repartition(4))
-        parts.zipWithIndex.foreach { case (p, j) =>
-          Files.move(p, landing.resolve(s"events_${i}_$j.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
+    val landed = Staging.ensure(name, dir, fixture) { d =>
+      val tmp = d.resolve("_parts")
+      var seq = 0
+      slices.foreach { sl =>
+        sl.df.write.mode("overwrite").parquet(tmp.toString)
+        val ls = Files.list(tmp)
+        val parts = try ls.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .toSeq.sortBy(_.getFileName.toString) // partition order
+        finally ls.close()
+        require(parts.size == sl.files,
+          s"$name: expected ${sl.files} parts, got ${parts.size}")
+        parts.zipWithIndex.foreach { case (p, k) =>
+          val dest = d.resolve(sl.name(k))
+          Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
+          seq += 1
+          if (ascending)
+            Files.setLastModifiedTime(dest, FileTime.fromMillis(1000000000000L + seq * 60000L))
         }
       }
-      if (flushSentinel) {
-        val part = parquetParts(sentinelRow(s, path).coalesce(1)).head
-        Files.move(part, landing.resolve("events_sentinel.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      placeMarker(marker)
+      StagingCleanup.delete(tmp)
+      ""
     }
-    val schema = s.read.parquet(path).schema
-    val stream0 = s.readStream.schema(schema).parquet(landing.toString)
-    stream0
-      .withColumn("ts_us", graft.Tables.tsUsCol(stream0))
+    val r = s.readStream.schema(schema)
+    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n.toLong))
+      .parquet(landed.toString)
+  }
+
+  /** The events stream's canonical time columns (see [[graft.Tables.events]]). */
+  private def withEventTime(stream: DataFrame): DataFrame =
+    stream
+      .withColumn("ts_us", graft.Tables.tsUsCol(stream))
       .withColumn("ts_t", timestamp_micros(col("ts_us")))
+
+  /** Each copy of the events table is staged as FOUR parquet part-files
+    * rather than a verbatim copy of the single-file fixture (r15): the
+    * fixture is ONE row group, so a verbatim copy makes every
+    * micro-batch scan run as ONE task no matter the split size — s15's
+    * whole 1M-row Complete-mode aggregate ran single-task (first batch
+    * 2.8 s of its 3.6 s slot, guide §2.5 "one huge unsplittable file").
+    * Four part files give the batch scan four independent splits. All
+    * files land before the marker, so the drain still sees one arrival
+    * set (AvailableNow with no maxFilesPerTrigger reads them in one
+    * batch). */
+  private def eventsStream(s: SparkSession, dir: String, copies: Int = 1,
+      flushSentinel: Boolean = false): DataFrame = {
+    val path = s"$dir/events.parquet"
+    val variant = s"x$copies${if (flushSentinel) "s" else ""}"
+    withEventTime(landing(s, s"stream_events_$variant", dir, path,
+        s.read.parquet(path).schema) {
+      (1 to copies).map(i =>
+        Slice(s.read.parquet(path).repartition(4), 4, j => s"events_${i}_$j.parquet")) ++
+        (if (flushSentinel)
+          Seq(Slice(sentinelRow(s, path).coalesce(1), 1, _ => "events_sentinel.parquet"))
+        else Nil)
+    })
   }
 
   /** Stream the events table split into 4 parquet part-files, read with
     * maxFilesPerTrigger = 1 — an AvailableNow drain then runs one
     * micro-batch per file over the same rows (bounded batch size, the
-    * backpressure configuration). Staged through a process-private temp
-    * dir + atomic per-file moves + atomic marker into a fixture-keyed
-    * landing dir; the file stream ignores the underscore marker.
+    * backpressure configuration).
     * DELIBERATELY kept at 1 in r15 (unlike the grouped part sources
     * below): s11 exists to demonstrate the one-file-per-trigger
     * backpressure shape and StreamingSpec pins its >= 4 data batches. */
   private[streaming] def eventsStreamParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val path = s"$dir/events.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_parts/$sf-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      parquetParts(s.read.parquet(path).repartition(4)).zipWithIndex
-        .foreach { case (p, i) =>
-          Files.move(p, landing.resolve(s"part_$i.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-      placeMarker(marker)
-    }
-    val stream0 = s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", 1).parquet(landing.toString)
-    stream0
-      .withColumn("ts_us", graft.Tables.tsUsCol(stream0))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    withEventTime(landing(s, "stream_events_parts", dir, path,
+        s.read.parquet(path).schema, maxFilesPerTrigger = Some(1)) {
+      Seq(Slice(s.read.parquet(path).repartition(4), 4, i => s"part_$i.parquet"))
+    })
   }
 
   /** Time-ordered 4-part landing + far-future sentinel: parts hold
@@ -403,8 +384,7 @@ object StreamingQueries {
     * batches — event-time timeouts then fire mid-stream, not only at the
     * final sentinel flush. Ranges come from ONE distributed
     * `repartitionByRange` job (sampled boundaries, partition i = i-th
-    * ascending range — no global single-partition window anywhere), and
-    * land via atomic moves + atomic marker in a fixture-keyed dir.
+    * ascending range — no global single-partition window anywhere).
     *
     * `maxFilesPerTrigger = 2` (r15, VERDICT r14 item 3): the 17
     * consumers of this source are micro-batch-OVERHEAD bound at bench
@@ -421,37 +401,14 @@ object StreamingQueries {
     * drained set to a batch SQL result), so the grouping cannot change
     * any result — the full selfcheck re-ran green on all 70 s-queries. */
   private[streaming] def eventsStreamTimeParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    import scala.jdk.CollectionConverters._
     val path = s"$dir/events.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_tparts/$sf-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      def place(part: java.nio.file.Path, name: String, seq: Int): Unit = {
-        val dest = landing.resolve(name)
-        Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-        // deterministic ascending mtimes: the file source orders
-        // unprocessed files by modification time
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(1000000000000L + seq * 60000L))
-      }
-      val parts = parquetParts( // part-0000i = i-th ascending range
-        s.read.parquet(path).repartitionByRange(4, col("ts"), col("event_id")))
-      require(parts.size == 4, s"expected 4 range parts, got ${parts.size}")
-      parts.zipWithIndex.foreach { case (p, i) => place(p, s"part_${i + 1}.parquet", i + 1) }
-      place(parquetParts(sentinelRow(s, path).coalesce(1)).head,
-        "part_5_sentinel.parquet", 5)
-      placeMarker(marker)
-    }
-    val stream0 = s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(landing.toString)
-    stream0
-      .withColumn("ts_us", graft.Tables.tsUsCol(stream0))
-      .withColumn("ts_t", timestamp_micros(col("ts_us")))
+    withEventTime(landing(s, "stream_events_tparts", dir, path,
+        s.read.parquet(path).schema, ascending = true, maxFilesPerTrigger = Some(2)) {
+      Seq(
+        Slice(s.read.parquet(path).repartitionByRange(4, col("ts"), col("event_id")),
+          4, i => s"part_${i + 1}.parquet"),
+        Slice(sentinelRow(s, path).coalesce(1), 1, _ => "part_5_sentinel.parquet"))
+    })
   }
 
   /** 10-minute session gap (same semantics as batch q20). */
@@ -747,6 +704,40 @@ object StreamingQueries {
       }
   }
 
+  /** Stream the documents table through a file source — the arrival
+    * folder of a corpus-ingest stream, staged as 4 parts for the
+    * [[eventsStream]] reason: a verbatim copy of the single-row-group
+    * fixture makes the batch scan ONE task; four part files give it four
+    * splits. */
+  private def documentsStream(s: SparkSession, dir: String): DataFrame = {
+    val path = s"$dir/documents.parquet"
+    landing(s, "stream_docs", dir, path, s.read.parquet(path).schema) {
+      Seq(Slice(s.read.parquet(path).repartition(4), 4, j => s"documents_1_$j.parquet"))
+    }
+  }
+
+  /** `batch` staged as 3 doc_id-ranged parts with ascending mtimes —
+    * a corpus-delta arrival folder (each part = one ingest tick).
+    *
+    * `maxFilesPerTrigger = 2` (r15, VERDICT r14 item 3): the ~30
+    * consumers are stateless or stream-static probes whose oracles pin
+    * the final drained set to a batch SQL result — tick-count-free by
+    * construction — while each extra micro-batch pays fixed
+    * plan/schedule/sink costs. Two data batches (parts 1+2 | part 3)
+    * still exercise multi-tick arrival; the full selfcheck re-ran
+    * green on every consumer. */
+  private def rangedArrivals(s: SparkSession, name: String, dir: String,
+      batch: DataFrame): DataFrame =
+    landing(s, name, dir, s"$dir/documents.parquet", batch.schema,
+        ascending = true, maxFilesPerTrigger = Some(2)) {
+      Seq(Slice(batch.repartitionByRange(3, col("doc_id")), 3, i => s"part_${i + 1}.parquet"))
+    }
+
+  /** The documents table as ranged arrivals — the documents twin of
+    * [[eventsStreamTimeParts]]. */
+  private def documentsStreamParts(s: SparkSession, dir: String): DataFrame =
+    rangedArrivals(s, "stream_docs_parts", dir, s.read.parquet(s"$dir/documents.parquet"))
+
   /** Run `build`'s streaming output to a per-drain parquet directory via
     * foreachBatch, drain with AvailableNow, read the result back.
     *
@@ -759,70 +750,6 @@ object StreamingQueries {
     * mode: each Complete batch rewrites the full result, each Append batch
     * adds its finalized rows, so the directory's final contents equal the
     * memory sink's table in both modes. */
-  /** Stream the documents table through a file source — the arrival
-    * folder of a corpus-ingest stream (same staging discipline as
-    * [[eventsStream]]: copy-then-atomic-move into a landing dir). */
-  private def documentsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val path = s"$dir/documents.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    // 4-part staging + content-keyed dir (r15) — the eventsStream
-    // rationale: a verbatim copy of the single-row-group fixture makes
-    // the batch scan ONE task; four part files give it four splits.
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_docs/$sf-${fixtureKey(path)}-p4")
-    val marker = landing.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      parquetParts(s.read.parquet(path).repartition(4)).zipWithIndex
-        .foreach { case (p, j) =>
-          Files.move(p, landing.resolve(s"documents_1_$j.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-      placeMarker(marker)
-    }
-    s.readStream
-      .schema(s.read.parquet(path).schema)
-      .parquet(landing.toString)
-  }
-
-  /** Documents staged as 3 doc_id-ranged parts with ascending mtimes —
-    * the corpus-delta arrival folder (each part = one ingest tick), the
-    * documents twin of [[eventsStreamTimeParts]].
-    *
-    * `maxFilesPerTrigger = 2` (r15, VERDICT r14 item 3): the ~30
-    * consumers are stateless or stream-static probes whose oracles pin
-    * the final drained set to a batch SQL result — tick-count-free by
-    * construction — while each extra micro-batch pays fixed
-    * plan/schedule/sink costs. Two data batches (parts 1+2 | part 3)
-    * still exercise multi-tick arrival; the full selfcheck re-ran
-    * green on every consumer. */
-  private def documentsStreamParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val path = s"$dir/documents.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_docs_parts/$sf-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      val parts = parquetParts(
-        s.read.parquet(path).repartitionByRange(3, col("doc_id")))
-      require(parts.size == 3, s"expected 3 range parts, got ${parts.size}")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val dest = landing.resolve(s"part_${i + 1}.parquet")
-        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-      }
-      placeMarker(marker)
-    }
-    s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(landing.toString)
-  }
-
   private def drain(s: SparkSession, mode: OutputMode)(df: DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths}
     val out = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_drain",
@@ -3957,98 +3884,30 @@ object StreamingQueries {
           concat(lit("novel content batch item "),
             col("doc_id").cast("string")).as("text")))
 
-  /** The ingest batch staged as 3 doc_id-ranged parquet parts arriving
-    * one per trigger (the documentsStreamParts discipline). */
-  private def ingestBatchStreamParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val path = s"$dir/documents.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_ingest_parts/$sf-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    val batch = ingestBatch(s.read.parquet(path).select("doc_id", "text"))
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      val parts = parquetParts(batch.repartitionByRange(3, col("doc_id")))
-      require(parts.size == 3, s"expected 3 range parts, got ${parts.size}")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val dest = landing.resolve(s"part_${i + 1}.parquet")
-        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-      }
-      placeMarker(marker)
-    }
-    s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2) // tick grouping, r15 — see documentsStreamParts
-      .parquet(landing.toString)
-  }
+  /** The ingest batch as ranged arrivals, one tick per part. */
+  private def ingestBatchStreamParts(s: SparkSession, dir: String): DataFrame =
+    rangedArrivals(s, "stream_ingest_parts", dir,
+      ingestBatch(s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")))
 
-  /** s70's arrival wave staged as 3 time-ordered parquet parts — the
-    * SHARED q371 plant (TrainingDataOps.novelArrivals: verbatim
-    * re-crawls + fresh synthetic items) under the same content-keyed
-    * at-most-once staging discipline as [[ingestBatchStreamParts]]. */
-  private def novelArrivalStreamParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val path = s"$dir/documents.parquet"
-    val sf = Paths.get(dir).getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_novel_parts/$sf-v2-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    val batch = graft.operators.TrainingDataOps.novelArrivals(
-      s.read.parquet(path).select("doc_id", "source", "text"))
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      val parts = parquetParts(batch.repartitionByRange(3, col("doc_id")))
-      require(parts.size == 3, s"expected 3 range parts, got ${parts.size}")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val dest = landing.resolve(s"part_${i + 1}.parquet")
-        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-      }
-      placeMarker(marker)
-    }
-    s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2) // tick grouping, r15 — see documentsStreamParts
-      .parquet(landing.toString)
-  }
+  /** s70's arrival wave as ranged arrivals — the SHARED q371 plant
+    * (TrainingDataOps.novelArrivals: verbatim re-crawls + fresh
+    * synthetic items). */
+  private def novelArrivalStreamParts(s: SparkSession, dir: String): DataFrame =
+    rangedArrivals(s, "stream_novel_parts", dir,
+      graft.operators.TrainingDataOps.novelArrivals(
+        s.read.parquet(s"$dir/documents.parquet").select("doc_id", "source", "text")))
 
-  /** s56's arriving batch staged as 3 time-ordered parquet parts: the
-    * SECOND template-variant wave (doc_id % 9 == 0, ' ref <7d+2>'
-    * suffix — skeleton-known, raw-hash-new) plus genuinely novel items
-    * (doc_id % 9 == 1). Same content-keyed at-most-once staging
-    * discipline as [[ingestBatchStreamParts]]. */
+  /** s56's arriving batch as ranged arrivals: the SECOND
+    * template-variant wave (doc_id % 9 == 0, ' ref <7d+2>' suffix —
+    * skeleton-known, raw-hash-new) plus genuinely novel items
+    * (doc_id % 9 == 1). */
   private def templateArrivalStreamParts(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val path = s"$dir/documents.parquet"
-    val sf = Paths.get(path).getParent.getFileName.toString
-    val landing = Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_stream_template_parts/$sf-${fixtureKey(path)}")
-    val marker = landing.resolve("_STAGED")
-    val docs = s.read.parquet(path).select("doc_id", "source", "text")
-    val batch = graft.operators.Dedup.templateVariant(docs, 400000, 7, 2)
-      .unionByName(docs.filter(col("doc_id") % 9 === 1)
-        .select((col("doc_id") + 500000).as("doc_id"), col("source"),
-          concat(lit("fresh template item "),
-            col("doc_id").cast("string")).as("text")))
-    if (!Files.exists(marker)) {
-      Files.createDirectories(landing)
-      val parts = parquetParts(batch.repartitionByRange(3, col("doc_id")))
-      require(parts.size == 3, s"expected 3 range parts, got ${parts.size}")
-      parts.zipWithIndex.foreach { case (p, i) =>
-        val dest = landing.resolve(s"part_${i + 1}.parquet")
-        Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          FileTime.fromMillis(1000000000000L + (i + 1) * 60000L))
-      }
-      placeMarker(marker)
-    }
-    s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2) // tick grouping, r15 — see documentsStreamParts
-      .parquet(landing.toString)
+    val docs = s.read.parquet(s"$dir/documents.parquet").select("doc_id", "source", "text")
+    rangedArrivals(s, "stream_template_parts", dir,
+      graft.operators.Dedup.templateVariant(docs, 400000, 7, 2)
+        .unionByName(docs.filter(col("doc_id") % 9 === 1)
+          .select((col("doc_id") + 500000).as("doc_id"), col("source"),
+            concat(lit("fresh template item "),
+              col("doc_id").cast("string")).as("text"))))
   }
 }
