@@ -64,6 +64,8 @@ import org.apache.spark.sql.SparkSession
   * BENCH_FULL_<sf>.json (env SPARK_GRAFT_BENCH_FULL) and committed;
   * stdout carries a compact, always-parsing line — slowest-12 +
   * iso adjudications + shared-build payers + summary fields LAST.
+  * The full record's `stages` map holds each slot's [[StageAnatomy]];
+  * the line's `serial_hot` names the top-3 slots with serial stages.
   */
 /** Cache-event counters (VERDICT r10 item 1): suite-slot anomalies
   * (q297 r9, q83 r10) were block-eviction/recompute storms invisible in
@@ -98,6 +100,91 @@ final class CacheEvents extends org.apache.spark.scheduler.SparkListener {
       e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
     record(e.blockUpdatedInfo.blockId, e.blockUpdatedInfo.storageLevel)
   def snapshot: (Long, Long, Long) = (readds.get, spills.get, evicts.get)
+}
+
+/** Per-slot stage anatomy, the record's answer to "where did this slot's
+  * time go": jobs, stages, tasks, Σ task run time, the longest task,
+  * shuffle and spill volume, effective parallelism and serial stages.
+  *
+  * Attribution is by slot, not by timing: Bench sets [[StageAnatomy.Key]]
+  * as a local property around each measured drain ([[StageAnatomy.within]]).
+  * Spark stamps local properties on every job and stage it submits, and
+  * child threads — a stream's execution thread included — inherit them.
+  * The job group is not used because Structured Streaming overwrites it
+  * with the run id. Read a slot only after its session has stopped:
+  * `SparkContext.stop` drains the listener bus, so no event is still in
+  * flight.
+  *
+  * A SERIAL stage (one stage attempt) ran more than 0.5 s of task time
+  * at under 1.5 tasks' worth of parallelism (Σrun / longest task) — the
+  * rule perfbench's `SparkLayer.window` applies, so the two records
+  * agree. The accumulation core ([[task]], [[summary]]) is separated from
+  * the listener plumbing so BenchSpec drives it with synthetic tasks.
+  */
+final class StageAnatomy extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.scheduler._
+  private final class Slot {
+    var jobs = 0
+    var tasks, runMs, maxMs, readB, writeB, spillB = 0L
+    // (stage, attempt) -> (Σ run ms, longest task ms)
+    val stages = scala.collection.mutable.Map.empty[(Int, Int), (Long, Long)]
+  }
+  private val slots = scala.collection.mutable.Map.empty[String, Slot]
+  private val stageSlot = scala.collection.mutable.Map.empty[Int, String]
+  private def slotOf(p: java.util.Properties): Option[String] =
+    Option(p).flatMap(pp => Option(pp.getProperty(StageAnatomy.Key)))
+
+  def task(slot: String, stage: Int, attempt: Int, runMs: Long,
+      readB: Long, writeB: Long, spillB: Long): Unit = synchronized {
+    val s = slots.getOrElseUpdate(slot, new Slot)
+    s.tasks += 1; s.runMs += runMs; s.maxMs = math.max(s.maxMs, runMs)
+    s.readB += readB; s.writeB += writeB; s.spillB += spillB
+    val (sum, max) = s.stages.getOrElse((stage, attempt), (0L, 0L))
+    s.stages((stage, attempt)) = (sum + runMs, math.max(max, runMs))
+  }
+
+  /** The slot's anatomy over a drain of `wallSec` on `cores` cores. */
+  def summary(slot: String, wallSec: Double, cores: Int)
+      : StageAnatomy.Summary = synchronized {
+    val s = slots.getOrElse(slot, new Slot)
+    val serial = s.stages.values.filter { case (sum, max) =>
+      sum > 500 && sum.toDouble / math.max(max, 1L) < 1.5 }
+    StageAnatomy.Summary(s.jobs, s.stages.size, s.tasks, s.runMs / 1e3,
+      s.maxMs / 1e3, s.readB / 1e6, s.writeB / 1e6, s.spillB / 1e6,
+      s.runMs / 1e3 / (math.max(wallSec, 1e-3) * cores),
+      serial.size, serial.map(_._1).sum / 1e3)
+  }
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    slotOf(e.properties).foreach { k => slots.getOrElseUpdate(k, new Slot).jobs += 1 }
+  }
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    synchronized {
+      slotOf(e.properties).foreach(k => stageSlot(e.stageInfo.stageId) = k)
+    }
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    val m = e.taskMetrics
+    val slot = synchronized(stageSlot.get(e.stageId))
+    if (m != null) slot.foreach(task(_, e.stageId, e.stageAttemptId,
+      m.executorRunTime,
+      m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead,
+      m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled))
+  }
+}
+
+object StageAnatomy {
+  val Key = "graft.bench.slot"
+
+  final case class Summary(jobs: Int, stages: Int, tasks: Long,
+      taskRunS: Double, taskMaxS: Double, shuffleReadMb: Double,
+      shuffleWriteMb: Double, spillMb: Double, effParallelism: Double,
+      serialStages: Int, serialS: Double)
+
+  /** Runs `body` with every job it submits attributed to `slot`. */
+  def within[T](sc: org.apache.spark.SparkContext, slot: String)(body: => T): T = {
+    sc.setLocalProperty(Key, slot)
+    try body finally sc.setLocalProperty(Key, null)
+  }
 }
 
 object Bench {
@@ -197,17 +284,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_ISO_BUDGET_SEC", "240").toDouble
 
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-        // realistic small-file open cost — see GraftSession.builder
-        .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
@@ -293,6 +370,9 @@ object Bench {
     // first batch paid a shared build can show first > total and a
     // clamped steady of 0 — read the builds line alongside.
     var sSplit = List.empty[(String, (Double, Double, Long))]
+    // per-slot stage anatomy of the min-raw iteration (the one s_split
+    // reads), summarised once its phase's session has stopped
+    var stageRecs = List.empty[(String, StageAnatomy.Summary)]
     val results = phases.flatMap { case (family, names, warmup) =>
       if (names.isEmpty) Seq.empty
       else {
@@ -301,6 +381,11 @@ object Bench {
         if (family == "s") graft.streaming.StreamDrainStats.enable()
         cacheEvents = new CacheEvents
         spark.sparkContext.addSparkListener(cacheEvents)
+        val anatomy = new StageAnatomy
+        spark.sparkContext.addSparkListener(anatomy)
+        // slot short-name -> (anatomy key, raw wall sec) of its min-raw
+        // iteration
+        var phaseSlots = List.empty[(String, String, Double)]
         val warmT0 = System.nanoTime()
         warmup.foreach { w =>
           try drain(spark, w)
@@ -322,24 +407,27 @@ object Bench {
           val b0 = graft.operators.SharedBuilds.timingCount
           val ce0 = cacheEvents.snapshot
           try {
-            val iterRs = (1 to famIters).map { _ =>
+            val iterRs = (1 to famIters).map { i =>
               if (family == "s") graft.streaming.StreamDrainStats.reset()
               val bt0 = graft.operators.SharedBuilds.timingCount
-              val t0 = System.nanoTime()
-              // release stays INSIDE the timed region (floor
-              // comparability with prior rounds); deltas span the whole
-              // query including its releases, which is safe because
-              // deliberate unpersists don't reach the BlockUpdated
-              // counters (see CacheEvents note)
-              drain(spark, name)
-              val sec = (System.nanoTime() - t0) / 1e9
+              val key = s"$name#$i"
+              val sec = StageAnatomy.within(spark.sparkContext, key) {
+                val t0 = System.nanoTime()
+                // release stays INSIDE the timed region (floor
+                // comparability with prior rounds); deltas span the
+                // whole query including its releases, which is safe
+                // because deliberate unpersists don't reach the
+                // BlockUpdated counters (see CacheEvents note)
+                drain(spark, name)
+                (System.nanoTime() - t0) / 1e9
+              }
               val bSec = graft.operators.SharedBuilds
                 .timingsSince(bt0).map(_._2).sum
               val split =
                 if (family == "s")
                   Some(graft.streaming.StreamDrainStats.snapshot)
                 else None
-              (sec, split, bSec)
+              (sec, split, bSec, key)
             }
             val times = iterRs.map(_._1)
             // slot = steady state only (VERDICT r13 item 2); the
@@ -349,9 +437,11 @@ object Bench {
               steadySlot(iterRs.map(r => (r._1, r._3)))
             val short = name.takeWhile(_ != '_')
             if (rawMin > steady + 5e-3) rawMins += (short -> rawMin)
-            iterRs.minBy(_._1)._2.foreach { case (first, nb) =>
+            val best = iterRs.minBy(_._1)
+            best._2.foreach { case (first, nb) =>
               sSplit ::= (short, (steady, first, nb))
             }
+            phaseSlots ::= (short, best._4, best._1)
             val tags = graft.operators.SharedBuilds.timingsSince(b0)
               .map(_._1).distinct
             if (tags.nonEmpty)
@@ -376,6 +466,8 @@ object Bench {
         val stopT0 = System.nanoTime()
         spark.stop()
         val sessionSec = (System.nanoTime() - stopT0) / 1e9
+        stageRecs ++= phaseSlots.map { case (short, key, wall) =>
+          short -> anatomy.summary(key, wall, cpus.toInt) }
         phaseSecs ::= (family, (System.nanoTime() - phaseT0) / 1e9)
         phaseHarness ::= (family, (warmupSec, extraIters, sessionSec))
         rs
@@ -553,10 +645,23 @@ object Bench {
         "\"" + k + "\":{\"total\":" + fmt(tot) + ",\"first\":" + fmt(first) +
           ",\"steady\":" + fmt((tot - first).max(0.0)) + ",\"batches\":" + nb + "}"
       }.mkString("{", ",", "}")
+    // stage anatomy per slot — full record only; serial_hot below
+    // carries its top-3 onto the stdout line
+    val stagesJson = stageRecs.sortBy(_._1).map { case (k, a) =>
+      "\"" + k + "\":{\"jobs\":" + a.jobs + ",\"stages\":" + a.stages +
+        ",\"tasks\":" + a.tasks + ",\"task_run_s\":" + fmt(a.taskRunS) +
+        ",\"task_max_s\":" + fmt(a.taskMaxS) +
+        ",\"shuffle_read_mb\":" + fmt(a.shuffleReadMb) +
+        ",\"shuffle_write_mb\":" + fmt(a.shuffleWriteMb) +
+        ",\"spill_mb\":" + fmt(a.spillMb) +
+        ",\"eff_parallelism\":" + fmt(a.effParallelism) +
+        ",\"serial_stages\":" + a.serialStages +
+        ",\"serial_s\":" + fmt(a.serialS) + "}"
+    }.mkString("{", ",", "}")
     val fullWritten =
       try {
         java.nio.file.Files.writeString(fullFile.toPath,
-          s"""{"queries":$qs,"suite_raw":$suiteRawJson,"s_split":$sSplitJson,"gc":$gcJson,"cache_events":$cacheJson,$summaryFields}""" + "\n")
+          s"""{"queries":$qs,"suite_raw":$suiteRawJson,"s_split":$sSplitJson,"gc":$gcJson,"cache_events":$cacheJson,"stages":$stagesJson,$summaryFields}""" + "\n")
         true
       } catch {
         case e: Throwable =>
@@ -596,7 +701,14 @@ object Bench {
       .map { case (k, (r, sp, ev)) =>
         "\"" + k + "\":\"" + r + "r/" + sp + "s/" + ev + "e\""
       }.mkString("{", ",", "}")
-    System.out.println(s"""{"queries":$slowJson,"iso":$isoJson,"n_queries":${results.size},"full":$fullField,"gc":$gcJson,"cache_hot":$cacheHot,$summaryFields}""")
+    // top-3 serial-stage carriers, "<serial stages>/<their Σrun>s": a
+    // slot whose work ran on one core names itself in the capture
+    val serialHot = stageRecs.filter(_._2.serialStages > 0)
+      .sortBy { case (_, a) => -a.serialS }.take(3)
+      .map { case (k, a) =>
+        "\"" + k + "\":\"" + a.serialStages + "/" + fmt(a.serialS) + "s\""
+      }.mkString("{", ",", "}")
+    System.out.println(s"""{"queries":$slowJson,"iso":$isoJson,"n_queries":${results.size},"full":$fullField,"gc":$gcJson,"cache_hot":$cacheHot,"serial_hot":$serialHot,$summaryFields}""")
     System.out.flush()
   }
 }

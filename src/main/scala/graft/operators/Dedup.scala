@@ -174,8 +174,7 @@ object Dedup {
     * silently return SPLIT clusters that still look plausible — that is
     * wrong data, so this fails loudly instead. */
   private[operators] def connectedComponents(pairs: DataFrame,
-      maxIter: Int = 25, checkpointEvery: Int = 5,
-      verbose: Boolean = false): DataFrame = {
+      maxIter: Int = 25, checkpointEvery: Int = 5): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = TrackedCaches.track(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
@@ -208,10 +207,7 @@ object Dedup {
       val next = TrackedCaches.track(
         if ((iter + 1) % checkpointEvery == 0) stepped.localCheckpoint(true)
         else stepped.persist(MEMORY_AND_DISK))
-      val t0 = System.nanoTime()
       val curSum = labelSum(next)
-      if (verbose)
-        println(f"CCPROBE   iter $iter%2d ${(System.nanoTime() - t0) / 1e9}%7.2f s")
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       labels.unpersist(blocking = false)

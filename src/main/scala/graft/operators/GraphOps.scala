@@ -259,19 +259,21 @@ object GraphOps {
               coalesce(sum("node"), lit(0L)).as("node_checksum"))
             .select(lit(r.toLong).as("round"), col("n_alive"),
               col("node_checksum"))
-        var alive = e.select(col("u").as("node"))
+        // each round's alive set is an eager localCheckpoint leaf; tracked
+        // so its blocks are released with the query, not at session stop
+        var alive = TrackedCaches.track(e.select(col("u").as("node"))
           .union(e.select(col("v").as("node")))
-          .distinct().localCheckpoint()
+          .distinct().localCheckpoint())
         val rounds = scala.collection.mutable.ArrayBuffer(summary(alive, 0))
         for (r <- 1 to 12) {
           val live = e
             .join(alive, e("u") === alive("node"), "left_semi")
             .join(alive, e("v") === alive("node"), "left_semi")
-          alive = live.select(col("u").as("node"))
+          alive = TrackedCaches.track(live.select(col("u").as("node"))
             .union(live.select(col("v").as("node")))
             .groupBy("node").agg(count(lit(1)).as("deg"))
             .filter(col("deg") >= 3).select("node")
-            .localCheckpoint()
+            .localCheckpoint())
           rounds += summary(alive, r)
         }
         rounds.reduce(_ unionAll _).orderBy("round")
@@ -531,7 +533,7 @@ object GraphOps {
           // WindowExec "No Partition Defined ... single partition"
           // shape, a scale-killer at 100 TB. Three scale-safe forms
           // were A/B'd against the r14 window on a quiet machine
-          // (IsoProbe, 12 warm reps each): lazy crossJoin(broadcast(
+          // (isolated warm runs, 12 reps each): lazy crossJoin(broadcast(
           // agg)) total 8.2-8.9 s (every half-step action spawns an
           // extra AQE-planned broadcast-subquery job) — REJECTED;
           // persist(MEMORY_AND_DISK)+fused head() 5.9-7.0 s (columnar

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,7 +130,9 @@ object Pipeline {
         status = "success", error = null, error_type = null,
         bytes = bytes, duration_ms = ms)
     } catch {
-      case e: Throwable =>
+      // fatal errors (OOM, a cancelled task's InterruptedException) are
+      // not transfer outcomes: they propagate instead of becoming DLQ rows
+      case NonFatal(e) =>
         TransferResult(job.job_id,
           job.source.hostname, job.source.path,
           job.destination.hostname, job.destination.path,

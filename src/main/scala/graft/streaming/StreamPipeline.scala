@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -83,7 +85,7 @@ object StreamPipeline {
                 date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx")),
             StreamConnector.FileDlqSink(dlqDir), batchId)
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[stream] DLQ write failed (swallowed): ${e.getMessage}")
           }
         } finally r.unpersist()
@@ -96,7 +98,7 @@ object StreamPipeline {
   def stopOnShutdown(query: StreamingQuery): Unit =
     sys.addShutdownHook {
       try if (query.isActive) query.stop()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 }
 

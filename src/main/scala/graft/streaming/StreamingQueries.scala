@@ -784,20 +784,16 @@ object StreamingQueries {
     // opens one state store PER SHUFFLE PARTITION PER MICRO-BATCH, so a
     // multi-batch drain pays partitions × operators × batches store
     // initializations regardless of data volume — measured on s19 at
-    // sf0.1: 14.3 s at 32 partitions, 7.1 s at 16, 4.4 s at 8, 3.6 s at 4
-    // (StatePartitionProbe), a pure linear overhead. Stateful operators
-    // BIND the partition count at the query's first batch, so it is set
-    // here (fresh checkpoint per drain) and restored after the drain —
-    // batch-side post-processing keeps the session's parallelism. At
-    // production scale this knob is sized to state VOLUME (rows per store
-    // must fit an executor), not to core count — 8 holds every fixture SF
-    // with room to spare; SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides.
+    // sf0.1: 14.3 s at 32 partitions, 7.1 s at 16, 4.4 s at 8, 3.6 s at 4,
+    // a pure linear overhead. Stateful operators BIND the partition count
+    // at the query's first batch, so it is set here (fresh checkpoint per
+    // drain) and restored after the drain — batch-side post-processing
+    // keeps the session's parallelism. At production scale this is sized
+    // to state VOLUME (rows per store must fit an executor), not to core
+    // count — 8 holds every fixture SF with room to spare.
     val key = "spark.sql.shuffle.partitions"
     val before = s.conf.get(key)
-    val stateParts = s.conf.getOption("spark.graft.stream.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS"))
-      .getOrElse("8")
-    s.conf.set(key, stateParts)
+    s.conf.set(key, "8")
     val q =
       try {
         drainT0.set(System.nanoTime())

@@ -36,6 +36,32 @@ class BenchSpec extends AnyFunSuite {
     assert(ce.snapshot == ((1L, 1L, 1L)))
   }
 
+  test("stage anatomy: serial-stage rule and effective parallelism") {
+    val a = new StageAnatomy
+    // one 2 s task: the whole stage on one core → serial
+    a.task("one", 0, 0, 2000, 0, 0, 0)
+    // 32 tasks of 100 ms: 3.2 s of work at 32 tasks' parallelism → not
+    (1 to 32).foreach(_ => a.task("wide", 1, 0, 100, 1000000, 2000000, 0))
+    // a 400 ms single task: serial shape, but under the 0.5 s floor → not
+    a.task("short", 2, 0, 400, 0, 0, 3000000)
+    val one = a.summary("one", 1.0, 4)
+    assert(one.serialStages == 1 && one.serialS == 2.0)
+    val wide = a.summary("wide", 2.0, 4)
+    assert(wide.serialStages == 0 && wide.stages == 1 && wide.tasks == 32)
+    assert(wide.taskMaxS == 0.1 && wide.shuffleReadMb == 32.0 &&
+      wide.shuffleWriteMb == 64.0)
+    // eff_parallelism = Σrun / (wall × cores) = 3.2 / (2.0 × 4)
+    assert(math.abs(wide.effParallelism - 0.4) < 1e-9)
+    val short = a.summary("short", 0.5, 4)
+    assert(short.serialStages == 0 && short.spillMb == 3.0)
+    // a second attempt of a stage is its own stage; a retried serial
+    // stage counts once per attempt
+    a.task("one", 0, 1, 900, 0, 0, 0)
+    assert(a.summary("one", 1.0, 4).serialStages == 2)
+    // a slot that never ran a task reads as zeros, not a failure
+    assert(a.summary("absent", 1.0, 4).tasks == 0)
+  }
+
   test("suspect triggers: >2x floor always fires; 1.5-2x band needs GC or excess") {
     val fl = Some(1.0)
     // healthy slot: under 1.5x, never a suspect even with heavy GC

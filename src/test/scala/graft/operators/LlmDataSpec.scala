@@ -329,6 +329,24 @@ class LlmDataSpec extends AnyFunSuite {
       "seven co-purchase consumers must trigger exactly one from-scratch build")
   }
 
+  test("q192 releases every k-core round checkpoint with the query") {
+    // the shared co-purchase frame is MEANT to outlive the query: build
+    // it first so its checkpoint is already in the before-set
+    CoPurchase.pairSup(spark, dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keys.toSet
+    val before = persisted
+    val result = run("q192_kcore_peeling")
+    assert(result.collect().length == 13, "rounds 0..12")
+    val during = persisted -- before
+    assert(during.nonEmpty, "q192 persists its edge frame and round leaves")
+    TrackedCaches.releaseAll()
+    // `result` stays referenced below, so its plan's checkpoint leaves
+    // cannot be garbage-collected (and cleaned) before this check
+    val kept = during.intersect(persisted)
+    assert(kept.isEmpty, s"releaseAll left RDDs ${kept.toSeq.sorted} of " +
+      s"${result.columns.mkString(",")} persisted")
+  }
+
   test("word-8-gram digest frame builds ONCE, shared by q103/q279/s45") {
     // round 9: the passage-grain gram index joins the registry family —
     // three consumers (repeated-passage audit, novelty audit, streaming

@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.pipeline.transfer.FtpPools
+import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory}
 import graft.pipeline.testkit.FakeFtpServer
 
 /** E2E tier (top of the SURVEY §5 pyramid): full pipeline runs with
@@ -149,13 +149,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dlqRows.head.getAs[String]("error").startsWith("Failed to parse message: "))
   }
 
-  test("temp staging files are always cleaned up (test_consumer.py:394-458)") {
+  private def staging(): Set[String] = {
+    import scala.jdk.CollectionConverters._
     val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
-    def staging(): Set[String] = {
-      import scala.jdk.CollectionConverters._
-      Files.list(tmpDir).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("graft-transfer-")).toSet
-    }
+    Files.list(tmpDir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft-transfer-")).toSet
+  }
+
+  test("temp staging files are always cleaned up (test_consumer.py:394-458)") {
     val before = staging()
     val src = writeSrc("in/c.txt", "cleanup")
     val raw = Seq(
@@ -165,6 +166,35 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (results, _) = Pipeline.run(raw, pc)
     assert(results.count() == 2) // force execution
     assert(staging() == before, "no staging temp files may survive, success or failure")
+  }
+
+  test("runOne: a non-fatal error is a DLQ row, a fatal one propagates; no temp file survives") {
+    // a backend whose download fails AFTER the temp file exists, with the
+    // error its host names: IOException is a transfer outcome, while an
+    // InterruptedException (a cancelled task) must reach the executor
+    class Failing(error: () => Throwable) extends TransferBackend {
+      def connect(): Unit = ()
+      def disconnect(): Unit = ()
+      def download(remotePath: String, localPath: String): Unit = throw error()
+      def upload(localPath: String, remotePath: String): Unit = ()
+    }
+    TransferFactory.register("failing-io",
+      _ => new Failing(() => new java.io.IOException("disk gone")))
+    TransferFactory.register("failing-interrupt",
+      _ => new Failing(() => new InterruptedException("task cancelled")))
+    val fpc = new PipelineConfig(Map(
+      "IO_TYPE" -> "failing-io", "IO_HOST" -> "localhost",
+      "INTR_TYPE" -> "failing-interrupt", "INTR_HOST" -> "localhost",
+      "DST_TYPE" -> "local", "DST_HOST" -> "localhost"))
+    def job(src: String) = FileTransferJob("j-" + src, Endpoint(src, "/a.txt"),
+      Endpoint("dst", work.resolve("out/never.txt").toString))
+    val before = staging()
+    val r = Pipeline.runOne(job("io"), fpc)
+    assert(r.status == "dlq" && r.error_type == "io", s"got $r")
+    assert(r.error == "IOException: disk gone")
+    assert(staging() == before, "the failed transfer's temp file survived")
+    intercept[InterruptedException](Pipeline.runOne(job("intr"), fpc))
+    assert(staging() == before, "the interrupted transfer's temp file survived")
   }
 
   test("p08 order-up FTP bulk: full corpus succeeds, temp audit pinned at 0") {
