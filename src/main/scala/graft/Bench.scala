@@ -36,8 +36,9 @@ import org.apache.spark.sql.SparkSession
   *  - per-query GC time is recorded and emitted as a `gc` map (top-8,
   *    >=100 ms) so a reader can tell heap pressure from a real plan
   *    regression; `gc_total_ms` always reports the whole run;
-  *  - TrackedCaches releases each query's persisted intermediates after
-  *    its drain, so queries never ride earlier queries' leaked caches;
+  *  - the query boundary (`TrackedCaches.releaseAll`) frees each
+  *    query's caches and checkpoints after its drain, so queries never
+  *    ride earlier queries' leaked caches;
   *  - failures are loud: the query records value -1 and lands in "errors",
   *    never a silently-plausible timing.
   *
@@ -63,7 +64,7 @@ import org.apache.spark.sql.SparkSession
   * (every per-query + _iso + gc + summary) is now written to
   * BENCH_FULL_<sf>.json (env SPARK_GRAFT_BENCH_FULL) and committed;
   * stdout carries a compact, always-parsing line — slowest-12 +
-  * iso adjudications + shared-build payers + summary fields LAST.
+  * iso adjudications + summary fields LAST ([[compactLine]]).
   * The full record's `stages` map holds each slot's [[StageAnatomy]];
   * the line's `serial_hot` names the top-3 slots with serial stages.
   */
@@ -75,7 +76,7 @@ import org.apache.spark.sql.SparkSession
   * paid), SPILLS (a MEMORY_AND_DISK block demoted to disk-only under
   * memory pressure) and EVICTS (block dropped entirely under pressure).
   * Deliberate unpersists emit SparkListenerUnpersistRDD, not
-  * BlockUpdated, so TrackedCaches' post-drain releases never masquerade
+  * BlockUpdated, so the post-drain query boundary never masquerades
   * as evictions — every nonzero count here is memory pressure. Listener
   * delivery is async, so per-query attribution is approximate (± the
   * bus lag), which is fine for the "is this slot churning its caches"
@@ -268,6 +269,73 @@ object Bench {
     (steady, its.map(_._1).min)
   }
 
+  /** What the record's summary fields and the stdout line are built
+    * from. Slot names are short (`q50`, `s14`); a failed slot is -1. */
+  final case class Record(slots: Seq[(String, Double)], iso: Seq[(String, Double)],
+      gcMs: Seq[(String, Long)],
+      cache: Seq[(String, (Long, Long, Long))], // (readd, spill, evict) ≠ 0
+      stages: Seq[(String, StageAnatomy.Summary)], phaseSec: Seq[(String, Double)],
+      builds: Seq[(String, Double)], // run-level self seconds per tag
+      isoSkipped: Seq[String], gcTotalMs: Long, suiteRawN: Int,
+      suiteTotal: Double, errors: Seq[String], sf: String, value: Double)
+
+  // Times are rounded to ms to keep the line compact. Locale.ROOT: the
+  // f-interpolator honors the JVM default locale and would emit comma
+  // decimals (invalid JSON) on e.g. de_DE containers.
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+  private def quote(s: String): String = "\"" + s + "\""
+  private def obj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => quote(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** Per-slot GC: the top-8 noisiest at ≥100 ms only, so a contended
+    * run cannot push dozens of entries onto the line. */
+  private def gcJson(r: Record): String =
+    obj(r.gcMs.filter(_._2 >= 100).sortBy(-_._2).take(8).sortBy(_._1)
+      .map { case (k, g) => k -> g.toString })
+
+  /** The summary fields, LAST on the line and in the full record so a
+    * tail-truncated capture still reads total/errors. At most
+    * `skipsShown` iso-skipped slots are named; `iso_skipped` counts all
+    * of them (VERDICT r8 item 3: name the unadjudicated). */
+  private def summaryFields(r: Record, skipsShown: Int): String = {
+    val skips =
+      if (r.isoSkipped.isEmpty) ""
+      else s""","iso_skipped":${r.isoSkipped.size},"iso_skipped_names":""" +
+        r.isoSkipped.sorted.take(skipsShown).map(quote).mkString("[", ",", "]")
+    s""""gc_total_ms":${r.gcTotalMs},"phase_sec":""" +
+      obj(r.phaseSec.map { case (f, v) => f -> fmt(v) }) +
+      ",\"builds\":" + obj(r.builds.map { case (t, v) => t -> fmt(v) }) +
+      skips +
+      s""","suite_raw_n":${r.suiteRawN},"suite_total":${fmt(r.suiteTotal)}""" +
+      ",\"errors\":" + r.errors.sorted.map(quote).mkString("[", ",", "]") +
+      s""","sf":"${r.sf}","metric":"total","unit":"sec","value":${fmt(r.value)}"""
+  }
+
+  /** The stdout line (VERDICT r8 item 1: a run's record keeps only the
+    * last ~2000 chars of stdout). It stays under 1.5 KB because every map on
+    * it is capped: the 12 slowest slots, the 24 worst iso adjudications,
+    * the gc top-8, the top-3 cache churners and serial-stage carriers,
+    * and 3 named iso skips. The per-phase `harness_sec` and the
+    * `shared_builds` payer map grow with the run, so they live in the
+    * full record only, which `full` names. */
+  def compactLine(r: Record, full: String): String = {
+    val slow = r.slots.filter(_._2 >= 0).sortBy(-_._2).take(12)
+      .map { case (k, v) => k -> fmt(v) }
+    val iso = r.iso.sortBy(-_._2).take(24)
+      .map { case (k, v) => s"${k}_iso" -> fmt(v) }
+    // a slot anomaly names itself in the captured line
+    val cacheHot = r.cache.sortBy { case (_, (rd, sp, _)) => -(rd + sp) }.take(3)
+      .map { case (k, (rd, sp, ev)) => k -> quote(s"${rd}r/${sp}s/${ev}e") }
+    // "<serial stages>/<their Σrun>s": a slot whose work ran on one core
+    val serialHot = r.stages.filter(_._2.serialStages > 0)
+      .sortBy { case (_, a) => -a.serialS }.take(3)
+      .map { case (k, a) => k -> quote(s"${a.serialStages}/${fmt(a.serialS)}s") }
+    s"""{"queries":${obj(slow)},"iso":${obj(iso)},"n_queries":${r.slots.size},""" +
+      s""""full":$full,"gc":${gcJson(r)},"cache_hot":${obj(cacheHot)},""" +
+      s""""serial_hot":${obj(serialHot)},${summaryFields(r, 3)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
     // streaming measurement iters default to 1 (VERDICT r11 item 2):
@@ -291,11 +359,9 @@ object Bench {
 
     var cacheEvents = new CacheEvents // rebound per session
 
-    def drainNoRelease(spark: SparkSession, name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
     def drain(spark: SparkSession, name: String): Unit =
-      try drainNoRelease(spark, name)
+      try SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
       finally graft.operators.TrackedCaches.releaseAll()
 
     import scala.jdk.CollectionConverters._
@@ -403,7 +469,7 @@ object Bench {
           // ADVICE r8: note which query paid each shared-artifact build
           // (PairGraph / ClassifierArtifacts / BM25 scorer) — later
           // consumers run memo-warm, so per-query numbers are only
-          // interpretable with the payer named in the line
+          // interpretable with the payer named in the full record
           val b0 = graft.operators.SharedBuilds.timingCount
           val ce0 = cacheEvents.snapshot
           try {
@@ -545,23 +611,12 @@ object Bench {
       key -> math.min(best, floors.getOrElse(key, Double.MaxValue))
     }
 
-    // Keys are shortened to the qNN/sNN/pNN prefix and times rounded to
-    // ms to keep the line compact. Locale.ROOT: the f-interpolator honors
-    // the JVM default locale and would emit comma decimals (invalid JSON)
-    // on e.g. de_DE containers.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val shortKeys = results.map(_._1.takeWhile(_ != '_'))
     require(shortKeys.distinct.size == shortKeys.size,
       s"bench key prefixes collide: ${shortKeys.diff(shortKeys.distinct).mkString(",")}")
-    val qs = (headlined
-      .map { case (k, v, _) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) } ++
-      isoResults.map { case (k, v) => "\"" + k + "_iso\":" + fmt(v) })
-      .mkString("{", ",", "}")
-    val suiteRawJson = suiteRaw.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = headlined.collect { case (_, v, _) if v >= 0 => v }.sum
+    val qs = obj(headlined.map { case (k, v, _) => k.takeWhile(_ != '_') -> fmt(v) } ++
+      isoResults.map { case (k, v) => s"${k}_iso" -> fmt(v) })
+    val suiteRawJson = obj(suiteRaw.sortBy(_._1).map { case (k, v) => k -> fmt(v) })
     // ADVICE r12: the RAW suite total rides the line beside the
     // headline `value` (best-of-suite/iso) so trend readers can compare
     // like-for-like suite conditions round over round — per-slot
@@ -569,19 +624,6 @@ object Bench {
     // Raw = build-INCLUDED (r13-comparable); `value` is steady-only.
     val suiteTotal = results.collect { case (name, v, _) if v >= 0 =>
       rawMins.getOrElse(name.takeWhile(_ != '_'), v) }.sum
-    val gcTotal = gcMillis() - gcStart
-    // top-8 noisiest only: a contended run could otherwise push dozens of
-    // >=100 ms entries and blow the line budget
-    val gcJson = results
-      .collect { case (k, _, g) if g >= 100 => (k.takeWhile(_ != '_'), g) }
-      .sortBy(-_._2).take(8).sortBy(_._1)
-      .map { case (k, g) => "\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val errJson = errors.sorted
-      .map(e => "\"" + e.takeWhile(_ != '_') + "\"").mkString("[", ",", "]")
-    val phaseJson = phaseSecs.reverse
-      .map { case (f, v) => "\"" + f + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     // harness_sec decomposition per phase (VERDICT r10 item 3):
     // phase_sec = Σ per-query(min) + warmup + extra_iters (the non-min
     // measurement iterations) + stop (session teardown) + other (session
@@ -591,44 +633,31 @@ object Bench {
     val phaseQuerySum: Map[String, Double] = results
       .collect { case (n, v, _) if v >= 0 => (n.take(1), v) }
       .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).sum }
-    val harnessJson = phaseHarness.reverse.map { case (f, (w, x, st)) =>
+    val harnessJson = obj(phaseHarness.reverse.map { case (f, (w, x, st)) =>
       val wall = phaseSecs.find(_._1 == f).map(_._2).getOrElse(0.0)
       val b = phaseBuilds.find(_._1 == f).map(_._2).getOrElse(0.0)
       val other =
         (wall - phaseQuerySum.getOrElse(f, 0.0) - w - x - st - b).max(0.0)
-      "\"" + f + "\":{\"warmup\":" + fmt(w) + ",\"extra_iters\":" + fmt(x) +
-        ",\"stop\":" + fmt(st) + ",\"builds\":" + fmt(b) +
-        ",\"other\":" + fmt(other) + "}"
-    }.mkString("{", ",", "}")
+      f -> obj(Seq("warmup" -> fmt(w), "extra_iters" -> fmt(x),
+        "stop" -> fmt(st), "builds" -> fmt(b), "other" -> fmt(other)))
+    })
     // per-query cache churn, nonzero entries only (VERDICT r10 item 1)
-    val cacheJson = cacheDeltas.reverse.sortBy(_._1)
-      .map { case (k, (r, sp, ev)) =>
-        "\"" + k + "\":{\"readd\":" + r + ",\"spill\":" + sp +
-          ",\"evict\":" + ev + "}"
-      }.mkString("{", ",", "}")
-    val sharedJson = sharedBuilds.reverse
-      .map { case (q, tags) => "\"" + q + "\":\"" + tags.mkString("+") + "\"" }
-      .mkString("{", ",", "}")
-    // run-level shared-build seconds per tag (VERDICT r13 item 2):
-    // every timed build in the JVM — warmups, suite slots, iso session
-    // rebuilds — so Σ(builds) + Σ(steady slots) + harness reconstructs
-    // the wall, and a tag that rebuilds twice (iso session) shows as
-    // its summed cost. Self time only: nested builds never double in.
-    val buildsJson = graft.operators.SharedBuilds.timingsSince(0)
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (tag, xs) => "\"" + tag + "\":" + fmt(xs.map(_._2).sum) }
-      .mkString("{", ",", "}")
-    val skipField =
-      if (isoSkippedNames.isEmpty) ""
-      else {
-        val names = isoSkippedNames.sorted
-        val shown = names.take(16).map("\"" + _ + "\"") ++
-          (if (names.size > 16) Seq("\"+" + (names.size - 16) + " more\"")
-           else Seq.empty)
-        s""","iso_skipped":${names.size},"iso_skipped_names":${shown.mkString("[", ",", "]")}"""
-      }
-    val summaryFields =
-      s""""gc_total_ms":$gcTotal,"phase_sec":$phaseJson,"harness_sec":$harnessJson,"shared_builds":$sharedJson,"builds":$buildsJson$skipField,"suite_raw_n":${suiteRaw.size},"suite_total":${fmt(suiteTotal)},"errors":$errJson,"sf":"$sfDir","metric":"total","unit":"sec","value":${fmt(total)}"""
+    val cacheJson = obj(cacheDeltas.reverse.sortBy(_._1).map { case (k, (r, sp, ev)) =>
+      k -> obj(Seq("readd" -> r.toString, "spill" -> sp.toString, "evict" -> ev.toString))
+    })
+    val sharedJson = obj(sharedBuilds.reverse.map { case (q, tags) => q -> quote(tags.mkString("+")) })
+    // run-level shared-build seconds per tag (VERDICT r13 item 2): every
+    // timed build in the JVM — warmups, suite slots, iso session rebuilds
+    // — so Σ(builds) + Σ(steady slots) + harness reconstructs the wall,
+    // and a tag that rebuilds twice (iso session) shows as its summed
+    // cost. Self time only: nested builds never double in.
+    val builds = graft.operators.SharedBuilds.timingsSince(0).groupBy(_._1).toSeq
+      .sortBy(_._1).map { case (tag, xs) => (tag, xs.map(_._2).sum) }
+    val record = Record(headlined.map { case (k, v, _) => (k.takeWhile(_ != '_'), v) },
+      isoResults, results.map { case (k, _, g) => (k.takeWhile(_ != '_'), g) },
+      cacheDeltas, stageRecs, phaseSecs.reverse, builds, isoSkippedNames,
+      gcMillis() - gcStart, suiteRaw.size, suiteTotal, errors.map(_.takeWhile(_ != '_')),
+      sfDir, headlined.collect { case (_, v, _) if v >= 0 => v }.sum)
 
     // FULL per-query record → a per-round committed file (VERDICT r8
     // item 1: the 319-entry line overflowed the driver's ~2000-char
@@ -640,75 +669,44 @@ object Bench {
     // ADVICE r9: if this write fails the stdout line must say so
     // ("full":null) instead of advertising a file that was never written.
     // s-phase split map (VERDICT r12 item 4) — full record only
-    val sSplitJson = sSplit.reverse.sortBy(_._1)
-      .map { case (k, (tot, first, nb)) =>
-        "\"" + k + "\":{\"total\":" + fmt(tot) + ",\"first\":" + fmt(first) +
-          ",\"steady\":" + fmt((tot - first).max(0.0)) + ",\"batches\":" + nb + "}"
-      }.mkString("{", ",", "}")
-    // stage anatomy per slot — full record only; serial_hot below
-    // carries its top-3 onto the stdout line
-    val stagesJson = stageRecs.sortBy(_._1).map { case (k, a) =>
-      "\"" + k + "\":{\"jobs\":" + a.jobs + ",\"stages\":" + a.stages +
-        ",\"tasks\":" + a.tasks + ",\"task_run_s\":" + fmt(a.taskRunS) +
-        ",\"task_max_s\":" + fmt(a.taskMaxS) +
-        ",\"shuffle_read_mb\":" + fmt(a.shuffleReadMb) +
-        ",\"shuffle_write_mb\":" + fmt(a.shuffleWriteMb) +
-        ",\"spill_mb\":" + fmt(a.spillMb) +
-        ",\"eff_parallelism\":" + fmt(a.effParallelism) +
-        ",\"serial_stages\":" + a.serialStages +
-        ",\"serial_s\":" + fmt(a.serialS) + "}"
-    }.mkString("{", ",", "}")
+    val sSplitJson = obj(sSplit.reverse.sortBy(_._1).map { case (k, (tot, first, nb)) =>
+      k -> obj(Seq("total" -> fmt(tot), "first" -> fmt(first),
+        "steady" -> fmt((tot - first).max(0.0)), "batches" -> nb.toString))
+    })
+    // stage anatomy per slot — full record only; serial_hot on the line
+    // carries its top-3
+    val stagesJson = obj(stageRecs.sortBy(_._1).map { case (k, a) =>
+      k -> obj(Seq("jobs" -> a.jobs.toString, "stages" -> a.stages.toString,
+        "tasks" -> a.tasks.toString, "task_run_s" -> fmt(a.taskRunS),
+        "task_max_s" -> fmt(a.taskMaxS), "shuffle_read_mb" -> fmt(a.shuffleReadMb),
+        "shuffle_write_mb" -> fmt(a.shuffleWriteMb), "spill_mb" -> fmt(a.spillMb),
+        "eff_parallelism" -> fmt(a.effParallelism),
+        "serial_stages" -> a.serialStages.toString, "serial_s" -> fmt(a.serialS)))
+    })
     val fullWritten =
       try {
         java.nio.file.Files.writeString(fullFile.toPath,
-          s"""{"queries":$qs,"suite_raw":$suiteRawJson,"s_split":$sSplitJson,"gc":$gcJson,"cache_events":$cacheJson,"stages":$stagesJson,$summaryFields}""" + "\n")
+          s"""{"queries":$qs,"suite_raw":$suiteRawJson,"s_split":$sSplitJson,"gc":${gcJson(record)},"cache_events":$cacheJson,"stages":$stagesJson,"harness_sec":$harnessJson,"shared_builds":$sharedJson,${summaryFields(record, Int.MaxValue)}}""" + "\n")
         true
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] full-record write failed: ${e.getMessage}")
           false
       }
-    val fullField =
-      if (fullWritten) "\"" + fullFile.getName + "\"" else "null"
+    val fullField = if (fullWritten) quote(fullFile.getName) else "null"
 
-    // stdout: a compact line that ALWAYS fits the capture — the 12
-    // slowest suite queries + the iso adjudications (worst first,
-    // capped) stand in for the full map; "full" points at the file.
-    // Summary fields stay LAST (layout note in the scaladoc).
-    val slowJson = headlined.filter(_._2 >= 0).sortBy(-_._2).take(12)
-      .map { case (k, v, _) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val isoJson = isoResults.sortBy(-_._2).take(24)
-      .map { case (k, v) => "\"" + k + "_iso\":" + fmt(v) }
-      .mkString("{", ",", "}")
     try {
-      val merged = (floors ++ floorUpdates).toSeq.sorted
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}\n")
-      java.nio.file.Files.writeString(floorsFile.toPath, merged)
+      val merged = obj((floors ++ floorUpdates).toSeq.sorted.map { case (k, v) => k -> fmt(v) })
+      java.nio.file.Files.writeString(floorsFile.toPath, merged + "\n")
     } catch {
       case e: Throwable => System.err.println(s"[bench] floor update failed: ${e.getMessage}")
     }
     // VERDICT r9 item 2: the summary is the LAST thing this JVM writes to
     // stdout (all file writes above, sessions already stopped), flushed
-    // explicitly, < 1.5 KB by construction (slowest-12 + capped iso list).
-    // build.sbt's `run / outputStrategy := StdoutOutput` + `showSuccess :=
-    // false` guarantee sbt neither prefixes this line nor prints after it.
-    // top-3 cache churners ride the compact line (full map in the file):
-    // a slot anomaly now names itself in the driver's capture
-    val cacheHot = cacheDeltas.sortBy { case (_, (r, sp, _)) => -(r + sp) }
-      .take(3)
-      .map { case (k, (r, sp, ev)) =>
-        "\"" + k + "\":\"" + r + "r/" + sp + "s/" + ev + "e\""
-      }.mkString("{", ",", "}")
-    // top-3 serial-stage carriers, "<serial stages>/<their Σrun>s": a
-    // slot whose work ran on one core names itself in the capture
-    val serialHot = stageRecs.filter(_._2.serialStages > 0)
-      .sortBy { case (_, a) => -a.serialS }.take(3)
-      .map { case (k, a) =>
-        "\"" + k + "\":\"" + a.serialStages + "/" + fmt(a.serialS) + "s\""
-      }.mkString("{", ",", "}")
-    System.out.println(s"""{"queries":$slowJson,"iso":$isoJson,"n_queries":${results.size},"full":$fullField,"gc":$gcJson,"cache_hot":$cacheHot,"serial_hot":$serialHot,$summaryFields}""")
+    // explicitly. build.sbt's `run / outputStrategy := StdoutOutput` +
+    // `showSuccess := false` guarantee sbt neither prefixes this line nor
+    // prints after it.
+    System.out.println(compactLine(record, fullField))
     System.out.flush()
   }
 }

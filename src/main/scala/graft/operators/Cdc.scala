@@ -614,10 +614,10 @@ object Cdc {
           .groupBy("user_id", "session_id")
           .agg(count(lit(1)).as("n_events"),
             min("ts_us").as("start_us"), max("ts_us").as("end_us"))
-        val ev = TrackedCaches.track(Tables.events(s, dir)
+        val ev = Tables.events(s, dir)
           .select(col("user_id"), col("event_id"), col("ts_us"),
             expr("ts_us div 86400000000").as("day"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cutoff = ev.agg((min("day") + 24L).as("cut"))
         val tagged = ev.crossJoin(broadcast(cutoff))
         val stored = sessionize(tagged.filter(col("day") < col("cut"))

@@ -176,14 +176,14 @@ object Dedup {
   private[operators] def connectedComponents(pairs: DataFrame,
       maxIter: Int = 25, checkpointEvery: Int = 5): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = TrackedCaches.track(
+    val edges =
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-        .persist(MEMORY_AND_DISK))
-    var labels = TrackedCaches.track(
+        .persist(MEMORY_AND_DISK)
+    var labels =
       edges.select(col("u").as("node")).distinct()
         .withColumn("label", col("node"))
-        .persist(MEMORY_AND_DISK))
+        .persist(MEMORY_AND_DISK)
     // convergence via the label-sum invariant: labels only ever
     // DECREASE, so the sum strictly drops iff any label changed —
     // one cheap aggregate per iteration instead of a join + count.
@@ -204,9 +204,9 @@ object Dedup {
         .select(col("u").as("node"), col("vl").as("label"))
         .unionByName(labels)
         .groupBy("node").agg(min("label").as("label"))
-      val next = TrackedCaches.track(
+      val next =
         if ((iter + 1) % checkpointEvery == 0) stepped.localCheckpoint(true)
-        else stepped.persist(MEMORY_AND_DISK))
+        else stepped.persist(MEMORY_AND_DISK)
       val curSum = labelSum(next)
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
@@ -254,8 +254,8 @@ object Dedup {
     // group scans (≤2 tasks) feeding the shingle build and the 64-column
     // minhash signature aggregation — serialized, those were the bulk of
     // the tick's wall
-    val bsh = TrackedCaches.track(
-      shingled(graft.Tables.spread(delta, col("doc_id"))).persist(MEMORY_AND_DISK))
+    val bsh =
+      shingled(graft.Tables.spread(delta, col("doc_id"))).persist(MEMORY_AND_DISK)
     def verify(cand: DataFrame): DataFrame = {
       val sets = csh.unionByName(bsh)
       cand
@@ -293,9 +293,9 @@ object Dedup {
       .unionByName(newPairs.select(col("id_b").as("node"))).distinct()
     val affectedLabels = standingLabels
       .join(touchedNodes, "node").select("label").distinct()
-    val affectedNodes = TrackedCaches.track(standingLabels
+    val affectedNodes = standingLabels
       .join(affectedLabels, "label").select("node")
-      .persist(MEMORY_AND_DISK))
+      .persist(MEMORY_AND_DISK)
     val subEdges = standingPairs
       .join(affectedNodes.select(col("node").as("id_a")), Seq("id_a"), "left_semi")
       .unionByName(newPairs)
@@ -321,10 +321,10 @@ object Dedup {
     "q158_sorted_neighborhood",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = TrackedCaches.track(nearCorpus(s, dir)
+      val docs = nearCorpus(s, dir)
         .withColumn("sk", substring(col("text"), 1, 24))
         .withColumn("blk", substring(col("text"), 1, 8))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val w = Window.partitionBy("blk").orderBy("sk", "doc_id")
       val cand = docs
         .select(col("blk"), col("sk"), col("doc_id"))
@@ -789,7 +789,7 @@ object Dedup {
         // the corpus side is the standing persisted index (PairGraph
         // memo) — per-tick work is the BATCH side only
         val csh = PairGraph.corpusShingles(s, dir)
-        val bsh = TrackedCaches.track(shingled(batch).persist(MEMORY_AND_DISK))
+        val bsh = shingled(batch).persist(MEMORY_AND_DISK)
         val cand = bandBuckets(bsh)
           .select(col("doc_id").as("batch_id"), col("band"), col("bh"))
           .join(PairGraph.corpusBandIndex(s, dir)
@@ -1085,7 +1085,7 @@ object Dedup {
           d.filter(col("doc_id") % 4 === 0)
             .select((col("doc_id") + 700000).as("doc_id"),
               concat(col("text"), lit(" novel tail "), col("doc_id")).as("text")))
-        val segs = TrackedCaches.track(corpus
+        val segs = corpus
           .select(col("doc_id"),
             posexplode(expr(
               """transform(sequence(0, (size(split(text, ' ')) - 1) div 8),
@@ -1093,7 +1093,7 @@ object Dedup {
               .as(Seq("pos", "seg")))
           .select(col("doc_id"), col("pos"), sha2(col("seg"), 256).as("h"),
             size(split(col("seg"), " ")).cast("long").as("nw"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val firsts = segs.groupBy("h")
           .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
         segs.join(firsts, "h")
@@ -1310,11 +1310,11 @@ object Dedup {
       "q233_host_cap_sample",
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
-        val d = TrackedCaches.track(docs(s, dir)
+        val d = docs(s, dir)
           .withColumn("host", concat(col("source"), lit(".example.com")))
           .withColumn("fp", call_function("graft_polyhash", col("text")))
           .select("host", "fp", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("host").orderBy("fp", "doc_id")
         // totals from a plain keyed count; the kept set from rank<=15,
@@ -1378,12 +1378,12 @@ object Dedup {
         val wMin = org.apache.spark.sql.expressions.Window
           .partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
         val wCnt = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-        val fps = TrackedCaches.track(grams
+        val fps = grams
           .withColumn("n", count(lit(1)).over(wCnt))
           .withColumn("fp", min("gh").over(wMin))
           .filter(col("pos") <= col("n") - 4) // full windows only
           .select("doc_id", "fp").distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val sizes = fps.groupBy("doc_id").agg(count(lit(1)).as("nf"))
         val a = fps.select(col("doc_id").as("id_a"), col("fp"))
         val b = fps.select(col("doc_id").as("id_b"), col("fp"))
@@ -1508,13 +1508,13 @@ object Dedup {
         val corpus = docs(s, dir).select(col("doc_id"), col("source"),
           when(col("doc_id") % 3 === 0, concat(col("text"), lit(" " + boiler)))
             .otherwise(col("text")).as("text"))
-        val grams = TrackedCaches.track(corpus
+        val grams = corpus
           .select(col("doc_id"), col("source"),
             posexplode(call_function("graft_word_ngrams", col("text"), lit(5))))
           .toDF("doc_id", "source", "pos", "g")
           .select(col("doc_id"), col("source"), col("pos"),
             expr("cast(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gh"))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val repeated = grams.groupBy("gh").agg(count(lit(1)).as("cnt"))
           .filter(col("cnt") >= 2).select("gh")
         val wOrd = Window.partitionBy("doc_id").orderBy("pos")
@@ -1773,19 +1773,19 @@ object Dedup {
           when(call_function("graft_polyhash", c) % 100 < 80, "train")
             .when(call_function("graft_polyhash", c) % 100 < 90, "val")
             .otherwise("test")
-        val sp = TrackedCaches.track(nearCorpus(s, dir)
+        val sp = nearCorpus(s, dir)
           .select(col("doc_id"), splitOf(col("text")).as("split"))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val labels = PairGraph.labels(s, dir)
         val canon = labels.select("label").distinct()
           .join(sp.select(col("doc_id").as("label"),
             col("split").as("canon_split")), "label")
-        val rep = TrackedCaches.track(sp
+        val rep = sp
           .join(labels.select(col("node").as("doc_id"), col("label")),
             Seq("doc_id"), "left")
           .join(broadcast(canon), Seq("label"), "left")
           .withColumn("new_split", coalesce(col("canon_split"), col("split")))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val strad = rep.filter(col("label").isNotNull)
           .groupBy("label")
           .agg(countDistinct("split").as("db"),
@@ -1895,8 +1895,8 @@ object Dedup {
               lit(8))).as(Seq("pos", "g")))
           .select(col("doc_id"), col("source"),
             col("pos").cast("long").as("pos"), sha2(col("g"), 256).as("h"))
-        val grams = TrackedCaches.track(baseG.unionByName(recG)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val grams = baseG.unionByName(recG)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val sharedH = grams.groupBy("h")
           .agg(countDistinct("doc_id").as("df"))
           .filter(col("df") >= 2).select("h")
@@ -2124,7 +2124,7 @@ object Dedup {
     // both text rejoins, totals) and two read the scored pairs —
     // without the persist that is six corpus passes at 100 TB.
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val corpus = TrackedCaches.track(corpusRaw.persist(MEMORY_AND_DISK))
+    val corpus = corpusRaw.persist(MEMORY_AND_DISK)
     val keys = corpus.select(col("doc_id"),
       md5(substring(col("text"), 1, 40)).as("h"))
     val pairs = keys.as("x").join(keys.as("y"),
@@ -2134,13 +2134,13 @@ object Dedup {
       col("text").as("text_a"))
     val tb = corpus.select(col("doc_id").as("id_b"), col("source"),
       col("text").as("text_b"))
-    val scored = TrackedCaches.track(
+    val scored =
       pairs.join(ta, "id_a").join(tb, "id_b")
         .select(col("source"), col("id_b"),
           levenshtein(col("text_a"), col("text_b")).cast("long")
             .as("lev"),
           length(col("text_b")).cast("long").as("lb"))
-        .persist(MEMORY_AND_DISK))
+        .persist(MEMORY_AND_DISK)
     val ps = scored.groupBy("source")
       .agg(count(lit(1)).as("cand_pairs"),
         sum((col("lev") <= 24).cast("long")).as("confirmed_pairs"))

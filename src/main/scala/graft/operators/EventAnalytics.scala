@@ -416,10 +416,10 @@ object EventAnalytics {
     QueryDef(
       "q135_stickiness",
       (s, dir) => {
-        val act = TrackedCaches.track(Tables.events(s, dir)
+        val act = Tables.events(s, dir)
           .select(col("user_id"), expr("ts_us div 86400000000").as("day"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dau = act.groupBy("day").agg(countDistinct("user_id").as("dau"))
         def rolling(span: Int, name: String) = act
           .select(col("user_id"),
@@ -526,7 +526,6 @@ object EventAnalytics {
             expr(s"(ts_us div $HourUs) % 24").as("hour"))
           .agg(count(lit(1)).as("o"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        TrackedCaches.track(cells)
         val rowT = cells.groupBy("event_type").agg(sum("o").as("r_tot"))
         val colT = cells.groupBy("hour").agg(sum("o").as("c_tot"))
         val tot = cells.agg(sum("o").as("t_tot"))
@@ -1415,14 +1414,14 @@ object EventAnalytics {
       (s, dir) => {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("ts_us", "event_id")
-        val ev = TrackedCaches.track(Tables.events(s, dir)
+        val ev = Tables.events(s, dir)
           .select(col("user_id"), col("event_id"), col("ts_us"),
             col("event_type"),
             expr("ts_us div 86400000000").as("day"))
           .withColumn("next_type", lead("event_type", 1).over(w))
           .withColumn("next_day", lead("day", 1).over(w))
           .filter(col("next_type").isNotNull)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cut = ev.agg((min("day") + 24L).as("cut"))
         val tagged = ev.crossJoin(broadcast(cut))
         val wPick = org.apache.spark.sql.expressions.Window
@@ -1699,10 +1698,10 @@ object EventAnalytics {
             lit(-1L).as("d")))
           .groupBy("t").agg(sum("d").as("d"))
         val cum = Statistics.prefixSums(deltas, "t", Seq("d"))
-        val byDay = TrackedCaches.track(
-          cum.select(expr("t div 86400000000").as("day"), col("t"),
+        val byDay = cum
+          .select(expr("t div 86400000000").as("day"), col("t"),
             col("cum_d").as("c"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val pk = byDay.groupBy("day").agg(max("c").as("peak_concurrency"))
         byDay.join(pk, "day")
           .filter(col("c") === col("peak_concurrency"))

@@ -76,7 +76,7 @@ object GraphOps {
         val outW = edges.groupBy("src").agg(sum("w").as("ow"))
         // the weighted edge list is the loop's big side: build once,
         // cache once, release after the final action
-        val e = TrackedCaches.track(edges.join(outW, "src").persist())
+        val e = edges.join(outW, "src").persist()
         var rank = nations.select(col("node"), lit(Scale / nNodes).as("r"))
         for (_ <- 1 to 5) {
           val inflow = e.join(rank, col("src") === col("node"))
@@ -133,9 +133,9 @@ object GraphOps {
         // pair mining comes from the session-shared CoPurchase artifact
         // (r14): same distinct + self-join + keyed count, built once per
         // session instead of once per consumer query
-        val e = TrackedCaches.track(CoPurchase.pairSup(s, dir)
+        val e = CoPurchase.pairSup(s, dir)
           .filter(col("sup") >= 2).select("u", "v")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val wed = e.select(col("u").as("wa"), col("v").as("wb"))
           .join(e.select(col("u").as("wb2"), col("v").as("wc")),
             col("wb") === col("wb2"))
@@ -182,9 +182,9 @@ object GraphOps {
       "q189_clustering_coefficient",
       (s, dir) => {
         // session-shared CoPurchase pair mining (r14, see q129)
-        val e = TrackedCaches.track(CoPurchase.pairSup(s, dir)
+        val e = CoPurchase.pairSup(s, dir)
           .filter(col("sup") >= 2).select("u", "v")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val deg = e.select(col("u").as("node"))
           .union(e.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -251,29 +251,28 @@ object GraphOps {
       "q192_kcore_peeling",
       (s, dir) => {
         // session-shared CoPurchase pair mining (r14, see q129)
-        val e = TrackedCaches.track(CoPurchase.pairSup(s, dir)
+        val e = CoPurchase.pairSup(s, dir)
           .filter(col("sup") >= 2).select("u", "v")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         def summary(alive: org.apache.spark.sql.DataFrame, r: Int) =
           alive.agg(count(lit(1)).as("n_alive"),
               coalesce(sum("node"), lit(0L)).as("node_checksum"))
             .select(lit(r.toLong).as("round"), col("n_alive"),
               col("node_checksum"))
-        // each round's alive set is an eager localCheckpoint leaf; tracked
-        // so its blocks are released with the query, not at session stop
-        var alive = TrackedCaches.track(e.select(col("u").as("node"))
+        // each round's alive set is an eager localCheckpoint leaf
+        var alive = e.select(col("u").as("node"))
           .union(e.select(col("v").as("node")))
-          .distinct().localCheckpoint())
+          .distinct().localCheckpoint()
         val rounds = scala.collection.mutable.ArrayBuffer(summary(alive, 0))
         for (r <- 1 to 12) {
           val live = e
             .join(alive, e("u") === alive("node"), "left_semi")
             .join(alive, e("v") === alive("node"), "left_semi")
-          alive = TrackedCaches.track(live.select(col("u").as("node"))
+          alive = live.select(col("u").as("node"))
             .union(live.select(col("v").as("node")))
             .groupBy("node").agg(count(lit(1)).as("deg"))
             .filter(col("deg") >= 3).select("node")
-            .localCheckpoint())
+            .localCheckpoint()
           rounds += summary(alive, r)
         }
         rounds.reduce(_ unionAll _).orderBy("round")
@@ -336,9 +335,9 @@ object GraphOps {
         val pairs = CoPurchase.pairSup(s, dir)
           .filter(col("sup") >= 2)
           .select("u", "v")
-        val edges = TrackedCaches.track(
+        val edges =
           pairs.unionByName(pairs.select(col("v").as("u"), col("u").as("v")))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val startRow = edges.agg(min("u")).head()
         if (startRow.isNullAt(0)) {
           // no edge clears the support threshold at this SF — the audit
@@ -349,18 +348,17 @@ object GraphOps {
         } else {
           val start = startRow.getLong(0)
           import s.implicits._
-          var levels: DataFrame = TrackedCaches.track(
-            Seq((start, 0L)).toDF("node", "lvl").persist(MEMORY_AND_DISK))
+          var levels: DataFrame =
+            Seq((start, 0L)).toDF("node", "lvl").persist(MEMORY_AND_DISK)
           var frontier = levels
           for (l <- 1 to 4) {
-            val next = TrackedCaches.track(
+            val next =
               frontier.join(edges, col("node") === col("u"))
                 .select(col("v").as("node")).distinct()
                 .join(levels.select("node"), Seq("node"), "left_anti")
                 .withColumn("lvl", lit(l.toLong))
-                .persist(MEMORY_AND_DISK))
-            levels = TrackedCaches.track(
-              levels.unionByName(next).persist(MEMORY_AND_DISK))
+                .persist(MEMORY_AND_DISK)
+            levels = levels.unionByName(next).persist(MEMORY_AND_DISK)
             frontier = next
           }
           levels.groupBy("lvl")
@@ -503,11 +501,9 @@ object GraphOps {
         // so only the node-sized score frame exchanges per step instead
         // of the full edge list re-shuffling six times. Storage doubles;
         // at 100× scale the saved shuffle volume is 6× the edge list.
-        val edgesByC = TrackedCaches.track(
-          edgesBase.repartition(col("c")).persist(MEMORY_AND_DISK))
+        val edgesByC = edgesBase.repartition(col("c")).persist(MEMORY_AND_DISK)
         // derived FROM the c-copy so the lineitem⋈orders build runs once
-        val edgesByP = TrackedCaches.track(
-          edgesByC.repartition(col("p")).persist(MEMORY_AND_DISK))
+        val edgesByP = edgesByC.repartition(col("p")).persist(MEMORY_AND_DISK)
         // side counts are LOOP INVARIANTS: computed once as driver
         // scalars (r14) instead of 1-row aggregate frames broadcast into
         // every half-step — the old crossJoin(broadcast(cnt)) re-ran the
@@ -541,8 +537,7 @@ object GraphOps {
           // localCheckpoint+fused head() best 5.36 s vs the window's
           // 5.32 s — equal cost, window-free, and the total agg is an
           // ordinary parallel two-phase HashAggregate.
-          val raw = TrackedCaches.track(
-            df.withColumnRenamed(sc, "raw").localCheckpoint(false))
+          val raw = df.withColumnRenamed(sc, "raw").localCheckpoint(false)
           val tot = raw.agg(sum("raw")).head().getLong(0) // bounded: single-row aggregate (L1 total)
           raw.select(col(key),
             expr(s"""greatest(cast(CAST(raw AS DECIMAL(38,0)) * ${cnt}L
@@ -561,9 +556,7 @@ object GraphOps {
         // step) and every persisted subtree is replaced by its
         // InMemoryRelation at plan time. The per-step `head()` inside
         // norm materializes each cache immediately, so no action ever
-        // recomputes an earlier half-step. Caches are tracked so the
-        // harness's post-drain releaseAll() frees their blocks
-        // (ADVICE r14 item 3).
+        // recomputes an earlier half-step.
         (1 to 3).foreach { _ =>
           a = norm(edgesByC.join(h, "c").groupBy("p")
             .agg(sum("h").as("a")), "p", "a", npV)

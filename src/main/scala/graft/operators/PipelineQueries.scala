@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.pipeline.{Pipeline, PipelineConfig}
@@ -59,14 +58,10 @@ object PipelineQueries {
         struct(dstHost.as("hostname"), destPath.as("path")).as("destination")))
         .as("value"))
 
-  /** Run the pipeline and return outcome counts. Results are persisted
-    * before aggregation so the side-effecting transfer map executes
-    * exactly once even though two frames (results, dlq) derive from it. */
+  /** Run the pipeline and return outcome counts. */
   private def statusCounts(spark: SparkSession, raw: DataFrame, pc: PipelineConfig): DataFrame = {
     val (results, _) = Pipeline.run(raw, pc)
-    val r = TrackedCaches.track(results.toDF().persist(StorageLevel.MEMORY_AND_DISK))
-    r.count() // force the single execution
-    r.groupBy("status", "error_type")
+    Pipeline.executeOnce(results.toDF()).groupBy("status", "error_type")
       .agg(count(lit(1)).as("n_jobs"), sum("bytes").as("total_bytes"))
       .orderBy("status", "error_type")
   }
@@ -130,8 +125,7 @@ object PipelineQueries {
           .select(concat(lit("{invalid json "), substring(col("text"), 1, 20)).as("value"))
         val raw = good.unionByName(corrupt)
         val (results, dlq) = Pipeline.run(raw, localConfig)
-        val r = TrackedCaches.track(results.toDF().persist(StorageLevel.MEMORY_AND_DISK))
-        r.count()
+        val r = Pipeline.executeOnce(results.toDF())
         // Outcome union: executed jobs by status + parse-failure DLQ rows,
         // proving per-error-class routing incl. the error message prefix.
         r.groupBy("status", "error_type").agg(count(lit(1)).as("n"))
@@ -262,13 +256,12 @@ object PipelineQueries {
           concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
           concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
         val (results1, dlq1) = Pipeline.run(raw, localConfig)
-        val r1 = TrackedCaches.track(results1.toDF().persist(StorageLevel.MEMORY_AND_DISK))
-        r1.count() // first pass executes here, BEFORE the fix below
+        // the first pass executes here, BEFORE the fix below
+        val r1 = Pipeline.executeOnce(results1.toDF())
         // operator intervention: the missing files appear
         Staging.writeDocFiles(docs.filter(col("doc_id") % 10 === 0), s"$base/src", "txt")
         val (results2, dlq2) = Pipeline.replayDlq(dlq1, localConfig)
-        val r2 = TrackedCaches.track(results2.toDF().persist(StorageLevel.MEMORY_AND_DISK))
-        r2.count()
+        val r2 = Pipeline.executeOnce(results2.toDF())
         val first = r1.groupBy("status")
           .agg(count(lit(1)).as("n_jobs"), sum("bytes").as("total_bytes"))
           .select(lit("first").as("phase"), col("status"), col("n_jobs"), col("total_bytes"))

@@ -760,9 +760,9 @@ object Profiling {
           .select(col("event_type").as("label"),
             expr(s"CASE WHEN event_id % 10 = 0 THEN $shiftExpr " +
               "ELSE event_type END").as("pred"))
-        val cm = TrackedCaches.track(
+        val cm =
           pairs.groupBy("label", "pred").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val tp = cm.filter(col("label") === col("pred"))
           .select(col("label").as("cls"), col("n").as("tp"))
         val byLabel = cm.groupBy(col("label").as("cls"))
@@ -1310,9 +1310,9 @@ object Profiling {
           .select(col("event_type").as("a"),
             expr(s"CASE WHEN event_id % 7 = 0 THEN $shiftExpr " +
               "ELSE event_type END").as("b"))
-        val cm = TrackedCaches.track(
+        val cm =
           pairs.groupBy("a", "b").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val byA = cm.groupBy(col("a").as("cls")).agg(sum("n").as("n_a"))
         val byB = cm.groupBy(col("b").as("cls")).agg(sum("n").as("n_b"))
         val diag = cm.filter(col("a") === col("b"))
@@ -1416,7 +1416,7 @@ object Profiling {
         val overlap = g.join(p, Seq("doc_id", "source", "tok"))
           .groupBy("doc_id", "source")
           .agg(sum(least(col("cg"), col("cp"))).as("ov"))
-        val perDoc = TrackedCaches.track(d
+        val perDoc = d
           .select(col("doc_id"), col("source"),
             size(split(col("gold"), " ")).cast("long").as("ng"),
             size(split(col("pred"), " ")).cast("long").as("np"))
@@ -1426,7 +1426,7 @@ object Profiling {
           .withColumn("r_ppm", expr("ov * 1000000 div ng"))
           .withColumn("f1_ppm",
             expr("2 * p_ppm * r_ppm div nullif(p_ppm + r_ppm, 0)"))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         perDoc.groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum("ov").as("ov"), sum("np").as("np"), sum("ng").as("ng"),
@@ -1518,22 +1518,17 @@ object Profiling {
       "q262_perceptron_training",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val c = TrackedCaches.track(
+        val c =
           ClassifierArtifacts.grams(s, dir)
             .groupBy("doc_id", "good", "b")
             .agg(count(lit(1)).as("cnt"))
             .withColumn("y", when(col("good"), 1L).otherwise(-1L))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         // one-row aggregate, referenced by all three epoch reports: the
         // checkpoint stops the final drain re-running the countDistinct
         // scan of `c` once per epoch (r14; same lineage discipline as
         // the weight checkpoints below)
-        // tracked (ADVICE r14 item 3): per-query eager checkpoints
-        // register with TrackedCaches so the harness's post-drain
-        // releaseAll() frees their LogicalRDD blocks instead of letting
-        // them accumulate until session stop
-        val totals = TrackedCaches.track(
-          c.agg(countDistinct("doc_id").as("n_docs")).localCheckpoint(true))
+        val totals = c.agg(countDistinct("doc_id").as("n_docs")).localCheckpoint(true)
         var w: Option[DataFrame] = None
         val reports = (1 to 3).map { epoch =>
           val joined = w match {
@@ -1546,11 +1541,11 @@ object Profiling {
           // checkpoint) and the report's n_miss count — un-materialized,
           // the epoch's whole score-join subtree re-ran for each (r14:
           // the recompute was ~40% of the slot)
-          val missIds = TrackedCaches.track(joined.groupBy("doc_id", "y")
+          val missIds = joined.groupBy("doc_id", "y")
             .agg(sum(col("wv") * col("cnt")).as("sc"))
             .filter(col("y") * col("sc") <= 0)
             .select("doc_id")
-            .localCheckpoint(true))
+            .localCheckpoint(true)
           val delta = c.join(missIds, Seq("doc_id"), "left_semi")
             .groupBy("b").agg(sum(col("y") * col("cnt")).as("d"))
           val wNext = w match {
@@ -1566,7 +1561,7 @@ object Profiling {
           // action re-analyzes it against all live cache entries (the
           // q316/q297 lesson, r10). The ≤4096-row table checkpoints to a
           // leaf for pennies.
-          val wP = TrackedCaches.track(wNext.localCheckpoint(true))
+          val wP = wNext.localCheckpoint(true)
           w = Some(wP)
           missIds.agg(count(lit(1)).as("n_miss"))
             .crossJoin(wP.agg(
@@ -1743,7 +1738,7 @@ object Profiling {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val d = TrackedCaches.track(Tables(s, dir, "documents")
+        val d = Tables(s, dir, "documents")
           .select(
             expr("size(split(text, ' ')) div 16").as("bucket"),
             expr("""CASE WHEN cast(conv(substr(md5(text), 1, 15), 16, 10)
@@ -1751,7 +1746,7 @@ object Profiling {
                     WHEN cast(conv(substr(md5(text), 1, 15), 16, 10)
                      AS BIGINT) % 10 = 8 THEN 'val'
                     ELSE 'test' END""").as("split"))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val sb = d.groupBy("split", "bucket").agg(count(lit(1)).as("n"))
         val ab = d.groupBy("bucket").agg(count(lit(1)).as("na"))
         val st = d.groupBy("split").agg(count(lit(1)).as("ns"))
@@ -1872,9 +1867,9 @@ object Profiling {
           .select(col("event_type").as("a"),
             expr(s"CASE WHEN event_id % 7 = 0 THEN $shiftExpr " +
               "ELSE event_type END").as("b"))
-        val cm = TrackedCaches.track(
+        val cm =
           pairs.groupBy("a", "b").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val byA = cm.groupBy(col("a").as("cls")).agg(sum("n").as("n_a"))
         val byB = cm.groupBy(col("b").as("cls")).agg(sum("n").as("n_b"))
         val diag = cm.filter(col("a") === col("b"))
@@ -2381,12 +2376,12 @@ object Profiling {
       "q307_dataset_cartography",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val c = TrackedCaches.track(
+        val c =
           ClassifierArtifacts.grams(s, dir)
             .groupBy("doc_id", "source", "good", "b")
             .agg(count(lit(1)).as("cnt"))
             .withColumn("y", when(col("good"), 1L).otherwise(-1L))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         def score(wt: Option[DataFrame]): DataFrame = {
           val j = wt match {
             case None => c.withColumn("wv", lit(0L))
@@ -2413,15 +2408,13 @@ object Profiling {
         // un-materialized, score(w_e) ran twice — once under the next
         // epoch's weight checkpoint and again in the final margins join
         // (3 redundant scans of the cached gram-count frame per run)
-        // tracked (ADVICE r14 item 3): post-drain releaseAll() frees the
-        // per-epoch checkpoint blocks instead of session-stop
-        var sNow = TrackedCaches.track(score(w).localCheckpoint(true))
+        var sNow = score(w).localCheckpoint(true)
         val margins = (1 to 3).map { _ =>
           val miss = sNow.filter(col("y") * col("sc") <= 0).select("doc_id")
           // eager localCheckpoint per epoch — the q262 lineage-cut
           // discipline (each epoch reads the prior weights twice)
-          w = Some(TrackedCaches.track(nextW(w, miss).localCheckpoint(true)))
-          sNow = TrackedCaches.track(score(w).localCheckpoint(true))
+          w = Some(nextW(w, miss).localCheckpoint(true))
+          sNow = score(w).localCheckpoint(true)
           sNow.select(col("doc_id"), col("source"),
             (col("y") * col("sc")).as("m"))
         }
@@ -2503,7 +2496,7 @@ object Profiling {
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         graft.plans.GraftFunctions.register(s)
-        val scored = TrackedCaches.track(
+        val scored =
           ClassifierArtifacts.grams(s, dir)
             .join(broadcast(ClassifierArtifacts.weights(s, dir)), "b")
             .groupBy("doc_id", "source", "good")
@@ -2511,7 +2504,7 @@ object Profiling {
             .withColumn("cal", expr(
               """cast(conv(substr(md5(cast(doc_id AS string)), 1, 15),
                            16, 10) AS BIGINT) % 4 = 0"""))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val wGrid = Window.orderBy("sc") // ≤ ppm-grid rows by construction
         val wGridD = Window.orderBy(col("sc").desc)
         val calG = scored.filter(col("cal") && col("good"))
@@ -3255,8 +3248,8 @@ object Profiling {
     // three consumers (round-1 majority, reliabilities, round-2
     // weighted vote) read the ×5 annotation frame — columnar
     // persist so the corpus explode is paid once (the q83 lesson)
-    val annP = TrackedCaches.track(ann.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val annP = ann.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val r1 = annP.groupBy("doc_id", "lbl")
       .agg(count(lit(1)).as("v"))
       .withColumn("pick", struct((-col("v")).as("nv"), col("lbl")))

@@ -672,8 +672,8 @@ object Relational {
         val seq = Tables(s, dir, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
             row_number().over(w).as("rn"))
-        val cached = TrackedCaches.track(seq
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val cached = seq
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val a = cached.select(col("o_custkey"), col("o_orderkey").as("prev_ok"),
           col("rn"))
         val b = cached.select(col("o_custkey").as("ck2"), col("o_orderkey").as("ok"),
@@ -701,15 +701,14 @@ object Relational {
         // same max depth); the emitted (ok, depth) multiset — and the
         // oracle — are unchanged. e2 is |e|-sized or smaller (chains
         // drop their last edge per parity), so storage does not grow.
-        val e1 = TrackedCaches.track(
+        val e1 =
           a.join(b, col("o_custkey") === col("ck2") && col("rn2") === col("rn") + 1)
             .select("prev_ok", "ok")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        TrackedCaches.track(
-          e1.join(e1.select(col("prev_ok").as("mid"), col("ok").as("ok2")),
-              col("ok") === col("mid"))
-            .select(col("prev_ok"), col("ok2").as("ok"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        e1.join(e1.select(col("prev_ok").as("mid"), col("ok").as("ok2")),
+            col("ok") === col("mid"))
+          .select(col("prev_ok"), col("ok2").as("ok"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           .createOrReplaceTempView("graft_rec_edges2")
         val roots1 = cached.filter(col("rn") === 1)
           .select(col("o_orderkey").as("ok"), lit(1).as("depth"))
@@ -718,9 +717,8 @@ object Relational {
           .select(col("ok"), lit(2).as("depth"))
         // seeds persist like the edges: UnionLoop re-evaluates every
         // non-recursive input each iteration (the q50 lesson above)
-        TrackedCaches.track(
-          roots1.unionByName(seeds2)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        roots1.unionByName(seeds2)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           .createOrReplaceTempView("graft_rec_seeds")
         // Spark's cteRecursionRowLimit guard (default 1e6) is a
         // per-job knob, not a plan property: the chain's cumulative
@@ -866,13 +864,13 @@ object Relational {
       "q154_abc_classification",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val rev = TrackedCaches.track(
+        val rev =
           t(s, dir, "lineitem")
             .groupBy(col("l_partkey").as("part"))
             .agg(expr(
               "sum(cast(cast(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT))")
               .as("rev"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val stats = rev.agg(sum("rev").as("tot"), max("rev").as("mx"))
         // ~33 ordered revenue bands; width from the broadcast max so the
         // band id is a pure narrow map (band 0 holds the richest parts)

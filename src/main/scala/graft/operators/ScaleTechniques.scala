@@ -991,11 +991,11 @@ object ScaleTechniques {
     QueryDef(
       "q149_skew_diagnostic",
       (s, dir) => {
-        val freq = TrackedCaches.track(
+        val freq =
           Tables(s, dir, "orders")
             .groupBy(col("o_custkey").as("k"))
             .agg(count(lit(1)).as("c"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val hist = freq
           // floor(log2(c)) stated INTEGER-exactly as length(bin(c))-1:
           // float log2 rounds below the integer at powers of two in
@@ -1103,8 +1103,7 @@ object ScaleTechniques {
             expr("bitmap_bucket_number(user_id)").as("bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))")
             .as("bm"))
-          .persist()
-        TrackedCaches.track(pre) // one raw-events pass feeds all 4 groupings
+          .persist() // one raw-events pass feeds all 4 groupings
         def mergeBy(keys: Seq[String], label: Seq[org.apache.spark.sql.Column]) =
           pre.groupBy((keys :+ "bucket").map(col): _*)
             .agg(expr("bitmap_or_agg(bm)").as("bmm"))
@@ -1226,13 +1225,12 @@ object ScaleTechniques {
         // spread (r14, guide §2.5): the one-task scan otherwise
         // serializes the token explode AND the 4-row crossJoin + md5
         // sketch pass built on this cached frame
-        val tok = TrackedCaches.track(
-          graft.Tables.spread(
+        val tok = graft.Tables.spread(
               Tables(s, dir, "documents").select("doc_id", "text"),
               col("doc_id"))
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val exact = tok.groupBy("word").agg(count(lit(1)).as("n_exact"))
         val top = exact.orderBy(col("n_exact").desc, col("word")).limit(20)
         val rws = s.range(0, 4).select(col("id").cast("int").as("r"))

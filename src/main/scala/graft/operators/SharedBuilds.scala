@@ -3,17 +3,18 @@ package graft.operators
 /** Run-wide log of shared-artifact builds (ADVICE r8: PairGraph makes
   * suite timings order-dependent — the FIRST consumer of a memoized
   * artifact absorbs the whole build while later consumers run warm, so
-  * a per-query number is only interpretable if the line says who paid).
+  * a per-query number is only interpretable if the record says who
+  * paid).
   *
   * Every memoized registry builds through [[SharedArtifact]], which
   * wraps each from-scratch build in [[timed]]: that records the tag and
   * the build's wall seconds (SELF time — a nested timed build, e.g.
   * pairs inside cc-labels, is charged to its own tag, not the parent's,
   * so summing tags never double-counts). [[graft.Bench]] snapshots the
-  * record count around each timed query, emits a
-  * `"shared_builds":{"q114":"pairs",...}` payer map, and (VERDICT r13
-  * item 2) SUBTRACTS the slot's build seconds from the published
-  * per-query value — slots record steady-state; builds get their own
+  * record count around each timed query, writes a
+  * `"shared_builds":{"q114":"pairs",...}` payer map to the full record,
+  * and (VERDICT r13 item 2) SUBTRACTS the slot's build seconds from the
+  * published per-query value — slots record steady-state; builds get their own
   * `"builds":{tag:sec}` line. s39 went 3.97→14.67 s in r13 purely
   * because the gram build moved into its slot; the split makes
   * round-over-round trends read apples-to-apples again.

@@ -198,8 +198,7 @@ object Similarity {
         val train = base.filter(col("vec_id") % 10 === 0)
         // trained codebook: O(k·d) — checkpointed so the (tiny) training
         // lineage isn't re-executed by each downstream reference
-        val cent = TrackedCaches.track(
-          lloyd(train, lloyd(train, init)).localCheckpoint(eager = true))
+        val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
         // assignment: nearest centroid per vector via max_by — partial
         // (map-side) aggregation collapses the 8 scored rows per vector
         // BEFORE the shuffle, so the index build moves each embedding
@@ -312,8 +311,7 @@ object Similarity {
         val init = base.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cent_id"), col("e").as("ce"))
         val train = base.filter(col("vec_id") % 10 === 0)
-        val cent = TrackedCaches.track(
-          lloyd(train, lloyd(train, init)).localCheckpoint(eager = true))
+        val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
         base.join(broadcast(cent), lit(true))
           .groupBy("vec_id")
           .agg(max_by(col("cent_id"),
@@ -599,13 +597,13 @@ object Similarity {
         val train = base.filter(col("vec_id") % 10 === 0)
         val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
         // assigned feeds both sides of the self-join and the final audit
-        val assigned = TrackedCaches.track(
+        val assigned =
           corpus.join(broadcast(cent), lit(true))
             .groupBy("vec_id")
             .agg(max_by(col("cent_id"),
               struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("cluster_id"),
               first(col("e")).as("e"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val drops = assigned.select(col("cluster_id"), col("vec_id").as("id_a"),
             col("e").as("ea"))
           .join(assigned.select(col("cluster_id"), col("vec_id").as("id_b"),
@@ -844,22 +842,22 @@ object Similarity {
           .select(col("vec_id").as("qid"), col("e").as("qe"))
         val wCand = Window.partitionBy("qid")
           .orderBy(col("rel").desc, col("cid"))
-        val cand = TrackedCaches.track(base.join(broadcast(q),
+        val cand = base.join(broadcast(q),
             col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
             cosine(col("qe"), col("e")).as("rel"), col("e"))
           .withColumn("rk", row_number().over(wCand))
           .filter(col("rk") <= 12)
           .select("qid", "cid", "rel", "e")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val sims = TrackedCaches.track(cand.select(col("qid"), col("cid").as("c1"),
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sims = cand.select(col("qid"), col("cid").as("c1"),
             col("e").as("e1"))
           .join(cand.select(col("qid").as("q2"), col("cid").as("c2"),
             col("e").as("e2")),
             col("qid") === col("q2") && col("c1") =!= col("c2"))
           .select(col("qid"), col("c1"), col("c2"),
             cosine(col("e1"), col("e2")).as("sim"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val wPick = Window.partitionBy("qid")
           .orderBy(col("score").desc, col("cid"))
         var selected = cand
@@ -1119,11 +1117,11 @@ object Similarity {
         val base = emb(s, dir)
         val q = base.filter(col("vec_id") < 20)
           .select(col("vec_id").as("query_id"), col("e").as("qe"))
-        val pairs = TrackedCaches.track(
+        val pairs =
           base.join(broadcast(q), col("vec_id") =!= col("query_id"))
             .select(col("query_id"), col("vec_id").as("neighbor_id"),
               col("qe"), col("e"))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val ks = s.range(0, 4)
           .select(expr("element_at(array(8, 16, 32, 64), cast(id AS INT) + 1)")
             .cast("long").as("k"))
@@ -1214,12 +1212,12 @@ object Similarity {
         val anchors = base.filter(col("vec_id") < 20)
           .select(col("vec_id").as("anchor_id"), col("label").as("albl"),
             col("e").as("qe"))
-        val scored = TrackedCaches.track(
+        val scored =
           base.join(broadcast(anchors), col("vec_id") =!= col("anchor_id"))
             .select(col("anchor_id"), col("albl"),
               col("vec_id").as("nid"), col("label").as("nlbl"),
               cosine(col("qe"), col("e")).as("sim"))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val wRank = Window.partitionBy("anchor_id")
           .orderBy(col("sim").desc, col("nid"))
         val negs = scored.filter(col("nlbl") =!= col("albl"))
@@ -1305,10 +1303,10 @@ object Similarity {
               struct(cosine(col("e"), col("ce")), -col("cent_id")))
               .as("cluster_id"),
               first(col("e")).as("e"))
-        val ta = TrackedCaches.track(assign(trainRaw)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val ba = TrackedCaches.track(assign(bench)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val ta = assign(trainRaw)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val ba = assign(bench)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val hits = ta.select(col("cluster_id"), col("vec_id").as("tid"),
             col("e").as("te"))
           .join(ba.select(col("cluster_id"), col("e").as("be")),
@@ -1410,7 +1408,7 @@ object Similarity {
         // two consumers (sh and the per-cluster report) read the
         // windowed cell frame — persist so the assignment join + cell
         // window run once (ADVICE r11, the multiply-read class)
-        val cells = TrackedCaches.track(
+        val cells =
           asg.join(toks, col("vec_id") === col("doc_id"))
           .select(col("vec_id"), col("cluster_id"),
             expr("vec_id div 64").as("shard"),
@@ -1420,7 +1418,7 @@ object Similarity {
           .withColumn("cum", sum("l").over(wCell))
           .withColumn("s0", expr("(cum - l) div 256"))
           .withColumn("s1", expr("(cum - 1) div 256"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val sh = cells.groupBy("cluster_id", "shard")
           .agg(expr("CAST((max(cum) + 255) div 256 AS BIGINT)").as("nctx"))
           .groupBy("cluster_id").agg(sum("nctx").as("n_contexts"))
@@ -1514,14 +1512,14 @@ object Similarity {
         // the corpus-wide assignment join + ×3 explode — columnar
         // persist so the k-means assignment is paid once, not per
         // consumer (ADVICE r11; the q333/q343/q345 multiply-read class)
-        val d = TrackedCaches.track(asg.crossJoin(broadcast(n))
+        val d = asg.crossJoin(broadcast(n))
           .withColumn("bsz", explode(expr(
             "array(CAST(8 AS BIGINT), CAST(32 AS BIGINT), CAST(128 AS BIGINT))")))
           .withColumn("nb", expr("(n + bsz - 1) div bsz"))
           .withColumn("batch", expr(
             """CAST(conv(substr(md5(concat('b_', CAST(vec_id AS STRING))),
                   1, 15), 16, 10) AS BIGINT) % nb"""))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cells = d.groupBy("bsz", "batch", "cluster_id")
           .agg(count(lit(1)).as("c"))
         val sameCl = cells.groupBy("bsz")
@@ -1597,12 +1595,12 @@ object Similarity {
         // four consumers (query + corpus side of both rankings) read
         // the quantized frame — columnar persist so the scan + dequant
         // is paid once (the q83 lesson)
-        val base = TrackedCaches.track(emb(s, dir)
+        val base = emb(s, dir)
           .withColumn("sc", expr("array_max(transform(e, x -> abs(x)))"))
           .withColumn("dq", expr(
             """transform(e, x ->
                floor(x * 127d / nullif(sc, 0d) + 0.5d) * sc / 127d)"""))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         def top5(vcol: String, out: String) = {
           val q = base.filter(col("vec_id") < 20)
             .select(col("vec_id").as("query_id"), col(vcol).as("qv"))

@@ -44,20 +44,20 @@ object SimilarityJoin {
             regexp_replace(col("text"), " \\S+$", "").as("text"))
         // spread (r14, guide §2.5): union of two single-row-group scans
         // = ≤2 tasks serializing the shingle construction
-        val corpus = TrackedCaches.track(
+        val corpus =
           graft.Tables.spread(a.unionByName(b), col("doc_id"))
           .withColumn("w", split(col("text"), " "))
           .withColumn("s", expr(Dedup.shinglesExpr))
           .filter(size(col("s")) > 0)
           .select("doc_id", "s")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // global shingle frequencies (hashed key keeps the dimension slim)
         val freq = corpus.select(explode(col("s")).as("t"))
           .groupBy("t").agg(count(lit(1)).as("f"))
         // shingles sorted rare-first (freq, then shingle, both ascending);
         // persisted because BOTH the prefix stage and the two verify-side
         // rejoins read it (VERDICT r9 item 3)
-        val sorted = TrackedCaches.track(
+        val sorted =
           corpus.select(col("doc_id"), explode(col("s")).as("t"))
             .join(freq, "t")
             .groupBy("doc_id")
@@ -65,7 +65,7 @@ object SimilarityJoin {
             // `transform(..., x -> x.t)` (interpreted lambda per element)
             .agg(expr("array_sort(collect_list(struct(f, t))).t").as("st"))
             .withColumn("n", size(col("st")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val withPrefix = sorted
           // prefix length |s| - ceil(0.6·|s|) + 1 = n - (3n+4) div 5 + 1
           .withColumn("plen", col("n") - expr("(3 * n + 4) div 5") + lit(1))
@@ -150,11 +150,11 @@ object SimilarityJoin {
         val base = Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"))
-        val corpus = TrackedCaches.track(base.unionByName(
+        val corpus = base.unionByName(
           base.filter(col("vec_id") % 5 === 0)
             .select((col("vec_id") + 100000).as("vec_id"),
               expr("concat(array(element_at(e, 1) + 0.1d), slice(e, 2, 63))").as("e")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dirs = base.filter(col("vec_id") >= 100 && col("vec_id") < 116)
           .select(col("vec_id").as("dir_id"), col("e").as("de"))
         // 16 sign bits per vector; broadcast the 16 directions, partial

@@ -127,7 +127,7 @@ object Sources {
           // materialize AND cut the lineage before the server dies (the
           // query function's lifetime outlives the try block; a persist
           // alone could be evicted and recompute against a dead endpoint)
-          TrackedCaches.track(df.localCheckpoint(eager = true))
+          df.localCheckpoint(eager = true)
         } finally {
           graft.pipeline.transfer.FtpPools.closeAll()
           server.stop()
@@ -170,7 +170,7 @@ object Sources {
               col("length"),
               substring(col("content"), 1, 4).cast("string").as("head4"))
             .orderBy("doc_id")
-          TrackedCaches.track(df.localCheckpoint(eager = true))
+          df.localCheckpoint(eager = true)
         } finally {
           graft.pipeline.transfer.FtpPools.closeAll()
           server.stop()
@@ -224,7 +224,7 @@ object Sources {
               col("length"),
               substring(col("content"), 1, 4).cast("string").as("head4"))
             .orderBy("doc_id")
-          TrackedCaches.track(df.localCheckpoint(eager = true))
+          df.localCheckpoint(eager = true)
         } finally {
           graft.pipeline.transfer.FtpPools.closeAll()
           server.stop()

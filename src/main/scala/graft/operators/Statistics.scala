@@ -638,10 +638,10 @@ object Statistics {
     QueryDef(
       "q183_mann_kendall",
       (s, dir) => {
-        val daily = TrackedCaches.track(Tables.events(s, dir)
+        val daily = Tables.events(s, dir)
           .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
           .agg(count(lit(1)).as("x"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val a = daily.select(col("event_type"), col("day"), col("x"))
         val b = daily.select(col("event_type").as("et2"),
           col("day").as("day2"), col("x").as("x2"))
@@ -715,10 +715,10 @@ object Statistics {
     QueryDef(
       "q184_ewma_anomaly",
       (s, dir) => {
-        val daily = TrackedCaches.track(Tables.events(s, dir)
+        val daily = Tables.events(s, dir)
           .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
           .agg(count(lit(1)).as("x"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val prior = daily.select(col("event_type").as("et2"),
           col("day").as("pday"), col("x").as("px"))
         daily.join(prior,

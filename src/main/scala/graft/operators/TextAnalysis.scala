@@ -48,11 +48,11 @@ object TextAnalysis {
     val probe = d.orderBy("doc_id").limit(1)
       .select(explode(expr("slice(split(text, ' '), 6, 3)")).as("word"))
       .distinct()
-    val words = TrackedCaches.track(d
+    val words = d
       .select(col("doc_id"),
         explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dl = words.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       expr("sum(dl) * 1000 div count(1)").as("avg_m"))
@@ -488,8 +488,8 @@ object TextAnalysis {
           .transform { byLang =>
             // corpus totals via a broadcast single-row aggregate (q58's
             // lazy idiom), not an all-rows window — no WindowExec noise
-            val cached = TrackedCaches.track(byLang.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            val cached = byLang.persist(
+              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             cached.join(broadcast(cached.agg(
               sum("n_before").as("tot_before"),
               sum("n_after").as("tot_after"))), lit(true))
@@ -707,9 +707,9 @@ object TextAnalysis {
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
           .distinct()
-        val sizes = TrackedCaches.track(vocab.groupBy("source")
+        val sizes = vocab.groupBy("source")
           .agg(count(lit(1)).as("vsz"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val inter = vocab.groupBy("tok")
           .agg(sort_array(collect_set(col("source"))).as("srcs"))
           .select(explode(expr(
@@ -931,11 +931,11 @@ object TextAnalysis {
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
-        val uni = TrackedCaches.track(docs
+        val uni = docs
           .select(explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
           .groupBy("tok").agg(count(lit(1)).as("uc"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val tu = uni.agg(sum("uc").as("tu"))
         val bi = docs
           .select(explode(call_function("graft_word_ngrams",
@@ -1001,10 +1001,10 @@ object TextAnalysis {
       "q240_phrase_search",
       (s, dir) => {
         val d = Tables(s, dir, "documents").select("doc_id", "text")
-        val posts = TrackedCaches.track(d
+        val posts = d
           .select(col("doc_id"),
             posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val probe = d.orderBy("doc_id").limit(1)
           .select(expr("split(text, ' ')[5]").as("w1"),
             expr("split(text, ' ')[6]").as("w2"),
@@ -1472,7 +1472,7 @@ object TextAnalysis {
           .distinct()
           .groupBy("term")
           .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
-        val standing = TrackedCaches.track(postings(d).persist(MEMORY_AND_DISK))
+        val standing = postings(d).persist(MEMORY_AND_DISK)
         val delta = d.filter(col("doc_id") % 9 === 0)
           .select((col("doc_id") + 500000).as("doc_id"),
             regexp_replace(col("text"), " \\S+$", "").as("text"))
@@ -1480,8 +1480,7 @@ object TextAnalysis {
             .select((col("doc_id") + 600000).as("doc_id"),
               concat(lit("novel content batch item "),
                 col("doc_id").cast("string")).as("text")))
-        val deltaIdx = TrackedCaches.track(
-          postings(delta).persist(MEMORY_AND_DISK))
+        val deltaIdx = postings(delta).persist(MEMORY_AND_DISK)
         val untouched = standing
           .join(deltaIdx.select("term"), Seq("term"), "left_anti")
           .withColumn("was_touched", lit(false))
@@ -1691,8 +1690,7 @@ object TextAnalysis {
           .select(col("source"), explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
           .groupBy("source", "word").agg(count(lit(1)).as("c"))
-        val cached = TrackedCaches.track(
-          tok.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val cached = tok.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val grid = cached.groupBy("word").agg(sum("c").as("tc"))
           .orderBy(col("tc").desc, col("word")).limit(100).select("word")
         val counts = cached.join(broadcast(grid), "word")
@@ -1759,11 +1757,11 @@ object TextAnalysis {
         // vocabulary is tiny and saturates in the first increment (a
         // 1-row degenerate curve — measured); bigram types keep
         // growing, which is the regime Heaps' law describes
-        val w = TrackedCaches.track(Tables(s, dir, "documents")
+        val w = Tables(s, dir, "documents")
           .select((col("doc_id") % 8).cast("long").as("bkt"),
             explode(call_function("graft_word_ngrams", col("text"), lit(2)))
               .as("gram"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val firstBkt = w.groupBy("gram").agg(min("bkt").as("first_bkt"))
           .groupBy("first_bkt").agg(count(lit(1)).as("new_types"))
         val toks = w.groupBy(col("bkt").as("first_bkt"))
@@ -1859,14 +1857,14 @@ object TextAnalysis {
         val d = Tables(s, dir, "documents").select("doc_id", "source", "text")
           .withColumn("hb5",
             expr("cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"))
-        val tb = TrackedCaches.track(d.filter(col("hb5") =!= 0L)
+        val tb = d.filter(col("hb5") =!= 0L)
           .select(explode(
             call_function("graft_word_ngrams", col("text"), lit(2)))
             .as("gram"))
           .groupBy("gram").agg(count(lit(1)).as("c12"))
           .withColumn("w1", element_at(split(col("gram"), " "), 1))
           .withColumn("w2", element_at(split(col("gram"), " "), 2))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val c1 = tb.groupBy("w1")
           .agg(sum("c12").as("c1"), count(lit(1)).as("n1post"))
         val pre = tb.groupBy("w2").agg(count(lit(1)).as("n1pre"))
@@ -3024,8 +3022,7 @@ object TextAnalysis {
     * VERDICT r7/r8 flagged for the pair graph and the gram frame.
     *
     * This one is the memoized [[bpeWords]] (eager localCheckpoint —
-    * survives the per-query TrackedCaches release, dies with the
-    * session). */
+    * pinned across the query boundary, dies with the session). */
   private[graft] def bpeWordsShared(s: SparkSession, dir: String): DataFrame =
     SharedArtifact("bpe-words", s, dir) {
       bpeWords(s, dir).localCheckpoint(true)
@@ -3192,15 +3189,15 @@ object TextAnalysis {
     // explode below (guide §2.5, r14)
     val d = graft.Tables.spread(
       Tables(s, dir, "documents").select("doc_id", "text"), col("doc_id"))
-    val qs = TrackedCaches.track(d.filter(col("doc_id") % 97 === 3)
+    val qs = d.filter(col("doc_id") % 97 === 3)
       .select(col("doc_id").as("query_id"),
         explode(array_distinct(expr("slice(split(text, ' '), 6, 3)")))
           .as("word"))
-      .persist(MEMORY_AND_DISK))
-    val words = TrackedCaches.track(d
+      .persist(MEMORY_AND_DISK)
+    val words = d
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
-      .persist(MEMORY_AND_DISK))
+      .persist(MEMORY_AND_DISK)
     val dl = words.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       expr("sum(dl) * 1000 div count(1)").as("avg_m"))
@@ -3273,13 +3270,13 @@ object TextAnalysis {
       .withColumn("hb5",
         expr("cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"))
     val train = d.filter(col("hb5") =!= 0L)
-    val tb = TrackedCaches.track(train
+    val tb = train
       .select(explode(
         call_function("graft_word_ngrams", col("text"), lit(2)))
         .as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("c12"))
       .withColumn("w1", element_at(split(col("gram"), " "), 1))
-      .persist(MEMORY_AND_DISK))
+      .persist(MEMORY_AND_DISK)
     val c1 = tb.groupBy("w1").agg(sum("c12").as("c1"))
     val vocab = train
       .select(explode(split(col("text"), " ")).as("w"))

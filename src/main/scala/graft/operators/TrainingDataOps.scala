@@ -685,19 +685,19 @@ object TrainingDataOps {
         // paid, spill, evict) name a churning slot in the artifact.
         // spread (r14, guide §2.5): the union of two single-row-group
         // scans is ≤2 tasks, serializing the polyhash + shingle build
-        val corpus = TrackedCaches.track(
+        val corpus =
           graft.Tables.spread(docs.unionByName(b), col("doc_id"))
           .withColumn("split", splitOf(col("text")))
           .withColumn("w", split(col("text"), " "))
           .withColumn("s", expr(Dedup.shinglesExpr))
           .filter(size(col("s")) > 0)
           .select("doc_id", "split", "s")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val freq = corpus.select(explode(col("s")).as("t"))
           .groupBy("t").agg(count(lit(1)).as("f"))
         // persisted: read by the prefix stage AND twice by the verify
         // rejoin (VERDICT r9 item 3 — q41's skinny-candidate discipline)
-        val sorted = TrackedCaches.track(
+        val sorted =
           corpus.select(col("doc_id"), col("split"), explode(col("s")).as("t"))
             .join(freq, "t")
             .groupBy("doc_id")
@@ -705,7 +705,7 @@ object TrainingDataOps {
               // `.t` (codegen'd field extraction), not a per-element lambda
               expr("array_sort(collect_list(struct(f, t))).t").as("st"))
             .withColumn("n", size(col("st")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // skinny candidate stage: only (doc_id, n, pt) rides the
         // candidate exchange; the length filter (also in the oracle's
         // cand CTE) kills pairs that cannot reach Jaccard ≥ 0.6, and
@@ -804,10 +804,10 @@ object TrainingDataOps {
         // weight total via a broadcast single-row aggregate (q58's lazy
         // idiom) rather than an all-rows window: same bounded-frame
         // cost, but no single-partition WindowExec in any log
-        val weights = TrackedCaches.track(
+        val weights =
           docs.groupBy("source").agg(count(lit(1)).as("n_total"))
             .withColumn("wt", floor(sqrt(col("n_total"))).cast("long"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val quotas = weights
           .join(broadcast(weights.agg(sum("wt").as("sum_wt"))), lit(true))
           .withColumn("quota", greatest(lit(1L), expr("(200 * wt) div sum_wt")))
@@ -987,11 +987,11 @@ object TrainingDataOps {
       "q139_negative_sampling",
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
-        val h = TrackedCaches.track(Tables(s, dir, "documents")
+        val h = Tables(s, dir, "documents")
           .select(col("doc_id"),
             call_function("graft_polyhash", col("text")).as("h"))
           .withColumn("bucket", expr("h div 62500001"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("bucket").orderBy("h", "doc_id")
         val within = h.withColumn("succ", lead("doc_id", 1).over(w))
@@ -1119,16 +1119,16 @@ object TrainingDataOps {
         val keepIds = raw.withColumn("dig", sha2(col("text"), 256))
           .groupBy("dig").agg(min("doc_id").as("doc_id"))
           .select("doc_id")
-        val deduped = TrackedCaches.track(
-          raw.join(keepIds, Seq("doc_id"), "left_semi").persist(MEMORY_AND_DISK))
-        val quality = TrackedCaches.track(deduped
+        val deduped =
+          raw.join(keepIds, Seq("doc_id"), "left_semi").persist(MEMORY_AND_DISK)
+        val quality = deduped
           .withColumn("n_words", size(split(col("text"), " ")).cast("long"))
           .withColumn("sum_len",
             length(regexp_replace(col("text"), " ", "")).cast("long"))
           .filter(col("n_words") >= CurationRules.MinWords
             && expr("sum_len * 1000000 div n_words") >= CurationRules.MinMeanLenMicro
             && expr("sum_len * 1000000 div n_words") <= CurationRules.MaxMeanLenMicro)
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val benchGrams = base.filter(col("doc_id") % 13 === 0)
           .select(concat_ws(" ", slice(split(col("text"), " "), 6, 20)).as("text"))
           .select(explode(
@@ -1139,10 +1139,10 @@ object TrainingDataOps {
             call_function("graft_word_ngrams", col("text"), lit(5))).as("g"))
           .join(benchGrams, Seq("g"), "left_semi")
           .select("doc_id").distinct()
-        val clean = TrackedCaches.track(
+        val clean =
           quality.join(contaminated, Seq("doc_id"), "left_anti")
             .withColumn("fp", call_function("graft_polyhash", col("text")))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val rw = Window.partitionBy("source").orderBy("fp", "doc_id")
         val packed = clean
           .withColumn("rk", row_number().over(rw))
@@ -1305,11 +1305,11 @@ object TrainingDataOps {
     QueryDef(
       "q193_surprisal_score",
       (s, dir) => {
-        val toks = TrackedCaches.track(Tables(s, dir, "documents")
+        val toks = Tables(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cnts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
         val total = cnts.agg(sum("cnt").as("n"))
           .select(expr("length(bin(n)) - 1").as("ln"))
@@ -1382,14 +1382,14 @@ object TrainingDataOps {
           .select(col("doc_id").as("bench_id"), lit("v2").as("release"),
             concat_ws(" ", slice(split(col("text"), " "), 10, 20)).as("text"))
         // standing index + delta index (distinct gram keys only)
-        val baseGrams = TrackedCaches.track(
+        val baseGrams =
           grams(base, Seq("doc_id")).select("g").distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val batchGrams = grams(batch, Seq("doc_id")).select("g").distinct()
         def verdicts(bench: org.apache.spark.sql.DataFrame) = {
-          val bg = TrackedCaches.track(
+          val bg =
             grams(bench, Seq("bench_id", "release"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           // hit-in-base instances settle against the standing index;
           // ONLY the misses re-probe the delta
           val hitBase = bg.join(baseGrams, Seq("g"), "left_semi")
@@ -1590,14 +1590,13 @@ object TrainingDataOps {
         graft.plans.GraftFunctions.register(s)
         // spread (r14, guide §2.5): single-row-group scan = one-task
         // explode; the term table is the loop's only corpus-sized input
-        val terms = TrackedCaches.track(
-          graft.Tables.spread(
+        val terms = graft.Tables.spread(
               Tables(s, dir, "documents").select("doc_id", "text"),
               col("doc_id"))
           .select(col("doc_id"),
             explode(call_function("graft_word_ngrams", col("text"), lit(3))).as("w"))
           .distinct()
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         var covered: org.apache.spark.sql.DataFrame = null
         var picked = List.empty[Long]
         val rows: Seq[(Long, Long, Long, Long)] = (1 to 5).map { round =>
@@ -1612,10 +1611,9 @@ object TrainingDataOps {
           val (wid, gain) = (win.getLong(0), win.getLong(1))
           picked ::= wid
           val winTerms = terms.filter(col("doc_id") === wid).select("w")
-          covered = TrackedCaches.track(
-            (if (covered == null) winTerms
+          covered = (if (covered == null) winTerms
              else covered.unionByName(winTerms).distinct())
-              .persist(MEMORY_AND_DISK))
+              .persist(MEMORY_AND_DISK)
           val total = covered.count()
           (round.toLong, wid, gain, total)
         }
@@ -1697,13 +1695,13 @@ object TrainingDataOps {
           .agg(count(lit(1)).as("n"), countDistinct(col("w")).as("dw"))
           .withColumn("ttr_permille", expr("dw * 1000 div n"))
         val wr = Window.orderBy(col("ttr_permille").desc, col("source")) // ≤ sources rows by construction
-        val t0 = TrackedCaches.track(perSrc
+        val t0 = perSrc
           .withColumn("rk", row_number().over(wr))
           .withColumn("tier",
             when(col("rk") <= 7, 4L).when(col("rk") <= 14, 2L).otherwise(1L))
           .withColumn("cap", col("tier") * col("n"))
           .select("source", "n", "ttr_permille", "tier", "cap")
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val budget = t0.agg((sum("n") * 2).as("b"))
         var st = t0.crossJoin(broadcast(budget))
           .withColumn("capped", lit(false))
@@ -2407,11 +2405,11 @@ object TrainingDataOps {
         def shard(e: Int) =
           s"cast(conv(substr(md5(concat('e', '$e', ':', " +
             s"cast(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 8"
-        val base = TrackedCaches.track(Tables(s, dir, "documents")
+        val base = Tables(s, dir, "documents")
           .select(col("doc_id"),
             expr(shard(0)).as("s0"), expr(shard(1)).as("s1"),
             expr(shard(2)).as("s2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val balance = base
           .selectExpr(
             "stack(3, 0L, s0, 1L, s1, 2L, s2) AS (epoch, shard)")
@@ -2656,12 +2654,11 @@ object TrainingDataOps {
           .agg(sum(when(col("ti") > col("tj"), 1L).otherwise(0L))
               .as("w_ij"),
             sum(when(col("tj") > col("ti"), 1L).otherwise(0L)).as("w_ji"))
-        val sTab = TrackedCaches.track(
-          pc.select(col("i").as("item"), col("j").as("opp"),
+        val sTab = pc.select(col("i").as("item"), col("j").as("opp"),
               col("w_ij").as("w"), (col("w_ij") + col("w_ji")).as("n"))
             .union(pc.select(col("j").as("item"), col("i").as("opp"),
               col("w_ji").as("w"), (col("w_ij") + col("w_ji")).as("n")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val wAll = Window.partitionBy() // ≤ items rows by construction
         val p0 = sTab.select(col("item")).distinct()
           .withColumn("p", lit(1000000L))
@@ -6038,7 +6035,7 @@ object TrainingDataOps {
     // subplan RE-EXECUTES on every micro-batch of s70's stream-static
     // join — persisted, batches 2..n probe the cached index instead of
     // re-featurizing the corpus
-    val index = TrackedCaches.track(
+    val index =
       graft.Tables.spread(corpus, col("doc_id"))
         .select(explode(expr("array_distinct(graft_word_ngrams(text, 5))"))
           .as("gram"))
@@ -6046,7 +6043,7 @@ object TrainingDataOps {
           "CAST(conv(substr(md5(gram), 1, 15), 16, 10) AS BIGINT)").as("h"))
         .distinct()
         .withColumn("known", lit(1))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // `cls` is the literal carried from novelArrivals' union branches —
     // never re-derived from the id, so no fixture id-range assumption.
     arrivals
@@ -6319,7 +6316,7 @@ object TrainingDataOps {
     // rollup) read the exploded per-token frame — persist so the
     // posexplode + two lead windows are paid once, not per consumer
     // (ADVICE r12; the q333/q343/q345 multiply-read class)
-    val fl = TrackedCaches.track(docs
+    val fl = docs
       .withColumn("wl", expr("filter(split(text, ' '), x -> x <> '')"))
       .filter(size(col("wl")) >= 2)
       .select(col("doc_id"), col("source"),
@@ -6332,7 +6329,7 @@ object TrainingDataOps {
         when(col("tok") === col("nx1"), 1L).otherwise(0L))
       .withColumn("rep2",
         when(col("tok") === col("nx2"), 1L).otherwise(0L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // run grouping: among rep1 positions, pos − row_number is constant
     // within one consecutive run (the gaps-and-islands device); run
     // tokens = rep1 count + 1

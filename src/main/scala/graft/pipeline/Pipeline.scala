@@ -6,6 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory}
 
@@ -162,6 +163,15 @@ object Pipeline {
     fromResults.unionByName(parseFailures)
       .withColumn("timestamp", current_timestamp())
       .withColumn("retry_count", lit(0))
+  }
+
+  /** Persists `results` and counts it, so the side-effecting transfer
+    * map runs exactly once however many frames (status counts, the DLQ,
+    * a sink write) later read it. Returns `results` itself; its cache is
+    * the caller's to free (`unpersist`, or the query boundary). */
+  def executeOnce(results: DataFrame): DataFrame = {
+    results.persist(StorageLevel.MEMORY_AND_DISK).count()
+    results
   }
 
   /** End-to-end batch run: raw messages in, (results, dlq) out. */

@@ -2,6 +2,8 @@ package graft.pipeline.transfer
 
 import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, TimeUnit, TimeoutException}
 
+import scala.util.control.NonFatal
+
 import graft.pipeline.{PipelineConfig, ServerConfig}
 
 /** Thread-safe bounded connection pool.
@@ -70,20 +72,15 @@ final class ConnectionPool[C](
   @annotation.tailrec
   def borrow(): C = {
     if (closed) throw new IllegalStateException("Pool is closed")
-    idle.poll() match {
-      case e if e != null =>
-        if (expired(e)) { discard(e.conn); borrow() } // aged out while idle
-        else if (factory.validate(e.conn)) e.conn
-        else { // stale: close, free the slot, retry (pool.py:117-125)
-          discard(e.conn)
-          borrow()
-        }
-      case _ =>
+    val polled = idle.poll()
+    val conn =
+      if (polled != null) reuse(polled)
+      else {
         val fresh = lock.synchronized {
           if (createdCount < poolSize) { createdCount += 1; true } else false
         }
         if (fresh) {
-          try factory.create()
+          try Some(factory.create())
           catch { case e: Throwable => lock.synchronized(createdCount -= 1); throw e }
         } else {
           // at capacity: block for a return (pool.py:139-160)
@@ -91,12 +88,21 @@ final class ConnectionPool[C](
           if (e == null)
             throw new TimeoutException(
               s"Timeout waiting for connection from pool (waited ${maxWaitSec}s)")
-          if (expired(e)) { discard(e.conn); borrow() }
-          else if (factory.validate(e.conn)) e.conn
-          else { discard(e.conn); borrow() }
+          reuse(e)
         }
+      }
+    conn match {
+      case Some(c) => c
+      case None => borrow()
     }
   }
+
+  /** An idle entry's connection, if it is still usable. One aged out
+    * while idle, or stale by the validate probe, is closed and its slot
+    * freed; None tells the borrow to retry (pool.py:117-125). */
+  private def reuse(e: IdleEntry): Option[C] =
+    if (!expired(e) && factory.validate(e.conn)) Some(e.conn)
+    else { discard(e.conn); None }
 
   /** pool.py:162-182 — closed-check and offer are one atomic step under
     * the lock, so a return racing closeAll can't park a connection in a
@@ -117,7 +123,7 @@ final class ConnectionPool[C](
     var e = idle.poll()
     while (e != null) {
       if (expired(e)) {
-        try factory.close(e.conn) catch { case _: Throwable => () }
+        try factory.close(e.conn) catch { case NonFatal(_) => () }
         createdCount -= 1
       } else keep.add(e)
       e = idle.poll()
@@ -141,7 +147,7 @@ final class ConnectionPool[C](
   }
 
   private def discard(conn: C): Unit = {
-    try factory.close(conn) catch { case _: Throwable => () }
+    try factory.close(conn) catch { case NonFatal(_) => () }
     lock.synchronized(createdCount -= 1)
   }
 
@@ -159,7 +165,7 @@ final class ConnectionPool[C](
     closed = true
     var e = idle.poll()
     while (e != null) {
-      try factory.close(e.conn) catch { case _: Throwable => () }
+      try factory.close(e.conn) catch { case NonFatal(_) => () }
       createdCount -= 1
       e = idle.poll()
     }

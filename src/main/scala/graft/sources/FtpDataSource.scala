@@ -3,6 +3,7 @@ package graft.sources
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -274,7 +275,7 @@ final class FtpWriterFactory(
       override def abort(): Unit = {
         staged.foreach { case (tmp, _) =>
           val cleaned = conn != null &&
-            (try { conn.delete(tmp); true } catch { case _: Throwable => false })
+            (try { conn.delete(tmp); true } catch { case NonFatal(_) => false })
           if (!cleaned) {
             // the session that staged this temp may have died mid-STOR —
             // which is exactly when abort runs. Retry through a fresh
@@ -287,7 +288,7 @@ final class FtpWriterFactory(
               if (conn != null) { pool.give(conn); conn = null }
               conn = pool.borrow()
               conn.delete(tmp)
-            } catch { case _: Throwable => () }
+            } catch { case NonFatal(_) => () }
           }
         }
         staged.clear()

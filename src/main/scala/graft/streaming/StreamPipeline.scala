@@ -59,9 +59,9 @@ object StreamPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (results, dlq) = Pipeline.run(batch, pc)
-        val r = results.toDF().persist()
+        val r = results.toDF()
         try {
-          r.count() // single execution of the side-effecting transfer map
+          Pipeline.executeOnce(r)
           // Idempotent on retry: each micro-batch owns its batch_id=<id>
           // partition, and dynamic partition overwrite REPLACES exactly
           // that partition — a batch replayed after a crash between the

@@ -2591,10 +2591,10 @@ object StreamingQueries {
         val bench = docs.filter(col("doc_id") % 13 === 0)
           .select(col("doc_id").as("bench_id"),
             concat_ws(" ", slice(split(col("text"), " "), 6, 20)).as("text"))
-        val bgInst = graft.operators.TrackedCaches.track(bench
+        val bgInst = bench
           .select(col("bench_id"),
             explode(call_function("graft_word_ngrams", col("text"), lit(5))).as("g"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val bgKeys = bgInst.select("bench_id", "g").distinct()
         val hits = documentsStreamParts(s, dir)
           .select(explode(call_function("graft_word_ngrams", col("text"), lit(5)))
@@ -2886,20 +2886,19 @@ object StreamingQueries {
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        import graft.operators.TrackedCaches
         val hb5 = "cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"
         // spread (r14, guide §2.5): one-task scan serialized the per-doc
         // md5 split-coin + bigram explode of the training side
         val train = graft.Tables.spread(
             graft.Tables(s, dir, "documents"), col("doc_id"))
           .filter(expr(hb5) =!= 0L)
-        val tb = TrackedCaches.track(train
+        val tb = train
           .select(explode(
             call_function("graft_word_ngrams", col("text"), lit(2)))
             .as("gram"))
           .groupBy("gram").agg(count(lit(1)).as("c12"))
           .withColumn("w1", element_at(split(col("gram"), " "), 1))
-          .persist(MEMORY_AND_DISK))
+          .persist(MEMORY_AND_DISK)
         val c1 = tb.groupBy("w1").agg(sum("c12").as("c1"))
         val v = train
           .select(explode(split(col("text"), " ")).as("w"))
@@ -2950,8 +2949,7 @@ object StreamingQueries {
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        import graft.operators.TrackedCaches
-        val standing = TrackedCaches.track(
+        val standing =
           // spread (r14, guide §2.5): one-task scan serialized the
           // standing-index explode
           graft.Tables.spread(
@@ -2963,7 +2961,7 @@ object StreamingQueries {
             .distinct()
             .groupBy("term")
             .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
-            .persist(MEMORY_AND_DISK))
+            .persist(MEMORY_AND_DISK)
         val st = ingestBatchStreamParts(s, dir)
           .select(col("doc_id"),
             explode(array_distinct(
@@ -3078,8 +3076,7 @@ object StreamingQueries {
         // spread + persist (r14): the benchmark gram set was rebuilt
         // from the one-task scan on EVERY micro-batch of the
         // stream-static probe below
-        val bg = graft.operators.TrackedCaches.track(
-          graft.Tables.spread(docs.filter(col("doc_id") % 13 === 0),
+        val bg = graft.Tables.spread(docs.filter(col("doc_id") % 13 === 0),
               col("doc_id"))
           .select(concat_ws(" ",
             slice(split(col("text"), " "), 6, 20)).as("text"))
@@ -3087,7 +3084,7 @@ object StreamingQueries {
             call_function("graft_word_ngrams", col("text"), lit(5)))
             .as("g"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = documentsStreamParts(s, dir)
           .select(col("doc_id"),
             explode(array_distinct(
@@ -3132,12 +3129,12 @@ object StreamingQueries {
         // static side derived from the session-shared gram frame
         // (GramFrames — shared with q103/q279); the distinct-reduced
         // standing set persists so each micro-batch probes, not rebuilds
-        val standing = graft.operators.TrackedCaches.track(
+        val standing =
           graft.operators.GramFrames.word8(s, dir)
             .filter(col("doc_id") % 5 =!= 4)
             .select("h").distinct()
             .withColumn("seen", lit(1L))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = documentsStreamParts(s, dir)
           .filter(col("doc_id") % 5 === 4)
           .select(col("doc_id"), col("source"),
@@ -3236,9 +3233,9 @@ object StreamingQueries {
         val corpusSegs = graft.operators.TextAnalysis.segments(
           graft.Tables.spread(
             graft.Tables(s, dir, "documents"), col("doc_id")))
-        val bp = graft.operators.TrackedCaches.track(
+        val bp =
           graft.operators.TextAnalysis.boilerplateSet(corpusSegs)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = graft.operators.TextAnalysis.segments(
             documentsStreamParts(s, dir))
           .join(broadcast(bp), Seq("source", "seg"), "left")
@@ -3292,7 +3289,7 @@ object StreamingQueries {
         import graft.operators.{ClassifierArtifacts, Profiling}
         import org.apache.spark.sql.expressions.Window
         // --- batch side: the standing conformal artifact -------------
-        val scored = graft.operators.TrackedCaches.track(
+        val scored =
           ClassifierArtifacts.grams(s, dir)
             .join(broadcast(ClassifierArtifacts.weights(s, dir)), "b")
             .groupBy("doc_id", "good")
@@ -3300,7 +3297,7 @@ object StreamingQueries {
             .withColumn("cal", expr(
               """cast(conv(substr(md5(cast(doc_id AS string)), 1, 15),
                            16, 10) AS BIGINT) % 4 = 0"""))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         def rOf(cls: DataFrame): (Long, Long) = {
           val n = cls.count()
           (n, math.max(100000L * (n + 1L) / 1000000L, 1L))
@@ -3400,10 +3397,10 @@ object StreamingQueries {
       "s51_stream_substring_probe",
       (s, dir) => {
         graft.plans.GraftFunctions.register(s)
-        val standing = graft.operators.TrackedCaches.track(
+        val standing =
           graft.operators.GramFrames.word8Pos(s, dir)
             .select("h").distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = documentsStreamParts(s, dir)
           .filter(col("doc_id") % 6 === 0)
           .select(col("doc_id"), col("source"),
@@ -3498,13 +3495,12 @@ object StreamingQueries {
     QueryDef(
       "s55_stream_speculative_probe",
       (s, dir) => {
-        import graft.operators.{TextAnalysis, TrackedCaches}
+        import graft.operators.TextAnalysis
         // spread (r14, guide §2.5): one-task scan serialized the draft-
         // table pair explode
-        val draft = TrackedCaches.track(
-          TextAnalysis.specDraft(TextAnalysis.specPairs(
+        val draft = TextAnalysis.specDraft(TextAnalysis.specPairs(
             graft.Tables.spread(graft.Tables(s, dir, "documents"),
-              col("doc_id")))).localCheckpoint(true))
+              col("doc_id")))).localCheckpoint(true)
         TextAnalysis.specAcceptReport(
           drain(s, OutputMode.Append())(
             TextAnalysis.specPairs(documentsStreamParts(s, dir))
@@ -3532,18 +3528,18 @@ object StreamingQueries {
     QueryDef(
       "s56_stream_template_probe",
       (s, dir) => {
-        import graft.operators.{Dedup, TrackedCaches}
+        import graft.operators.Dedup
         // spread (r14, guide §2.5): one-task scan (and its variant
         // union) serialized the skeleton hashing
         val docs = graft.Tables.spread(
           graft.Tables(s, dir, "documents")
             .select("doc_id", "source", "text"), col("doc_id"))
-        val standing = TrackedCaches.track(
+        val standing =
           docs.unionByName(Dedup.templateVariant(docs, 300000, 3, 1))
             .select(Dedup.templateSkeletonH(col("text")).as("h"))
             .distinct()
             .withColumn("known", lit(1L))
-            .localCheckpoint(true))
+            .localCheckpoint(true)
         val flags = drain(s, OutputMode.Append())(
           templateArrivalStreamParts(s, dir)
             .select(col("source"), Dedup.templateSkeletonH(col("text")).as("h"))

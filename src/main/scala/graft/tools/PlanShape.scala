@@ -88,8 +88,8 @@ object PlanShape {
   /** Build each named query at `dir` with AQE off and return its
     * signature. Queries whose functions EXECUTE at build time (eager
     * checkpoints, artifact loops) run those jobs — at sf0.001 this is the
-    * cheap tier; TrackedCaches is released per query so 322 builds don't
-    * accumulate blocks. Failures are surfaced in the map (sig = None) so
+    * cheap tier; the query boundary runs after each build so 322 builds
+    * don't accumulate blocks. Failures are surfaced in the map (sig = None) so
     * the caller can fail loudly rather than silently snapshotting fewer
     * queries.
     */

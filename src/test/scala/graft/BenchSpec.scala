@@ -192,4 +192,39 @@ class BenchSpec extends AnyFunSuite {
     // each timed build counts once under its own tag
     assert(SharedBuilds.count("bsp-parent") == c0 + 1)
   }
+
+  test("compact stdout line stays under 1.5 KB in a worst-case run") {
+    // every capped map at its cap, with 3-digit seconds and 5-digit GC
+    // milliseconds: 449 slots, 41 suspects of which 17 went unprobed,
+    // all three phases, every timed build tag, 10 serial slots
+    val names = (1 to 449).map(i => f"q$i%03d")
+    val serial = StageAnatomy.Summary(54, 120, 900, 99.99, 88.88, 1.0, 1.0,
+      0.0, 0.08, 13, 123.45)
+    val tags = Seq("shingles", "corpus-shingles", "bands", "corpus-bands",
+      "pairs", "cc-labels", "grams", "bpe-words", "bpe-merges", "bm25",
+      "copurchase-items", "copurchase-pairs", "word8-grams", "word8-grams-pos")
+    val r = Bench.Record(
+      slots = names.map(_ -> 123.45),
+      iso = names.take(24).map(_ -> 123.45),
+      gcMs = names.map(_ -> 12345L),
+      cache = names.take(40).map(_ -> ((123L, 45L, 6L))),
+      stages = names.take(10).map(_ -> serial),
+      phaseSec = Seq("q" -> 1234.56, "p" -> 123.45, "s" -> 1234.56),
+      builds = tags.map(_ -> 123.45),
+      isoSkipped = names.slice(24, 41),
+      gcTotalMs = 1234567L,
+      suiteRawN = 449,
+      suiteTotal = 12345.67,
+      errors = Seq.empty,
+      sf = "/data/graft/fixtures/sf0.1",
+      value = 12345.67)
+    val line = Bench.compactLine(r, "\"BENCH_FULL_sf0.1.json\"")
+    val bytes = line.getBytes("UTF-8").length
+    assert(bytes < 1500, s"$bytes bytes: $line")
+    // the skip count stays whole while only 3 names ride the line
+    assert(line.contains("\"iso_skipped\":17,\"iso_skipped_names\":[\"q025\",\"q026\",\"q027\"]"))
+    assert(!line.contains("harness_sec") && !line.contains("shared_builds"))
+    // summary fields stay LAST: a tail-truncated capture still reads them
+    assert(line.endsWith("\"metric\":\"total\",\"unit\":\"sec\",\"value\":12345.67}"))
+  }
 }

@@ -329,22 +329,55 @@ class LlmDataSpec extends AnyFunSuite {
       "seven co-purchase consumers must trigger exactly one from-scratch build")
   }
 
-  test("q192 releases every k-core round checkpoint with the query") {
-    // the shared co-purchase frame is MEANT to outlive the query: build
-    // it first so its checkpoint is already in the before-set
-    CoPurchase.pairSup(spark, dir)
+  test("query boundary releases per-query caches, keeps memos") {
+    // (query, the shared memos it reads, a follow-up memo consumer). The
+    // co-purchase memos are built first for every row, so each row also
+    // proves that a boundary after an unrelated query keeps them.
+    val coPurchase = Seq(CoPurchase.items _, CoPurchase.pairSup _)
+    val rows = Seq(
+      "q192_kcore_peeling", // 13 eager round checkpoints + the edge cache
+      "q199_global_sequence", // a range-partitioned checkpoint of events
+      "q297_bradley_terry", // one checkpoint per MM round
+      "q206_mmr_rerank", // one checkpoint per selection round
+      "q300_theil_sen_fit", // the per-source point checkpoint
+      "q166_ks_test") // Statistics.prefixSums' range checkpoint
     def persisted = spark.sparkContext.getPersistentRDDs.keys.toSet
-    val before = persisted
-    val result = run("q192_kcore_peeling")
-    assert(result.collect().length == 13, "rounds 0..12")
-    val during = persisted -- before
-    assert(during.nonEmpty, "q192 persists its edge frame and round leaves")
+    def memoIds = coPurchase.map(_(spark, dir).queryExecution.analyzed)
+      .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    val left = rows.flatMap { q =>
+      val memos = memoIds
+      assert(memos.size == coPurchase.size, "memos are checkpoint leaves")
+      val before = persisted
+      val result = run(q)
+      result.collect()
+      val during = persisted -- before
+      assert(during.nonEmpty, s"$q persists nothing of its own")
+      TrackedCaches.releaseAll()
+      // `result` stays referenced below, so its plan's checkpoint leaves
+      // cannot be garbage-collected (and cleaned) before this check
+      val kept = during.intersect(persisted)
+      assert(memos.subsetOf(persisted) && memoIds == memos,
+        s"the boundary after $q freed a shared memo")
+      assert(run("q129_triangle_count").collect().nonEmpty,
+        s"a memo consumer after $q")
+      TrackedCaches.releaseAll()
+      if (kept.isEmpty) None
+      else Some(s"$q (${result.columns.length} cols) left ${kept.size}")
+    }
+    assert(left.isEmpty, s"releaseAll left RDDs persisted: ${left.mkString("; ")}")
+  }
+
+  test("a shared memo must be a checkpoint leaf") {
+    val tag = "spec-memo-rule"
+    val e = intercept[IllegalArgumentException](
+      SharedArtifact(tag, spark, dir, timed = false)(spark.range(3).toDF()))
+    assert(e.getMessage.contains(tag))
+    // the rejected frame was not memoized: a checkpoint build still runs
+    val ok = SharedArtifact(tag, spark, dir, timed = false)(
+      spark.range(3).toDF().localCheckpoint(true))
     TrackedCaches.releaseAll()
-    // `result` stays referenced below, so its plan's checkpoint leaves
-    // cannot be garbage-collected (and cleaned) before this check
-    val kept = during.intersect(persisted)
-    assert(kept.isEmpty, s"releaseAll left RDDs ${kept.toSeq.sorted} of " +
-      s"${result.columns.mkString(",")} persisted")
+    assert(ok.count() == 3, "the pinned memo survives the query boundary")
+    SharedArtifact.reset(tag)
   }
 
   test("word-8-gram digest frame builds ONCE, shared by q103/q279/s45") {
