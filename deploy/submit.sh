@@ -21,7 +21,6 @@ exec "$SPARK_HOME/bin/spark-submit" \
   --class graft.streaming.StreamMain \
   --master "${SPARK_MASTER:-local[4]}" \
   --packages "org.apache.spark:spark-sql-kafka-0-10_2.13:${SPARK_VERSION}" \
-  --conf spark.sql.extensions=graft.plans.GraftExtensions \
   --conf spark.sql.shuffle.partitions="${GRAFT_SHUFFLE_PARTITIONS:-32}" \
   --conf spark.sql.session.timeZone=UTC \
   "$JAR" "$@"

@@ -127,11 +127,15 @@ object Tables {
 
 /** One SparkSession configuration for every entrypoint (Verify, Bench,
   * tests), so correctness runs and benchmarks see identical semantics.
+  * Every session it builds carries [[graft.plans.GraftExtensions]] (the
+  * `graft_*` kernels and the range-join rule), and so does each of its
+  * `newSession()` siblings.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -150,6 +154,19 @@ object GraftSession {
       // (all ≫ 64 KB) packed exactly as before.
       .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
       .config("spark.ui.enabled", "false")
+
+  /** Run `body` with `key` set to `value` on `s`. Afterwards the key
+    * gets its previous value back, or is unset if it had none, also when
+    * `body` throws. */
+  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
 
   /** Apply graft settings onto an externally-built session (for the
     * driver-owned mains whose builder shape we keep intact). */

@@ -631,7 +631,11 @@ object Cdc {
         untouched.unionAll(redone)
           .orderBy("user_id", "session_id")
       },
-      Some("""
+      Some(sessionsOracle))
+  )
+
+  /** q215's oracle, shared verbatim by s02, s12. */
+  private[graft] def sessionsOracle: String = """
         WITH e AS (SELECT user_id, event_id,
                           epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
                    FROM events),
@@ -648,6 +652,5 @@ object Cdc {
                MIN(ts_us) AS start_us, MAX(ts_us) AS end_us
         FROM sg
         GROUP BY user_id, session_id
-        ORDER BY user_id, session_id"""))
-  )
+        ORDER BY user_id, session_id"""
 }

@@ -637,11 +637,10 @@ object Dedup {
     // ingest tick" into "scan-filter the corpus, shuffle ~|batch|".
     // Uses graft_bloom_agg / graft_bloom_contains (Spark's own
     // BloomFilterAggregate/MightContain, which Spark does not expose as
-    // SQL functions — registered via GraftFunctions/GraftExtensions).
+    // SQL functions — GraftExtensions names them in every session).
     QueryDef(
       "q98_bloom_pruned_ingest",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = docs(s, dir).select("doc_id", "text")
         // re-crawl batch: every 3rd doc is an exact dup under a new id;
         // every 3rd+1 doc arrives genuinely new (content extended)
@@ -814,38 +813,7 @@ object Dedup {
       // the oracle states the admission contract EXACTLY (all-pairs
       // Jaccard vs the corpus) — banding is the engine's candidate
       // mechanism and must be answer-invisible
-      Some("""
-        WITH batch AS (
-          SELECT doc_id + 500000 AS doc_id,
-                 regexp_replace(text, ' \S+$', '') AS text
-          FROM documents WHERE doc_id % 9 = 0
-          UNION ALL
-          SELECT doc_id + 600000,
-                 'novel content batch item ' || CAST(doc_id AS VARCHAR)
-          FROM documents WHERE doc_id % 9 = 1),
-        bsh AS (SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
-                FROM (SELECT doc_id, string_split(text, ' ') w FROM batch) t
-                WHERE len(w) >= 3),
-        csh AS (SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
-                FROM (SELECT doc_id, string_split(text, ' ') w FROM documents) t
-                WHERE len(w) >= 3),
-        dup AS (
-          SELECT DISTINCT b.doc_id
-          FROM bsh b JOIN csh c
-            ON 5 * len(list_intersect(b.s, c.s))
-               >= 3 * len(list_distinct(list_concat(b.s, c.s))))
-        SELECT CASE WHEN dup.doc_id IS NOT NULL
-                    THEN 'near_dup' ELSE 'admitted' END AS reason,
-               COUNT(*) AS n,
-               MIN(batch.doc_id) AS min_id,
-               MAX(batch.doc_id) AS max_id
-        FROM batch LEFT JOIN dup ON batch.doc_id = dup.doc_id
-        GROUP BY reason
-        ORDER BY reason"""))
+      Some(neardupIngestOracle))
   ,
 
     // --------------------------------------------------------------- q114
@@ -1309,7 +1277,6 @@ object Dedup {
     QueryDef(
       "q233_host_cap_sample",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = docs(s, dir)
           .withColumn("host", concat(col("source"), lit(".example.com")))
           .withColumn("fp", call_function("graft_polyhash", col("text")))
@@ -1368,7 +1335,6 @@ object Dedup {
     QueryDef(
       "q238_winnowing_fingerprints",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val corpus = nearCorpus(s, dir)
         val grams = corpus.select(col("doc_id"),
           posexplode(call_function("graft_word_ngrams", col("text"), lit(3)))
@@ -1500,7 +1466,6 @@ object Dedup {
     QueryDef(
       "q256_repeated_span_masking",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val boiler = "subscribe to our newsletter for updates terms of" +
@@ -1767,7 +1732,6 @@ object Dedup {
     QueryDef(
       "q290_cluster_split_repair",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val splitOf = (c: org.apache.spark.sql.Column) =>
           when(call_function("graft_polyhash", c) % 100 < 80, "train")
@@ -1882,7 +1846,6 @@ object Dedup {
     QueryDef(
       "q318_exact_substring_runs",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val baseG = GramFrames.word8Pos(s, dir)
         val d = docs(s, dir).select("doc_id", "source", "text")
         val recG = d.filter(col("doc_id") % 6 === 0)
@@ -2345,4 +2308,38 @@ object Dedup {
         FROM ppm
         GROUP BY source
         ORDER BY source"""
+
+  /** q107's oracle, shared verbatim by s37. */
+  private[graft] def neardupIngestOracle: String = """
+        WITH batch AS (
+          SELECT doc_id + 500000 AS doc_id,
+                 regexp_replace(text, ' \S+$', '') AS text
+          FROM documents WHERE doc_id % 9 = 0
+          UNION ALL
+          SELECT doc_id + 600000,
+                 'novel content batch item ' || CAST(doc_id AS VARCHAR)
+          FROM documents WHERE doc_id % 9 = 1),
+        bsh AS (SELECT doc_id,
+                  list_distinct(list_transform(range(1, len(w) - 1),
+                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
+                FROM (SELECT doc_id, string_split(text, ' ') w FROM batch) t
+                WHERE len(w) >= 3),
+        csh AS (SELECT doc_id,
+                  list_distinct(list_transform(range(1, len(w) - 1),
+                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
+                FROM (SELECT doc_id, string_split(text, ' ') w FROM documents) t
+                WHERE len(w) >= 3),
+        dup AS (
+          SELECT DISTINCT b.doc_id
+          FROM bsh b JOIN csh c
+            ON 5 * len(list_intersect(b.s, c.s))
+               >= 3 * len(list_distinct(list_concat(b.s, c.s))))
+        SELECT CASE WHEN dup.doc_id IS NOT NULL
+                    THEN 'near_dup' ELSE 'admitted' END AS reason,
+               COUNT(*) AS n,
+               MIN(batch.doc_id) AS min_id,
+               MAX(batch.doc_id) AS max_id
+        FROM batch LEFT JOIN dup ON batch.doc_id = dup.doc_id
+        GROUP BY reason
+        ORDER BY reason"""
 }

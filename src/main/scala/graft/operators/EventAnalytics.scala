@@ -188,25 +188,7 @@ object EventAnalytics {
           .withColumn("share_permille", expr("n * 1000 div from_total"))
           .orderBy("from_type", "to_type")
       },
-      Some("""
-        WITH e AS (
-          SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-                 event_id, event_type
-          FROM events),
-        p AS (
-          SELECT event_type AS from_type,
-                 lead(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts_us, event_id) AS to_type
-          FROM e),
-        t AS (SELECT from_type, to_type, COUNT(*) AS n
-              FROM p WHERE to_type IS NOT NULL
-              GROUP BY from_type, to_type)
-        SELECT from_type, to_type, n,
-               CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS from_total,
-               n * 1000 // CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT)
-                 AS share_permille
-        FROM t
-        ORDER BY from_type, to_type"""))
+      Some(transitionsOracle))
   ,
 
     // --------------------------------------------------------------- q131
@@ -584,22 +566,7 @@ object EventAnalytics {
             expr("cast(swv div sw AS BIGINT)").as("twap_cents"))
           .orderBy("event_type")
       },
-      Some("""
-        WITH e AS (
-          SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-                 event_id,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        iv AS (
-          SELECT event_type, vc,
-                 lead(ts_us) OVER (PARTITION BY event_type
-                                   ORDER BY ts_us, event_id) - ts_us AS dt
-          FROM e)
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_intervals,
-               CAST(SUM(CAST(vc AS HUGEINT) * dt)
-                    // CAST(SUM(dt) AS HUGEINT) AS BIGINT) AS twap_cents
-        FROM iv WHERE dt IS NOT NULL
-        GROUP BY event_type ORDER BY event_type"""))
+      Some(twapOracle))
   ,
 
     // --------------------------------------------------------------- q147
@@ -1966,4 +1933,43 @@ object EventAnalytics {
         GROUP BY a.t, a.n_risk, a.d, a.c, a.hazard_ppm
         ORDER BY a.t"""))
   )
+
+  /** q116's oracle, shared verbatim by s18. */
+  private[graft] def transitionsOracle: String = """
+        WITH e AS (
+          SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
+                 event_id, event_type
+          FROM events),
+        p AS (
+          SELECT event_type AS from_type,
+                 lead(event_type) OVER (PARTITION BY user_id
+                                        ORDER BY ts_us, event_id) AS to_type
+          FROM e),
+        t AS (SELECT from_type, to_type, COUNT(*) AS n
+              FROM p WHERE to_type IS NOT NULL
+              GROUP BY from_type, to_type)
+        SELECT from_type, to_type, n,
+               CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS from_total,
+               n * 1000 // CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT)
+                 AS share_permille
+        FROM t
+        ORDER BY from_type, to_type"""
+
+  /** q146's oracle, shared verbatim by s23. */
+  private[graft] def twapOracle: String = """
+        WITH e AS (
+          SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
+                 event_id,
+                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
+          FROM events),
+        iv AS (
+          SELECT event_type, vc,
+                 lead(ts_us) OVER (PARTITION BY event_type
+                                   ORDER BY ts_us, event_id) - ts_us AS dt
+          FROM e)
+        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_intervals,
+               CAST(SUM(CAST(vc AS HUGEINT) * dt)
+                    // CAST(SUM(dt) AS HUGEINT) AS BIGINT) AS twap_cents
+        FROM iv WHERE dt IS NOT NULL
+        GROUP BY event_type ORDER BY event_type"""
 }

@@ -27,7 +27,6 @@ object GramFrames {
     * (session, sfDir). */
   def word8(s: SparkSession, dir: String): DataFrame =
     SharedArtifact("word8-grams", s, dir) {
-      graft.plans.GraftFunctions.register(s)
       // spread: single-row-group fixture scan = one task for the
       // explode + sha2 below (guide §2.5, r14)
       graft.Tables.spread(
@@ -50,7 +49,6 @@ object GramFrames {
     * passage index (32-byte digest + two longs per gram, never text). */
   def word8Pos(s: SparkSession, dir: String): DataFrame =
     SharedArtifact("word8-grams-pos", s, dir) {
-      graft.plans.GraftFunctions.register(s)
       // spread: same single-task-scan rationale as [[word8]] (r14)
       graft.Tables.spread(
           graft.Tables(s, dir, "documents")

@@ -119,20 +119,7 @@ object Profiling {
           .select(unix_micros(col("window.start")).as("ws_us"),
             col("n_events"), col("sum_value"))
           .orderBy("ws_us"),
-      Some("""
-        WITH e AS (
-          SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
-        w AS (
-          SELECT us, value,
-                 UNNEST([(us // 1800000000) * 1800000000,
-                         (us // 1800000000) * 1800000000 - 1800000000]) AS ws
-          FROM e)
-        SELECT ws AS ws_us, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM w
-        WHERE us >= ws AND us < ws + 3600000000
-        GROUP BY ws
-        ORDER BY ws_us""")),
+      Some(hoppingWindowOracle)),
 
     // ---------------------------------------------------------------- q94
     // Time-spine gap filling — resampling for dashboards/features: the
@@ -1182,35 +1169,7 @@ object Profiling {
                     ELSE 'fail' END"""))
           .orderBy("rule")
       },
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_type, value,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        wide AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(count_if(vc < 1 OR vc > 45000) AS BIGINT) AS v1,
-                 CAST(count_if(event_type NOT IN
-                   ('view','click','purchase','error','signup')) AS BIGINT) AS v2,
-                 CAST(count_if(user_id < 1) AS BIGINT) AS v3,
-                 CAST(count_if(value IS NULL) AS BIGINT) AS v4,
-                 CAST(count_if(event_type = 'purchase' AND vc < 500)
-                   AS BIGINT) AS v5
-          FROM ev),
-        longf AS (
-          SELECT 'r1_value_in_1c_450' AS rule, n AS n_checked,
-                 v1 AS n_violations FROM wide
-          UNION ALL SELECT 'r2_type_in_domain', n, v2 FROM wide
-          UNION ALL SELECT 'r3_user_id_positive', n, v3 FROM wide
-          UNION ALL SELECT 'r4_value_not_null', n, v4 FROM wide
-          UNION ALL SELECT 'r5_purchase_floor_5', n, v5 FROM wide)
-        SELECT rule, n_checked, n_violations,
-               n_violations * 1000000 // n_checked AS violation_ppm,
-               CASE WHEN n_violations = 0 THEN 'pass'
-                    WHEN n_violations * 100 <= n_checked THEN 'warn'
-                    ELSE 'fail' END AS status
-        FROM longf
-        ORDER BY rule"""))
+      Some(qualityOracle))
   ,
 
     // --------------------------------------------------------------- q255
@@ -1241,7 +1200,6 @@ object Profiling {
     QueryDef(
       "q255_hashed_ngram_classifier",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // weights come from the session-shared registry: trained once
         // from the shared gram frame, consumed by q255/q262/q264/q268/
         // s39 (the PairGraph discipline — see ClassifierArtifacts)
@@ -1658,7 +1616,6 @@ object Profiling {
     QueryDef(
       "q268_score_calibration",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val grams = ClassifierArtifacts.grams(s, dir)
         val wt = ClassifierArtifacts.weights(s, dir)
         val scored = grams.join(broadcast(wt), "b")
@@ -2206,7 +2163,6 @@ object Profiling {
     QueryDef(
       "q292_sampling_error_audit",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = Tables(s, dir, "documents")
           .select(col("text"),
             (call_function("graft_polyhash", col("text")) % 16 === 0)
@@ -2495,7 +2451,6 @@ object Profiling {
       "q308_split_conformal",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.plans.GraftFunctions.register(s)
         val scored =
           ClassifierArtifacts.grams(s, dir)
             .join(broadcast(ClassifierArtifacts.weights(s, dir)), "b")
@@ -2575,7 +2530,6 @@ object Profiling {
     QueryDef(
       "q317_isotonic_calibration",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val scored = ClassifierArtifacts.grams(s, dir)
           .join(broadcast(ClassifierArtifacts.weights(s, dir)), "b")
           .groupBy("doc_id", "good")
@@ -3473,7 +3427,6 @@ object Profiling {
   /** q255/s39 shared: the gram-occurrence frame (doc_id, source, good, b)
     * — md5-hashed char-3gram buckets with the per-doc seed label. */
   private[graft] def classifierGrams(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // spread before the explode: the single-row-group fixture scan is one
     // task, and this explode was the whole build's cost when serialized
     // (13.2 s single-task vs 0.6 s spread at sf0.1 — r14, guide §2.5).
@@ -3558,4 +3511,51 @@ object Profiling {
         FROM k
         GROUP BY source
         ORDER BY source"""
+
+  /** q75's oracle, shared verbatim by s09. */
+  private[graft] def hoppingWindowOracle: String = """
+        WITH e AS (
+          SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
+        w AS (
+          SELECT us, value,
+                 UNNEST([(us // 1800000000) * 1800000000,
+                         (us // 1800000000) * 1800000000 - 1800000000]) AS ws
+          FROM e)
+        SELECT ws AS ws_us, COUNT(*) AS n_events,
+               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+        FROM w
+        WHERE us >= ws AND us < ws + 3600000000
+        GROUP BY ws
+        ORDER BY ws_us"""
+
+  /** q248's oracle, shared verbatim by s35. */
+  private[graft] def qualityOracle: String = """
+        WITH ev AS (
+          SELECT user_id, event_type, value,
+                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
+          FROM events),
+        wide AS (
+          SELECT CAST(COUNT(*) AS BIGINT) AS n,
+                 CAST(count_if(vc < 1 OR vc > 45000) AS BIGINT) AS v1,
+                 CAST(count_if(event_type NOT IN
+                   ('view','click','purchase','error','signup')) AS BIGINT) AS v2,
+                 CAST(count_if(user_id < 1) AS BIGINT) AS v3,
+                 CAST(count_if(value IS NULL) AS BIGINT) AS v4,
+                 CAST(count_if(event_type = 'purchase' AND vc < 500)
+                   AS BIGINT) AS v5
+          FROM ev),
+        longf AS (
+          SELECT 'r1_value_in_1c_450' AS rule, n AS n_checked,
+                 v1 AS n_violations FROM wide
+          UNION ALL SELECT 'r2_type_in_domain', n, v2 FROM wide
+          UNION ALL SELECT 'r3_user_id_positive', n, v3 FROM wide
+          UNION ALL SELECT 'r4_value_not_null', n, v4 FROM wide
+          UNION ALL SELECT 'r5_purchase_floor_5', n, v5 FROM wide)
+        SELECT rule, n_checked, n_violations,
+               n_violations * 1000000 // n_checked AS violation_ppm,
+               CASE WHEN n_violations = 0 THEN 'pass'
+                    WHEN n_violations * 100 <= n_checked THEN 'warn'
+                    ELSE 'fail' END AS status
+        FROM longf
+        ORDER BY rule"""
 }

@@ -44,7 +44,6 @@ object ScaleTechniques {
     QueryDef(
       "q207_consistent_sharding",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // 16 virtual nodes per shard (the variance-control production
         // rings actually use); each anchor encodes (position, shard) as
         // pos*32 + shard — order-preserving in position, so the ring
@@ -651,27 +650,15 @@ object ScaleTechniques {
       },
       // the oracle states the CONTAINMENT contract directly as the
       // theta join — binning must be answer-invisible
-      Some("""
-        WITH f AS (
-          SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        ranges AS (
-          SELECT CAST(r.r AS BIGINT) AS range_id,
-                 r.r * 1100 + 37 AS lo, r.r * 1100 + 1537 AS hi
-          FROM (SELECT UNNEST(range(0, 40)) AS r) r)
-        SELECT range_id, COUNT(*) AS n_in_range,
-               CAST(SUM(vc) AS BIGINT) AS sum_cents
-        FROM f JOIN ranges ON vc >= lo AND vc < hi
-        GROUP BY range_id
-        ORDER BY range_id"""))
+      Some(rangeJoinOracle))
   ,
 
     // --------------------------------------------------------------- q124
     // The OPTIMIZER-extension face of q121 (brief option (c)): the query
     // is written the NAIVE way — `fact JOIN ranges ON vc >= lo AND
     // vc < hi`, which Spark plans as a nested-loop product — and
-    // graft.plans.RangeJoinRule (a Rule[LogicalPlan], injectable via
-    // GraftExtensions or registered per-session) rewrites it into the
+    // graft.plans.RangeJoinRule (a Rule[LogicalPlan] that
+    // GraftExtensions puts in every session) rewrites it into the
     // binned equi-join automatically under the configured bin width.
     // Same semantics, same oracle as q121's hand-written form; the
     // no-nested-loop plan shape is asserted in ScaleSpec, and
@@ -680,11 +667,10 @@ object ScaleTechniques {
     QueryDef(
       "q124_range_join_rule",
       (s, dir) => {
-        // conf-isolated sibling session (the q120 discipline): the rule
-        // registration + bin width stay scoped to this query even
+        // conf-isolated sibling session (the q120 discipline): the bin
+        // width, which arms the rule, stays scoped to this query even
         // though the rewrite itself is answer-invisible by construction
         val s2 = s.newSession()
-        graft.plans.RangeJoin.register(s2)
         s2.conf.set(graft.plans.RangeJoinRule.BinWidthKey, "1000")
         val ranges = s2.range(0, 40)
           .select(col("id").as("range_id"),
@@ -696,19 +682,7 @@ object ScaleTechniques {
           .agg(count(lit(1)).as("n_in_range"), sum("vc").as("sum_cents"))
           .orderBy("range_id")
       },
-      Some("""
-        WITH f AS (
-          SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        ranges AS (
-          SELECT CAST(r.r AS BIGINT) AS range_id,
-                 r.r * 1100 + 37 AS lo, r.r * 1100 + 1537 AS hi
-          FROM (SELECT UNNEST(range(0, 40)) AS r) r)
-        SELECT range_id, COUNT(*) AS n_in_range,
-               CAST(SUM(vc) AS BIGINT) AS sum_cents
-        FROM f JOIN ranges ON vc >= lo AND vc < hi
-        GROUP BY range_id
-        ORDER BY range_id"""))
+      Some(rangeJoinOracle))
   ,
 
     // --------------------------------------------------------------- q127
@@ -759,37 +733,7 @@ object ScaleTechniques {
             (col("b95") * 1000).as("p95_floor_cents"))
           .orderBy("event_type")
       },
-      Some("""
-        WITH binned AS (
-          SELECT event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) // 1000
-                   AS bin
-          FROM events),
-        merged AS (
-          SELECT event_type, bin, COUNT(*) AS cnt
-          FROM binned GROUP BY event_type, bin),
-        tot AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS total_n
-                FROM merged GROUP BY event_type),
-        days AS (SELECT event_type, COUNT(DISTINCT day) AS n_days
-                 FROM binned GROUP BY event_type),
-        cum AS (
-          SELECT m.event_type, m.bin, t.total_n,
-                 SUM(m.cnt) OVER (PARTITION BY m.event_type ORDER BY m.bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-          FROM merged m JOIN tot t ON m.event_type = t.event_type),
-        p50 AS (SELECT event_type, MIN(bin) AS b50 FROM cum
-                WHERE run * 100 >= total_n * 50 GROUP BY event_type),
-        p95 AS (SELECT event_type, MIN(bin) AS b95 FROM cum
-                WHERE run * 100 >= total_n * 95 GROUP BY event_type)
-        SELECT t.event_type AS event_type, d.n_days, t.total_n,
-               CAST(b50 * 1000 AS BIGINT) AS p50_floor_cents,
-               CAST(b95 * 1000 AS BIGINT) AS p95_floor_cents
-        FROM tot t
-        JOIN days d ON t.event_type = d.event_type
-        JOIN p50 ON t.event_type = p50.event_type
-        JOIN p95 ON t.event_type = p95.event_type
-        ORDER BY t.event_type"""))
+      Some(quantileHistOracle))
   ,
 
     // --------------------------------------------------------------- q130
@@ -1319,4 +1263,52 @@ object ScaleTechniques {
       counts.keysIterator
     }.toDF("k").distinct()
   }
+
+  /** q127's oracle, shared verbatim by s20. */
+  private[graft] def quantileHistOracle: String = """
+        WITH binned AS (
+          SELECT event_type,
+                 epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) // 1000
+                   AS bin
+          FROM events),
+        merged AS (
+          SELECT event_type, bin, COUNT(*) AS cnt
+          FROM binned GROUP BY event_type, bin),
+        tot AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS total_n
+                FROM merged GROUP BY event_type),
+        days AS (SELECT event_type, COUNT(DISTINCT day) AS n_days
+                 FROM binned GROUP BY event_type),
+        cum AS (
+          SELECT m.event_type, m.bin, t.total_n,
+                 SUM(m.cnt) OVER (PARTITION BY m.event_type ORDER BY m.bin
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
+          FROM merged m JOIN tot t ON m.event_type = t.event_type),
+        p50 AS (SELECT event_type, MIN(bin) AS b50 FROM cum
+                WHERE run * 100 >= total_n * 50 GROUP BY event_type),
+        p95 AS (SELECT event_type, MIN(bin) AS b95 FROM cum
+                WHERE run * 100 >= total_n * 95 GROUP BY event_type)
+        SELECT t.event_type AS event_type, d.n_days, t.total_n,
+               CAST(b50 * 1000 AS BIGINT) AS p50_floor_cents,
+               CAST(b95 * 1000 AS BIGINT) AS p95_floor_cents
+        FROM tot t
+        JOIN days d ON t.event_type = d.event_type
+        JOIN p50 ON t.event_type = p50.event_type
+        JOIN p95 ON t.event_type = p95.event_type
+        ORDER BY t.event_type"""
+
+  /** q121's oracle, shared verbatim by q124. */
+  private[graft] def rangeJoinOracle: String = """
+        WITH f AS (
+          SELECT CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
+          FROM events),
+        ranges AS (
+          SELECT CAST(r.r AS BIGINT) AS range_id,
+                 r.r * 1100 + 37 AS lo, r.r * 1100 + 1537 AS hi
+          FROM (SELECT UNNEST(range(0, 40)) AS r) r)
+        SELECT range_id, COUNT(*) AS n_in_range,
+               CAST(SUM(vc) AS BIGINT) AS sum_cents
+        FROM f JOIN ranges ON vc >= lo AND vc < hi
+        GROUP BY range_id
+        ORDER BY range_id"""
 }

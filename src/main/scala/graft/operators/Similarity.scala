@@ -33,10 +33,8 @@ import graft.Tables
   */
 object Similarity {
 
-  /** embedding as array<double> — the shared exact-arithmetic base.
-    * Registers the native cosine expression on the session (idempotent). */
+  /** embedding as array<double> — the shared exact-arithmetic base. */
   private def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"))
   }
@@ -232,36 +230,7 @@ object Similarity {
           .select("query_id", "rank", "neighbor_id", "sim")
           .orderBy("query_id", "rank")
       },
-      Some(s"""
-        WITH base AS ($duckEmb),
-        init AS (SELECT vec_id AS cent_id, e AS ce FROM base WHERE vec_id < 8),
-        train AS (SELECT vec_id, e FROM base WHERE vec_id % 10 = 0),
-        ${duckLloyd("train", "init", 1)},
-        ${duckLloyd("train", "cent1", 2)},
-        cent AS (SELECT cent_id, ce FROM cent2),
-        assigned AS (
-          SELECT vec_id, e, cent_id AS bucket FROM (
-            SELECT b.vec_id, b.e, c.cent_id,
-                   row_number() OVER (PARTITION BY b.vec_id
-                     ORDER BY ${duckCosine("b.e", "c.ce")} DESC, c.cent_id) AS arnk
-            FROM base b CROSS JOIN cent c) x WHERE arnk = 1),
-        probes AS (
-          SELECT query_id, qe, cent_id AS bucket FROM (
-            SELECT q.vec_id AS query_id, q.e AS qe, c.cent_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                     ORDER BY ${duckCosine("q.e", "c.ce")} DESC, c.cent_id) AS prnk
-            FROM base q CROSS JOIN cent c WHERE q.vec_id < 20) x WHERE prnk <= 2),
-        cand AS (
-          SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-                 ${duckCosine("p.qe", "a.e")} AS sim
-          FROM probes p JOIN assigned a ON p.bucket = a.bucket
-          WHERE a.vec_id <> p.query_id)
-        SELECT query_id, rank, neighbor_id, sim FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY sim DESC, neighbor_id) AS rank
-          FROM cand) r
-        WHERE rank <= 5
-        ORDER BY query_id, rank""")),
+      Some(ivfTopkOracle)),
 
     // ---------------------------------------------------------------- q30
     // Embedding near-dup: every 5th vector re-appears (id+100000) with
@@ -370,7 +339,6 @@ object Similarity {
             .parquet(d.resolve("index").toString)
           ""
         }
-        graft.plans.GraftFunctions.register(s)
         val cent = s.read.parquet(idx.resolve("centroids").toString)
         val index = s.read.parquet(idx.resolve("index").toString)
         val qw = Window.partitionBy("query_id")
@@ -393,36 +361,7 @@ object Similarity {
           .select("query_id", "rank", "neighbor_id", "sim")
           .orderBy("query_id", "rank")
       },
-      Some(s"""
-        WITH base AS ($duckEmb),
-        init AS (SELECT vec_id AS cent_id, e AS ce FROM base WHERE vec_id < 8),
-        train AS (SELECT vec_id, e FROM base WHERE vec_id % 10 = 0),
-        ${duckLloyd("train", "init", 1)},
-        ${duckLloyd("train", "cent1", 2)},
-        cent AS (SELECT cent_id, ce FROM cent2),
-        assigned AS (
-          SELECT vec_id, e, cent_id AS bucket FROM (
-            SELECT b.vec_id, b.e, c.cent_id,
-                   row_number() OVER (PARTITION BY b.vec_id
-                     ORDER BY ${duckCosine("b.e", "c.ce")} DESC, c.cent_id) AS arnk
-            FROM base b CROSS JOIN cent c) x WHERE arnk = 1),
-        probes AS (
-          SELECT query_id, qe, cent_id AS bucket FROM (
-            SELECT q.vec_id AS query_id, q.e AS qe, c.cent_id,
-                   row_number() OVER (PARTITION BY q.vec_id
-                     ORDER BY ${duckCosine("q.e", "c.ce")} DESC, c.cent_id) AS prnk
-            FROM base q CROSS JOIN cent c WHERE q.vec_id < 20) x WHERE prnk <= 2),
-        cand AS (
-          SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-                 ${duckCosine("p.qe", "a.e")} AS sim
-          FROM probes p JOIN assigned a ON p.bucket = a.bucket
-          WHERE a.vec_id <> p.query_id)
-        SELECT query_id, rank, neighbor_id, sim FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY sim DESC, neighbor_id) AS rank
-          FROM cand) r
-        WHERE rank <= 5
-        ORDER BY query_id, rank""")),
+      Some(ivfTopkOracle)),
 
     // ---------------------------------------------------------------- q97
     // Incremental IVF index MAINTENANCE — the lifecycle step after q91's
@@ -464,7 +403,6 @@ object Similarity {
             .parquet(d.resolve("index").toString)
           ""
         }
-        graft.plans.GraftFunctions.register(s)
         val cent = s.read.parquet(idx.resolve("centroids").toString)
         val index = s.read.parquet(idx.resolve("index").toString)
         val qw = Window.partitionBy("query_id")
@@ -725,7 +663,6 @@ object Similarity {
     QueryDef(
       "q194_label_separation",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "embeddings")
           .select(col("label").cast("long").as("label"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"))
@@ -775,7 +712,6 @@ object Similarity {
     QueryDef(
       "q203_embedding_dispersion",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "embeddings")
           .select(col("label").cast("long").as("label"),
             posexplode(expr(
@@ -950,7 +886,6 @@ object Similarity {
     QueryDef(
       "q213_knn_eval",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"),
@@ -1020,7 +955,6 @@ object Similarity {
     QueryDef(
       "q214_ndcg_eval",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"),
@@ -1205,7 +1139,6 @@ object Similarity {
       "q321_embedding_hard_negatives",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"))
@@ -1674,4 +1607,36 @@ object Similarity {
         GROUP BY f.query_id
         ORDER BY f.query_id"""))
   )
+
+  /** q29's oracle, shared verbatim by q91. */
+  private[graft] def ivfTopkOracle: String = s"""
+        WITH base AS ($duckEmb),
+        init AS (SELECT vec_id AS cent_id, e AS ce FROM base WHERE vec_id < 8),
+        train AS (SELECT vec_id, e FROM base WHERE vec_id % 10 = 0),
+        ${duckLloyd("train", "init", 1)},
+        ${duckLloyd("train", "cent1", 2)},
+        cent AS (SELECT cent_id, ce FROM cent2),
+        assigned AS (
+          SELECT vec_id, e, cent_id AS bucket FROM (
+            SELECT b.vec_id, b.e, c.cent_id,
+                   row_number() OVER (PARTITION BY b.vec_id
+                     ORDER BY ${duckCosine("b.e", "c.ce")} DESC, c.cent_id) AS arnk
+            FROM base b CROSS JOIN cent c) x WHERE arnk = 1),
+        probes AS (
+          SELECT query_id, qe, cent_id AS bucket FROM (
+            SELECT q.vec_id AS query_id, q.e AS qe, c.cent_id,
+                   row_number() OVER (PARTITION BY q.vec_id
+                     ORDER BY ${duckCosine("q.e", "c.ce")} DESC, c.cent_id) AS prnk
+            FROM base q CROSS JOIN cent c WHERE q.vec_id < 20) x WHERE prnk <= 2),
+        cand AS (
+          SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
+                 ${duckCosine("p.qe", "a.e")} AS sim
+          FROM probes p JOIN assigned a ON p.bucket = a.bucket
+          WHERE a.vec_id <> p.query_id)
+        SELECT query_id, rank, neighbor_id, sim FROM (
+          SELECT *, row_number() OVER (PARTITION BY query_id
+                                       ORDER BY sim DESC, neighbor_id) AS rank
+          FROM cand) r
+        WHERE rank <= 5
+        ORDER BY query_id, rank"""
 }

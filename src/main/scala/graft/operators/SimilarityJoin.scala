@@ -146,7 +146,6 @@ object SimilarityJoin {
     QueryDef(
       "q42_srp_lsh_embedding_neardup",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"))
@@ -247,7 +246,6 @@ object SimilarityJoin {
     QueryDef(
       "q235_excerpt_containment_join",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = Tables(s, dir, "documents").select("doc_id", "text")
         val ex = d.filter(col("doc_id") % 11 === 0)
           .select((col("doc_id") + 500000).as("eid"),

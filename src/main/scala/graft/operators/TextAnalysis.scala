@@ -204,7 +204,6 @@ object TextAnalysis {
         // interpreted per character (CodegenFallback) and materialized a
         // one-char-per-element array per doc; the expression walks code
         // points in one generated loop inside whole-stage codegen
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"))
           .unionByName(
@@ -617,7 +616,6 @@ object TextAnalysis {
     QueryDef(
       "q145_bpe_pair_counts",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
@@ -929,7 +927,6 @@ object TextAnalysis {
     QueryDef(
       "q226_collocations",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
         val uni = docs
           .select(explode(split(col("text"), " ")).as("tok"))
@@ -1275,7 +1272,6 @@ object TextAnalysis {
     QueryDef(
       "q254_bpe_encode_token_costs",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // session-shared word frame + merges table (one learn per run,
         // consumed by q254/s38/q276)
         val words = bpeWordsShared(s, dir)
@@ -1318,7 +1314,6 @@ object TextAnalysis {
     QueryDef(
       "q276_bpe_pack_accounting",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val words = bpeWordsShared(s, dir)
         val enc = bpeApply(col("s0"), bpeMerges(s, dir))
         val perDoc = words
@@ -1464,7 +1459,6 @@ object TextAnalysis {
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val d = Tables(s, dir, "documents").select("doc_id", "text")
-        graft.plans.GraftFunctions.register(s)
         def postings(df: org.apache.spark.sql.DataFrame) = df
           .select(col("doc_id"),
             explode(call_function("graft_word_ngrams", col("text"), lit(3)))
@@ -1623,7 +1617,6 @@ object TextAnalysis {
     QueryDef(
       "q281_vocab_truncation_curve",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val words = bpeWordsShared(s, dir)
         val merges = bpeMerges(s, dir)
         val levelCols = (0 to 6).map { m =>
@@ -1752,7 +1745,6 @@ object TextAnalysis {
     QueryDef(
       "q291_vocab_growth_curve",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // vocabulary at the word-BIGRAM grain: the fixture's unigram
         // vocabulary is tiny and saturates in the first increment (a
         // 1-row degenerate curve — measured); bigram types keep
@@ -1852,7 +1844,6 @@ object TextAnalysis {
     QueryDef(
       "q306_kneser_ney_heldout",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val d = Tables(s, dir, "documents").select("doc_id", "source", "text")
           .withColumn("hb5",
@@ -3264,7 +3255,6 @@ object TextAnalysis {
     * held-out bigram occurrence: (doc_id, source, c12n, bits). */
   private def heldoutBigramBits(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val d = Tables(s, dir, "documents").select("doc_id", "source", "text")
       .withColumn("hb5",

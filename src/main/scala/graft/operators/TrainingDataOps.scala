@@ -182,7 +182,6 @@ object TrainingDataOps {
     QueryDef(
       "q63_dup_ngram_fraction",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val grams = Tables(s, dir, "documents")
           .select(col("doc_id"),
             explode(call_function("graft_word_ngrams", col("text"), lit(3))).as("g"))
@@ -288,7 +287,6 @@ object TrainingDataOps {
     QueryDef(
       "q66_decontamination",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
         def grams(df: org.apache.spark.sql.DataFrame, idCol: String) =
           df.select(col(idCol),
@@ -308,33 +306,7 @@ object TrainingDataOps {
           .withColumn("contaminated", col("hit_permille") > 500)
           .orderBy("bench_id")
       },
-      Some("""
-        WITH bench AS (
-          SELECT doc_id AS bench_id,
-                 array_to_string(string_split(text, ' ')[6:25], ' ') AS text
-          FROM documents WHERE doc_id % 13 = 0),
-        bgrams AS (
-          SELECT bench_id,
-                 UNNEST(list_transform(range(1, len(ws) - 3),
-                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                             ws[i+3] || ' ' || ws[i+4])) AS g
-          FROM (SELECT bench_id, string_split(text, ' ') AS ws FROM bench)),
-        cgrams AS (
-          SELECT DISTINCT UNNEST(list_transform(range(1, len(ws) - 3),
-                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                             ws[i+3] || ' ' || ws[i+4])) AS g
-          FROM (SELECT string_split(text, ' ') AS ws FROM documents)),
-        agg AS (
-          SELECT bench_id,
-                 COUNT(*) AS n_grams,
-                 COUNT(CASE WHEN g IN (SELECT g FROM cgrams) THEN 1 END) AS n_hit
-          FROM bgrams
-          GROUP BY bench_id)
-        SELECT bench_id, n_grams, n_hit,
-               n_hit * 1000 // n_grams AS hit_permille,
-               (n_hit * 1000 // n_grams) > 500 AS contaminated
-        FROM agg
-        ORDER BY bench_id""")),
+      Some(decontaminationOracle)),
 
     // ---------------------------------------------------------------- q67
     // Deterministic source-mixture sampling — data mixing for a training
@@ -347,7 +319,6 @@ object TrainingDataOps {
     QueryDef(
       "q67_source_mixture_sample",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
           .withColumn("fp", call_function("graft_polyhash", col("text")))
           .withColumn("frac",
@@ -453,7 +424,6 @@ object TrainingDataOps {
     QueryDef(
       "q73_unicode_normalization",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .select(col("doc_id"),
             concat(col("text"), lit(" caf\u00e9 na\u00efve")).as("a"),
@@ -489,7 +459,6 @@ object TrainingDataOps {
     QueryDef(
       "q74_train_val_test_split",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .withColumn("bucket", call_function("graft_polyhash", col("text")) % 100)
           .withColumn("split",
@@ -660,7 +629,6 @@ object TrainingDataOps {
     QueryDef(
       "q83_split_leakage_audit",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val splitOf = (c: Column) =>
           when(call_function("graft_polyhash", c) % 100 < 80, "train")
             .when(call_function("graft_polyhash", c) % 100 < 90, "val")
@@ -798,7 +766,6 @@ object TrainingDataOps {
     QueryDef(
       "q86_temperature_mixture",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
           .withColumn("fp", call_function("graft_polyhash", col("text")))
         // weight total via a broadcast single-row aggregate (q58's lazy
@@ -923,7 +890,6 @@ object TrainingDataOps {
     QueryDef(
       "q128_quality_weighted_sample",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         Tables(s, dir, "documents")
           .withColumn("toks", split(col("text"), " "))
           .withColumn("n", size(col("toks")))
@@ -986,7 +952,6 @@ object TrainingDataOps {
     QueryDef(
       "q139_negative_sampling",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val h = Tables(s, dir, "documents")
           .select(col("doc_id"),
             call_function("graft_polyhash", col("text")).as("h"))
@@ -1109,7 +1074,6 @@ object TrainingDataOps {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.plans.GraftFunctions.register(s)
         val base = Tables(s, dir, "documents").select("doc_id", "source", "text")
         // re-crawl corpus: every 5th doc arrives twice (q25's fixture)
         val raw = base.unionByName(
@@ -1244,7 +1208,6 @@ object TrainingDataOps {
     QueryDef(
       "q191_distribution_matching",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = Tables(s, dir, "documents")
           .select(col("doc_id"), col("text"),
             expr("n_chars div 256").as("bucket"))
@@ -1368,7 +1331,6 @@ object TrainingDataOps {
     QueryDef(
       "q232_incremental_decontamination",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val d = Tables(s, dir, "documents")
         def grams(df: org.apache.spark.sql.DataFrame, idCols: Seq[String]) =
           df.select(idCols.map(col) :+
@@ -1587,7 +1549,6 @@ object TrainingDataOps {
       "q244_coverage_selection",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        graft.plans.GraftFunctions.register(s)
         // spread (r14, guide §2.5): single-row-group scan = one-task
         // explode; the term table is the loop's only corpus-sized input
         val terms = graft.Tables.spread(
@@ -2075,7 +2036,6 @@ object TrainingDataOps {
     QueryDef(
       "q273_reward_pairwise_eval",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val grams = ClassifierArtifacts.grams(s, dir)
         val wt = ClassifierArtifacts.weights(s, dir)
         val rm = grams.join(broadcast(wt), "b")
@@ -2185,7 +2145,6 @@ object TrainingDataOps {
     QueryDef(
       "q277_contamination_severity",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
         val bg = docs.filter(col("doc_id") % 13 === 0)
           .select(concat_ws(" ",
@@ -4525,7 +4484,6 @@ object TrainingDataOps {
     QueryDef(
       "q363_ngram_novelty",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val g = Tables(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             explode(call_function("graft_word_ngrams",
@@ -4821,7 +4779,6 @@ object TrainingDataOps {
     QueryDef(
       "q369_source_overlap_matrix",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val gs = Tables(s, dir, "documents")
           .select(col("source"),
             explode(expr("array_distinct(graft_word_ngrams(text, 5))"))
@@ -4947,7 +4904,6 @@ object TrainingDataOps {
     QueryDef(
       "q371_incremental_novelty_tick",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = Tables(s, dir, "documents")
           .select("doc_id", "source", "text")
         noveltyTickReport(
@@ -6029,7 +5985,6 @@ object TrainingDataOps {
     * shuffle — only md5-prefix BIGINTs. */
   private[graft] def arrivalGramFlags(s: org.apache.spark.sql.SparkSession,
       arrivals: DataFrame, corpus: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // spread + persist (r14): the standing index is built from a
     // single-row-group scan (one-task explode+md5, guide §2.5) and its
     // subplan RE-EXECUTES on every micro-batch of s70's stream-static
@@ -6586,4 +6541,33 @@ object TrainingDataOps {
                decoys_planted, decoy_matches
         FROM rep
         ORDER BY source"""
+
+  /** q66's oracle, shared verbatim by s36. */
+  private[graft] def decontaminationOracle: String = """
+        WITH bench AS (
+          SELECT doc_id AS bench_id,
+                 array_to_string(string_split(text, ' ')[6:25], ' ') AS text
+          FROM documents WHERE doc_id % 13 = 0),
+        bgrams AS (
+          SELECT bench_id,
+                 UNNEST(list_transform(range(1, len(ws) - 3),
+                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
+                             ws[i+3] || ' ' || ws[i+4])) AS g
+          FROM (SELECT bench_id, string_split(text, ' ') AS ws FROM bench)),
+        cgrams AS (
+          SELECT DISTINCT UNNEST(list_transform(range(1, len(ws) - 3),
+                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
+                             ws[i+3] || ' ' || ws[i+4])) AS g
+          FROM (SELECT string_split(text, ' ') AS ws FROM documents)),
+        agg AS (
+          SELECT bench_id,
+                 COUNT(*) AS n_grams,
+                 COUNT(CASE WHEN g IN (SELECT g FROM cgrams) THEN 1 END) AS n_hit
+          FROM bgrams
+          GROUP BY bench_id)
+        SELECT bench_id, n_grams, n_hit,
+               n_hit * 1000 // n_grams AS hit_permille,
+               (n_hit * 1000 // n_grams) > 500 AS contaminated
+        FROM agg
+        ORDER BY bench_id"""
 }

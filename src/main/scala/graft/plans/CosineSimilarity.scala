@@ -1,9 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistryBase, TypeCheckResult}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -84,167 +87,47 @@ final case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration — both paths the engine supports:
-  *  - [[GraftFunctions.register]]: imperative, per-session (used by the
-  *    operator queries so any externally-built session works);
-  *  - [[GraftExtensions]]: `spark.sql.extensions`-based injection, the
-  *    deployment-config route (`SparkSessionExtensions.injectFunction`).
+/** graft's SQL surface: the Catalyst kernels by SQL name, plus the
+  * [[RangeJoinRule]] optimizer rule. [[graft.GraftSession.builder]]
+  * attaches this to every session it builds, and each `newSession()`
+  * sibling inherits its parent's extensions, so no query or test
+  * registers anything. A session built elsewhere loads the same class
+  * through `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
-object GraftFunctions {
-  val cosineBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_cosine expects 2 arguments, got ${other.length}")
-  }
-
-  val polyHashBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => PolyHash(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_polyhash expects 1 argument, got ${other.length}")
-  }
-
-  val nfcBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => NfcNormalize(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_nfc expects 1 argument, got ${other.length}")
-  }
-
-  val wordNgramsBuilder: Seq[Expression] => Expression = {
-    case Seq(s, n) => WordNgrams(s, n)
-    case other => throw new IllegalArgumentException(
-      s"graft_word_ngrams expects 2 arguments, got ${other.length}")
-  }
-
-  val charNgramsBuilder: Seq[Expression] => Expression = {
-    case Seq(s, n) => CharNgrams(s, n)
-    case other => throw new IllegalArgumentException(
-      s"graft_char_ngrams expects 2 arguments, got ${other.length}")
-  }
-
-  // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
-  // internal runtime-filter rewrite but does NOT register them as SQL
-  // functions; exposing them makes the bloom-prune pattern (build a
-  // bloom over the SMALL side, push it as a filter into the BIG side's
-  // scan) writable as a query — see q98. Inputs are xxhash64 longs,
-  // matching the internal usage.
-  val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child, items, bits) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        child, items, bits)
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_agg expects 3 arguments (xxhash64 value, est items, num bits), got ${other.length}")
-  }
-
-  val signProjectBuilder: Seq[Expression] => Expression = {
-    case Seq(e, i) => SignProject(e, i)
-    case other => throw new IllegalArgumentException(
-      s"graft_sign_project expects 2 arguments, got ${other.length}")
-  }
-
-  val classifierScoreBuilder: Seq[Expression] => Expression = {
-    case Seq(grams, weights, dflt) => ClassifierScore(grams, weights, dflt)
-    case other => throw new IllegalArgumentException(
-      "graft_classifier_score expects 3 arguments (grams, weight map, " +
-        s"default weight), got ${other.length}")
-  }
-
-  val minHashSigBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => MinHashSig(s)
-    case other => throw new IllegalArgumentException(
-      s"graft_minhash_sig expects 1 argument, got ${other.length}")
-  }
-
-  val charGramBucketsBuilder: Seq[Expression] => Expression = {
-    case Seq(s, n, m) => CharGramBuckets(s, n, m)
-    case other => throw new IllegalArgumentException(
-      s"graft_char_gram_buckets expects 3 arguments, got ${other.length}")
-  }
-
-  val bloomContainsBuilder: Seq[Expression] => Expression = {
-    case Seq(bloom, value) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, value)
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_contains expects 2 arguments (bloom, xxhash64 value), got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_polyhash", polyHashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", nfcBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_ngrams", wordNgramsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_ngrams", charNgramsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_project", signProjectBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", bloomAggBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", bloomContainsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_classifier_score", classifierScoreBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", minHashSigBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_gram_buckets", charGramBucketsBuilder, "built-in")
+final class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    // Pre-CBO: the rule runs once, after operator optimization. Inside
+    // that fixed-point batch (injectOptimizerRule) constraint inference
+    // would add an isnotnull(x div W) filter to the fact side of every
+    // rewritten join.
+    ext.injectPreCBORule(_ => RangeJoinRule)
+    GraftExtensions.functions.foreach { case (name, cls) =>
+      // builds from the class's all-Expression constructor and rejects
+      // any other arity with Spark's WRONG_NUM_ARGS error
+      val (info, build) =
+        FunctionRegistryBase.build[Expression](name, None)(ClassTag(cls))
+      ext.injectFunction((FunctionIdentifier(name), info, build))
+    }
   }
 }
 
-final class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RangeJoinRule)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      GraftFunctions.cosineBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      GraftFunctions.polyHashBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      GraftFunctions.nfcBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "graft_word_ngrams"),
-      GraftFunctions.wordNgramsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_ngrams"),
-      new ExpressionInfo(classOf[CharNgrams].getName, "graft_char_ngrams"),
-      GraftFunctions.charNgramsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sign_project"),
-      new ExpressionInfo(classOf[SignProject].getName, "graft_sign_project"),
-      GraftFunctions.signProjectBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      GraftFunctions.bloomAggBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      GraftFunctions.bloomContainsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_classifier_score"),
-      new ExpressionInfo(classOf[ClassifierScore].getName,
-        "graft_classifier_score"),
-      GraftFunctions.classifierScoreBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      GraftFunctions.minHashSigBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_gram_buckets"),
-      new ExpressionInfo(classOf[CharGramBuckets].getName,
-        "graft_char_gram_buckets"),
-      GraftFunctions.charGramBucketsBuilder))
-  }
+object GraftExtensions {
+  /** SQL name → kernel class, one entry per function. */
+  val functions: Seq[(String, Class[_ <: Expression])] = Seq(
+    "graft_cosine" -> classOf[CosineSimilarity],
+    "graft_polyhash" -> classOf[PolyHash],
+    "graft_nfc" -> classOf[NfcNormalize],
+    "graft_word_ngrams" -> classOf[WordNgrams],
+    "graft_char_ngrams" -> classOf[CharNgrams],
+    "graft_sign_project" -> classOf[SignProject],
+    "graft_classifier_score" -> classOf[ClassifierScore],
+    "graft_minhash_sig" -> classOf[MinHashSig],
+    "graft_char_gram_buckets" -> classOf[CharGramBuckets],
+    // Spark ships these two for its internal runtime-filter rewrite but
+    // does NOT register them as SQL functions; exposing them makes the
+    // bloom-prune pattern (build a bloom over the SMALL side, push it as
+    // a filter into the BIG side's scan) writable as a query — see q98.
+    // Inputs are xxhash64 longs, matching the internal usage.
+    "graft_bloom_agg" -> classOf[BloomFilterAggregate],
+    "graft_bloom_contains" -> classOf[BloomFilterMightContain])
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -38,12 +37,15 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * configured positive `spark.graft.rangeJoin.binWidth` — width choice
   * needs distribution knowledge the engine doesn't have, so it stays a
   * user decision, exactly like the Databricks hint parameter.
+  *
+  * [[GraftExtensions]] injects the rule into every session as a pre-CBO
+  * rule; it stays dormant until a session sets the bin width.
   */
 object RangeJoinRule extends Rule[LogicalPlan] {
 
   val BinWidthKey = "spark.graft.rangeJoin.binWidth"
 
-  private def binWidth(plan: LogicalPlan): Option[Long] =
+  private def binWidth: Option[Long] =
     conf.getConfString(BinWidthKey, "0").toLongOption.filter(_ > 0)
 
   /** value from `from`, both bounds from `other`. */
@@ -55,17 +57,19 @@ object RangeJoinRule extends Rule[LogicalPlan] {
 
   private def allLong(es: Expression*): Boolean = es.forall(_.dataType == LongType)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner,
-        Some(cond @ And(GreaterThanOrEqual(x, lo), LessThan(x2, hi))), hint)
-        if x.semanticEquals(x2) && allLong(x, lo, hi) && j.resolved =>
-      binWidth(j) match {
-        case Some(w) if sidesMatch(x, lo, hi, left, right) =>
+  // every session carries the rule; without a width it does not walk the plan
+  override def apply(plan: LogicalPlan): LogicalPlan = binWidth match {
+    case None => plan
+    case Some(w) => plan.transformUp {
+      case j @ Join(left, right, Inner,
+          Some(cond @ And(GreaterThanOrEqual(x, lo), LessThan(x2, hi))), hint)
+          if x.semanticEquals(x2) && allLong(x, lo, hi) && j.resolved =>
+        if (sidesMatch(x, lo, hi, left, right))
           rewrite(j, cond, left, x, right, lo, hi, w, hint)
-        case Some(w) if sidesMatch(x, lo, hi, right, left) =>
+        else if (sidesMatch(x, lo, hi, right, left))
           rewrite(j, cond, right, x, left, lo, hi, w, hint)
-        case _ => j
-      }
+        else j
+    }
   }
 
   /** `factSide` carries the value `x`; `rangeSide` carries `[lo, hi)`. */
@@ -93,13 +97,4 @@ object RangeJoinRule extends Rule[LogicalPlan] {
     // exact containment re-applied — the bin join only proposes
     Project(j.output, Filter(cond, equiJoin))
   }
-}
-
-/** Per-session imperative registration (the GraftFunctions.register
-  * discipline): `extraOptimizations` is session-scoped, idempotent here. */
-object RangeJoin {
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRule
 }

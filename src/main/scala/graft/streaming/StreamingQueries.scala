@@ -738,6 +738,12 @@ object StreamingQueries {
   private def documentsStreamParts(s: SparkSession, dir: String): DataFrame =
     rangedArrivals(s, "stream_docs_parts", dir, s.read.parquet(s"$dir/documents.parquet"))
 
+  /** Run `body` on the RocksDB state store provider, which
+    * transformWithState requires. */
+  private def onRocksDb[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   /** Run `build`'s streaming output to a per-drain parquet directory via
     * foreachBatch, drain with AvailableNow, read the result back.
     *
@@ -791,20 +797,16 @@ object StreamingQueries {
     // keeps the session's parallelism. At production scale this is sized
     // to state VOLUME (rows per store must fit an executor), not to core
     // count — 8 holds every fixture SF with room to spare.
-    val key = "spark.sql.shuffle.partitions"
-    val before = s.conf.get(key)
-    s.conf.set(key, "8")
-    val q =
-      try {
-        drainT0.set(System.nanoTime())
-        val started = df.writeStream
-          .foreachBatch(writeBatch)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      } finally s.conf.set(key, before)
+    val q = graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions", "8") {
+      drainT0.set(System.nanoTime())
+      val started = df.writeStream
+        .foreachBatch(writeBatch)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      started.awaitTermination()
+      started
+    }
     // a drained stream with zero batches writes nothing — return empty
     if (Files.exists(out)) s.read.schema(schema).parquet(out.toString)
     else s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
@@ -857,22 +859,7 @@ object StreamingQueries {
         drain(s, OutputMode.Append())(sessionize(evs).toDF())
           .orderBy("user_id", "session_id")
       },
-      Some("""
-        WITH e AS (SELECT user_id, event_id,
-                          epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-                   FROM events),
-        g AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 600000000
-                             THEN 1 ELSE 0 END AS new_sess
-              FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        sg AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-               FROM g)
-        SELECT user_id, session_id, COUNT(*) AS n_events,
-               MIN(ts_us) AS start_us, MAX(ts_us) AS end_us
-        FROM sg
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id""")),
+      Some(graft.operators.Cdc.sessionsOracle)),
 
     // ---------------------------------------------------------------- s03
     // Streaming dedup under replay: the source delivers every event TWICE
@@ -1154,20 +1141,7 @@ object StreamingQueries {
             col("n_events"), col("sum_value"))
           .orderBy("ws_us")
       },
-      Some("""
-        WITH e AS (
-          SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
-        w AS (
-          SELECT us, value,
-                 UNNEST([(us // 1800000000) * 1800000000,
-                         (us // 1800000000) * 1800000000 - 1800000000]) AS ws
-          FROM e)
-        SELECT ws AS ws_us, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM w
-        WHERE us >= ws AND us < ws + 3600000000
-        GROUP BY ws
-        ORDER BY ws_us""")),
+      Some(graft.operators.Profiling.hoppingWindowOracle)),
 
     // ---------------------------------------------------------------- s10
     // Streaming CDC apply — foreachBatch + SCD1 upsert (q60's Cdc.upsert
@@ -1345,22 +1319,7 @@ object StreamingQueries {
         drain(s, OutputMode.Append())(sessionize(evs).toDF())
           .orderBy("user_id", "session_id")
       },
-      Some("""
-        WITH e AS (SELECT user_id, event_id,
-                          epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-                   FROM events),
-        g AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 600000000
-                             THEN 1 ELSE 0 END AS new_sess
-              FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        sg AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-               FROM g)
-        SELECT user_id, session_id, COUNT(*) AS n_events,
-               MIN(ts_us) AS start_us, MAX(ts_us) AS end_us
-        FROM sg
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id""")),
+      Some(graft.operators.Cdc.sessionsOracle)),
 
     // ---------------------------------------------------------------- s15
     // Streaming approximate distinct — the SCALE path s13's exact chain
@@ -1546,25 +1505,7 @@ object StreamingQueries {
           .withColumn("share_permille", expr("n * 1000 div from_total"))
           .orderBy("from_type", "to_type")
       },
-      Some("""
-        WITH e AS (
-          SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-                 event_id, event_type
-          FROM events),
-        p AS (
-          SELECT event_type AS from_type,
-                 lead(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts_us, event_id) AS to_type
-          FROM e),
-        t AS (SELECT from_type, to_type, COUNT(*) AS n
-              FROM p WHERE to_type IS NOT NULL
-              GROUP BY from_type, to_type)
-        SELECT from_type, to_type, n,
-               CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT) AS from_total,
-               n * 1000 // CAST(SUM(n) OVER (PARTITION BY from_type) AS BIGINT)
-                 AS share_permille
-        FROM t
-        ORDER BY from_type, to_type"""))
+      Some(graft.operators.EventAnalytics.transitionsOracle))
   ,
 
     // ---------------------------------------------------------------- s19
@@ -1651,37 +1592,7 @@ object StreamingQueries {
             (col("b95") * 1000).as("p95_floor_cents"))
           .orderBy("event_type")
       },
-      Some("""
-        WITH binned AS (
-          SELECT event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) // 1000
-                   AS bin
-          FROM events),
-        merged AS (
-          SELECT event_type, bin, COUNT(*) AS cnt
-          FROM binned GROUP BY event_type, bin),
-        tot AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS total_n
-                FROM merged GROUP BY event_type),
-        days AS (SELECT event_type, COUNT(DISTINCT day) AS n_days
-                 FROM binned GROUP BY event_type),
-        cum AS (
-          SELECT m.event_type, m.bin, t.total_n,
-                 SUM(m.cnt) OVER (PARTITION BY m.event_type ORDER BY m.bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-          FROM merged m JOIN tot t ON m.event_type = t.event_type),
-        p50 AS (SELECT event_type, MIN(bin) AS b50 FROM cum
-                WHERE run * 100 >= total_n * 50 GROUP BY event_type),
-        p95 AS (SELECT event_type, MIN(bin) AS b95 FROM cum
-                WHERE run * 100 >= total_n * 95 GROUP BY event_type)
-        SELECT t.event_type AS event_type, d.n_days, t.total_n,
-               CAST(b50 * 1000 AS BIGINT) AS p50_floor_cents,
-               CAST(b95 * 1000 AS BIGINT) AS p95_floor_cents
-        FROM tot t
-        JOIN days d ON t.event_type = d.event_type
-        JOIN p50 ON t.event_type = p50.event_type
-        JOIN p95 ON t.event_type = p95.event_type
-        ORDER BY t.event_type"""))
+      Some(graft.operators.ScaleTechniques.quantileHistOracle))
   ,
 
     // ---------------------------------------------------------------- s21
@@ -1836,22 +1747,7 @@ object StreamingQueries {
           .orderBy("event_type")
       },
       // q146's oracle verbatim: the stream/batch twins share the contract
-      Some("""
-        WITH e AS (
-          SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-                 event_id,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        iv AS (
-          SELECT event_type, vc,
-                 lead(ts_us) OVER (PARTITION BY event_type
-                                   ORDER BY ts_us, event_id) - ts_us AS dt
-          FROM e)
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_intervals,
-               CAST(SUM(CAST(vc AS HUGEINT) * dt)
-                    // CAST(SUM(dt) AS HUGEINT) AS BIGINT) AS twap_cents
-        FROM iv WHERE dt IS NOT NULL
-        GROUP BY event_type ORDER BY event_type"""))
+      Some(graft.operators.EventAnalytics.twapOracle))
   ,
 
     // ---------------------------------------------------------------- s24
@@ -2078,11 +1974,7 @@ object StreamingQueries {
       "s27_transform_with_state",
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        onRocksDb(s) {
           val evs = eventsStreamTimeParts(s, dir)
             .withWatermark("ts_t", "0 seconds")
             .select(col("user_id"), col("ts_us"),
@@ -2098,20 +1990,9 @@ object StreamingQueries {
               OutputMode.Append())
           drain(s, OutputMode.Append())(out.toDF())
             .orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
         }
       },
-      Some("""
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-                 AS BIGINT) AS total_cents,
-               MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
-        FROM events
-        GROUP BY user_id
-        ORDER BY user_id""")),
+      Some(spendRollupOracle)),
 
     // ---------------------------------------------------------------- s28
     // transformWithState with BATCH-SEEDED initial state — the
@@ -2128,11 +2009,7 @@ object StreamingQueries {
       "s28_tws_initial_state",
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        onRocksDb(s) {
           val midUs = 1705363200000000L // 2024-01-16T00:00:00Z cutover
           val seed = graft.Tables.events(s, dir)
             .filter(col("ts_us") < midUs)
@@ -2161,21 +2038,10 @@ object StreamingQueries {
               OutputMode.Append(), seed)
           drain(s, OutputMode.Append())(out.toDF())
             .orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
         }
       },
       // the s27 contract verbatim: cutover seeding must be invisible
-      Some("""
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
-                 AS BIGINT) AS total_cents,
-               MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
-        FROM events
-        GROUP BY user_id
-        ORDER BY user_id""")),
+      Some(spendRollupOracle)),
 
     // ---------------------------------------------------------------- s29
     // transformWithState composite state — MapState + bounded ListState
@@ -2191,11 +2057,7 @@ object StreamingQueries {
       "s29_tws_composite_state",
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        onRocksDb(s) {
           val evs = eventsStreamTimeParts(s, dir)
             .withWatermark("ts_t", "0 seconds")
             .select(col("user_id"), col("ts_us"), col("event_type"),
@@ -2208,9 +2070,6 @@ object StreamingQueries {
               OutputMode.Append())
           drain(s, OutputMode.Append())(out.toDF())
             .orderBy("user_id")
-        } finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
         }
       },
       Some("""
@@ -2438,11 +2297,7 @@ object StreamingQueries {
       "s34_stream_kmv_sketch",
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        onRocksDb(s) {
           val evs = eventsStreamTimeParts(s, dir)
             .filter(col("user_id") >= 0) // sentinel: no watermark to starve
             .select(col("event_type"), expr(
@@ -2463,9 +2318,6 @@ object StreamingQueries {
                            ELSE cast(cast(15 AS DECIMAL(38,0)) * 1152921504606846976
                                 div kth AS BIGINT) END""").as("n_est"))
             .orderBy("event_type")
-        } finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
         }
       },
       Some("""
@@ -2538,35 +2390,7 @@ object StreamingQueries {
           .orderBy("rule")
       },
       // same contract as the batch gate — the stream must converge to it
-      Some("""
-        WITH ev AS (
-          SELECT user_id, event_type, value,
-                 CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS vc
-          FROM events),
-        wide AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(count_if(vc < 1 OR vc > 45000) AS BIGINT) AS v1,
-                 CAST(count_if(event_type NOT IN
-                   ('view','click','purchase','error','signup')) AS BIGINT) AS v2,
-                 CAST(count_if(user_id < 1) AS BIGINT) AS v3,
-                 CAST(count_if(value IS NULL) AS BIGINT) AS v4,
-                 CAST(count_if(event_type = 'purchase' AND vc < 500)
-                   AS BIGINT) AS v5
-          FROM ev),
-        longf AS (
-          SELECT 'r1_value_in_1c_450' AS rule, n AS n_checked,
-                 v1 AS n_violations FROM wide
-          UNION ALL SELECT 'r2_type_in_domain', n, v2 FROM wide
-          UNION ALL SELECT 'r3_user_id_positive', n, v3 FROM wide
-          UNION ALL SELECT 'r4_value_not_null', n, v4 FROM wide
-          UNION ALL SELECT 'r5_purchase_floor_5', n, v5 FROM wide)
-        SELECT rule, n_checked, n_violations,
-               n_violations * 1000000 // n_checked AS violation_ppm,
-               CASE WHEN n_violations = 0 THEN 'pass'
-                    WHEN n_violations * 100 <= n_checked THEN 'warn'
-                    ELSE 'fail' END AS status
-        FROM longf
-        ORDER BY rule"""))
+      Some(graft.operators.Profiling.qualityOracle))
   ,
 
     // ---------------------------------------------------------------- s36
@@ -2583,7 +2407,6 @@ object StreamingQueries {
     QueryDef(
       "s36_stream_decontamination",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // spread (r14, guide §2.5): one-task scan serialized the
         // benchmark gram explode below
         val docs = graft.Tables.spread(
@@ -2613,33 +2436,7 @@ object StreamingQueries {
       },
       // q66's oracle verbatim — the stream must converge to the batch
       // decontamination verdicts exactly
-      Some("""
-        WITH bench AS (
-          SELECT doc_id AS bench_id,
-                 array_to_string(string_split(text, ' ')[6:25], ' ') AS text
-          FROM documents WHERE doc_id % 13 = 0),
-        bgrams AS (
-          SELECT bench_id,
-                 UNNEST(list_transform(range(1, len(ws) - 3),
-                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                             ws[i+3] || ' ' || ws[i+4])) AS g
-          FROM (SELECT bench_id, string_split(text, ' ') AS ws FROM bench)),
-        cgrams AS (
-          SELECT DISTINCT UNNEST(list_transform(range(1, len(ws) - 3),
-                        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                             ws[i+3] || ' ' || ws[i+4])) AS g
-          FROM (SELECT string_split(text, ' ') AS ws FROM documents)),
-        agg AS (
-          SELECT bench_id,
-                 COUNT(*) AS n_grams,
-                 COUNT(CASE WHEN g IN (SELECT g FROM cgrams) THEN 1 END) AS n_hit
-          FROM bgrams
-          GROUP BY bench_id)
-        SELECT bench_id, n_grams, n_hit,
-               n_hit * 1000 // n_grams AS hit_permille,
-               (n_hit * 1000 // n_grams) > 500 AS contaminated
-        FROM agg
-        ORDER BY bench_id"""))
+      Some(graft.operators.TrainingDataOps.decontaminationOracle))
   ,
 
     // ---------------------------------------------------------------- s37
@@ -2684,7 +2481,6 @@ object StreamingQueries {
         // kernel hashes each shingle once and runs two integer mixes
         // per lane — bit-identical lanes (MinHashSigSpec pins the
         // parity), so the band buckets still match the corpus index
-        graft.plans.GraftFunctions.register(s)
         val withSig = st.withColumn("sig",
           call_function("graft_minhash_sig", col("s")))
         val bandCols = (0 until 32).map(b =>
@@ -2718,39 +2514,7 @@ object StreamingQueries {
       // q107's oracle VERBATIM — the streamed ingest must converge to
       // the batch admission verdicts exactly (exact all-pairs contract;
       // banding recall is the engine's mechanism, answer-invisible)
-      Some("""
-        WITH batch AS (
-          SELECT doc_id + 500000 AS doc_id,
-                 regexp_replace(text, ' \S+$', '') AS text
-          FROM documents WHERE doc_id % 9 = 0
-          UNION ALL
-          SELECT doc_id + 600000,
-                 'novel content batch item ' || CAST(doc_id AS VARCHAR)
-          FROM documents WHERE doc_id % 9 = 1),
-        bsh AS (SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
-                FROM (SELECT doc_id, string_split(text, ' ') w FROM batch) t
-                WHERE len(w) >= 3),
-        csh AS (SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) s
-                FROM (SELECT doc_id, string_split(text, ' ') w
-                      FROM documents) t
-                WHERE len(w) >= 3),
-        dup AS (
-          SELECT DISTINCT b.doc_id
-          FROM bsh b JOIN csh c
-            ON 5 * len(list_intersect(b.s, c.s))
-               >= 3 * len(list_distinct(list_concat(b.s, c.s))))
-        SELECT CASE WHEN dup.doc_id IS NOT NULL
-                    THEN 'near_dup' ELSE 'admitted' END AS reason,
-               COUNT(*) AS n,
-               MIN(batch.doc_id) AS min_id,
-               MAX(batch.doc_id) AS max_id
-        FROM batch LEFT JOIN dup ON batch.doc_id = dup.doc_id
-        GROUP BY reason
-        ORDER BY reason"""))
+      Some(graft.operators.Dedup.neardupIngestOracle))
   ,
 
     // ---------------------------------------------------------------- s38
@@ -2771,7 +2535,6 @@ object StreamingQueries {
     QueryDef(
       "s38_stream_bpe_token_costs",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import graft.operators.TextAnalysis
         // session-shared merges table (one learn per phase — the
         // offline tokenizer artifact a production stream ships with)
@@ -2826,7 +2589,6 @@ object StreamingQueries {
     QueryDef(
       "s39_stream_classifier_gate",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import graft.operators.{ClassifierArtifacts, Profiling}
         // model artifact: 4096 weights + threshold from the session-
         // shared registry (one gram build per phase), collected ONCE at
@@ -2884,7 +2646,6 @@ object StreamingQueries {
     QueryDef(
       "s40_stream_lm_surprisal",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val hb5 = "cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"
         // spread (r14, guide §2.5): one-task scan serialized the per-doc
@@ -2947,7 +2708,6 @@ object StreamingQueries {
     QueryDef(
       "s41_stream_index_maintenance",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val standing =
           // spread (r14, guide §2.5): one-task scan serialized the
@@ -3071,7 +2831,6 @@ object StreamingQueries {
     QueryDef(
       "s44_stream_contamination_severity",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val docs = graft.Tables(s, dir, "documents")
         // spread + persist (r14): the benchmark gram set was rebuilt
         // from the one-task scan on EVERY micro-batch of the
@@ -3125,7 +2884,6 @@ object StreamingQueries {
     QueryDef(
       "s45_stream_ingest_novelty",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         // static side derived from the session-shared gram frame
         // (GramFrames — shared with q103/q279); the distinct-reduced
         // standing set persists so each micro-batch probes, not rebuilds
@@ -3285,7 +3043,6 @@ object StreamingQueries {
     QueryDef(
       "s49_stream_conformal_gate",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         import graft.operators.{ClassifierArtifacts, Profiling}
         import org.apache.spark.sql.expressions.Window
         // --- batch side: the standing conformal artifact -------------
@@ -3396,7 +3153,6 @@ object StreamingQueries {
     QueryDef(
       "s51_stream_substring_probe",
       (s, dir) => {
-        graft.plans.GraftFunctions.register(s)
         val standing =
           graft.operators.GramFrames.word8Pos(s, dir)
             .select("h").distinct()
@@ -3902,4 +3658,15 @@ object StreamingQueries {
             concat(lit("fresh template item "),
               col("doc_id").cast("string")).as("text"))))
   }
+
+  /** s27's oracle, shared verbatim by s28. */
+  private[graft] def spendRollupOracle: String = """
+        SELECT user_id,
+               CAST(COUNT(*) AS BIGINT) AS n_events,
+               CAST(SUM(CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT))
+                 AS BIGINT) AS total_cents,
+               MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
+        FROM events
+        GROUP BY user_id
+        ORDER BY user_id"""
 }

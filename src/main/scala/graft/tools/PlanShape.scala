@@ -95,17 +95,16 @@ object PlanShape {
     */
   def snapshot(s: SparkSession, dir: String, names: Seq[String])
       : Seq[(String, Either[String, PlanSig])] = {
-    val key = "spark.sql.adaptive.enabled"
-    val before = s.conf.get(key)
-    s.conf.set(key, "false")
-    try names.map { n =>
-      val r =
-        try Right(of(graft.SparkEntry.queries(n)(s, dir)))
-        catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}") }
-      graft.operators.TrackedCaches.releaseAll()
-      (n, r)
-    } finally s.conf.set(key, before)
+    graft.GraftSession.withConf(s, "spark.sql.adaptive.enabled", "false") {
+      names.map { n =>
+        val r =
+          try Right(of(graft.SparkEntry.queries(n)(s, dir)))
+          catch { case e: Throwable =>
+            Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}") }
+        graft.operators.TrackedCaches.releaseAll()
+        (n, r)
+      }
+    }
   }
 
   /** The batch gate's scope: q* queries, whose returned plans ARE the
@@ -127,29 +126,28 @@ object PlanShape {
     * of the returned (post-drain) frame, built AQE-off like the q gate. */
   def spSnapshot(s: SparkSession, dir: String, names: Seq[String])
       : Seq[(String, Either[String, SpSig])] = {
-    val key = "spark.sql.adaptive.enabled"
-    val before = s.conf.get(key)
-    s.conf.set(key, "false")
     // NOTE (ADVICE r13): StreamPlanCapture is a process-global
     // singleton — spSnapshot must NOT run concurrently with other
     // draining tests or their drain signatures would interleave. The
     // per-name enable/disable is try/finally-bracketed so no exit path
     // (including non-Exception Throwables) leaves capture enabled for
     // a later query to absorb.
-    try names.map { n =>
-      StreamPlanCapture.enable()
-      val r =
-        try {
-          val df = graft.SparkEntry.queries(n)(s, dir)
-          Right(SpSig(StreamPlanCapture.take(), of(df)))
-        } catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
-        } finally {
-          StreamPlanCapture.disable()
-          graft.operators.TrackedCaches.releaseAll()
-        }
-      (n, r)
-    } finally s.conf.set(key, before)
+    graft.GraftSession.withConf(s, "spark.sql.adaptive.enabled", "false") {
+      names.map { n =>
+        StreamPlanCapture.enable()
+        val r =
+          try {
+            val df = graft.SparkEntry.queries(n)(s, dir)
+            Right(SpSig(StreamPlanCapture.take(), of(df)))
+          } catch { case e: Throwable =>
+            Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+          } finally {
+            StreamPlanCapture.disable()
+            graft.operators.TrackedCaches.releaseAll()
+          }
+        (n, r)
+      }
+    }
   }
 
   def parseSpPlans(text: String): Map[String, SpSig] = {

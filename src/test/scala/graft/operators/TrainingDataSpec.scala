@@ -51,7 +51,6 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("graft_polyhash handles empty strings and multi-byte code points") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val rows = Seq("", "a", "é世").toDF("t")
       .selectExpr("graft_polyhash(t)").collect().map(_.getLong(0))
     assert(rows(0) == 0L, "empty string folds to the seed")
@@ -62,7 +61,6 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("graft_nfc composes decomposed sequences and is idempotent") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val rows = Seq(("cafe\u0301", "caf\u00e9")).toDF("dec", "com")
       .selectExpr("graft_nfc(dec)", "graft_nfc(com)", "graft_nfc(graft_nfc(dec))")
       .head()

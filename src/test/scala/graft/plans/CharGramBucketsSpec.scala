@@ -18,7 +18,6 @@ class CharGramBucketsSpec extends AnyFunSuite {
       "cast(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT) % 4096)"
 
   test("buckets are bit-identical to conv(substr(md5(g),1,15),16,10) % 4096 on fixture documents") {
-    GraftFunctions.register(spark)
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val native = docs.select(col("doc_id"),
@@ -31,7 +30,6 @@ class CharGramBucketsSpec extends AnyFunSuite {
 
   test("multi-byte characters, short strings and other moduli match the SQL chain") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq("héllo wörld", "ab", "abc", "ééé", "日本語のテキスト", "")
       .toDF("text")
     for (mod <- Seq(7, 4096, 65536)) {
@@ -47,7 +45,6 @@ class CharGramBucketsSpec extends AnyFunSuite {
 
   test("text shorter than the gram size yields an empty array") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val out = Seq("ab").toDF("text")
       .select(call_function("graft_char_gram_buckets",
         col("text"), lit(3), lit(4096)).as("bs"))

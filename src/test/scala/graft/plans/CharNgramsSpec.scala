@@ -14,7 +14,6 @@ class CharNgramsSpec extends AnyFunSuite {
 
   private def ngrams(text: String, n: Int): Seq[String] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(text).toDF("t")
       .select(call_function("graft_char_ngrams", col("t"), lit(n)).as("g"))
       .as[Seq[String]].head()
@@ -40,7 +39,6 @@ class CharNgramsSpec extends AnyFunSuite {
 
   test("expression equals the HOF substring formulation on fixture words") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val words = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) >= 2)
@@ -55,7 +53,6 @@ class CharNgramsSpec extends AnyFunSuite {
 
   test("non-literal gram size is rejected at analysis") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(("abc", 2)).toDF("t", "n")
         .select(call_function("graft_char_ngrams", col("t"), col("n")))

@@ -50,7 +50,6 @@ class ClassifierScoreSpec extends AnyFunSuite {
 
   test("score: native expression equals the interpreted HOF chain") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // sparse random weight map (half the buckets absent) + default
     val rnd = new scala.util.Random(99)
     val wtMap: Map[Long, Long] =
@@ -91,7 +90,6 @@ class ClassifierScoreSpec extends AnyFunSuite {
 
   test("null grams array yields null; null elements take the default") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val mapCol = typedLit(Map(0L -> 1L))
     val scoreOf = call_function("graft_classifier_score",
       col("gr"), mapCol, lit(7L))
@@ -109,7 +107,6 @@ class ClassifierScoreSpec extends AnyFunSuite {
   }
 
   test("non-foldable weight map is rejected at analysis") {
-    GraftFunctions.register(spark)
     val err = intercept[Exception] {
       spark.sql(
         """SELECT graft_classifier_score(array('a'),

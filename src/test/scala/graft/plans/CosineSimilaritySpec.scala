@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
 /** Unit tier: the native cosine expression — codegen vs interpreted
-  * parity, HOF-formula equivalence (bit-exact), extension injection. */
+  * parity, HOF-formula equivalence (bit-exact) — and the GraftExtensions
+  * every GraftSession carries. */
 class CosineSimilaritySpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
@@ -22,7 +22,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("expression equals the sequential HOF fold bit-for-bit") {
-    GraftFunctions.register(spark)
     val rows = vecs
       .withColumn("native", call_function("graft_cosine", col("a"), col("b")))
       .withColumn("hof", expr(
@@ -54,7 +53,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("type check rejects non-double arrays") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1, 2), Array(3, 4))).toDF("a", "b")
     val e = intercept[Exception](
@@ -62,18 +60,22 @@ class CosineSimilaritySpec extends AnyFunSuite {
     assert(e.getMessage.contains("graft_cosine") || e.getMessage.contains("array<double>"))
   }
 
-  test("spark.sql.extensions injection registers the function") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // NOTE: no s2.stop() — SparkSession.stop() would kill the JVM-shared
-    // SparkContext under every other suite. The extra session is inert.
-    val v = s2.sql(
-      "SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
-      .head().getDouble(0)
-    assert(v == 1.0)
+  test("GraftSession siblings resolve every kernel and arm RangeJoinRule") {
+    // newSession() starts from a fresh function registry with no temp
+    // functions, so whatever resolves here came from the extensions
+    val s = spark.newSession()
+    for (session <- Seq(spark, s); (name, _) <- GraftExtensions.functions)
+      assert(session.catalog.functionExists(name), s"$name does not resolve")
+    assert(s.sql("SELECT graft_cosine(array(1.0d, 0.0d), array(1.0d, 0.0d))")
+      .head().getDouble(0) == 1.0)
+    // q124's shape with only the bin width set: no rule registration
+    s.conf.set(RangeJoinRule.BinWidthKey, "100")
+    val ranges = s.range(0, 10).select(col("id").as("range_id"),
+      (col("id") * 100).as("lo"), (col("id") * 100 + 150).as("hi"))
+    val plan = s.range(0, 1000).select(col("id").as("v"))
+      .join(ranges, col("v") >= col("lo") && col("v") < col("hi"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("graft_bin") && !plan.contains("BroadcastNestedLoopJoin")
+      && !plan.contains("CartesianProduct"), s"theta join not rewritten:\n$plan")
   }
 }

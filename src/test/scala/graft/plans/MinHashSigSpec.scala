@@ -15,7 +15,6 @@ class MinHashSigSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
   test("lanes are bit-identical to array_min(transform(.., xxhash64(xxhash64(x), k))) on fixture shingles") {
-    GraftFunctions.register(spark)
     val sh = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("s", expr(graft.operators.Dedup.shinglesExpr))
@@ -34,7 +33,6 @@ class MinHashSigSpec extends AnyFunSuite {
 
   test("single-element and duplicate-element arrays hash like the HOF chain") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(Seq("alpha"), Seq("alpha", "alpha"), Seq("a b c", ""))
       .toDF("s")
     val native = df.select(
@@ -47,7 +45,6 @@ class MinHashSigSpec extends AnyFunSuite {
 
   test("empty array yields an empty signature") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val out = Seq(Seq.empty[String]).toDF("s")
       .select(call_function("graft_minhash_sig", col("s")).as("sig"))
       .as[Seq[Long]].head()

@@ -23,7 +23,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_polyhash matches the code-point fold reference") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val strGen = Gen.listOf(Gen.frequency(
       8 -> Gen.alphaNumChar,
       2 -> Gen.oneOf('é', 'ü', '中', ' ', '!'))).map(_.mkString)
@@ -39,7 +38,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_char_ngrams equals the codepoint sliding window") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val strGen = Gen.listOf(Gen.frequency(
       7 -> Gen.alphaNumChar,
       3 -> Gen.oneOf('é', 'ü', '中', '日', ' '))).map(_.mkString)
@@ -62,7 +60,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_word_ngrams equals the naive sliding window (empty tokens kept)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // tokens include empties so double/leading/trailing spaces are covered
     val tokGen = Gen.listOf(Gen.frequency(
       6 -> Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString),
@@ -83,7 +80,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_nfc equals java.text.Normalizer and is idempotent") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val strGen = Gen.listOf(Gen.frequency(
       6 -> Gen.alphaChar,
       2 -> Gen.oneOf('́', '̈', '̧'), // combining marks
@@ -103,7 +99,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_cosine matches the sequential-fold double reference") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val vecGen = for {
       head <- Gen.choose(0.5, 5.0)
       rest <- Gen.listOfN(7, Gen.choose(-5.0, 5.0))
@@ -127,7 +122,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("property: graft_sign_project matches the LCG-sign fold reference") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     def reference(e: Seq[Double], i: Int): Double = {
       var acc = 0.0
       for (j <- e.indices) {

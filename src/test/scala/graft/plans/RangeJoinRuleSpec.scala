@@ -7,15 +7,12 @@ import graft.SparkSpec
 
 /** Unit tier for the interval-join optimizer rule: the rewrite fires
   * under its guards, never changes answers, and stays out of the way
-  * otherwise. Uses an isolated sibling session so the rule + bin-width
-  * conf never leak into other suites' plans. */
+  * otherwise. The rule comes with every GraftSession; each test arms it
+  * with a bin width on an isolated sibling session, so the conf never
+  * leaks into other suites' plans. */
 class RangeJoinRuleSpec extends AnyFunSuite {
 
-  private def session() = {
-    val s = SparkSpec.spark.newSession()
-    RangeJoin.register(s)
-    s
-  }
+  private def session() = SparkSpec.spark.newSession()
 
   private def ranges(s: org.apache.spark.sql.SparkSession) = s.range(0, 30)
     .select(col("id").as("range_id"),

@@ -32,7 +32,6 @@ class SignProjectSpec extends AnyFunSuite {
   }
 
   test("expression matches the reference fold bit-for-bit, all 8 dims") {
-    GraftFunctions.register(spark)
     val cols = Seq(col("id"), col("e")) ++
       (0 until 8).map(i =>
         call_function("graft_sign_project", col("e"), lit(i)).as(s"p$i"))
@@ -62,7 +61,6 @@ class SignProjectSpec extends AnyFunSuite {
   }
 
   test("non-literal index is rejected at analysis") {
-    GraftFunctions.register(spark)
     val err = intercept[Exception] {
       vecs.select(call_function("graft_sign_project",
         col("e"), col("id").cast("int"))).collect()

@@ -14,7 +14,6 @@ class WordNgramsSpec extends AnyFunSuite {
 
   private def ngrams(text: String, n: Int): Seq[String] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(text).toDF("t")
       .select(call_function("graft_word_ngrams", col("t"), lit(n)).as("g"))
       .as[Seq[String]].head()
@@ -46,7 +45,6 @@ class WordNgramsSpec extends AnyFunSuite {
 
   test("expression equals the lead()-window formulation on fixture docs") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text")
     val native = docs
@@ -66,7 +64,6 @@ class WordNgramsSpec extends AnyFunSuite {
 
   test("non-literal gram size is rejected at analysis") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(("a b c", 2)).toDF("t", "n")
         .select(call_function("graft_word_ngrams", col("t"), col("n")))
