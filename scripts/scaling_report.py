@@ -16,8 +16,10 @@ Sub-second sf0.1 slots are ratio-noise (scheduler quanta dominate), so
 rows with base < 0.2 s are flagged only when the scaled wall ALSO
 exceeds base*outlier + 1 s absolute.
 
-Shared builds (the record's per-tag `builds` seconds) get their own
-table under the same ratio and outlier rule. When both records carry
+Shared builds (the record's per-tag `builds` seconds) and suite phases
+(its q/p/s `phase_sec` seconds) each get their own table under the
+same ratio and outlier rule; a record without either field skips that
+table. When both records carry
 the per-slot `stages` anatomy, each flagged query also shows its
 effective parallelism and serial-stage count on both sides; older
 records without `stages` still parse.
@@ -54,6 +56,18 @@ def table(rows, label):
         rs = "inf" if ratio == float("inf") else f"{ratio:.1f}x"
         print(f"| {q} | {b:.2f} | {s:.2f} | {rs} | "
               f"{'SUPER-LINEAR' if fl else ''} |")
+
+
+def section(base_rec, scaled_rec, field, title, unit, label, outlier):
+    """A ratio table over one per-key seconds map of both records."""
+    rows = ratio_rows(base_rec.get(field, {}), scaled_rec.get(field, {}),
+                      outlier)
+    if rows:
+        print()
+        print(f"{title}: {len(rows)} {unit} compared, "
+              f"super-linear outliers: {sum(1 for r in rows if r[4])}")
+        print()
+        table(rows, label)
 
 
 def main():
@@ -99,14 +113,10 @@ def main():
                   f"{s['eff_parallelism']:.2f} | "
                   f"{b['serial_stages']} -> {s['serial_stages']} |")
 
-    builds = ratio_rows(base_rec.get("builds", {}),
-                        scaled_rec.get("builds", {}), outlier)
-    if builds:
-        print()
-        print(f"Shared builds: {len(builds)} tags compared, "
-              f"super-linear outliers: {sum(1 for r in builds if r[4])}")
-        print()
-        table(builds, "build")
+    section(base_rec, scaled_rec, "builds", "Shared builds", "tags", "build",
+            outlier)
+    section(base_rec, scaled_rec, "phase_sec", "Suite phases", "phases",
+            "phase", outlier)
     if missing:
         print()
         print(f"Missing from one side: {', '.join(missing)}")

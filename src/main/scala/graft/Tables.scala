@@ -168,6 +168,20 @@ object GraftSession {
     }
   }
 
+  /** A `newSession()` sibling of `s` — same SparkContext and cache, its
+    * own SQL conf and temp views — for a query whose conf must not leak
+    * into its caller's session. A sibling's conf starts from the
+    * SparkConf, so it first takes `s`'s `spark.sql.adaptive.enabled`
+    * value (a caller's AQE pin, e.g. the plan-shape gate's, then holds
+    * for the sibling too), then applies `confs`. */
+  def sibling(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val s2 = s.newSession()
+    val aqe = "spark.sql.adaptive.enabled"
+    s2.conf.set(aqe, s.conf.get(aqe))
+    confs.foreach { case (k, v) => s2.conf.set(k, v) }
+    s2
+  }
+
   /** Apply graft settings onto an externally-built session (for the
     * driver-owned mains whose builder shape we keep intact). */
   def local(cpus: Int, app: String): SparkSession = {

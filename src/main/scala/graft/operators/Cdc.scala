@@ -313,12 +313,7 @@ object Cdc {
               .cast("double").as("sum_value"))
           .orderBy("event_type")
       },
-      Some("""
-        SELECT event_type, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type""")),
+      Some(ScaleTechniques.saltedAggOracle)),
 
     // ---------------------------------------------------------------- q93
     // Data-quality constraint audit — the dbt-test/Deequ tier: FK

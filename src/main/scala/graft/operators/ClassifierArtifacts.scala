@@ -35,6 +35,11 @@ object ClassifierArtifacts {
       Profiling.classifierWeights(grams(s, dir)).localCheckpoint(true)
     }
 
+  /** [[weights]] collected as the bucket → weight map the scorer ships
+    * as a literal (bounded: ≤ 4096 weight rows). */
+  def weightMap(s: SparkSession, dir: String): Map[Long, Long] =
+    weights(s, dir).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
   /** The gram-occurrence prior threshold (single row), built at most
     * once per (session, sfDir). */
   def prior(s: SparkSession, dir: String): DataFrame =

@@ -110,13 +110,43 @@ object Dedup {
       s: SparkSession, dir: String, near: Boolean): DataFrame =
     // spread: single-row-group fixture scan = one task; the split +
     // shingle construction is the CPU of this build (guide §2.5, r14)
-    graft.Tables.spread(
-        if (near) nearCorpus(s, dir) else docs(s, dir).select("doc_id", "text"),
-        col("doc_id"))
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("s", expr(shinglesExpr))
-      .filter(size(col("s")) > 0)
-      .select("doc_id", "s")
+    shingled(graft.Tables.spread(
+      if (near) nearCorpus(s, dir) else docs(s, dir).select("doc_id", "text"),
+      col("doc_id")))
+
+  /** (doc_id, s): the word-3-shingle set of each doc of `df` (doc_id,
+    * text) that has at least one shingle. */
+  private[graft] def shingled(df: DataFrame): DataFrame = df
+    .withColumn("w", split(col("text"), " "))
+    .withColumn("s", expr(shinglesExpr))
+    .filter(size(col("s")) > 0)
+    .select("doc_id", "s")
+
+  /** q107/s37 shared: the admission verdict per reason over the ingest
+    * `batch` (doc_id), given the distinct near-dup `dupIds` (batch_id). */
+  private[graft] def admissionReport(batch: DataFrame,
+      dupIds: DataFrame): DataFrame =
+    batch.join(dupIds.withColumn("dup", lit(true)),
+        col("doc_id") === col("batch_id"), "left")
+      .withColumn("reason",
+        when(col("dup"), "near_dup").otherwise("admitted"))
+      .groupBy("reason")
+      .agg(count(lit(1)).as("n"),
+        min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+      .orderBy("reason")
+
+  /** The near-dup ingest batch over `corpus` (doc_id, text): every 9th
+    * doc re-arrives with its last word dropped (a true near-dup of its
+    * origin, id + 500000); every 9th+1 doc is genuinely novel text (no
+    * shingle overlap with the corpus, id + 600000). */
+  private[graft] def ingestBatch(corpus: DataFrame): DataFrame =
+    corpus.filter(col("doc_id") % 9 === 0)
+      .select((col("doc_id") + 500000).as("doc_id"),
+        regexp_replace(col("text"), " \\S+$", "").as("text"))
+      .unionByName(corpus.filter(col("doc_id") % 9 === 1)
+        .select((col("doc_id") + 600000).as("doc_id"),
+          concat(lit("novel content batch item "),
+            col("doc_id").cast("string")).as("text")))
 
   private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     // Shingle sets feed signature building AND both sides of the
@@ -232,20 +262,7 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val standingPairs = PairGraph.pairs(s, dir).select("id_a", "id_b")
     val standingLabels = PairGraph.labels(s, dir)
-    // delta batch: q107's ingest construction
-    val d = docs(s, dir).select("doc_id", "text")
-    val delta = d.filter(col("doc_id") % 9 === 0)
-      .select((col("doc_id") + 500000).as("doc_id"),
-        regexp_replace(col("text"), " \\S+$", "").as("text"))
-      .unionByName(d.filter(col("doc_id") % 9 === 1)
-        .select((col("doc_id") + 600000).as("doc_id"),
-          concat(lit("novel content batch item "),
-            col("doc_id").cast("string")).as("text")))
-    def shingled(df: DataFrame): DataFrame = df
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("s", expr(shinglesExpr))
-      .filter(size(col("s")) > 0)
-      .select("doc_id", "s")
+    val delta = ingestBatch(docs(s, dir).select("doc_id", "text"))
     // Corpus-side shingles + band index come from the session-wide
     // PairGraph memo — an ingest tick probes the standing persisted
     // index, it never re-shingles/re-bands the corpus.
@@ -769,22 +786,7 @@ object Dedup {
       "q107_incremental_neardup_ingest",
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val d = docs(s, dir).select("doc_id", "text")
-        // ingest batch: every 9th doc re-arrives with its last word
-        // dropped (a true near-dup of its origin); every 9th+1 doc is
-        // genuinely novel text (no shingle overlap with the corpus)
-        val batch = d.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"),
-            regexp_replace(col("text"), " \\S+$", "").as("text"))
-          .unionByName(d.filter(col("doc_id") % 9 === 1)
-            .select((col("doc_id") + 600000).as("doc_id"),
-              concat(lit("novel content batch item "),
-                col("doc_id").cast("string")).as("text")))
-        def shingled(df: DataFrame): DataFrame = df
-          .withColumn("w", split(col("text"), " "))
-          .withColumn("s", expr(shinglesExpr))
-          .filter(size(col("s")) > 0)
-          .select("doc_id", "s")
+        val batch = ingestBatch(docs(s, dir).select("doc_id", "text"))
         // the corpus side is the standing persisted index (PairGraph
         // memo) — per-tick work is the BATCH side only
         val csh = PairGraph.corpusShingles(s, dir)
@@ -801,14 +803,7 @@ object Dedup {
           .filter(size(array_intersect(col("sb"), col("sc"))) * 5
             >= size(array_union(col("sb"), col("sc"))) * 3)
           .select("batch_id").distinct()
-          .withColumn("dup", lit(true))
-        batch.join(dups, col("doc_id") === col("batch_id"), "left")
-          .withColumn("reason",
-            when(col("dup"), "near_dup").otherwise("admitted"))
-          .groupBy("reason")
-          .agg(count(lit(1)).as("n"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .orderBy("reason")
+        admissionReport(batch, dups)
       },
       // the oracle states the admission contract EXACTLY (all-pairs
       // Jaccard vs the corpus) — banding is the engine's candidate
@@ -1692,24 +1687,8 @@ object Dedup {
         // session-shared gram frame (GramFrames — one build per run,
         // shared with q103 and s45's static side)
         val grams = GramFrames.word8(s, dir)
-        val standing = grams.filter(col("doc_id") % 5 =!= 4)
-          .select("h").distinct().withColumn("seen", lit(1L))
-        val scored = grams.filter(col("doc_id") % 5 === 4)
-          .join(standing, Seq("h"), "left")
-          .groupBy("doc_id", "source")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
-          .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
-        scored.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_grams").as("grams_total"),
-            sum("n_novel").as("grams_novel"),
-            expr("sum(novelty_ppm) div count(1)").as("mean_novelty_ppm"),
-            sum(when(col("novelty_ppm") >= 900000L, 1L).otherwise(0L))
-              .as("n_mostly_new"),
-            sum(when(col("novelty_ppm") <= 100000L, 1L).otherwise(0L))
-              .as("n_mostly_seen"))
-          .orderBy("source")
+        noveltyReport(grams.filter(col("doc_id") % 5 === 4)
+          .join(noveltyStanding(grams), Seq("h"), "left"))
       },
       Some(noveltyOracle))
   ,
@@ -2270,6 +2249,30 @@ object Dedup {
                CAST(SUM(run_tokens) AS BIGINT) AS dup_tokens,
                CAST(MAX(run_tokens) AS BIGINT) AS max_run_tokens
         FROM runs GROUP BY source ORDER BY source"""
+
+  /** q279/s45 shared: the standing corpus's distinct gram digests
+    * (h, seen = 1) — every doc except today's batch (doc_id % 5 = 4). */
+  private[graft] def noveltyStanding(grams: DataFrame): DataFrame =
+    grams.filter(col("doc_id") % 5 =!= 4)
+      .select("h").distinct().withColumn("seen", lit(1L))
+
+  /** q279/s45 shared: the per-source novelty report over batch grams
+    * (doc_id, source, seen) left-joined to [[noveltyStanding]]. */
+  private[graft] def noveltyReport(probed: DataFrame): DataFrame =
+    probed.groupBy("doc_id", "source")
+      .agg(count(lit(1)).as("n_grams"),
+        sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
+      .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("n_grams").as("grams_total"),
+        sum("n_novel").as("grams_novel"),
+        expr("sum(novelty_ppm) div count(1)").as("mean_novelty_ppm"),
+        sum(when(col("novelty_ppm") >= 900000L, 1L).otherwise(0L))
+          .as("n_mostly_new"),
+        sum(when(col("novelty_ppm") <= 100000L, 1L).otherwise(0L))
+          .as("n_mostly_seen"))
+      .orderBy("source")
 
   /** q279's oracle, shared VERBATIM by s45 (the at-ingest streaming
     * novelty report must hash-match the batch audit exactly). */

@@ -43,18 +43,7 @@ object EventAnalytics {
     QueryDef(
       "q108_funnel_analysis",
       (s, dir) => {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-        val staged = Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_type"))
-          .withColumn("t1",
-            min(when(col("event_type") === "view", col("ts_us"))).over(w))
-          .withColumn("t2",
-            min(when(col("event_type") === "click"
-              && col("ts_us") > col("t1"), col("ts_us"))).over(w))
-          .withColumn("t3",
-            min(when(col("event_type") === "purchase"
-              && col("ts_us") > col("t2"), col("ts_us"))).over(w))
-        staged.groupBy("user_id")
+        funnelStages(s, dir).groupBy("user_id")
           .agg(first("t1").as("t1"), first("t2").as("t2"), first("t3").as("t3"))
           .filter(col("t1").isNotNull)
           .agg(
@@ -111,25 +100,9 @@ object EventAnalytics {
           .select(col("user_id"), expr(s"ts_us div $DayUs").as("day"))
         val cohort = ev.groupBy("user_id").agg(min("day").as("cohort_day"))
         val activity = ev.distinct()
-        activity.join(cohort, "user_id")
-          .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
-          .agg(countDistinct("user_id").as("n_users"))
-          .orderBy("cohort_day", "offset_days")
+        retentionReport(activity.join(cohort, "user_id"))
       },
-      Some(s"""
-        WITH ev AS (
-          SELECT user_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // $DayUs AS day
-          FROM events),
-        cohort AS (SELECT user_id, MIN(day) AS cohort_day
-                   FROM ev GROUP BY user_id),
-        activity AS (SELECT DISTINCT user_id, day FROM ev)
-        SELECT c.cohort_day,
-               a.day - c.cohort_day AS offset_days,
-               COUNT(DISTINCT a.user_id) AS n_users
-        FROM activity a JOIN cohort c ON a.user_id = c.user_id
-        GROUP BY c.cohort_day, offset_days
-        ORDER BY cohort_day, offset_days"""))
+      Some(retentionOracle))
   ,
 
     // --------------------------------------------------------------- q115
@@ -553,18 +526,11 @@ object EventAnalytics {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("event_type").orderBy("ts_us", "event_id")
-        Tables.events(s, dir)
+        twapReport(Tables.events(s, dir)
           .select(col("event_type"), col("ts_us"), col("event_id"),
             expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
           .withColumn("dt", lead("ts_us", 1).over(w) - col("ts_us"))
-          .filter(col("dt").isNotNull)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_intervals"),
-            sum(expr("cast(vc AS DECIMAL(38,0)) * dt")).as("swv"),
-            sum(expr("cast(dt AS DECIMAL(38,0))")).as("sw"))
-          .select(col("event_type"), col("n_intervals"),
-            expr("cast(swv div sw AS BIGINT)").as("twap_cents"))
-          .orderBy("event_type")
+          .filter(col("dt").isNotNull))
       },
       Some(twapOracle))
   ,
@@ -585,12 +551,8 @@ object EventAnalytics {
     QueryDef(
       "q147_gini_by_type",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("event_type").orderBy("vc", "event_id")
-        Tables.events(s, dir)
-          .select(col("event_type"), col("event_id"),
-            expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
-          .withColumn("i", row_number().over(w).cast("long"))
+        eventCents(s, dir)
+          .withColumn("i", row_number().over(byCents).cast("long"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             sum("vc").as("sum_cents"),
@@ -650,27 +612,7 @@ object EventAnalytics {
           .filter(col("longest_streak") >= 3)
           .orderBy("user_id")
       },
-      Some(s"""
-        WITH d AS (
-          SELECT DISTINCT user_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // $DayUs AS day
-          FROM events),
-        i AS (
-          SELECT user_id, day,
-                 day - row_number() OVER (PARTITION BY user_id
-                                          ORDER BY day) AS anchor
-          FROM d),
-        runs AS (
-          SELECT user_id, anchor, CAST(COUNT(*) AS BIGINT) AS len,
-                 MIN(day) AS start_day
-          FROM i GROUP BY user_id, anchor)
-        SELECT user_id,
-               CAST(MAX(len) AS BIGINT) AS longest_streak,
-               CAST(COUNT(*) AS BIGINT) AS n_streaks,
-               CAST(MIN(start_day) AS BIGINT) AS first_day
-        FROM runs GROUP BY user_id
-        HAVING MAX(len) >= 3
-        ORDER BY user_id"""))
+      Some(streakOracle))
   ,
 
     // --------------------------------------------------------------- q152
@@ -744,17 +686,7 @@ object EventAnalytics {
       "q178_multitouch_attribution",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val ev = Tables.events(s, dir)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
-            col("ts_us").as("p_us"))
-        val touches = ev.filter(col("event_type").isin("view", "click"))
-          .select(col("user_id").as("t_user"), col("event_type").as("touch"),
-            col("event_id").as("t_id"), col("ts_us").as("t_us"))
-        val paired = purchases.join(touches,
-          col("p_user") === col("t_user")
-            && col("t_us") < col("p_us")
-            && col("t_us") >= col("p_us") - HourUs * 24)
+        val paired = touchPairs(s, dir)
         val withN = paired.withColumn("n_touches",
           count(lit(1)).over(Window.partitionBy("p_id")))
         withN
@@ -800,18 +732,8 @@ object EventAnalytics {
       "q179_ushape_attribution",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val ev = Tables.events(s, dir)
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
-            col("ts_us").as("p_us"))
-        val touches = ev.filter(col("event_type").isin("view", "click"))
-          .select(col("user_id").as("t_user"), col("event_type").as("touch"),
-            col("event_id").as("t_id"), col("ts_us").as("t_us"))
         val w = Window.partitionBy("p_id")
-        val paired = purchases.join(touches,
-          col("p_user") === col("t_user")
-            && col("t_us") < col("p_us")
-            && col("t_us") >= col("p_us") - HourUs * 24)
+        val paired = touchPairs(s, dir)
           .withColumn("rn", row_number().over(
             w.orderBy(col("t_us"), col("t_id"))))
           .withColumn("n", count(lit(1)).over(w))
@@ -1309,17 +1231,7 @@ object EventAnalytics {
     QueryDef(
       "q223_accumulating_snapshot",
       (s, dir) => {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-        Tables.events(s, dir)
-          .select(col("user_id"), col("ts_us"), col("event_type"))
-          .withColumn("t1",
-            min(when(col("event_type") === "view", col("ts_us"))).over(w))
-          .withColumn("t2",
-            min(when(col("event_type") === "click"
-              && col("ts_us") > col("t1"), col("ts_us"))).over(w))
-          .withColumn("t3",
-            min(when(col("event_type") === "purchase"
-              && col("ts_us") > col("t2"), col("ts_us"))).over(w))
+        funnelStages(s, dir)
           .groupBy("user_id")
           .agg(first("t1").as("first_view_us"),
             first("t2").as("first_click_us"),
@@ -1955,6 +1867,75 @@ object EventAnalytics {
         FROM t
         ORDER BY from_type, to_type"""
 
+  /** q178/q179 shared: each purchase (p_user, p_id, p_us) paired with
+    * its user's view/click touches (t_user, touch, t_id, t_us) in the
+    * 24 hours before it — a user-keyed interval join, the batch twin of
+    * s04's stream-stream join. */
+  private def touchPairs(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
+        col("ts_us").as("p_us"))
+    val touches = ev.filter(col("event_type").isin("view", "click"))
+      .select(col("user_id").as("t_user"), col("event_type").as("touch"),
+        col("event_id").as("t_id"), col("ts_us").as("t_us"))
+    purchases.join(touches,
+      col("p_user") === col("t_user")
+        && col("t_us") < col("p_us")
+        && col("t_us") >= col("p_us") - HourUs * 24)
+  }
+
+  /** q108/q223 shared: every event with its user's funnel stage times —
+    * t1 = first view, t2 = first click after t1, t3 = first purchase
+    * after t2 — as three CHAINED window minimums over one user_id
+    * partitioning, so Catalyst plans exactly ONE user exchange. */
+  private def funnelStages(s: SparkSession, dir: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+    Tables.events(s, dir)
+      .select(col("user_id"), col("ts_us"), col("event_type"))
+      .withColumn("t1",
+        min(when(col("event_type") === "view", col("ts_us"))).over(w))
+      .withColumn("t2",
+        min(when(col("event_type") === "click"
+          && col("ts_us") > col("t1"), col("ts_us"))).over(w))
+      .withColumn("t3",
+        min(when(col("event_type") === "purchase"
+          && col("ts_us") > col("t2"), col("ts_us"))).over(w))
+  }
+
+  /** q109/s19 shared: distinct users per (cohort_day, offset_days) over
+    * cohort-tagged activity (user_id, day, cohort_day). */
+  private[graft] def retentionReport(tagged: DataFrame): DataFrame =
+    tagged
+      .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
+      .agg(countDistinct("user_id").as("n_users"))
+      .orderBy("cohort_day", "offset_days")
+
+  /** q146/s23 shared: the per-type time-weighted average over value
+    * intervals (event_type, vc, dt) — each value weighted by the time
+    * until the type's next event. */
+  private[graft] def twapReport(intervals: DataFrame): DataFrame =
+    intervals.groupBy("event_type")
+      .agg(count(lit(1)).as("n_intervals"),
+        sum(expr("cast(vc AS DECIMAL(38,0)) * dt")).as("swv"),
+        sum(expr("cast(dt AS DECIMAL(38,0))")).as("sw"))
+      .select(col("event_type"), col("n_intervals"),
+        expr("cast(swv div sw AS BIGINT)").as("twap_cents"))
+      .orderBy("event_type")
+
+  /** q147/q150 shared: (event_type, event_id, vc) — every event with its
+    * value in integer cents. */
+  private[operators] def eventCents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("event_type"), col("event_id"),
+        expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
+
+  /** q147/q150 shared: each type's ascending value order, ties broken
+    * on event_id. */
+  private[operators] def byCents =
+    org.apache.spark.sql.expressions.Window
+      .partitionBy("event_type").orderBy("vc", "event_id")
+
   /** q146's oracle, shared verbatim by s23. */
   private[graft] def twapOracle: String = """
         WITH e AS (
@@ -1972,4 +1953,43 @@ object EventAnalytics {
                     // CAST(SUM(dt) AS HUGEINT) AS BIGINT) AS twap_cents
         FROM iv WHERE dt IS NOT NULL
         GROUP BY event_type ORDER BY event_type"""
+
+  /** q109's oracle, shared verbatim by s19. */
+  private[graft] def retentionOracle: String = s"""
+        WITH ev AS (
+          SELECT user_id,
+                 epoch_us(CAST(ts AS TIMESTAMP)) // $DayUs AS day
+          FROM events),
+        cohort AS (SELECT user_id, MIN(day) AS cohort_day
+                   FROM ev GROUP BY user_id),
+        activity AS (SELECT DISTINCT user_id, day FROM ev)
+        SELECT c.cohort_day,
+               a.day - c.cohort_day AS offset_days,
+               COUNT(DISTINCT a.user_id) AS n_users
+        FROM activity a JOIN cohort c ON a.user_id = c.user_id
+        GROUP BY c.cohort_day, offset_days
+        ORDER BY cohort_day, offset_days"""
+
+  /** q151's oracle, shared verbatim by s25. */
+  private[graft] def streakOracle: String = s"""
+        WITH d AS (
+          SELECT DISTINCT user_id,
+                 epoch_us(CAST(ts AS TIMESTAMP)) // $DayUs AS day
+          FROM events),
+        i AS (
+          SELECT user_id, day,
+                 day - row_number() OVER (PARTITION BY user_id
+                                          ORDER BY day) AS anchor
+          FROM d),
+        runs AS (
+          SELECT user_id, anchor, CAST(COUNT(*) AS BIGINT) AS len,
+                 MIN(day) AS start_day
+          FROM i GROUP BY user_id, anchor)
+        SELECT user_id,
+               CAST(MAX(len) AS BIGINT) AS longest_streak,
+               CAST(COUNT(*) AS BIGINT) AS n_streaks,
+               CAST(MIN(start_day) AS BIGINT) AS first_day
+        FROM runs GROUP BY user_id
+        HAVING MAX(len) >= 3
+        ORDER BY user_id"""
 }

@@ -15,6 +15,16 @@ import graft.functions.{FakeMediaDecoder, FrameSample, MediaMeta}
   */
 object MultimodalQueries {
 
+  /** documents.text reinterpreted as an opaque binary payload per doc —
+    * the fixture ships no real media bytes. */
+  private def payloads(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), col("text").cast("binary").as("payload"))
+      .as[(Long, Array[Byte])]
+  }
+
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- q35
@@ -24,9 +34,7 @@ object MultimodalQueries {
       "q35_multimodal_metadata",
       (s, dir) => {
         import s.implicits._
-        val bin = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))
-          .as[(Long, Array[Byte])]
+        val bin = payloads(s, dir)
         graft.functions.Multimodal.decodeMeta(bin, () => new FakeMediaDecoder)
           .toDF().orderBy("doc_id")
       },
@@ -48,9 +56,7 @@ object MultimodalQueries {
       "q43_multimodal_framesample",
       (s, dir) => {
         import s.implicits._
-        val bin = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))
-          .as[(Long, Array[Byte])]
+        val bin = payloads(s, dir)
         val frames = bin.mapPartitions { it =>
           val dec = new FakeMediaDecoder
           it.flatMap { case (id, b) => dec.frameSample(id, b, 4) }
@@ -96,9 +102,7 @@ object MultimodalQueries {
       "q54_multimodal_resize",
       (s, dir) => {
         import s.implicits._
-        val bin = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))
-          .as[(Long, Array[Byte])]
+        val bin = payloads(s, dir)
         val resized = bin.mapPartitions { it =>
           val dec = new FakeMediaDecoder
           it.map { case (id, b) => dec.resize(id, b, 64) }
@@ -296,9 +300,7 @@ object MultimodalQueries {
       "q136_audio_energy",
       (s, dir) => {
         import s.implicits._
-        val bin = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))
-          .as[(Long, Array[Byte])]
+        val bin = payloads(s, dir)
         graft.functions.Multimodal
           .audioFeatures(bin, () => new FakeMediaDecoder, 16, 360000L)
           .toDF().orderBy("doc_id")
@@ -359,9 +361,7 @@ object MultimodalQueries {
       "q211_shot_boundaries",
       (s, dir) => {
         import s.implicits._
-        val bin = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast("binary").as("payload"))
-          .as[(Long, Array[Byte])]
+        val bin = payloads(s, dir)
         val frames = bin.mapPartitions { it =>
           val dec = new FakeMediaDecoder
           it.flatMap { case (id, b) => dec.frameEnergy(id, b, 16) }

@@ -58,12 +58,39 @@ object PipelineQueries {
         struct(dstHost.as("hostname"), destPath.as("path")).as("destination")))
         .as("value"))
 
+  /** One localsrc→localdst job per doc of `docs`, from
+    * `<base>/src/doc_<id>.txt` to `<base>/dst/doc_<id>.txt`. */
+  private def localJobs(docs: DataFrame, base: String): DataFrame =
+    jobMessages(docs, lit("localsrc"), lit("localdst"),
+      concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
+      concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
+
   /** Run the pipeline and return outcome counts. */
   private def statusCounts(spark: SparkSession, raw: DataFrame, pc: PipelineConfig): DataFrame = {
     val (results, _) = Pipeline.run(raw, pc)
     Pipeline.executeOnce(results.toDF()).groupBy("status", "error_type")
       .agg(count(lit(1)).as("n_jobs"), sum("bytes").as("total_bytes"))
       .orderBy("status", "error_type")
+  }
+
+  /** p06/p08 shared: stage `docs` as `<root>/src/doc_<id>.txt` inside
+    * the FTP server's storage (driver-local disk IS the remote server's
+    * storage here) and run one ftp→ftp job per doc through the
+    * reference's pool size of 4 (config.py:42); returns the outcome
+    * counts, with the transfers executed. */
+  private def bulkFtpCounts(s: SparkSession,
+      server: graft.pipeline.testkit.FakeFtpServer, root: java.nio.file.Path,
+      docs: DataFrame): DataFrame = {
+    Staging.writeDocFiles(docs, s"$root/src", "txt")
+    val pc = PipelineConfig(
+      "BULKFTP_TYPE" -> "ftp", "BULKFTP_HOST" -> "127.0.0.1",
+      "BULKFTP_PORT" -> server.port.toString,
+      "BULKFTP_USERNAME" -> "u", "BULKFTP_PASSWORD" -> "p",
+      "FTP_POOL_SIZE" -> "4")
+    val raw = jobMessages(docs, lit("bulkftp"), lit("bulkftp"),
+      concat(lit("/src/doc_"), col("doc_id"), lit(".txt")),
+      concat(lit("/dst/doc_"), col("doc_id"), lit(".txt")))
+    statusCounts(s, raw, pc)
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -76,9 +103,7 @@ object PipelineQueries {
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
         val base = stagedBase("p01", dir, docs)
-        val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
-          concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
-          concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
+        val raw = localJobs(docs, base)
         statusCounts(s, raw, localConfig)
       },
       Some("""
@@ -95,9 +120,7 @@ object PipelineQueries {
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
         val base = stagedBase("p02", dir, docs.filter(col("doc_id") % 10 =!= 0))
-        val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
-          concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
-          concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
+        val raw = localJobs(docs, base)
         statusCounts(s, raw, localConfig)
       },
       Some("""
@@ -206,26 +229,9 @@ object PipelineQueries {
     QueryDef(
       "p06_ftp_bulk_roundtrip",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft-p06-ftp")
-        val server = new graft.pipeline.testkit.FakeFtpServer(root)
-        try {
-          val docs = Tables(s, dir, "documents").filter(col("doc_id") < 1000)
-          // stage source files inside the FTP server's root (driver-local
-          // disk IS the remote server's storage here)
-          Staging.writeDocFiles(docs, s"$root/src", "txt")
-          val pc = PipelineConfig(
-            "BULKFTP_TYPE" -> "ftp", "BULKFTP_HOST" -> "127.0.0.1",
-            "BULKFTP_PORT" -> server.port.toString,
-            "BULKFTP_USERNAME" -> "u", "BULKFTP_PASSWORD" -> "p",
-            "FTP_POOL_SIZE" -> "4") // reference pool size (config.py:42)
-          val raw = jobMessages(docs, lit("bulkftp"), lit("bulkftp"),
-            concat(lit("/src/doc_"), col("doc_id"), lit(".txt")),
-            concat(lit("/dst/doc_"), col("doc_id"), lit(".txt")))
-          statusCounts(s, raw, pc)
-        } finally {
-          graft.pipeline.transfer.FtpPools.closeAll()
-          server.stop()
-          StagingCleanup.async(root) // teardown off the timed path
+        Sources.withFtpServer("graft-p06-ftp") { (server, root) =>
+          bulkFtpCounts(s, server, root,
+            Tables(s, dir, "documents").filter(col("doc_id") < 1000))
         }
       },
       Some("""
@@ -252,9 +258,7 @@ object PipelineQueries {
         val base = Files.createTempDirectory("graft-p07").toString
         val docs = Tables(s, dir, "documents")
         Staging.writeDocFiles(docs.filter(col("doc_id") % 10 =!= 0), s"$base/src", "txt")
-        val raw = jobMessages(docs, lit("localsrc"), lit("localdst"),
-          concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
-          concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
+        val raw = localJobs(docs, base)
         val (results1, dlq1) = Pipeline.run(raw, localConfig)
         // the first pass executes here, BEFORE the fix below
         val r1 = Pipeline.executeOnce(results1.toDF())
@@ -309,8 +313,6 @@ object PipelineQueries {
     QueryDef(
       "p08_ftp_bulk_contention",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft-p08-ftp")
-        val server = new graft.pipeline.testkit.FakeFtpServer(root)
         val tmpDir = Paths.get(System.getProperty("java.io.tmpdir"))
         def tempSnapshot(): Set[String] = {
           val st = Files.list(tmpDir)
@@ -319,28 +321,17 @@ object PipelineQueries {
             .toSet
           finally st.close()
         }
-        try {
+        Sources.withFtpServer("graft-p08-ftp") { (server, root) =>
           val docs = Tables(s, dir, "documents").filter(col("doc_id") < 10000)
-          Staging.writeDocFiles(docs, s"$root/src", "txt")
-          val pc = PipelineConfig(
-            "BULKFTP_TYPE" -> "ftp", "BULKFTP_HOST" -> "127.0.0.1",
-            "BULKFTP_PORT" -> server.port.toString,
-            "BULKFTP_USERNAME" -> "u", "BULKFTP_PASSWORD" -> "p",
-            "FTP_POOL_SIZE" -> "4") // p06 parity: contention rises, pool doesn't
-          val raw = jobMessages(docs, lit("bulkftp"), lit("bulkftp"),
-            concat(lit("/src/doc_"), col("doc_id"), lit(".txt")),
-            concat(lit("/dst/doc_"), col("doc_id"), lit(".txt")))
           val before = tempSnapshot()
-          val counts = statusCounts(s, raw, pc) // transfers execute inside
+          // p06 parity: contention rises, the pool doesn't; the
+          // transfers execute inside
+          val counts = bulkFtpCounts(s, server, root, docs)
           val leftover = (tempSnapshot() -- before).size.toLong
           val audit = s.createDataFrame(Seq(
             ("zz_temp_audit", "leftover_tmp", leftover, 0L)))
             .toDF("status", "error_type", "n_jobs", "total_bytes")
           counts.unionByName(audit).orderBy("status", "error_type")
-        } finally {
-          graft.pipeline.transfer.FtpPools.closeAll()
-          server.stop()
-          StagingCleanup.async(root) // teardown off the timed path
         }
       },
       Some("""

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -738,18 +738,7 @@ object Profiling {
     QueryDef(
       "q155_classification_metrics",
       (s, dir) => {
-        val types = Seq("click", "error", "purchase", "signup", "view")
-        val nextOf = types.zip(types.tail :+ types.head).toMap
-        val shiftExpr = types.map { t =>
-          s"WHEN event_type = '$t' THEN '${nextOf(t)}'"
-        }.mkString("CASE ", " ", " END")
-        val pairs = Tables.events(s, dir)
-          .select(col("event_type").as("label"),
-            expr(s"CASE WHEN event_id % 10 = 0 THEN $shiftExpr " +
-              "ELSE event_type END").as("pred"))
-        val cm =
-          pairs.groupBy("label", "pred").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val cm = annotatorConfusion(s, dir, 10, "label", "pred")
         val tp = cm.filter(col("label") === col("pred"))
           .select(col("label").as("cls"), col("n").as("tp"))
         val byLabel = cm.groupBy(col("label").as("cls"))
@@ -1153,21 +1142,7 @@ object Profiling {
           expr("count_if(user_id < 1)").as("v3"),
           expr("count_if(value IS NULL)").as("v4"),
           expr("count_if(event_type = 'purchase' AND vc < 500)").as("v5"))
-        wide.select(explode(expr("""array(
-            struct('r1_value_in_1c_450' AS rule, v1 AS n_violations),
-            struct('r2_type_in_domain' AS rule, v2 AS n_violations),
-            struct('r3_user_id_positive' AS rule, v3 AS n_violations),
-            struct('r4_value_not_null' AS rule, v4 AS n_violations),
-            struct('r5_purchase_floor_5' AS rule, v5 AS n_violations))""")).as("r"), col("n"))
-          .select(col("r.rule").as("rule"), col("n").as("n_checked"),
-            col("r.n_violations").as("n_violations"))
-          .withColumn("violation_ppm",
-            expr("n_violations * 1000000 div n_checked"))
-          .withColumn("status", expr(
-            """CASE WHEN n_violations = 0 THEN 'pass'
-                    WHEN n_violations * 100 <= n_checked THEN 'warn'
-                    ELSE 'fail' END"""))
-          .orderBy("rule")
+        qualityReport(wide)
       },
       Some(qualityOracle))
   ,
@@ -1203,38 +1178,15 @@ object Profiling {
         // weights come from the session-shared registry: trained once
         // from the shared gram frame, consumed by q255/q262/q264/q268/
         // s39 (the PairGraph discipline — see ClassifierArtifacts)
-        val wtMap = ClassifierArtifacts.weights(s, dir).collect() // bounded: ≤ 4096 weight rows
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        val scored = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), classifierGoodExpr,
-            call_function("graft_char_ngrams", col("text"), lit(3))
-              .as("gr"))
-          .filter(size(col("gr")) > 0) // score only gram-bearing docs
-          .select(col("doc_id"), col("source"), col("good"),
-            call_function("graft_classifier_score", col("gr"),
-              typedLit(wtMap), lit(500000L)).as("wsum"),
-            size(col("gr")).cast("long").as("ng"))
-          .select(col("doc_id"), col("source"), col("good"),
-            expr("wsum div ng").as("score_ppm"))
+        val scored = classifierScored(Tables(s, dir, "documents"),
+          ClassifierArtifacts.weightMap(s, dir))
         // threshold = the GRAM-OCCURRENCE prior, the same measure the
         // weights live in (a doc-level prior sits systematically above
         // almost every score because low-diversity docs are longer and
         // contribute more gram mass — measured: it keeps nothing)
         val prior = ClassifierArtifacts.prior(s, dir)
-        scored.crossJoin(broadcast(prior))
-          .withColumn("keep", col("score_ppm") >= col("thr_ppm"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-            sum(when(col("keep") && col("good"), 1L).otherwise(0L)).as("tp"),
-            sum(when(col("keep") && !col("good"), 1L).otherwise(0L)).as("fp"),
-            sum(when(!col("keep") && col("good"), 1L).otherwise(0L)).as("fn"),
-            sum(when(!col("keep") && !col("good"), 1L).otherwise(0L)).as("tn"))
-          .select(col("source"), col("n_docs"), col("n_keep"),
-            expr("n_keep * 1000000 div n_docs").as("keep_ppm"),
-            col("tp"), col("fp"), col("fn"), col("tn"),
-            expr("(tp + tn) * 1000000 div n_docs").as("agreement_ppm"))
-          .orderBy("source")
+        classifierReport(scored.crossJoin(broadcast(prior))
+          .withColumn("keep", col("score_ppm") >= col("thr_ppm")))
       },
       Some(classifierOracle))
   ,
@@ -1259,31 +1211,8 @@ object Profiling {
     QueryDef(
       "q258_cohens_kappa",
       (s, dir) => {
-        val types = Seq("click", "error", "purchase", "signup", "view")
-        val nextOf = types.zip(types.tail :+ types.head).toMap
-        val shiftExpr = types.map { t =>
-          s"WHEN event_type = '$t' THEN '${nextOf(t)}'"
-        }.mkString("CASE ", " ", " END")
-        val pairs = Tables.events(s, dir)
-          .select(col("event_type").as("a"),
-            expr(s"CASE WHEN event_id % 7 = 0 THEN $shiftExpr " +
-              "ELSE event_type END").as("b"))
-        val cm =
-          pairs.groupBy("a", "b").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val byA = cm.groupBy(col("a").as("cls")).agg(sum("n").as("n_a"))
-        val byB = cm.groupBy(col("b").as("cls")).agg(sum("n").as("n_b"))
-        val diag = cm.filter(col("a") === col("b"))
-          .select(col("a").as("cls"), col("n").as("n_agree"))
-        // FULL OUTER on cls (ADVICE r8): an inner join would silently
-        // drop a class appearing under only ONE annotator from n /
-        // agree / pe_num — fixture-safe today (all 5 types appear both
-        // sides) but wrong by construction; marginals must be complete.
-        val perClass = byA.join(byB, Seq("cls"), "full_outer")
-          .join(diag, Seq("cls"), "left")
-          .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-          .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
-          .withColumn("n_agree", coalesce(col("n_agree"), lit(0L)))
+        val cm = annotatorConfusion(s, dir, 7, "a", "b")
+        val perClass = annotatorMarginals(cm)
         val scalars = perClass.agg(
             sum("n_a").as("n"), sum("n_agree").as("agree"),
             sum(col("n_a") * col("n_b")).as("pe_num"))
@@ -1616,11 +1545,7 @@ object Profiling {
     QueryDef(
       "q268_score_calibration",
       (s, dir) => {
-        val grams = ClassifierArtifacts.grams(s, dir)
-        val wt = ClassifierArtifacts.weights(s, dir)
-        val scored = grams.join(broadcast(wt), "b")
-          .groupBy("doc_id", "source", "good")
-          .agg(expr("sum(w) div count(1)").as("score_ppm"))
+        val scored = classifierDocScores(s, dir)
         val bySrc = org.apache.spark.sql.expressions.Window
           .partitionBy("source")
         scored
@@ -1815,27 +1740,8 @@ object Profiling {
     QueryDef(
       "q280_krippendorff_alpha",
       (s, dir) => {
-        val types = Seq("click", "error", "purchase", "signup", "view")
-        val nextOf = types.zip(types.tail :+ types.head).toMap
-        val shiftExpr = types.map { t =>
-          s"WHEN event_type = '$t' THEN '${nextOf(t)}'"
-        }.mkString("CASE ", " ", " END")
-        val pairs = Tables.events(s, dir)
-          .select(col("event_type").as("a"),
-            expr(s"CASE WHEN event_id % 7 = 0 THEN $shiftExpr " +
-              "ELSE event_type END").as("b"))
-        val cm =
-          pairs.groupBy("a", "b").agg(count(lit(1)).as("n"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val byA = cm.groupBy(col("a").as("cls")).agg(sum("n").as("n_a"))
-        val byB = cm.groupBy(col("b").as("cls")).agg(sum("n").as("n_b"))
-        val diag = cm.filter(col("a") === col("b"))
-          .select(col("a").as("cls"), col("n").as("n_agree"))
-        val perClass = byA.join(byB, Seq("cls"), "full_outer")
-          .join(diag, Seq("cls"), "left")
-          .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-          .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
-          .withColumn("n_agree", coalesce(col("n_agree"), lit(0L)))
+        val cm = annotatorConfusion(s, dir, 7, "a", "b")
+        val perClass = annotatorMarginals(cm)
           .withColumn("n_pooled", col("n_a") + col("n_b"))
         val scalars = perClass.agg(
             sum("n_a").as("n"), sum("n_agree").as("agree"),
@@ -2092,11 +1998,7 @@ object Profiling {
     QueryDef(
       "q287_label_noise_audit",
       (s, dir) => {
-        val grams = ClassifierArtifacts.grams(s, dir)
-        val wt = ClassifierArtifacts.weights(s, dir)
-        val scored = grams.join(broadcast(wt), "b")
-          .groupBy("doc_id", "source", "good")
-          .agg(expr("sum(w) div count(1)").as("score_ppm"))
+        val scored = classifierDocScores(s, dir)
         val bd = scored.agg(
           expr("(sum(CASE WHEN good THEN score_ppm ELSE 0 END)" +
             " div count_if(good)" +
@@ -2480,7 +2382,7 @@ object Profiling {
           .crossJoin(broadcast(rb))
           .filter(col("cum") >= col("rb"))
           .agg(max("sc").as("thr_bad_ppm"))
-        scored.filter(!col("cal"))
+        val evals = scored.filter(!col("cal"))
           .crossJoin(broadcast(tg)).crossJoin(broadcast(tb))
           .crossJoin(broadcast(rg)).crossJoin(broadcast(rb))
           .select(col("good"),
@@ -2489,22 +2391,9 @@ object Profiling {
             col("ng"), col("rg"), col("nb"), col("rb"),
             col("thr_good_ppm"), col("thr_bad_ppm"))
           .groupBy("ng", "rg", "nb", "rb", "thr_good_ppm", "thr_bad_ppm")
-          .agg(count(lit(1)).as("n_eval"),
-            sum(when(col("good"), 1L).otherwise(0L)).as("n_eval_good"),
-            sum(when(col("good") && col("in_g"), 1L).otherwise(0L))
-              .as("cov_g"),
-            sum(when(!col("good") && col("in_b"), 1L).otherwise(0L))
-              .as("cov_b"),
-            sum(expr("""CASE WHEN in_g THEN 1L ELSE 0L END
-                        + CASE WHEN in_b THEN 1L ELSE 0L END"""))
-              .as("set_sum"))
-          .select(col("ng").as("n_cal_good"), col("rg").as("r_good"),
-            col("nb").as("n_cal_bad"), col("rb").as("r_bad"),
-            col("thr_good_ppm"), col("thr_bad_ppm"), col("n_eval"),
-            expr("cov_g * 1000000 div n_eval_good").as("cov_good_ppm"),
-            expr("cov_b * 1000000 div (n_eval - n_eval_good)")
-              .as("cov_bad_ppm"),
-            expr("set_sum * 1000 div n_eval").as("avg_set_milli"))
+        conformalCoverage(evals, col("ng").as("n_cal_good"),
+          col("rg").as("r_good"), col("nb").as("n_cal_bad"),
+          col("rb").as("r_bad"), col("thr_good_ppm"), col("thr_bad_ppm"))
       },
       Some(conformalOracle))
   ,
@@ -3237,6 +3126,25 @@ object Profiling {
       .orderBy("a")
   }
 
+  /** q308/s49 shared: the coverage report over eval rows (good, in_g,
+    * in_b) — `audit` columns (the r/n and threshold scalars) first. */
+  private[graft] def conformalCoverage(evals: RelationalGroupedDataset,
+      audit: org.apache.spark.sql.Column*): DataFrame =
+    evals.agg(count(lit(1)).as("n_eval"),
+        sum(when(col("good"), 1L).otherwise(0L)).as("n_eval_good"),
+        sum(when(col("good") && col("in_g"), 1L).otherwise(0L))
+          .as("cov_g"),
+        sum(when(!col("good") && col("in_b"), 1L).otherwise(0L))
+          .as("cov_b"),
+        sum(expr("""CASE WHEN in_g THEN 1L ELSE 0L END
+                    + CASE WHEN in_b THEN 1L ELSE 0L END"""))
+          .as("set_sum"))
+      .select(audit ++ Seq(col("n_eval"),
+        expr("cov_g * 1000000 div n_eval_good").as("cov_good_ppm"),
+        expr("cov_b * 1000000 div (n_eval - n_eval_good)")
+          .as("cov_bad_ppm"),
+        expr("set_sum * 1000 div n_eval").as("avg_set_milli")): _*)
+
   /** q308's oracle, shared VERBATIM by s49 (the streamed prediction
     * sets must reproduce the batch conformal report exactly). */
   private[graft] def conformalOracle: String = s"""
@@ -3418,11 +3326,109 @@ object Profiling {
         FROM longf
         ORDER BY source, stage"""
 
+  /** q155/q258/q280 shared: the persisted confusion matrix (`first`,
+    * `second`, n) of two deterministic pseudo-annotators over events —
+    * `first` is the event type, `second` shifts every `modulus`-th event
+    * to the next type in lexical order, so the matrix is data, not
+    * randomness, and both engines derive identical labels. */
+  private[graft] def annotatorConfusion(s: SparkSession, dir: String,
+      modulus: Int, first: String, second: String): DataFrame = {
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    val nextOf = types.zip(types.tail :+ types.head).toMap
+    val shiftExpr = types.map { t =>
+      s"WHEN event_type = '$t' THEN '${nextOf(t)}'"
+    }.mkString("CASE ", " ", " END")
+    Tables.events(s, dir)
+      .select(col("event_type").as(first),
+        expr(s"CASE WHEN event_id % $modulus = 0 THEN $shiftExpr " +
+          "ELSE event_type END").as(second))
+      .groupBy(first, second).agg(count(lit(1)).as("n"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** q258/q280 shared: per-class marginals (cls, n_a, n_b, n_agree) of
+    * an (a, b, n) confusion matrix. FULL OUTER on cls (ADVICE r8): an
+    * inner join would silently drop a class appearing under only ONE
+    * annotator — fixture-safe today (all 5 types appear both sides) but
+    * wrong by construction; marginals must be complete. */
+  private[graft] def annotatorMarginals(cm: DataFrame): DataFrame = {
+    val byA = cm.groupBy(col("a").as("cls")).agg(sum("n").as("n_a"))
+    val byB = cm.groupBy(col("b").as("cls")).agg(sum("n").as("n_b"))
+    val diag = cm.filter(col("a") === col("b"))
+      .select(col("a").as("cls"), col("n").as("n_agree"))
+    byA.join(byB, Seq("cls"), "full_outer")
+      .join(diag, Seq("cls"), "left")
+      .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
+      .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
+      .withColumn("n_agree", coalesce(col("n_agree"), lit(0L)))
+  }
+
+  /** q248/s35 shared: the per-rule expectation report from the
+    * single-row violation counts (n, v1..v5). */
+  private[graft] def qualityReport(wide: DataFrame): DataFrame =
+    wide.select(explode(expr("""array(
+        struct('r1_value_in_1c_450' AS rule, v1 AS n_violations),
+        struct('r2_type_in_domain' AS rule, v2 AS n_violations),
+        struct('r3_user_id_positive' AS rule, v3 AS n_violations),
+        struct('r4_value_not_null' AS rule, v4 AS n_violations),
+        struct('r5_purchase_floor_5' AS rule, v5 AS n_violations))""")).as("r"), col("n"))
+      .select(col("r.rule").as("rule"), col("n").as("n_checked"),
+        col("r.n_violations").as("n_violations"))
+      .withColumn("violation_ppm",
+        expr("n_violations * 1000000 div n_checked"))
+      .withColumn("status", expr(
+        """CASE WHEN n_violations = 0 THEN 'pass'
+                WHEN n_violations * 100 <= n_checked THEN 'warn'
+                ELSE 'fail' END"""))
+      .orderBy("rule")
+
   /** q255/s39 shared: the lexical-diversity seed label
     * (2·|distinct words| ≥ |words|). */
   private[graft] def classifierGoodExpr: org.apache.spark.sql.Column =
     (size(array_distinct(split(col("text"), " "))) * 2 >=
       size(split(col("text"), " "))).as("good")
+
+  /** q268/q287 shared: per-doc integer scores (doc_id, source, good,
+    * score_ppm) — the mean bucket weight of each doc's gram occurrences
+    * in the session-shared gram frame. */
+  private def classifierDocScores(s: SparkSession, dir: String): DataFrame =
+    ClassifierArtifacts.grams(s, dir)
+      .join(broadcast(ClassifierArtifacts.weights(s, dir)), "b")
+      .groupBy("doc_id", "source", "good")
+      .agg(expr("sum(w) div count(1)").as("score_ppm"))
+
+  /** q255/s39 shared: per-doc integer scores (doc_id, source, good,
+    * score_ppm) of the gram-bearing docs of `docs` (doc_id, source, text)
+    * under the bucket weights `wtMap`. Unseen buckets are impossible on
+    * the training corpus; production ships the neutral 500000 prior for
+    * them — the scorer's default slot. */
+  private[graft] def classifierScored(docs: DataFrame,
+      wtMap: Map[Long, Long]): DataFrame =
+    docs.select(col("doc_id"), col("source"), classifierGoodExpr,
+        call_function("graft_char_ngrams", col("text"), lit(3)).as("gr"))
+      .filter(size(col("gr")) > 0) // score only gram-bearing docs
+      .select(col("doc_id"), col("source"), col("good"),
+        call_function("graft_classifier_score", col("gr"),
+          typedLit(wtMap), lit(500000L)).as("wsum"),
+        size(col("gr")).cast("long").as("ng"))
+      .select(col("doc_id"), col("source"), col("good"),
+        expr("wsum div ng").as("score_ppm"))
+
+  /** q255/s39 shared: the per-source confusion report over scored docs
+    * carrying a boolean `keep` gate. */
+  private[graft] def classifierReport(kept: DataFrame): DataFrame =
+    kept.groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
+        sum(when(col("keep") && col("good"), 1L).otherwise(0L)).as("tp"),
+        sum(when(col("keep") && !col("good"), 1L).otherwise(0L)).as("fp"),
+        sum(when(!col("keep") && col("good"), 1L).otherwise(0L)).as("fn"),
+        sum(when(!col("keep") && !col("good"), 1L).otherwise(0L)).as("tn"))
+      .select(col("source"), col("n_docs"), col("n_keep"),
+        expr("n_keep * 1000000 div n_docs").as("keep_ppm"),
+        col("tp"), col("fp"), col("fn"), col("tn"),
+        expr("(tp + tn) * 1000000 div n_docs").as("agreement_ppm"))
+      .orderBy("source")
 
   /** q255/s39 shared: the gram-occurrence frame (doc_id, source, good, b)
     * — md5-hashed char-3gram buckets with the per-doc seed label. */

@@ -498,13 +498,7 @@ object Relational {
           .select(unix_micros(col("window.start")).as("ws_us"),
             col("n_events"), col("sum_value"))
           .orderBy("ws_us"),
-      Some("""
-        SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS ws_us,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY 1
-        ORDER BY ws_us""")),
+      Some(tumblingWindowOracle)),
 
     // ---------------------------------------------------------------- q20
     // Batch sessionization: 10-minute inactivity gap, pure integer µs math.
@@ -667,7 +661,11 @@ object Relational {
     // materialize-the-invariant discipline as q50's loop.
     QueryDef(
       "q88_recursive_order_chain",
-      (s, dir) => {
+      (caller, dir) => {
+        // a sibling session carries the recursion limit and the temp
+        // views below: the returned frame executes after this function
+        // returns, so neither may be set on (or leak into) the caller's
+        val s = graft.GraftSession.sibling(caller)
         val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
         val seq = Tables(s, dir, "orders")
           .select(col("o_custkey"), col("o_orderkey"),
@@ -768,11 +766,8 @@ object Relational {
     QueryDef(
       "q150_analytic_functions",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("event_type").orderBy("vc", "event_id")
-        Tables.events(s, dir)
-          .select(col("event_type"), col("event_id"),
-            expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
+        val w = EventAnalytics.byCents
+        EventAnalytics.eventCents(s, dir)
           .withColumn("pr", percent_rank().over(w))
           .withColumn("cd", cume_dist().over(w))
           .withColumn("quartile", ntile(4).over(w).cast("long"))
@@ -1843,4 +1838,13 @@ object Relational {
         CROSS JOIN j
         ORDER BY s.strategy"""))
   )
+
+  /** q19's oracle, shared verbatim by s01 and s11. */
+  private[graft] def tumblingWindowOracle: String = """
+        SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS ws_us,
+               COUNT(*) AS n_events,
+               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+        FROM events
+        GROUP BY 1
+        ORDER BY ws_us"""
 }

@@ -140,12 +140,7 @@ object ScaleTechniques {
             sum("sum_part").cast("double").as("sum_value"))
           .orderBy("event_type")
       },
-      Some("""
-        SELECT event_type, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type""")),
+      Some(saltedAggOracle)),
 
     // ---------------------------------------------------------------- q45
     // Bucketed co-located join: orders and lineitem written once as
@@ -563,8 +558,11 @@ object ScaleTechniques {
     // join carries skew=true).
     // Conf scoping: skew thresholds are tuned WAY down so the
     // demonstration triggers at fixture scale — on a SIBLING session
-    // (s.newSession()), which shares the SparkContext but owns its
-    // SQLConf, so the tuning never leaks into other queries' plans.
+    // (GraftSession.sibling), which shares the SparkContext but owns its
+    // SQLConf, so the tuning never leaks into other queries' plans. AQE
+    // is set explicitly: it is what this query demonstrates, so its
+    // PLANS.json entry is the bare adaptive leaf and ScaleSpec's
+    // skew=true assertion guards the executed plan instead.
     // Broadcast is disabled to force the SMJ (a dimension this small
     // would broadcast and dissolve the skew for free — ALSO a valid
     // production answer; the point here is the path for when the dim
@@ -572,19 +570,18 @@ object ScaleTechniques {
     QueryDef(
       "q120_aqe_skew_join",
       (s, dir) => {
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.adaptive.enabled", "true")
-        s2.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        // force past the cost check and keep split partitions visible
-        // (coalescing would re-merge them at fixture scale)
-        s2.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-        s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-        s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          "8KB")
-        s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        val s2 = graft.GraftSession.sibling(s,
+          "spark.sql.adaptive.enabled" -> "true",
+          "spark.sql.adaptive.skewJoin.enabled" -> "true",
+          // force past the cost check and keep split partitions visible
+          // (coalescing would re-merge them at fixture scale)
+          "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
         val fact = graft.Tables(s2, dir, "events")
           .select(col("event_id"), col("event_type"),
             expr("CASE WHEN event_id % 10 < 9 THEN CAST(0 AS BIGINT) " +
@@ -634,19 +631,11 @@ object ScaleTechniques {
       "q121_binned_range_join",
       (s, dir) => {
         val binW = 1000L
-        val ranges = s.range(0, 40)
-          .select(col("id").as("range_id"),
-            (col("id") * 1100 + 37).as("lo"), (col("id") * 1100 + 1537).as("hi"))
-        val binned = ranges.select(col("range_id"), col("lo"), col("hi"),
+        val binned = valueRanges(s).select(col("range_id"), col("lo"), col("hi"),
           explode(expr(s"sequence(lo div $binW, (hi - 1) div $binW)")).as("bin"))
-        val fact = Tables(s, dir, "events")
-          .select(expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
-          .withColumn("bin", expr(s"vc div $binW"))
-        fact.join(binned, "bin")
-          .filter(col("vc") >= col("lo") && col("vc") < col("hi"))
-          .groupBy("range_id")
-          .agg(count(lit(1)).as("n_in_range"), sum("vc").as("sum_cents"))
-          .orderBy("range_id")
+        val fact = eventCents(s, dir).withColumn("bin", expr(s"vc div $binW"))
+        rangeCounts(fact.join(binned, "bin")
+          .filter(col("vc") >= col("lo") && col("vc") < col("hi")))
       },
       // the oracle states the CONTAINMENT contract directly as the
       // theta join — binning must be answer-invisible
@@ -670,17 +659,10 @@ object ScaleTechniques {
         // conf-isolated sibling session (the q120 discipline): the bin
         // width, which arms the rule, stays scoped to this query even
         // though the rewrite itself is answer-invisible by construction
-        val s2 = s.newSession()
-        s2.conf.set(graft.plans.RangeJoinRule.BinWidthKey, "1000")
-        val ranges = s2.range(0, 40)
-          .select(col("id").as("range_id"),
-            (col("id") * 1100 + 37).as("lo"), (col("id") * 1100 + 1537).as("hi"))
-        val fact = Tables(s2, dir, "events")
-          .select(expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
-        fact.join(ranges, col("vc") >= col("lo") && col("vc") < col("hi"))
-          .groupBy("range_id")
-          .agg(count(lit(1)).as("n_in_range"), sum("vc").as("sum_cents"))
-          .orderBy("range_id")
+        val s2 = graft.GraftSession.sibling(s,
+          graft.plans.RangeJoinRule.BinWidthKey -> "1000")
+        rangeCounts(eventCents(s2, dir)
+          .join(valueRanges(s2), col("vc") >= col("lo") && col("vc") < col("hi")))
       },
       Some(rangeJoinOracle))
   ,
@@ -713,25 +695,7 @@ object ScaleTechniques {
             .write.mode("overwrite").parquet(out.resolve("daily").toString)
           ""
         }
-        val daily = s.read.parquet(staged.resolve("daily").toString)
-        val merged = daily.groupBy("event_type", "bin").agg(sum("cnt").as("cnt"))
-        val tot = merged.groupBy("event_type").agg(sum("cnt").as("total_n"))
-        val days = daily.groupBy("event_type")
-          .agg(countDistinct("day").as("n_days"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type").orderBy("bin")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        val cum = merged.withColumn("run", sum("cnt").over(w))
-          .join(tot, "event_type")
-        def pick(q: Int) = cum
-          .filter(col("run") * 100 >= col("total_n") * q)
-          .groupBy("event_type").agg(min("bin").as(s"b$q"))
-        tot.join(days, "event_type")
-          .join(pick(50), "event_type").join(pick(95), "event_type")
-          .select(col("event_type"), col("n_days"), col("total_n"),
-            (col("b50") * 1000).as("p50_floor_cents"),
-            (col("b95") * 1000).as("p95_floor_cents"))
-          .orderBy("event_type")
+        quantileReadoff(s.read.parquet(staged.resolve("daily").toString))
       },
       Some(quantileHistOracle))
   ,
@@ -1169,34 +1133,51 @@ object ScaleTechniques {
         // spread (r14, guide §2.5): the one-task scan otherwise
         // serializes the token explode AND the 4-row crossJoin + md5
         // sketch pass built on this cached frame
-        val tok = graft.Tables.spread(
-              Tables(s, dir, "documents").select("doc_id", "text"),
-              col("doc_id"))
-          .select(explode(split(col("text"), " ")).as("word"))
-          .filter(col("word") =!= "")
+        val tok = cmsTokens(graft.Tables.spread(
+            Tables(s, dir, "documents").select("doc_id", "text"),
+            col("doc_id")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val exact = tok.groupBy("word").agg(count(lit(1)).as("n_exact"))
-        val top = exact.orderBy(col("n_exact").desc, col("word")).limit(20)
-        val rws = s.range(0, 4).select(col("id").cast("int").as("r"))
+        val rws = cmsRows(s)
         val sketch = tok.crossJoin(rws)
-          .select(col("r"),
-            expr("cast(conv(substr(md5(concat('r', cast(r AS STRING), ':', " +
-              "word)), 1, 15), 16, 10) AS BIGINT) % 256").as("b"))
+          .select(col("r"), expr(cmsBucket).as("b"))
           .groupBy("r", "b").agg(count(lit(1)).as("c"))
-        top.crossJoin(rws)
-          .withColumn("b",
-            expr("cast(conv(substr(md5(concat('r', cast(r AS STRING), ':', " +
-              "word)), 1, 15), 16, 10) AS BIGINT) % 256"))
-          .join(sketch, Seq("r", "b"))
-          .groupBy("word")
-          .agg(max("n_exact").as("n_exact"), min("c").as("n_est"))
-          .select(col("word"), col("n_exact"), col("n_est"),
-            (col("n_est") - col("n_exact")).as("overcount"),
-            expr("(n_est - n_exact) * 1000000 div n_exact").as("over_ppm"))
-          .orderBy(col("n_exact").desc, col("word"))
+        cmsEstimates(tok, rws, sketch)
       },
       Some(countminOracle))
   )
+
+  /** q285/s46 shared: the non-empty space-split tokens (word) of
+    * `docs` (text). */
+  private[graft] def cmsTokens(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(explode(split(col("text"), " ")).as("word"))
+      .filter(col("word") =!= "")
+
+  /** q285/s46 shared: the sketch's 4 hash rows (r). */
+  private[graft] def cmsRows(s: org.apache.spark.sql.SparkSession) =
+    s.range(0, 4).select(col("id").cast("int").as("r"))
+
+  /** q285/s46 shared: a (r, word) pair's bucket in the 256-wide row. */
+  private[graft] val cmsBucket: String =
+    "cast(conv(substr(md5(concat('r', cast(r AS STRING), ':', " +
+      "word)), 1, 15), 16, 10) AS BIGINT) % 256"
+
+  /** q285/s46 shared: the point estimates (min over the 4 rows of the
+    * `sketch` (r, b, c) cells) of the 20 most frequent `tokens`, against
+    * their exact counts. */
+  private[graft] def cmsEstimates(tokens: org.apache.spark.sql.DataFrame,
+      rws: org.apache.spark.sql.DataFrame,
+      sketch: org.apache.spark.sql.DataFrame) =
+    tokens.groupBy("word").agg(count(lit(1)).as("n_exact"))
+      .orderBy(col("n_exact").desc, col("word")).limit(20)
+      .crossJoin(rws)
+      .withColumn("b", expr(cmsBucket))
+      .join(sketch, Seq("r", "b"))
+      .groupBy("word")
+      .agg(max("n_exact").as("n_exact"), min("c").as("n_est"))
+      .select(col("word"), col("n_exact"), col("n_est"),
+        (col("n_est") - col("n_exact")).as("overcount"),
+        expr("(n_est - n_exact) * 1000000 div n_exact").as("over_ppm"))
+      .orderBy(col("n_exact").desc, col("word"))
 
   /** q285's oracle, shared VERBATIM by s46 (the stream-built sketch
     * must serve identical point estimates). */
@@ -1264,6 +1245,50 @@ object ScaleTechniques {
     }.toDF("k").distinct()
   }
 
+  /** q121/q124 shared: 40 overlapping value ranges (range_id, lo, hi)
+    * in cents, 1500 wide at a 1100 stride. */
+  private def valueRanges(s: org.apache.spark.sql.SparkSession) =
+    s.range(0, 40)
+      .select(col("id").as("range_id"),
+        (col("id") * 1100 + 37).as("lo"), (col("id") * 1100 + 1537).as("hi"))
+
+  /** q121/q124 shared: every event's value in integer cents (vc). */
+  private def eventCents(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables(s, dir, "events")
+      .select(expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"))
+
+  /** q121/q124 shared: events and value sum per range over the
+    * containment-joined (range_id, vc) rows. */
+  private def rangeCounts(joined: org.apache.spark.sql.DataFrame) =
+    joined.groupBy("range_id")
+      .agg(count(lit(1)).as("n_in_range"), sum("vc").as("sum_cents"))
+      .orderBy("range_id")
+
+  /** q127/s20 shared: merge the (event_type, day, bin, cnt) daily
+    * histograms and read off each type's p50/p95 bin floors — the first
+    * bin whose running count reaches q% of the total. */
+  private[graft] def quantileReadoff(
+      daily: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val merged = daily.groupBy("event_type", "bin").agg(sum("cnt").as("cnt"))
+    val tot = merged.groupBy("event_type").agg(sum("cnt").as("total_n"))
+    val days = daily.groupBy("event_type")
+      .agg(countDistinct("day").as("n_days"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("event_type").orderBy("bin")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val cum = merged.withColumn("run", sum("cnt").over(w))
+      .join(tot, "event_type")
+    def pick(q: Int) = cum
+      .filter(col("run") * 100 >= col("total_n") * q)
+      .groupBy("event_type").agg(min("bin").as(s"b$q"))
+    tot.join(days, "event_type")
+      .join(pick(50), "event_type").join(pick(95), "event_type")
+      .select(col("event_type"), col("n_days"), col("total_n"),
+        (col("b50") * 1000).as("p50_floor_cents"),
+        (col("b95") * 1000).as("p95_floor_cents"))
+      .orderBy("event_type")
+  }
+
   /** q127's oracle, shared verbatim by s20. */
   private[graft] def quantileHistOracle: String = """
         WITH binned AS (
@@ -1311,4 +1336,12 @@ object ScaleTechniques {
         FROM f JOIN ranges ON vc >= lo AND vc < hi
         GROUP BY range_id
         ORDER BY range_id"""
+
+  /** q44's oracle, shared verbatim by q92. */
+  private[graft] def saltedAggOracle: String = """
+        SELECT event_type, COUNT(*) AS n_events,
+               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
+        FROM events
+        GROUP BY event_type
+        ORDER BY event_type"""
 }

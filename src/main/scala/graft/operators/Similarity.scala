@@ -123,6 +123,98 @@ object Similarity {
       .agg(expr("transform(array_sort(collect_list(struct(dim, m))), s -> s.m)").as("ce"))
   }
 
+  /** The trained k=8 codebook (cent_id, ce) of `corpus` (vec_id, e):
+    * seeded from vectors 0..7, refined by two Lloyd iterations over the
+    * vec_id % 10 = 0 training sample. O(k·d) — checkpointed so the
+    * (tiny) training lineage isn't re-executed by each downstream
+    * reference. */
+  private def codebook(corpus: DataFrame): DataFrame = {
+    val init = corpus.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cent_id"), col("e").as("ce"))
+    val train = corpus.filter(col("vec_id") % 10 === 0)
+    lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
+  }
+
+  /** IVF assignment (vec_id, bucket, e): nearest centroid per vector via
+    * max_by — partial (map-side) aggregation collapses the 8 scored rows
+    * per vector BEFORE the shuffle, so the index build moves each
+    * embedding once (a window over vec_id would shuffle all 8).
+    * Tie-break on lowest cent_id matches the oracle's row_number
+    * ordering. */
+  private def ivfAssign(vecs: DataFrame, cent: DataFrame): DataFrame =
+    vecs.join(broadcast(cent), lit(true))
+      .groupBy("vec_id")
+      .agg(
+        max_by(col("cent_id"),
+          struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("bucket"),
+        first(col("e")).as("e"))
+
+  /** q91/q97 shared: the persisted IVF index build under `d` — the
+    * codebook trained on `corpus` written as `centroids`, and `corpus`
+    * assigned and written as `index`, partitioned BY bucket so a probe's
+    * equi-join prunes to the probed bucket directories. Returns the
+    * codebook. */
+  private def ivfBuild(corpus: DataFrame, d: java.nio.file.Path): DataFrame = {
+    val cent = codebook(corpus)
+    cent.write.mode("overwrite").parquet(d.resolve("centroids").toString)
+    ivfAssign(corpus, cent)
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(d.resolve("index").toString)
+    cent
+  }
+
+  /** IVF top-5 serving for query vectors 0..19 of `queries` (vec_id, e):
+    * each query probes its nprobe=2 nearest centroids of `cent`, the
+    * candidates are an equi-join on bucket against `index` (vec_id,
+    * bucket, e) — the only shuffle of the corpus — and only candidates
+    * re-rank. */
+  private def ivfServe(queries: DataFrame, cent: DataFrame,
+      index: DataFrame): DataFrame = {
+    val qw = Window.partitionBy("query_id")
+      .orderBy(cosine(col("qe"), col("ce")).desc, col("cent_id"))
+    val probes = queries.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"))
+      .join(broadcast(cent), lit(true))
+      .withColumn("prnk", row_number().over(qw))
+      .filter(col("prnk") <= 2)
+      .select(col("query_id"), col("qe"), col("cent_id").as("bucket"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    probes.join(index, "bucket")
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        cosine(col("qe"), col("e")).as("sim"))
+      .distinct() // a neighbor may appear via both probed buckets
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select("query_id", "rank", "neighbor_id", "sim")
+      .orderBy("query_id", "rank")
+  }
+
+  /** q213/q214 shared: (vec_id, e, lbl) — embeddings with their label. */
+  private def labeledEmb(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "embeddings")
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"),
+        col("label").cast("long").as("lbl"))
+
+  /** q213/q214 shared: each sample query (every 40th vector: qid,
+    * true_label) with its 5 nearest other vectors (vec_id, nlbl, sim,
+    * rk) by cosine, ties to the lowest vec_id. The sample broadcasts
+    * (q28's plan — the corpus never shuffles). */
+  private def knnTop5(base: DataFrame): DataFrame = {
+    val q = base.filter(col("vec_id") % 40 === 0)
+      .select(col("vec_id").as("qid"), col("e").as("qe"),
+        col("lbl").as("true_label"))
+    val wRank = Window.partitionBy("qid")
+      .orderBy(col("sim").desc, col("vec_id"))
+    base.join(broadcast(q), col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("true_label"), col("vec_id"),
+        col("lbl").as("nlbl"), cosine(col("qe"), col("e")).as("sim"))
+      .withColumn("rk", row_number().over(wRank))
+      .filter(col("rk") <= 5)
+  }
+
   /** DuckDB rendering of the same Lloyd iteration (centroid CTE in,
     * centroid CTE out), kept adjacent so the two stay in lock-step. */
   private def duckLloyd(train: String, centIn: String, n: Int): String = s"""
@@ -191,44 +283,8 @@ object Similarity {
       "q29_ann_ivf_topk",
       (s, dir) => {
         val base = emb(s, dir)
-        val init = base.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-        val train = base.filter(col("vec_id") % 10 === 0)
-        // trained codebook: O(k·d) — checkpointed so the (tiny) training
-        // lineage isn't re-executed by each downstream reference
-        val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
-        // assignment: nearest centroid per vector via max_by — partial
-        // (map-side) aggregation collapses the 8 scored rows per vector
-        // BEFORE the shuffle, so the index build moves each embedding
-        // once (a window over vec_id would shuffle all 8). Tie-break on
-        // lowest cent_id matches the oracle's row_number ordering.
-        val assigned = base.join(broadcast(cent), lit(true))
-          .groupBy("vec_id")
-          .agg(
-            max_by(col("cent_id"),
-              struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("bucket"),
-            first(col("e")).as("e"))
-        // probing: each query's 2 nearest centroids
-        val qw = Window.partitionBy("query_id")
-          .orderBy(cosine(col("qe"), col("ce")).desc, col("cent_id"))
-        val probes = base.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("e").as("qe"))
-          .join(broadcast(cent), lit(true))
-          .withColumn("prnk", row_number().over(qw))
-          .filter(col("prnk") <= 2)
-          .select(col("query_id"), col("qe"), col("cent_id").as("bucket"))
-        // candidates: equi-join on bucket — the only shuffle of the corpus
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("neighbor_id"))
-        probes.join(assigned, "bucket")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("e")).as("sim"))
-          .distinct() // a neighbor may appear via both probed buckets
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select("query_id", "rank", "neighbor_id", "sim")
-          .orderBy("query_id", "rank")
+        val cent = codebook(base)
+        ivfServe(base, cent, ivfAssign(base, cent))
       },
       Some(ivfTopkOracle)),
 
@@ -277,11 +333,7 @@ object Similarity {
       "q64_kmeans_clusters",
       (s, dir) => {
         val base = emb(s, dir)
-        val init = base.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-        val train = base.filter(col("vec_id") % 10 === 0)
-        val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
-        base.join(broadcast(cent), lit(true))
+        base.join(broadcast(codebook(base)), lit(true))
           .groupBy("vec_id")
           .agg(max_by(col("cent_id"),
             struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("cluster_id"))
@@ -323,43 +375,11 @@ object Similarity {
       "q91_ivf_index_persist",
       (s, dir) => {
         val idx = Staging.ensure("ivf_index", dir, s"$dir/embeddings.parquet") { d =>
-          val base = emb(s, dir)
-          val init = base.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-          val train = base.filter(col("vec_id") % 10 === 0)
-          val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
-          cent.write.mode("overwrite").parquet(d.resolve("centroids").toString)
-          base.join(broadcast(cent), lit(true))
-            .groupBy("vec_id")
-            .agg(
-              max_by(col("cent_id"),
-                struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("bucket"),
-              first(col("e")).as("e"))
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(d.resolve("index").toString)
+          ivfBuild(emb(s, dir), d)
           ""
         }
-        val cent = s.read.parquet(idx.resolve("centroids").toString)
-        val index = s.read.parquet(idx.resolve("index").toString)
-        val qw = Window.partitionBy("query_id")
-          .orderBy(cosine(col("qe"), col("ce")).desc, col("cent_id"))
-        val probes = emb(s, dir).filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("e").as("qe"))
-          .join(broadcast(cent), lit(true))
-          .withColumn("prnk", row_number().over(qw))
-          .filter(col("prnk") <= 2)
-          .select(col("query_id"), col("qe"), col("cent_id").as("bucket"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("neighbor_id"))
-        probes.join(index, "bucket")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("e")).as("sim"))
-          .distinct()
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select("query_id", "rank", "neighbor_id", "sim")
-          .orderBy("query_id", "rank")
+        ivfServe(emb(s, dir), s.read.parquet(idx.resolve("centroids").toString),
+          s.read.parquet(idx.resolve("index").toString))
       },
       Some(ivfTopkOracle)),
 
@@ -381,49 +401,17 @@ object Similarity {
           val base = emb(s, dir)
           val existing = base.filter(col("vec_id") % 10 =!= 3)
           val newBatch = base.filter(col("vec_id") % 10 === 3)
-          val init = existing.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("cent_id"), col("e").as("ce"))
-          val train = existing.filter(col("vec_id") % 10 === 0)
-          val cent = lloyd(train, lloyd(train, init)).localCheckpoint(eager = true)
-          cent.write.mode("overwrite").parquet(d.resolve("centroids").toString)
-          def assign(df: DataFrame) = df.join(broadcast(cent), lit(true))
-            .groupBy("vec_id")
-            .agg(
-              max_by(col("cent_id"),
-                struct(cosine(col("e"), col("ce")), -col("cent_id"))).as("bucket"),
-              first(col("e")).as("e"))
           // the build: existing corpus assigned + written once
-          assign(existing)
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(d.resolve("index").toString)
+          val cent = ivfBuild(existing, d)
           // the maintenance tick: ONLY the batch is assigned; its rows
           // append as new files inside the existing bucket partitions
-          assign(newBatch)
+          ivfAssign(newBatch, cent)
             .write.mode("append").partitionBy("bucket")
             .parquet(d.resolve("index").toString)
           ""
         }
-        val cent = s.read.parquet(idx.resolve("centroids").toString)
-        val index = s.read.parquet(idx.resolve("index").toString)
-        val qw = Window.partitionBy("query_id")
-          .orderBy(cosine(col("qe"), col("ce")).desc, col("cent_id"))
-        val probes = emb(s, dir).filter(col("vec_id") < 20)
-          .select(col("vec_id").as("query_id"), col("e").as("qe"))
-          .join(broadcast(cent), lit(true))
-          .withColumn("prnk", row_number().over(qw))
-          .filter(col("prnk") <= 2)
-          .select(col("query_id"), col("qe"), col("cent_id").as("bucket"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("neighbor_id"))
-        probes.join(index, "bucket")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("e")).as("sim"))
-          .distinct()
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select("query_id", "rank", "neighbor_id", "sim")
-          .orderBy("query_id", "rank")
+        ivfServe(emb(s, dir), s.read.parquet(idx.resolve("centroids").toString),
+          s.read.parquet(idx.resolve("index").toString))
       },
       // the oracle assigns the FULL base against the frozen codebook in
       // one pass — exactly what build+append must be equivalent to
@@ -886,22 +874,9 @@ object Similarity {
     QueryDef(
       "q213_knn_eval",
       (s, dir) => {
-        val base = Tables(s, dir, "embeddings")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"),
-            col("label").cast("long").as("lbl"))
-        val q = base.filter(col("vec_id") % 40 === 0)
-          .select(col("vec_id").as("qid"), col("e").as("qe"),
-            col("lbl").as("true_label"))
-        val wRank = Window.partitionBy("qid")
-          .orderBy(col("sim").desc, col("vec_id"))
         val wVote = Window.partitionBy("qid")
           .orderBy(col("votes").desc, col("nlbl"))
-        base.join(broadcast(q), col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("true_label"), col("vec_id"),
-            col("lbl").as("nlbl"), cosine(col("qe"), col("e")).as("sim"))
-          .withColumn("rk", row_number().over(wRank))
-          .filter(col("rk") <= 5)
+        knnTop5(labeledEmb(s, dir))
           .groupBy("qid", "true_label", "nlbl")
           .agg(count(lit(1)).as("votes"))
           .withColumn("vr", row_number().over(wVote))
@@ -955,23 +930,10 @@ object Similarity {
     QueryDef(
       "q214_ndcg_eval",
       (s, dir) => {
-        val base = Tables(s, dir, "embeddings")
-          .select(col("vec_id"),
-            expr("transform(embedding, x -> cast(x AS DOUBLE))").as("e"),
-            col("label").cast("long").as("lbl"))
-        val q = base.filter(col("vec_id") % 40 === 0)
-          .select(col("vec_id").as("qid"), col("e").as("qe"),
-            col("lbl").as("true_label"))
+        val base = labeledEmb(s, dir)
         val lblCnt = base.groupBy(col("lbl").as("true_label"))
           .agg(count(lit(1)).as("n_members"))
-        val wRank = Window.partitionBy("qid")
-          .orderBy(col("sim").desc, col("vec_id"))
-        base.join(broadcast(q), col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("true_label"),
-            col("vec_id"), col("lbl").as("nlbl"),
-            cosine(col("qe"), col("e")).as("sim"))
-          .withColumn("rk", row_number().over(wRank))
-          .filter(col("rk") <= 5)
+        knnTop5(base)
           .withColumn("w", expr(
             """element_at(array(1000000L, 630930L, 500000L, 430677L, 386853L),
                  cast(rk AS INT))"""))

@@ -25,6 +25,31 @@ import graft.Tables
   */
 object SimilarityJoin {
 
+  /** q41/q83 shared: the prefix-filter candidate pairs (id_a < 200000 ≤
+    * id_b, distinct) of rare-first sorted shingle arrays (doc_id, st, n).
+    * SKINNY candidate stage (q42 discipline; VERDICT r9 item 3): only
+    * (doc_id, n, pt) rides the equi-join exchange — shipping the full
+    * shingle arrays through the candidate shuffle and distinct()-ing
+    * array columns was the q42-documented 15× trap; arrays rejoin by id
+    * after the dedup. Length filter (the oracles' cand CTEs have it
+    * too): Jaccard ≥ 0.6 is impossible unless 5·min(na,nb) ≥
+    * 3·max(na,nb), so such candidates never reach the verify rejoin. */
+  private[operators] def prefixCandidates(sorted: DataFrame): DataFrame = {
+    val pref = sorted
+      // prefix length |s| - ceil(0.6·|s|) + 1 = n - (3n+4) div 5 + 1
+      .withColumn("plen", col("n") - expr("(3 * n + 4) div 5") + lit(1))
+      .select(col("doc_id"), col("n"),
+        explode(expr("slice(st, 1, plen)")).as("pt"))
+    val aSide = pref.filter(col("doc_id") < 200000)
+      .select(col("doc_id").as("id_a"), col("n").as("na"), col("pt"))
+    val bSide = pref.filter(col("doc_id") >= 200000)
+      .select(col("doc_id").as("id_b"), col("n").as("nb"), col("pt"))
+    aSide.join(bSide, "pt")
+      .filter(col("nb") * 5 >= col("na") * 3 &&
+        col("na") * 5 >= col("nb") * 3)
+      .select("id_a", "id_b").distinct()
+  }
+
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- q41
@@ -66,27 +91,7 @@ object SimilarityJoin {
             .agg(expr("array_sort(collect_list(struct(f, t))).t").as("st"))
             .withColumn("n", size(col("st")))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val withPrefix = sorted
-          // prefix length |s| - ceil(0.6·|s|) + 1 = n - (3n+4) div 5 + 1
-          .withColumn("plen", col("n") - expr("(3 * n + 4) div 5") + lit(1))
-        // SKINNY candidate stage (q42 discipline; VERDICT r9 item 3):
-        // only (doc_id, n, pt) rides the equi-join exchange — shipping
-        // the full shingle arrays through the candidate shuffle and
-        // distinct()-ing array columns was the q42-documented 15× trap.
-        val pref = withPrefix.select(col("doc_id"), col("n"),
-          explode(expr("slice(st, 1, plen)")).as("pt"))
-        val aSide = pref.filter(col("doc_id") < 200000)
-          .select(col("doc_id").as("id_a"), col("n").as("na"), col("pt"))
-        val bSide = pref.filter(col("doc_id") >= 200000)
-          .select(col("doc_id").as("id_b"), col("n").as("nb"), col("pt"))
-        // length filter (oracle's cand CTE has it too): Jaccard ≥ 0.6
-        // is impossible unless 5·min(na,nb) ≥ 3·max(na,nb), so such
-        // candidates never reach the verify rejoin
-        val cand = aSide.join(bSide, "pt")
-          .filter(col("nb") * 5 >= col("na") * 3 &&
-            col("na") * 5 >= col("nb") * 3)
-          .select("id_a", "id_b").distinct()
-        cand
+        prefixCandidates(sorted)
           .join(sorted.select(col("doc_id").as("id_a"), col("st").as("sa")),
             "id_a")
           .join(sorted.select(col("doc_id").as("id_b"), col("st").as("sb")),

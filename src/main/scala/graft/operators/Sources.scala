@@ -1,7 +1,8 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,6 +22,41 @@ import graft.Tables
   * payloads.
   */
 object Sources {
+
+  /** Runs `body(server, root)` against an in-process FTP server whose
+    * storage is a fresh temp dir `root` (prefix `name`), then closes the
+    * transfer pools, stops the server and removes `root` and `cleanup`
+    * off the timed path. A frame `body` returns must be materialized and
+    * cut from its lineage (localCheckpoint) inside `body`: the query
+    * function's lifetime outlives the server, and a persist alone could
+    * be evicted and recompute against a dead endpoint. */
+  private[operators] def withFtpServer[A](name: String, cleanup: Path*)(
+      body: (graft.pipeline.testkit.FakeFtpServer, Path) => A): A = {
+    val root = Files.createTempDirectory(name)
+    val server = new graft.pipeline.testkit.FakeFtpServer(root)
+    try body(server, root)
+    finally {
+      graft.pipeline.transfer.FtpPools.closeAll()
+      server.stop()
+      StagingCleanup.async(root +: cleanup: _*)
+    }
+  }
+
+  /** q38/q47/q56/s14 shared: (doc_id, length, head4) of staged
+    * `doc_<id>.bin` files (path, length, content), by doc_id. */
+  private def docHeads(files: DataFrame): DataFrame =
+    files.select(
+        regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
+        col("length"),
+        substring(col("content"), 1, 4).cast("string").as("head4"))
+      .orderBy("doc_id")
+
+  /** The oracle of every (doc_id, length, head4) read-back. */
+  private def docHeadsOracle: String = """
+        SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
+               substr(text, 1, 4) AS head4
+        FROM documents
+        ORDER BY doc_id"""
 
   val all: Seq[QueryDef] = Seq(
 
@@ -87,20 +123,11 @@ object Sources {
           Staging.writeDocFiles(Tables(s, dir, "documents"), d.resolve("bin").toString, "bin")
           ""
         }.resolve("bin").toString
-        s.read.format("binaryFile")
+        docHeads(s.read.format("binaryFile")
           .option("pathGlobFilter", "*.bin")
-          .load(out)
-          .select(
-            regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
-            col("length"),
-            substring(col("content"), 1, 4).cast("string").as("head4"))
-          .orderBy("doc_id")
+          .load(out))
       },
-      Some("""
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
-               substr(text, 1, 4) AS head4
-        FROM documents
-        ORDER BY doc_id""")),
+      Some(docHeadsOracle)),
 
     // ---------------------------------------------------------------- q47
     // FTP as a first-class spark.read source (DataSource V2,
@@ -110,35 +137,17 @@ object Sources {
     QueryDef(
       "q47_ftp_dsv2_source",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft-q47-ftp")
-        val server = new graft.pipeline.testkit.FakeFtpServer(root)
-        try {
+        withFtpServer("graft-q47-ftp") { (server, root) =>
           Staging.writeDocFiles(Tables(s, dir, "documents"), s"$root/docs", "bin")
-          val df = s.read.format("graft-ftp")
+          docHeads(s.read.format("graft-ftp")
             .option("host", "127.0.0.1").option("port", server.port.toString)
             .option("username", "u").option("password", "p")
             .option("pool.size", "32") // localhost server: one connection per core
-            .load("/docs")
-            .select(
-              regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
-              col("length"),
-              substring(col("content"), 1, 4).cast("string").as("head4"))
-            .orderBy("doc_id")
-          // materialize AND cut the lineage before the server dies (the
-          // query function's lifetime outlives the try block; a persist
-          // alone could be evicted and recompute against a dead endpoint)
-          df.localCheckpoint(eager = true)
-        } finally {
-          graft.pipeline.transfer.FtpPools.closeAll()
-          server.stop()
-          StagingCleanup.async(root) // teardown off the timed path
+            .load("/docs"))
+            .localCheckpoint(eager = true)
         }
       },
-      Some("""
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
-               substr(text, 1, 4) AS head4
-        FROM documents
-        ORDER BY doc_id""")),
+      Some(docHeadsOracle)),
 
     // ---------------------------------------------------------------- q56
     // graft-ftp WRITE path round-trip: documents uploaded through the
@@ -149,9 +158,7 @@ object Sources {
     QueryDef(
       "q56_ftp_dsv2_write_roundtrip",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft-q56-ftp")
-        val server = new graft.pipeline.testkit.FakeFtpServer(root)
-        try {
+        withFtpServer("graft-q56-ftp") { (server, _) =>
           val opts = Map(
             "host" -> "127.0.0.1", "port" -> server.port.toString,
             "username" -> "u", "password" -> "p", "pool.size" -> "32")
@@ -163,25 +170,11 @@ object Sources {
             .repartition(32)
             .write.format("graft-ftp").options(opts)
             .mode("append").save("/docs")
-          val df = s.read.format("graft-ftp").options(opts)
-            .load("/docs")
-            .select(
-              regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
-              col("length"),
-              substring(col("content"), 1, 4).cast("string").as("head4"))
-            .orderBy("doc_id")
-          df.localCheckpoint(eager = true)
-        } finally {
-          graft.pipeline.transfer.FtpPools.closeAll()
-          server.stop()
-          StagingCleanup.async(root) // teardown off the timed path
+          docHeads(s.read.format("graft-ftp").options(opts).load("/docs"))
+            .localCheckpoint(eager = true)
         }
       },
-      Some("""
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
-               substr(text, 1, 4) AS head4
-        FROM documents
-        ORDER BY doc_id""")),
+      Some(docHeadsOracle)),
 
     // ---------------------------------------------------------------- s14
     // FTP as a Structured Streaming SOURCE (graft.sources.
@@ -195,11 +188,9 @@ object Sources {
     QueryDef(
       "s14_ftp_stream_source",
       (s, dir) => {
-        val root = Files.createTempDirectory("graft-s14-ftp")
         val out = Files.createTempDirectory("graft-s14-out").toString
         val cp = Files.createTempDirectory("graft-s14-cp").toString
-        val server = new graft.pipeline.testkit.FakeFtpServer(root)
-        try {
+        withFtpServer("graft-s14-ftp", Paths.get(out), Paths.get(cp)) { (server, root) =>
           Staging.writeDocFiles(Tables(s, dir, "documents"), s"$root/docs", "bin")
           val ftpStream = s.readStream.format("graft-ftp")
             .option("host", "127.0.0.1").option("port", server.port.toString)
@@ -218,24 +209,10 @@ object Sources {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          val df = s.read.parquet(out)
-            .select(
-              regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
-              col("length"),
-              substring(col("content"), 1, 4).cast("string").as("head4"))
-            .orderBy("doc_id")
-          df.localCheckpoint(eager = true)
-        } finally {
-          graft.pipeline.transfer.FtpPools.closeAll()
-          server.stop()
-          StagingCleanup.async(root, Paths.get(out), Paths.get(cp)) // teardown off the timed path
+          docHeads(s.read.parquet(out)).localCheckpoint(eager = true)
         }
       },
-      Some("""
-        SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
-               substr(text, 1, 4) AS head4
-        FROM documents
-        ORDER BY doc_id""")),
+      Some(docHeadsOracle)),
 
     // ---------------------------------------------------------------- q61
     // ORC scan: lineitem → ORC (Spark's built-in columnar alternative;

@@ -35,6 +35,21 @@ object Statistics {
   /** Exact value-cents column (events.value is a 2-decimal double). */
   private def cents = expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
 
+  /** q166/q171 shared: the view-vs-purchase value ECDF — per distinct
+    * value cents vc the deltas (d1 views, d2 purchases), their inclusive
+    * prefix sums (cum_d1, cum_d2) and the single-row totals (n1, n2),
+    * crossed on as a broadcast (q58/q71 discipline). */
+  private def viewPurchaseEcdf(s: SparkSession, dir: String): DataFrame = {
+    val base = Tables.events(s, dir)
+      .filter(col("event_type").isin("view", "purchase"))
+      .select(cents.as("vc"),
+        when(col("event_type") === "view", 1L).otherwise(0L).as("g1"),
+        when(col("event_type") === "purchase", 1L).otherwise(0L).as("g2"))
+    val cell = base.groupBy("vc").agg(sum("g1").as("d1"), sum("g2").as("d2"))
+    val tot = base.agg(sum("g1").as("n1"), sum("g2").as("n2"))
+    prefixSums(cell, "vc", Seq("d1", "d2")).crossJoin(broadcast(tot))
+  }
+
   /** Distributed INCLUSIVE prefix sums of `deltaCols` (Long) over
     * ascending `orderCol` — the scale-safe replacement for a
     * global-ORDER running-sum window: range-partition by the order
@@ -226,15 +241,7 @@ object Statistics {
     QueryDef(
       "q166_ks_test",
       (s, dir) => {
-        val base = Tables.events(s, dir)
-          .filter(col("event_type").isin("view", "purchase"))
-          .select(cents.as("vc"),
-            when(col("event_type") === "view", 1L).otherwise(0L).as("g1"),
-            when(col("event_type") === "purchase", 1L).otherwise(0L).as("g2"))
-        val cell = base.groupBy("vc").agg(sum("g1").as("d1"), sum("g2").as("d2"))
-        val tot = base.agg(sum("g1").as("n1"), sum("g2").as("n2"))
-        prefixSums(cell, "vc", Seq("d1", "d2"))
-          .crossJoin(broadcast(tot)) // single-row totals (q58/q71 discipline)
+        viewPurchaseEcdf(s, dir)
           .select(col("n1"), col("n2"),
             abs(col("cum_d1") * col("n2")
               - col("cum_d2") * col("n1")).as("dnum"))
@@ -364,17 +371,9 @@ object Statistics {
     QueryDef(
       "q171_mann_whitney",
       (s, dir) => {
-        val base = Tables.events(s, dir)
-          .filter(col("event_type").isin("view", "purchase"))
-          .select(cents.as("vc"),
-            when(col("event_type") === "view", 1L).otherwise(0L).as("g1"),
-            when(col("event_type") === "purchase", 1L).otherwise(0L).as("g2"))
-        val cell = base.groupBy("vc").agg(sum("g1").as("d1"), sum("g2").as("d2"))
-        val tot = base.agg(sum("g1").as("n1"), sum("g2").as("n2"))
         // exclusive below-count from the inclusive prefix sums:
         //   b = (cum_d1 − d1) + (cum_d2 − d2)
-        prefixSums(cell, "vc", Seq("d1", "d2"))
-          .crossJoin(broadcast(tot)) // single-row totals (q58/q71 discipline)
+        viewPurchaseEcdf(s, dir)
           .groupBy("n1", "n2")
           .agg(sum(expr(
             "d1 * (2 * (cum_d1 + cum_d2 - d1 - d2) + d1 + d2 + 1)"))

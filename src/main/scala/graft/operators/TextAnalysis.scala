@@ -1283,16 +1283,7 @@ object TextAnalysis {
           .groupBy("doc_id", "source")
           .agg(count(lit(1)).as("nw"), sum("ntok").as("nt"),
             sum("nchar").as("nc"))
-        perDoc.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("nw").as("n_words"),
-            sum("nt").as("n_tokens"),
-            sum("nc").as("n_chars"))
-          .select(col("source"), col("n_docs"), col("n_words"),
-            col("n_tokens"), col("n_chars"),
-            expr("n_tokens div n_docs").as("tokens_per_doc"),
-            expr("n_tokens * 1000 div n_chars").as("tokens_per_kchar"))
-          .orderBy("source")
+        tokenCostReport(perDoc)
       },
       Some(bpeOracle))
   ,
@@ -1421,17 +1412,7 @@ object TextAnalysis {
     QueryDef(
       "q265_bigram_lm_heldout",
       (s, dir) => {
-        heldoutBigramBits(s, dir)
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(when(col("c12n") === 0L, 1L).otherwise(0L))
-              .as("oov_bigrams"),
-            sum("bits").as("total_bits"))
-          .select(col("source"), col("n_bigrams"), col("oov_bigrams"),
-            col("total_bits"),
-            expr("total_bits * 1000 div n_bigrams")
-              .as("bits_per_token_milli"))
-          .orderBy("source")
+        bitsReport(heldoutBigramBits(s, dir), "bits")
       },
       Some(bigramLmOracle))
   ,
@@ -1459,39 +1440,10 @@ object TextAnalysis {
       (s, dir) => {
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val d = Tables(s, dir, "documents").select("doc_id", "text")
-        def postings(df: org.apache.spark.sql.DataFrame) = df
-          .select(col("doc_id"),
-            explode(call_function("graft_word_ngrams", col("text"), lit(3)))
-              .as("term"))
-          .distinct()
-          .groupBy("term")
-          .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
         val standing = postings(d).persist(MEMORY_AND_DISK)
-        val delta = d.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"),
-            regexp_replace(col("text"), " \\S+$", "").as("text"))
-          .unionByName(d.filter(col("doc_id") % 9 === 1)
-            .select((col("doc_id") + 600000).as("doc_id"),
-              concat(lit("novel content batch item "),
-                col("doc_id").cast("string")).as("text")))
-        val deltaIdx = postings(delta).persist(MEMORY_AND_DISK)
-        val untouched = standing
-          .join(deltaIdx.select("term"), Seq("term"), "left_anti")
-          .withColumn("was_touched", lit(false))
-        val touched = standing
-          .join(deltaIdx.select(col("term"), col("df").as("ddf"),
-            col("sum_ids").as("dsum")), Seq("term"), "right")
-          .select(col("term"),
-            (coalesce(col("df"), lit(0L)) + col("ddf")).as("df"),
-            (coalesce(col("sum_ids"), lit(0L)) + col("dsum")).as("sum_ids"))
-          .withColumn("was_touched", lit(true))
-        val merged = untouched.unionByName(touched)
-        val audit = merged.agg(
-          sum(when(col("was_touched"), 1L).otherwise(0L)).as("n_touched"),
-          sum(when(!col("was_touched"), 1L).otherwise(0L)).as("n_untouched"))
-        merged.crossJoin(broadcast(audit))
-          .orderBy(col("df").desc, col("term"))
-          .limit(20)
+        // the delta batch: q107's ingest construction
+        val deltaIdx = postings(Dedup.ingestBatch(d)).persist(MEMORY_AND_DISK)
+        mergeIndex(standing, deltaIdx)
       },
       Some(incrementalIndexOracle))
   ,
@@ -1848,19 +1800,14 @@ object TextAnalysis {
         val d = Tables(s, dir, "documents").select("doc_id", "source", "text")
           .withColumn("hb5",
             expr("cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"))
-        val tb = d.filter(col("hb5") =!= 0L)
-          .select(explode(
-            call_function("graft_word_ngrams", col("text"), lit(2)))
-            .as("gram"))
-          .groupBy("gram").agg(count(lit(1)).as("c12"))
-          .withColumn("w1", element_at(split(col("gram"), " "), 1))
+        val tb = bigramCounts(d.filter(col("hb5") =!= 0L))
           .withColumn("w2", element_at(split(col("gram"), " "), 2))
           .persist(MEMORY_AND_DISK)
         val c1 = tb.groupBy("w1")
           .agg(sum("c12").as("c1"), count(lit(1)).as("n1post"))
         val pre = tb.groupBy("w2").agg(count(lit(1)).as("n1pre"))
         val tt = tb.agg(count(lit(1)).as("t"))
-        d.filter(col("hb5") === 0L)
+        val probed = d.filter(col("hb5") === 0L)
           .select(col("source"),
             explode(call_function("graft_word_ngrams", col("text"), lit(2)))
               .as("gram"))
@@ -1880,18 +1827,8 @@ object TextAnalysis {
                       + (3 * npo * 250000 div c1n)
                         * (npr * 1000000 div t) div 1000000
                  ELSE npr * 1000000 div t END, 1L)"""))
-          .withColumn("bits",
-            expr("length(bin(1000000 div p_ppm)) - 1"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(when(col("c12n") === 0L, 1L).otherwise(0L))
-              .as("oov_bigrams"),
-            sum("bits").as("total_bits"))
-          .select(col("source"), col("n_bigrams"), col("oov_bigrams"),
-            col("total_bits"),
-            expr("total_bits * 1000 div n_bigrams")
-              .as("bits_per_token_milli"))
-          .orderBy("source")
+        bitsReport(probed.withColumn("bits",
+          expr("length(bin(1000000 div p_ppm)) - 1")), "bits")
       },
       Some("""
         WITH doc5 AS (
@@ -2914,6 +2851,20 @@ object TextAnalysis {
         expr("bp_segs * 1000000 div n_segs").as("removed_ppm"))
       .orderBy("source")
 
+  /** q254/s38 shared: the per-source token-cost report over per-doc
+    * (source, nw, nt, nc) word, token and char counts. */
+  private[graft] def tokenCostReport(perDoc: DataFrame): DataFrame =
+    perDoc.groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("nw").as("n_words"),
+        sum("nt").as("n_tokens"),
+        sum("nc").as("n_chars"))
+      .select(col("source"), col("n_docs"), col("n_words"),
+        col("n_tokens"), col("n_chars"),
+        expr("n_tokens div n_docs").as("tokens_per_doc"),
+        expr("n_tokens * 1000 div n_chars").as("tokens_per_kchar"))
+      .orderBy("source")
+
   /** q254's oracle, shared VERBATIM by s38 (the streaming twin must
     * converge to the batch token-cost report exactly). */
   private[graft] def bpeOracle: String = s"""
@@ -3109,6 +3060,46 @@ object TextAnalysis {
           FROM $prev),"""
   }.mkString
 
+  /** q267/s41 shared: the word-3-gram term index (term, df, sum_ids) of
+    * `df` (doc_id, text). */
+  private[graft] def postings(df: DataFrame): DataFrame =
+    termIndex(df
+      .select(col("doc_id"),
+        explode(call_function("graft_word_ngrams", col("text"), lit(3)))
+          .as("term"))
+      .distinct())
+
+  /** q267/s41 shared: distinct (term, doc_id) postings → (term, df,
+    * sum_ids). */
+  private[graft] def termIndex(p: DataFrame): DataFrame =
+    p.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
+
+  /** q267/s41 shared: merge a delta index of disjoint new doc ids into
+    * the standing index ADDITIVELY — untouched terms carry over by one
+    * left anti join, touched terms add their delta — and report the
+    * top-20 merged terms by df with the touched/untouched audit. */
+  private[graft] def mergeIndex(standing: DataFrame,
+      deltaIdx: DataFrame): DataFrame = {
+    val untouched = standing
+      .join(deltaIdx.select("term"), Seq("term"), "left_anti")
+      .withColumn("was_touched", lit(false))
+    val touched = standing
+      .join(deltaIdx.select(col("term"), col("df").as("ddf"),
+        col("sum_ids").as("dsum")), Seq("term"), "right")
+      .select(col("term"),
+        (coalesce(col("df"), lit(0L)) + col("ddf")).as("df"),
+        (coalesce(col("sum_ids"), lit(0L)) + col("dsum")).as("sum_ids"))
+      .withColumn("was_touched", lit(true))
+    val merged = untouched.unionByName(touched)
+    val audit = merged.agg(
+      sum(when(col("was_touched"), 1L).otherwise(0L)).as("n_touched"),
+      sum(when(!col("was_touched"), 1L).otherwise(0L)).as("n_untouched"))
+    merged.crossJoin(broadcast(audit))
+      .orderBy(col("df").desc, col("term"))
+      .limit(20)
+  }
+
   /** q267's oracle, shared VERBATIM by s41 (the streamed ticks must
     * merge into exactly the batch-maintained index). */
   private[graft] def incrementalIndexOracle: String = """
@@ -3260,18 +3251,9 @@ object TextAnalysis {
       .withColumn("hb5",
         expr("cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"))
     val train = d.filter(col("hb5") =!= 0L)
-    val tb = train
-      .select(explode(
-        call_function("graft_word_ngrams", col("text"), lit(2)))
-        .as("gram"))
-      .groupBy("gram").agg(count(lit(1)).as("c12"))
-      .withColumn("w1", element_at(split(col("gram"), " "), 1))
-      .persist(MEMORY_AND_DISK)
+    val tb = bigramCounts(train).persist(MEMORY_AND_DISK)
     val c1 = tb.groupBy("w1").agg(sum("c12").as("c1"))
-    val vocab = train
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .agg(countDistinct("w").as("v"))
+    val vocab = bigramVocab(train)
     d.filter(col("hb5") === 0L)
       .select(col("doc_id"), col("source"),
         explode(call_function("graft_word_ngrams", col("text"), lit(2)))
@@ -3285,6 +3267,38 @@ object TextAnalysis {
       .withColumn("bits",
         expr("length(bin((c1n + v) div (c12n + 1))) - 1"))
   }
+
+  /** q265/q306/s40 shared: the bigram count table (gram, c12, w1) of
+    * the training docs `train` (text). */
+  private[graft] def bigramCounts(train: DataFrame): DataFrame =
+    train
+      .select(explode(
+        call_function("graft_word_ngrams", col("text"), lit(2)))
+        .as("gram"))
+      .groupBy("gram").agg(count(lit(1)).as("c12"))
+      .withColumn("w1", element_at(split(col("gram"), " "), 1))
+
+  /** q265/s40 shared: the training split's vocabulary size (single row,
+    * column v). */
+  private[graft] def bigramVocab(train: DataFrame): DataFrame =
+    train
+      .select(explode(split(col("text"), " ")).as("w"))
+      .filter(length(col("w")) > 0)
+      .agg(countDistinct("w").as("v"))
+
+  /** q265/q306/s40 shared: the per-source bits/token report over scored
+    * held-out bigram occurrences (source, c12n, `bits`). */
+  private[graft] def bitsReport(probed: DataFrame, bits: String): DataFrame =
+    probed.groupBy("source")
+      .agg(count(lit(1)).as("n_bigrams"),
+        sum(when(col("c12n") === 0L, 1L).otherwise(0L))
+          .as("oov_bigrams"),
+        sum(bits).as("total_bits"))
+      .select(col("source"), col("n_bigrams"), col("oov_bigrams"),
+        col("total_bits"),
+        expr("total_bits * 1000 div n_bigrams")
+          .as("bits_per_token_milli"))
+      .orderBy("source")
 
   /** The DuckDB CTE chain matching [[heldoutBigramBits]] (ends with an
     * `sc(doc_id, source, c12n, bits)` relation), shared by the q265 and

@@ -674,24 +674,8 @@ object TrainingDataOps {
               expr("array_sort(collect_list(struct(f, t))).t").as("st"))
             .withColumn("n", size(col("st")))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // skinny candidate stage: only (doc_id, n, pt) rides the
-        // candidate exchange; the length filter (also in the oracle's
-        // cand CTE) kills pairs that cannot reach Jaccard ≥ 0.6, and
-        // distinct() runs on bare (id_a, id_b) — arrays and split labels
-        // rejoin by id after dedup
-        val pref = sorted
-          .withColumn("plen", col("n") - expr("(3 * n + 4) div 5") + lit(1))
-          .select(col("doc_id"), col("n"),
-            explode(expr("slice(st, 1, plen)")).as("pt"))
-        val aSide = pref.filter(col("doc_id") < 200000)
-          .select(col("doc_id").as("id_a"), col("n").as("na"), col("pt"))
-        val bSide = pref.filter(col("doc_id") >= 200000)
-          .select(col("doc_id").as("id_b"), col("n").as("nb"), col("pt"))
-        val cand = aSide.join(bSide, "pt")
-          .filter(col("nb") * 5 >= col("na") * 3 &&
-            col("na") * 5 >= col("nb") * 3)
-          .select("id_a", "id_b").distinct()
-        cand
+        // split labels rejoin by id after the candidate dedup
+        SimilarityJoin.prefixCandidates(sorted)
           .join(sorted.select(col("doc_id").as("id_a"),
             col("split").as("split_a"), col("st").as("sa")), "id_a")
           .join(sorted.select(col("doc_id").as("id_b"),
@@ -1939,22 +1923,7 @@ object TrainingDataOps {
     QueryDef(
       "q266_preference_pairs",
       (s, dir) => {
-        val ranked = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            expr("""size(array_distinct(split(text, ' '))) * 1000000
-                    div size(split(text, ' '))""").as("ttr_ppm"))
-          .withColumn("r", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("source")
-              .orderBy(col("ttr_ppm").desc, col("doc_id"))).cast("long"))
-          .withColumn("n", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("source")))
-        ranked.filter(col("r") * 2 <= col("n"))
-          .select(col("source"), col("r").as("k"),
-            col("doc_id").as("chosen_id"), col("ttr_ppm").as("chosen_ppm"))
-          .join(ranked.select(col("source"),
-            (col("n") - col("r") + 1L).as("k"),
-            col("doc_id").as("rejected_id"),
-            col("ttr_ppm").as("rejected_ppm")), Seq("source", "k"))
+        preferencePairs(s, dir)
           .withColumn("margin_ppm", col("chosen_ppm") - col("rejected_ppm"))
           .filter(col("margin_ppm") > 0L)
           .select("source", "k", "chosen_id", "rejected_id", "margin_ppm")
@@ -2041,21 +2010,7 @@ object TrainingDataOps {
         val rm = grams.join(broadcast(wt), "b")
           .groupBy("doc_id")
           .agg(expr("sum(w) div count(1)").as("rm_ppm"))
-        val ranked = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            expr("""size(array_distinct(split(text, ' '))) * 1000000
-                    div size(split(text, ' '))""").as("ttr_ppm"))
-          .withColumn("r", row_number().over(
-            Window.partitionBy("source")
-              .orderBy(col("ttr_ppm").desc, col("doc_id"))).cast("long"))
-          .withColumn("n", count(lit(1)).over(Window.partitionBy("source")))
-        val pairs = ranked.filter(col("r") * 2 <= col("n"))
-          .select(col("source"), col("r").as("k"),
-            col("doc_id").as("chosen_id"), col("ttr_ppm").as("chosen_ppm"))
-          .join(ranked.select(col("source"),
-            (col("n") - col("r") + 1L).as("k"),
-            col("doc_id").as("rejected_id"),
-            col("ttr_ppm").as("rejected_ppm")), Seq("source", "k"))
+        val pairs = preferencePairs(s, dir)
           .filter(col("chosen_ppm") - col("rejected_ppm") > 0L)
         pairs
           .join(rm.select(col("doc_id").as("chosen_id"),
@@ -2146,31 +2101,13 @@ object TrainingDataOps {
       "q277_contamination_severity",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        val bg = docs.filter(col("doc_id") % 13 === 0)
-          .select(concat_ws(" ",
-            slice(split(col("text"), " "), 6, 20)).as("text"))
-          .select(explode(
-            call_function("graft_word_ngrams", col("text"), lit(5)))
-            .as("g"))
-          .distinct()
+        val bg = severityBenchGrams(docs.filter(col("doc_id") % 13 === 0))
         val dgrams = docs
           .select(col("doc_id"),
             explode(array_distinct(
               call_function("graft_word_ngrams", col("text"), lit(5))))
               .as("g"))
-        val hits = dgrams.join(bg, Seq("g"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-        docs.select("doc_id", "source")
-          .join(hits, Seq("doc_id"), "left")
-          .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-          .withColumn("tier",
-            when(col("n_hit") === 0L, "t0_none")
-              .when(col("n_hit") <= 2L, "t1_low")
-              .when(col("n_hit") <= 9L, "t2_med")
-              .otherwise("t3_high"))
-          .groupBy("source", "tier")
-          .agg(count(lit(1)).as("n_docs"), sum("n_hit").as("hits_total"))
-          .orderBy("source", "tier")
+        severityReport(docs, dgrams.join(bg, Seq("g"), "left_semi"))
       },
       Some(contaminationSeverityOracle))
   ,
@@ -5462,6 +5399,57 @@ object TrainingDataOps {
                    AS excess_mb
           FROM agg)"""
 
+  /** q266/q273 shared: extreme-paired docs per source by type-token
+    * ratio — the k-th best (chosen_id, chosen_ppm) against the k-th
+    * worst (rejected_id, rejected_ppm) — by one keyed row_number and an
+    * equi-join on (source, k); callers drop the zero-margin pairs. */
+  private def preferencePairs(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val ranked = Tables(s, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        expr("""size(array_distinct(split(text, ' '))) * 1000000
+                div size(split(text, ' '))""").as("ttr_ppm"))
+      .withColumn("r", row_number().over(
+        Window.partitionBy("source")
+          .orderBy(col("ttr_ppm").desc, col("doc_id"))).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("source")))
+    ranked.filter(col("r") * 2 <= col("n"))
+      .select(col("source"), col("r").as("k"),
+        col("doc_id").as("chosen_id"), col("ttr_ppm").as("chosen_ppm"))
+      .join(ranked.select(col("source"),
+        (col("n") - col("r") + 1L).as("k"),
+        col("doc_id").as("rejected_id"),
+        col("ttr_ppm").as("rejected_ppm")), Seq("source", "k"))
+  }
+
+  /** q277/s44 shared: the derived benchmark's distinct 5-gram set —
+    * words 6..20 of each benchmark doc in `bench`. */
+  private[graft] def severityBenchGrams(bench: DataFrame): DataFrame =
+    bench.select(concat_ws(" ",
+        slice(split(col("text"), " "), 6, 20)).as("text"))
+      .select(explode(
+        call_function("graft_word_ngrams", col("text"), lit(5)))
+        .as("g"))
+      .distinct()
+
+  /** q277/s44 shared: count the benchmark-gram `hits` (one doc_id row
+    * per hit) per doc of `docs`, tier every doc (zero-hit docs too) and
+    * roll up per (source, tier). */
+  private[graft] def severityReport(docs: DataFrame,
+      hits: DataFrame): DataFrame =
+    docs.select("doc_id", "source")
+      .join(hits.groupBy("doc_id").agg(count(lit(1)).as("n_hit")),
+        Seq("doc_id"), "left")
+      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      .withColumn("tier",
+        when(col("n_hit") === 0L, "t0_none")
+          .when(col("n_hit") <= 2L, "t1_low")
+          .when(col("n_hit") <= 9L, "t2_med")
+          .otherwise("t3_high"))
+      .groupBy("source", "tier")
+      .agg(count(lit(1)).as("n_docs"), sum("n_hit").as("hits_total"))
+      .orderBy("source", "tier")
+
   /** q277's severity-tier oracle, shared VERBATIM by s44 (the streamed
     * per-doc hit counts must tier and roll up to the batch report). */
   private[graft] def contaminationSeverityOracle: String = """
@@ -5503,17 +5491,10 @@ object TrainingDataOps {
     * whitespace words, q276 in q254's learned BPE tokens; the packing
     * algebra (truncate to L, power-of-two bucket, keyed row_number,
     * per-source waste rollup) is identical. */
-  private[graft] def packReport(
-      measured: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val L = 512L
-    val d = measured.filter(col("nt") > 0L)
-      .withColumn("kept", least(col("nt"), lit(L)))
-      .withColumn("ntr", col("nt") - col("kept"))
-      .withColumn("bucket", expr(
-        "CASE WHEN kept = 1 THEN 1L " +
-          "ELSE shiftleft(1L, length(bin(kept - 1))) END"))
+  private[graft] def packReport(measured: DataFrame): DataFrame = {
+    val d = packBuckets(measured, "nt")
     val seqs = d
-      .withColumn("cap", expr(s"$L div bucket"))
+      .withColumn("cap", expr(s"$PackLen div bucket"))
       .withColumn("rn", row_number().over(
           Window.partitionBy("source", "bucket").orderBy("doc_id"))
         .cast("long"))
@@ -5526,14 +5507,32 @@ object TrainingDataOps {
     val perSrcSeqs = seqs.groupBy("source", "bucket", "seq")
       .agg(count(lit(1)).as("nd"))
       .groupBy("source").agg(count(lit(1)).as("n_seqs"))
-    perSrcDocs.join(perSrcSeqs, "source")
+    packCosts(perSrcDocs.join(perSrcSeqs, "source"))
+  }
+
+  /** q272/q276/s42 shared: the packed sequence length L. */
+  private[graft] val PackLen = 512L
+
+  /** q272/q276/s42 shared: each doc with tokens in column `n`, truncated
+    * to [[PackLen]] (kept, ntr) and assigned its power-of-two bucket. */
+  private[graft] def packBuckets(measured: DataFrame, n: String): DataFrame =
+    measured.filter(col(n) > 0L)
+      .withColumn("kept", least(col(n), lit(PackLen)))
+      .withColumn("ntr", col(n) - col("kept"))
+      .withColumn("bucket", expr(
+        "CASE WHEN kept = 1 THEN 1L " +
+          "ELSE shiftleft(1L, length(bin(kept - 1))) END"))
+
+  /** q272/q276/s42 shared: the per-source waste report from (source,
+    * n_docs, n_seqs, tokens_total, tokens_kept, tokens_trunc). */
+  private[graft] def packCosts(perSrc: DataFrame): DataFrame =
+    perSrc
       .select(col("source"), col("n_docs"), col("n_seqs"),
         col("tokens_total"), col("tokens_kept"), col("tokens_trunc"),
-        (col("n_seqs") * L - col("tokens_kept")).as("tokens_pad"),
-        expr(s"tokens_kept * 1000000 div (n_seqs * $L)").as("util_ppm"),
+        (col("n_seqs") * PackLen - col("tokens_kept")).as("tokens_pad"),
+        expr(s"tokens_kept * 1000000 div (n_seqs * $PackLen)").as("util_ppm"),
         expr("tokens_trunc * 1000000 div tokens_total").as("trunc_ppm"))
       .orderBy("source")
-  }
 
   /** q272's per-source packing-cost report oracle, shared VERBATIM by
     * the streaming twin (s42): the bucketed first-fit report is

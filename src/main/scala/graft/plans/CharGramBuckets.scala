@@ -66,13 +66,7 @@ object CharGramBucketBuilder {
     val bytes = s.getBytes
     val len = bytes.length
     val starts = new Array[Int](len + 1)
-    var nChars = 0
-    var p = 0
-    while (p < len) {
-      if ((bytes(p) & 0xC0) != 0x80) { starts(nChars) = p; nChars += 1 }
-      p += 1
-    }
-    starts(nChars) = len
+    val nChars = CharNgramBuilder.charStarts(bytes, starts)
     val count = nChars - n + 1
     if (count <= 0) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
     val ctx = ctxLocal.get()

@@ -18,10 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * multi-byte characters are never split. Parity: DuckDB's char-indexed
   * `substring(w, i, n)` walks the same codepoint boundaries. */
 object CharNgramBuilder {
-  def build(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.getBytes
+  /** Fills `starts` (length > bytes.length) with the UTF-8 character
+    * start offsets of `bytes`, then `bytes.length` after the last one,
+    * and returns the character count. The caller owns `starts`, so a
+    * per-row scan allocates nothing here. */
+  def charStarts(bytes: Array[Byte], starts: Array[Int]): Int = {
     val len = bytes.length
-    val starts = new Array[Int](len + 1)
     var nChars = 0
     var p = 0
     while (p < len) {
@@ -29,6 +31,14 @@ object CharNgramBuilder {
       p += 1
     }
     starts(nChars) = len
+    nChars
+  }
+
+  def build(s: UTF8String, n: Int): ArrayData = {
+    val bytes = s.getBytes
+    val len = bytes.length
+    val starts = new Array[Int](len + 1)
+    val nChars = charStarts(bytes, starts)
     val count = nChars - n + 1
     if (count <= 0) return new GenericArrayData(new Array[Any](0))
     val out = new Array[Any](count)

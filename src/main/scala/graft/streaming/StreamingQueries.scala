@@ -812,6 +812,76 @@ object StreamingQueries {
     else s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
+  /** s01/s11 shared: q19's hourly tumbling-window counts and exact sums
+    * over an event stream, drained in Complete mode. */
+  private def hourlyWindows(s: SparkSession, events: DataFrame): DataFrame = {
+    val agg = events
+      .withWatermark("ts_t", "1 hour")
+      .groupBy(window(col("ts_t"), "1 hour"))
+      .agg(count(lit(1)).as("n_events"), Exact.dsum(col("value")).as("sum_value"))
+    drain(s, OutputMode.Complete())(agg)
+      .select(unix_micros(col("window.start")).as("ws_us"),
+        col("n_events"), col("sum_value"))
+      .orderBy("ws_us")
+  }
+
+  /** s02/s12 shared: q20's 10-minute-gap sessions of an event stream
+    * under a 0-second watermark ([[sessionize]]), drained in order. */
+  private def streamSessions(s: SparkSession, events: DataFrame): DataFrame = {
+    import s.implicits._
+    val evs = events
+      .withWatermark("ts_t", "0 seconds")
+      .select(col("user_id"), col("event_id"), col("ts_us"), col("ts_t")).as[Ev]
+    drain(s, OutputMode.Append())(sessionize(evs).toDF())
+      .orderBy("user_id", "session_id")
+  }
+
+  /** s18/s21 shared: the time-ranged event parts under a 0-second
+    * watermark, typed for the per-user string walkers. */
+  private def transEvents(s: SparkSession, dir: String): Dataset[TransEv] = {
+    import s.implicits._
+    eventsStreamTimeParts(s, dir)
+      .withWatermark("ts_t", "0 seconds")
+      .select(col("user_id"), col("event_id"), col("ts_us"),
+        col("event_type"), col("ts_t"))
+      .as[TransEv]
+  }
+
+  /** s04/s08/s31 shared: the watermarked stream-stream interval join of
+    * `purchases` with the same user's `views` in the hour before, under
+    * `joinType`, drained as (purchase_id, view_id, p_us, v_us). */
+  private def viewPurchaseJoin(s: SparkSession, views: DataFrame,
+      purchases: DataFrame, joinType: String): DataFrame = {
+    val v = views
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
+        col("ts_us").as("v_us"), col("ts_t").as("v_t"))
+      .withWatermark("v_t", "10 minutes")
+    val p = purchases
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("ts_us").as("p_us"), col("ts_t").as("p_t"))
+      .withWatermark("p_t", "10 minutes")
+    val joined = p.join(v,
+      col("p_user") === col("v_user")
+        && col("v_t") <= col("p_t")
+        && col("v_t") >= col("p_t") - expr("INTERVAL 1 HOUR"),
+      joinType)
+    drain(s, OutputMode.Append())(
+      joined.select("purchase_id", "view_id", "p_us", "v_us"))
+  }
+
+  /** s27/s28 shared: an event stream typed as per-user spend in cents. */
+  private def spendEvents(s: SparkSession, events: DataFrame): Dataset[SpendEv] = {
+    import s.implicits._
+    events.select(col("user_id"), col("ts_us"),
+      expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)").as("vc"),
+      col("ts_t")).as[SpendEv]
+  }
+
+  /** s27/s28/s29 shared: drain a per-user processor's output in user
+    * order. */
+  private def drainByUser(s: SparkSession, out: Dataset[_]): DataFrame =
+    drain(s, OutputMode.Append())(out.toDF()).orderBy("user_id")
+
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------- s01
@@ -822,22 +892,9 @@ object StreamingQueries {
     QueryDef(
       "s01_stream_tumbling_window",
       (s, dir) => {
-        val agg = eventsStream(s, dir)
-          .withWatermark("ts_t", "1 hour")
-          .groupBy(window(col("ts_t"), "1 hour"))
-          .agg(count(lit(1)).as("n_events"), Exact.dsum(col("value")).as("sum_value"))
-        drain(s, OutputMode.Complete())(agg)
-          .select(unix_micros(col("window.start")).as("ws_us"),
-            col("n_events"), col("sum_value"))
-          .orderBy("ws_us")
+        hourlyWindows(s, eventsStream(s, dir))
       },
-      Some("""
-        SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS ws_us,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY 1
-        ORDER BY ws_us""")),
+      Some(graft.operators.Relational.tumblingWindowOracle)),
 
     // ---------------------------------------------------------------- s02
     // Streaming sessionization via flatMapGroupsWithState — the custom
@@ -852,12 +909,7 @@ object StreamingQueries {
     QueryDef(
       "s02_stream_sessionization",
       (s, dir) => {
-        import s.implicits._
-        val evs = eventsStream(s, dir, flushSentinel = true)
-          .withWatermark("ts_t", "0 seconds")
-          .select(col("user_id"), col("event_id"), col("ts_us"), col("ts_t")).as[Ev]
-        drain(s, OutputMode.Append())(sessionize(evs).toDF())
-          .orderBy("user_id", "session_id")
+        streamSessions(s, eventsStream(s, dir, flushSentinel = true))
       },
       Some(graft.operators.Cdc.sessionsOracle)),
 
@@ -898,20 +950,8 @@ object StreamingQueries {
       "s04_stream_stream_join",
       (s, dir) => {
         val base = eventsStream(s, dir)
-        val views = base.filter(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-            col("ts_us").as("v_us"), col("ts_t").as("v_t"))
-          .withWatermark("v_t", "10 minutes")
-        val purchases = base.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-            col("ts_us").as("p_us"), col("ts_t").as("p_t"))
-          .withWatermark("p_t", "10 minutes")
-        val joined = purchases.join(views,
-          col("p_user") === col("v_user")
-            && col("v_t") <= col("p_t")
-            && col("v_t") >= col("p_t") - expr("INTERVAL 1 HOUR"))
-        drain(s, OutputMode.Append())(
-          joined.select("purchase_id", "view_id", "p_us", "v_us"))
+        viewPurchaseJoin(s, base.filter(col("event_type") === "view"),
+            base.filter(col("event_type") === "purchase"), "inner")
           .orderBy("purchase_id", "view_id")
       },
       Some("""
@@ -1088,23 +1128,10 @@ object StreamingQueries {
       "s08_stream_left_outer_join",
       (s, dir) => {
         val base = eventsStream(s, dir, flushSentinel = true)
-        val views = base
-          .filter(col("event_type") === "view" || col("user_id") < 0)
-          .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-            col("ts_us").as("v_us"), col("ts_t").as("v_t"))
-          .withWatermark("v_t", "10 minutes")
-        val purchases = base
-          .filter(col("event_type") === "purchase" || col("user_id") < 0)
-          .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-            col("ts_us").as("p_us"), col("ts_t").as("p_t"))
-          .withWatermark("p_t", "10 minutes")
-        val joined = purchases.join(views,
-          col("p_user") === col("v_user")
-            && col("v_t") <= col("p_t")
-            && col("v_t") >= col("p_t") - expr("INTERVAL 1 HOUR"),
-          "left_outer")
-        drain(s, OutputMode.Append())(
-          joined.select("purchase_id", "view_id", "p_us", "v_us"))
+        viewPurchaseJoin(s,
+            base.filter(col("event_type") === "view" || col("user_id") < 0),
+            base.filter(col("event_type") === "purchase" || col("user_id") < 0),
+            "left_outer")
           .filter(col("purchase_id") >= 0) // sentinel rows, batch-side
           .orderBy(col("purchase_id"), col("view_id").asc_nulls_first)
       },
@@ -1282,22 +1309,9 @@ object StreamingQueries {
     QueryDef(
       "s11_stream_multibatch_window",
       (s, dir) => {
-        val agg = eventsStreamParts(s, dir)
-          .withWatermark("ts_t", "1 hour")
-          .groupBy(window(col("ts_t"), "1 hour"))
-          .agg(count(lit(1)).as("n_events"), Exact.dsum(col("value")).as("sum_value"))
-        drain(s, OutputMode.Complete())(agg)
-          .select(unix_micros(col("window.start")).as("ws_us"),
-            col("n_events"), col("sum_value"))
-          .orderBy("ws_us")
+        hourlyWindows(s, eventsStreamParts(s, dir))
       },
-      Some("""
-        SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS ws_us,
-               COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY 1
-        ORDER BY ws_us""")),
+      Some(graft.operators.Relational.tumblingWindowOracle)),
 
     // ---------------------------------------------------------------- s12
     // Multi-micro-batch sessionization — the strongest state-lifecycle
@@ -1312,12 +1326,7 @@ object StreamingQueries {
     QueryDef(
       "s12_stream_multibatch_sessions",
       (s, dir) => {
-        import s.implicits._
-        val evs = eventsStreamTimeParts(s, dir)
-          .withWatermark("ts_t", "0 seconds")
-          .select(col("user_id"), col("event_id"), col("ts_us"), col("ts_t")).as[Ev]
-        drain(s, OutputMode.Append())(sessionize(evs).toDF())
-          .orderBy("user_id", "session_id")
+        streamSessions(s, eventsStreamTimeParts(s, dir))
       },
       Some(graft.operators.Cdc.sessionsOracle)),
 
@@ -1490,13 +1499,8 @@ object StreamingQueries {
     QueryDef(
       "s18_stream_transitions",
       (s, dir) => {
-        import s.implicits._
-        val evs = eventsStreamTimeParts(s, dir)
-          .withWatermark("ts_t", "0 seconds")
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("event_type"), col("ts_t"))
-          .as[TransEv]
-        val pairs = drain(s, OutputMode.Append())(transitions(evs).toDF())
+        val pairs = drain(s, OutputMode.Append())(
+          transitions(transEvents(s, dir)).toDF())
         val counted = pairs.groupBy("from_type", "to_type")
           .agg(count(lit(1)).as("n"))
         counted
@@ -1529,25 +1533,10 @@ object StreamingQueries {
             col("ts_t"))
           .dropDuplicatesWithinWatermark("user_id", "day")
           .as[DayEv]
-        drain(s, OutputMode.Append())(cohorts(evs).toDF())
-          .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("offset_days"))
-          .agg(countDistinct("user_id").as("n_users"))
-          .orderBy("cohort_day", "offset_days")
+        graft.operators.EventAnalytics.retentionReport(
+          drain(s, OutputMode.Append())(cohorts(evs).toDF()))
       },
-      Some(s"""
-        WITH ev AS (
-          SELECT user_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-          FROM events),
-        cohort AS (SELECT user_id, MIN(day) AS cohort_day
-                   FROM ev GROUP BY user_id),
-        activity AS (SELECT DISTINCT user_id, day FROM ev)
-        SELECT c.cohort_day,
-               a.day - c.cohort_day AS offset_days,
-               COUNT(DISTINCT a.user_id) AS n_users
-        FROM activity a JOIN cohort c ON a.user_id = c.user_id
-        GROUP BY c.cohort_day, offset_days
-        ORDER BY cohort_day, offset_days"""))
+      Some(graft.operators.EventAnalytics.retentionOracle))
   ,
 
     // ---------------------------------------------------------------- s20
@@ -1557,9 +1546,10 @@ object StreamingQueries {
     // emitting (and its state evicting) as the watermark passes the day
     // boundary. State is O(open-day × types × bins) — kilobytes — and
     // the drained sketches feed q127's exact merge + percentile
-    // read-off, so the streamed build must reproduce the batch rollup
-    // bit-for-bit (same oracle). Windows align with q127's epoch-day
-    // indexes because the session pins UTC.
+    // read-off (ScaleTechniques.quantileReadoff), so the streamed
+    // build must reproduce the batch rollup bit-for-bit (same oracle).
+    // Windows align with q127's epoch-day indexes because the session
+    // pins UTC.
     QueryDef(
       "s20_stream_quantile_hist",
       (s, dir) => {
@@ -1571,26 +1561,8 @@ object StreamingQueries {
           .agg(count(lit(1)).as("cnt"))
           .select(expr("unix_micros(window.start) div 86400000000").as("day"),
             col("event_type"), col("bin"), col("cnt"))
-        val drained = drain(s, OutputMode.Append())(daily)
-        val merged = drained.groupBy("event_type", "bin")
-          .agg(sum("cnt").as("cnt"))
-        val tot = merged.groupBy("event_type").agg(sum("cnt").as("total_n"))
-        val days = drained.groupBy("event_type")
-          .agg(countDistinct("day").as("n_days"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type").orderBy("bin")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        val cum = merged.withColumn("run", sum("cnt").over(w))
-          .join(tot, "event_type")
-        def pick(q: Int) = cum
-          .filter(col("run") * 100 >= col("total_n") * q)
-          .groupBy("event_type").agg(min("bin").as(s"b$q"))
-        tot.join(days, "event_type")
-          .join(pick(50), "event_type").join(pick(95), "event_type")
-          .select(col("event_type"), col("n_days"), col("total_n"),
-            (col("b50") * 1000).as("p50_floor_cents"),
-            (col("b95") * 1000).as("p95_floor_cents"))
-          .orderBy("event_type")
+        graft.operators.ScaleTechniques.quantileReadoff(
+          drain(s, OutputMode.Append())(daily))
       },
       Some(graft.operators.ScaleTechniques.quantileHistOracle))
   ,
@@ -1607,13 +1579,7 @@ object StreamingQueries {
     QueryDef(
       "s21_stream_cep",
       (s, dir) => {
-        import s.implicits._
-        val evs = eventsStreamTimeParts(s, dir)
-          .withWatermark("ts_t", "0 seconds")
-          .select(col("user_id"), col("event_id"), col("ts_us"),
-            col("event_type"), col("ts_t"))
-          .as[TransEv]
-        drain(s, OutputMode.Append())(cep(evs).toDF())
+        drain(s, OutputMode.Append())(cep(transEvents(s, dir)).toDF())
           .groupBy("pattern")
           .agg(count(lit(1)).as("n_users"),
             sum("user_id").as("user_id_sum"))
@@ -1720,7 +1686,7 @@ object StreamingQueries {
     // state; every arriving event closes the previous reading's holding
     // interval the moment it lands (no lead(), no lookahead — the
     // streaming formulation of interval weighting). The drained
-    // (type, cents, Δt) rows roll up with q146's exact decimal algebra,
+    // (type, cents, Δt) rows roll up through q146's EventAnalytics.twapReport,
     // so the final table must hash-match q146's oracle bit for bit —
     // the open last interval per type is dropped by BOTH formulations.
     // State is 2 longs × |event types|, watermark-independent (the
@@ -1737,14 +1703,8 @@ object StreamingQueries {
             expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
               .as("vc"))
           .as[TwapEv]
-        drain(s, OutputMode.Append())(twapIntervals(evs).toDF())
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_intervals"),
-            sum(expr("cast(vc AS DECIMAL(38,0)) * dt")).as("swv"),
-            sum(expr("cast(dt AS DECIMAL(38,0))")).as("sw"))
-          .select(col("event_type"), col("n_intervals"),
-            expr("cast(swv div sw AS BIGINT)").as("twap_cents"))
-          .orderBy("event_type")
+        graft.operators.EventAnalytics.twapReport(
+          drain(s, OutputMode.Append())(twapIntervals(evs).toDF()))
       },
       // q146's oracle verbatim: the stream/batch twins share the contract
       Some(graft.operators.EventAnalytics.twapOracle))
@@ -1866,27 +1826,7 @@ object StreamingQueries {
           .orderBy("user_id")
       },
       // q151's oracle verbatim: the stream/batch twins share the contract
-      Some("""
-        WITH d AS (
-          SELECT DISTINCT user_id,
-                 epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
-          FROM events),
-        i AS (
-          SELECT user_id, day,
-                 day - row_number() OVER (PARTITION BY user_id
-                                          ORDER BY day) AS anchor
-          FROM d),
-        runs AS (
-          SELECT user_id, anchor, CAST(COUNT(*) AS BIGINT) AS len,
-                 MIN(day) AS start_day
-          FROM i GROUP BY user_id, anchor)
-        SELECT user_id,
-               CAST(MAX(len) AS BIGINT) AS longest_streak,
-               CAST(COUNT(*) AS BIGINT) AS n_streaks,
-               CAST(MIN(start_day) AS BIGINT) AS first_day
-        FROM runs GROUP BY user_id
-        HAVING MAX(len) >= 3
-        ORDER BY user_id""")),
+      Some(graft.operators.EventAnalytics.streakOracle)),
 
     // ---------------------------------------------------------------- s26
     // Streaming distribution-drift monitor — the live twin of q167's
@@ -1975,12 +1915,8 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         onRocksDb(s) {
-          val evs = eventsStreamTimeParts(s, dir)
-            .withWatermark("ts_t", "0 seconds")
-            .select(col("user_id"), col("ts_us"),
-              expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-                .as("vc"),
-              col("ts_t")).as[SpendEv]
+          val evs = spendEvents(s,
+            eventsStreamTimeParts(s, dir).withWatermark("ts_t", "0 seconds"))
           // the sentinel row flows INTO the processor (a pre-filter would
           // be pushed below the watermark node and starve it — see the
           // drain contract above); the processor drops key < 0 itself
@@ -1988,8 +1924,7 @@ object StreamingQueries {
             .transformWithState(new SpendProcessor,
               org.apache.spark.sql.streaming.TimeMode.EventTime(),
               OutputMode.Append())
-          drain(s, OutputMode.Append())(out.toDF())
-            .orderBy("user_id")
+          drainByUser(s, out)
         }
       },
       Some(spendRollupOracle)),
@@ -2023,21 +1958,16 @@ object StreamingQueries {
             .as[(Long, Long, Long, Long)]
             .map { case (u, n, c, l) => (u, SpendAgg(n, c, l, -1L)) }
             .groupByKey(_._1).mapValues(_._2)
-          val evs = eventsStreamTimeParts(s, dir)
+          val evs = spendEvents(s, eventsStreamTimeParts(s, dir)
             .withWatermark("ts_t", "0 seconds")
             // keep only post-cutover rows — and the sentinel, which must
             // reach the watermark node (see s27)
-            .filter(col("user_id") < 0 || expr(s"ts_us >= ${midUs}L"))
-            .select(col("user_id"), col("ts_us"),
-              expr("cast(cast(value AS DECIMAL(12,2)) * 100 AS BIGINT)")
-                .as("vc"),
-              col("ts_t")).as[SpendEv]
+            .filter(col("user_id") < 0 || expr(s"ts_us >= ${midUs}L")))
           val out = evs.groupByKey(_.user_id)
             .transformWithState(new SpendProcessorSeeded,
               org.apache.spark.sql.streaming.TimeMode.EventTime(),
               OutputMode.Append(), seed)
-          drain(s, OutputMode.Append())(out.toDF())
-            .orderBy("user_id")
+          drainByUser(s, out)
         }
       },
       // the s27 contract verbatim: cutover seeding must be invisible
@@ -2068,8 +1998,7 @@ object StreamingQueries {
             .transformWithState(new ProfileProcessor,
               org.apache.spark.sql.streaming.TimeMode.EventTime(),
               OutputMode.Append())
-          drain(s, OutputMode.Append())(out.toDF())
-            .orderBy("user_id")
+          drainByUser(s, out)
         }
       },
       Some("""
@@ -2160,23 +2089,10 @@ object StreamingQueries {
       "s31_stream_full_outer_join",
       (s, dir) => {
         val base = eventsStream(s, dir, flushSentinel = true)
-        val views = base
-          .filter(col("event_type") === "view" || col("user_id") < 0)
-          .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-            col("ts_us").as("v_us"), col("ts_t").as("v_t"))
-          .withWatermark("v_t", "10 minutes")
-        val purchases = base
-          .filter(col("event_type") === "purchase" || col("user_id") < 0)
-          .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-            col("ts_us").as("p_us"), col("ts_t").as("p_t"))
-          .withWatermark("p_t", "10 minutes")
-        val joined = purchases.join(views,
-          col("p_user") === col("v_user")
-            && col("v_t") <= col("p_t")
-            && col("v_t") >= col("p_t") - expr("INTERVAL 1 HOUR"),
-          "full_outer")
-        drain(s, OutputMode.Append())(
-          joined.select("purchase_id", "view_id", "p_us", "v_us"))
+        viewPurchaseJoin(s,
+            base.filter(col("event_type") === "view" || col("user_id") < 0),
+            base.filter(col("event_type") === "purchase" || col("user_id") < 0),
+            "full_outer")
           .filter(coalesce(col("purchase_id"), lit(0L)) >= 0
             && coalesce(col("view_id"), lit(0L)) >= 0)
           .orderBy(col("purchase_id").asc_nulls_first,
@@ -2350,8 +2266,9 @@ object StreamingQueries {
     // flag columns (a pure stateless map — zero state stores, append
     // mode, scales like a filter), per-batch flag rows land in the
     // drain, and the additive per-rule counters merge batch-side into
-    // exactly q248's report. Adding a rule is one more column; the
-    // stream pays no extra pass and no state however many rules ride.
+    // exactly q248's report (Profiling.qualityReport). Adding a rule
+    // is one more column; the stream pays no extra pass and no state
+    // however many rules ride.
     // Sentinel rows pre-filter (no watermark in the pipeline to starve).
     QueryDef(
       "s35_stream_quality_gate",
@@ -2372,22 +2289,7 @@ object StreamingQueries {
         val wide = drain(s, OutputMode.Append())(flags)
           .agg(count(lit(1)).as("n"), sum("v1").as("v1"), sum("v2").as("v2"),
             sum("v3").as("v3"), sum("v4").as("v4"), sum("v5").as("v5"))
-        wide.select(explode(expr("""array(
-            struct('r1_value_in_1c_450' AS rule, v1 AS n_violations),
-            struct('r2_type_in_domain' AS rule, v2 AS n_violations),
-            struct('r3_user_id_positive' AS rule, v3 AS n_violations),
-            struct('r4_value_not_null' AS rule, v4 AS n_violations),
-            struct('r5_purchase_floor_5' AS rule, v5 AS n_violations))"""))
-            .as("r"), col("n"))
-          .select(col("r.rule").as("rule"), col("n").as("n_checked"),
-            col("r.n_violations").as("n_violations"))
-          .withColumn("violation_ppm",
-            expr("n_violations * 1000000 div n_checked"))
-          .withColumn("status", expr(
-            """CASE WHEN n_violations = 0 THEN 'pass'
-                    WHEN n_violations * 100 <= n_checked THEN 'warn'
-                    ELSE 'fail' END"""))
-          .orderBy("rule")
+        graft.operators.Profiling.qualityReport(wide)
       },
       // same contract as the batch gate — the stream must converge to it
       Some(graft.operators.Profiling.qualityOracle))
@@ -2451,8 +2353,8 @@ object StreamingQueries {
     // the exact-Jaccard verify touches bucket-mates only — zero state
     // stores, per-tick cost O(tick × collision rate). The drained hit
     // stream dedupes batch-side and reconstructs exactly q107's
-    // admission verdicts: same oracle (exact all-pairs containment),
-    // so a dup the stream misses cannot hash-match.
+    // admission verdicts (Dedup.admissionReport): same oracle (exact
+    // all-pairs containment), so a dup the stream misses cannot hash-match.
     //
     // Per-row-vs-columnar trade, stated: the static corpus signature
     // stays columnar (codegen'd aggregates); the STREAM side pays the
@@ -2471,10 +2373,7 @@ object StreamingQueries {
         val csh = PairGraph.corpusShingles(s, dir)
         val cidx = PairGraph.corpusBandIndex(s, dir)
           .select(col("doc_id").as("corpus_id"), col("band"), col("bh"))
-        val st = ingestBatchStreamParts(s, dir)
-          .withColumn("w", split(col("text"), " "))
-          .withColumn("s", expr(Dedup.shinglesExpr))
-          .filter(size(col("s")) > 0)
+        val st = Dedup.shingled(ingestBatchStreamParts(s, dir))
         // per-row signature via the native codegen kernel (r14): the
         // former 64 interpreted `array_min(transform(..xxhash64..))`
         // columns re-hashed every shingle STRING once per lane; the
@@ -2499,17 +2398,9 @@ object StreamingQueries {
           .filter(size(array_intersect(col("sb"), col("sc"))) * 5
             >= size(array_union(col("sb"), col("sc"))) * 3)
           .select("batch_id")
-        val dupIds = drain(s, OutputMode.Append())(hits).distinct()
-          .withColumn("dup", lit(true))
-        val batch = ingestBatch(
-          graft.Tables(s, dir, "documents").select("doc_id", "text"))
-        batch.join(dupIds, col("doc_id") === col("batch_id"), "left")
-          .withColumn("reason",
-            when(col("dup"), "near_dup").otherwise("admitted"))
-          .groupBy("reason")
-          .agg(count(lit(1)).as("n"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .orderBy("reason")
+        Dedup.admissionReport(
+          Dedup.ingestBatch(graft.Tables(s, dir, "documents").select("doc_id", "text")),
+          drain(s, OutputMode.Append())(hits).distinct())
       },
       // q107's oracle VERBATIM — the streamed ingest must converge to
       // the batch admission verdicts exactly (exact all-pairs contract;
@@ -2530,8 +2421,9 @@ object StreamingQueries {
     // construction), stated here because the oracle equality depends on
     // it. Token counts come from boundary arithmetic (each intra-word
     // token boundary is exactly one "||"), the drained per-doc rows
-    // roll up batch-side, and the result must hash-match q254's oracle
-    // VERBATIM. Zero state stores; per-tick cost O(tick chars).
+    // roll up batch-side through q254's TextAnalysis.tokenCostReport, and
+    // the result must hash-match q254's oracle VERBATIM. Zero state
+    // stores; per-tick cost O(tick chars).
     QueryDef(
       "s38_stream_bpe_token_costs",
       (s, dir) => {
@@ -2553,17 +2445,7 @@ object StreamingQueries {
           .select(col("doc_id"), col("source"), col("nw"), col("nc"),
             expr("(length(enc) - length(replace(enc, '||', ''))) div 2 + nw")
               .cast("long").as("nt"))
-        val rows = drain(s, OutputMode.Append())(st)
-        rows.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("nw").as("n_words"),
-            sum("nt").as("n_tokens"),
-            sum("nc").as("n_chars"))
-          .select(col("source"), col("n_docs"), col("n_words"),
-            col("n_tokens"), col("n_chars"),
-            expr("n_tokens div n_docs").as("tokens_per_doc"),
-            expr("n_tokens * 1000 div n_chars").as("tokens_per_kchar"))
-          .orderBy("source")
+        TextAnalysis.tokenCostReport(drain(s, OutputMode.Append())(st))
       },
       Some(graft.operators.TextAnalysis.bpeOracle))
   ,
@@ -2578,8 +2460,9 @@ object StreamingQueries {
     // expression — char-3grams → md5 bucket → weight lookup →
     // integer ppm mean — so the stream side is a pure stateless map:
     // zero state stores, zero stream-side joins, per-tick cost
-    // O(tick chars). Drained per-doc verdicts roll up batch-side into
-    // exactly q255's per-source report: same oracle VERBATIM. The
+    // O(tick chars). Scoring and the per-source report are q255's own
+    // functions (Profiling.classifierScored / classifierReport): same
+    // oracle VERBATIM. The
     // scorer is the NATIVE codegen expression graft_classifier_score
     // (plans/ClassifierScore.scala — the map literal folds once into a
     // dense long[4096]); the former interpreted HOF chain paid an
@@ -2594,38 +2477,11 @@ object StreamingQueries {
         // shared registry (one gram build per phase), collected ONCE at
         // plan-construction (vocabulary-sized, the merges-table
         // discipline) and shipped as literals
-        val wtMap = ClassifierArtifacts.weights(s, dir).collect() // bounded: ≤ 4096 weight rows
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
+        val wtMap = ClassifierArtifacts.weightMap(s, dir)
         val thr = ClassifierArtifacts.prior(s, dir).head().getLong(0)
-        val mapCol = typedLit(wtMap)
-        val st = documentsStreamParts(s, dir)
-          .select(col("doc_id"), col("source"),
-            Profiling.classifierGoodExpr,
-            call_function("graft_char_ngrams", col("text"), lit(3)).as("gr"))
-          .filter(size(col("gr")) > 0) // q255 scores only gram-bearing docs
-          .select(col("doc_id"), col("source"), col("good"),
-            // unseen buckets are impossible here (the stream replays
-            // the training corpus); production ships the neutral
-            // 500000 prior for them — the expression's default slot
-            call_function("graft_classifier_score", col("gr"), mapCol,
-              lit(500000L)).as("wsum"),
-            size(col("gr")).cast("long").as("ng"))
-          .select(col("doc_id"), col("source"), col("good"),
-            expr("wsum div ng").as("score_ppm"))
+        val st = Profiling.classifierScored(documentsStreamParts(s, dir), wtMap)
           .withColumn("keep", col("score_ppm") >= lit(thr))
-        val rows = drain(s, OutputMode.Append())(st)
-        rows.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-            sum(when(col("keep") && col("good"), 1L).otherwise(0L)).as("tp"),
-            sum(when(col("keep") && !col("good"), 1L).otherwise(0L)).as("fp"),
-            sum(when(!col("keep") && col("good"), 1L).otherwise(0L)).as("fn"),
-            sum(when(!col("keep") && !col("good"), 1L).otherwise(0L)).as("tn"))
-          .select(col("source"), col("n_docs"), col("n_keep"),
-            expr("n_keep * 1000000 div n_docs").as("keep_ppm"),
-            col("tp"), col("fp"), col("fn"), col("tn"),
-            expr("(tp + tn) * 1000000 div n_docs").as("agreement_ppm"))
-          .orderBy("source")
+        Profiling.classifierReport(drain(s, OutputMode.Append())(st))
       },
       Some(graft.operators.Profiling.classifierOracle))
   ,
@@ -2640,12 +2496,13 @@ object StreamingQueries {
     // an executor probes, broadcast when they fit). The vocab size
     // ships as a collected scalar — the model-artifact discipline s39
     // established for its threshold. Drained per-bigram (source, c12,
-    // bits) rows roll up batch-side into exactly q265's per-source
-    // bits/token report: same oracle VERBATIM, so a dropped or
+    // bits) rows roll up batch-side through q265's per-source
+    // bits/token report (TextAnalysis.bitsReport): same oracle VERBATIM, so a dropped or
     // double-probed tick cannot hash-match.
     QueryDef(
       "s40_stream_lm_surprisal",
       (s, dir) => {
+        import graft.operators.TextAnalysis
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val hb5 = "cast(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT) % 5"
         // spread (r14, guide §2.5): one-task scan serialized the per-doc
@@ -2653,18 +2510,9 @@ object StreamingQueries {
         val train = graft.Tables.spread(
             graft.Tables(s, dir, "documents"), col("doc_id"))
           .filter(expr(hb5) =!= 0L)
-        val tb = train
-          .select(explode(
-            call_function("graft_word_ngrams", col("text"), lit(2)))
-            .as("gram"))
-          .groupBy("gram").agg(count(lit(1)).as("c12"))
-          .withColumn("w1", element_at(split(col("gram"), " "), 1))
-          .persist(MEMORY_AND_DISK)
+        val tb = TextAnalysis.bigramCounts(train).persist(MEMORY_AND_DISK)
         val c1 = tb.groupBy("w1").agg(sum("c12").as("c1"))
-        val v = train
-          .select(explode(split(col("text"), " ")).as("w"))
-          .filter(length(col("w")) > 0)
-          .agg(countDistinct("w")).head().getLong(0)
+        val v = TextAnalysis.bigramVocab(train).head().getLong(0)
         val st = documentsStreamParts(s, dir)
           .filter(expr(hb5) === 0L)
           .select(col("source"),
@@ -2678,17 +2526,7 @@ object StreamingQueries {
           .select(col("source"), col("c12n"),
             expr(s"length(bin((c1n + ${v}L) div (c12n + 1))) - 1")
               .as("bits_raw"))
-        val rows = drain(s, OutputMode.Append())(st)
-        rows.groupBy("source")
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(when(col("c12n") === 0L, 1L).otherwise(0L))
-              .as("oov_bigrams"),
-            sum("bits_raw").as("total_bits"))
-          .select(col("source"), col("n_bigrams"), col("oov_bigrams"),
-            col("total_bits"),
-            expr("total_bits * 1000 div n_bigrams")
-              .as("bits_per_token_milli"))
-          .orderBy("source")
+        TextAnalysis.bitsReport(drain(s, OutputMode.Append())(st), "bits_raw")
       },
       Some(graft.operators.TextAnalysis.bigramLmOracle))
   ,
@@ -2703,50 +2541,26 @@ object StreamingQueries {
     // drained (term, doc_id) stream is globally distinct with zero
     // state stores). Batch-side the drained postings aggregate into the
     // delta index and merge ADDITIVELY into the standing index exactly
-    // as q267 does — same oracle VERBATIM, so a dropped tick or a
-    // double-emitted posting cannot hash-match.
+    // through q267's TextAnalysis.mergeIndex — same oracle VERBATIM, so
+    // a dropped tick or a double-emitted posting cannot hash-match.
     QueryDef(
       "s41_stream_index_maintenance",
       (s, dir) => {
+        import graft.operators.TextAnalysis
         import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val standing =
-          // spread (r14, guide §2.5): one-task scan serialized the
-          // standing-index explode
-          graft.Tables.spread(
-              graft.Tables(s, dir, "documents").select("doc_id", "text"),
-              col("doc_id"))
-            .select(col("doc_id"),
-              explode(call_function("graft_word_ngrams", col("text"), lit(3)))
-                .as("term"))
-            .distinct()
-            .groupBy("term")
-            .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
-            .persist(MEMORY_AND_DISK)
+        // spread (r14, guide §2.5): one-task scan serialized the
+        // standing-index explode
+        val standing = TextAnalysis.postings(graft.Tables.spread(
+            graft.Tables(s, dir, "documents").select("doc_id", "text"),
+            col("doc_id")))
+          .persist(MEMORY_AND_DISK)
         val st = ingestBatchStreamParts(s, dir)
           .select(col("doc_id"),
             explode(array_distinct(
               call_function("graft_word_ngrams", col("text"), lit(3))))
               .as("term"))
-        val deltaIdx = drain(s, OutputMode.Append())(st)
-          .groupBy("term")
-          .agg(count(lit(1)).as("df"), sum("doc_id").as("sum_ids"))
-        val untouched = standing
-          .join(deltaIdx.select("term"), Seq("term"), "left_anti")
-          .withColumn("was_touched", lit(false))
-        val touched = standing
-          .join(deltaIdx.select(col("term"), col("df").as("ddf"),
-            col("sum_ids").as("dsum")), Seq("term"), "right")
-          .select(col("term"),
-            (coalesce(col("df"), lit(0L)) + col("ddf")).as("df"),
-            (coalesce(col("sum_ids"), lit(0L)) + col("dsum")).as("sum_ids"))
-          .withColumn("was_touched", lit(true))
-        val merged = untouched.unionByName(touched)
-        val audit = merged.agg(
-          sum(when(col("was_touched"), 1L).otherwise(0L)).as("n_touched"),
-          sum(when(!col("was_touched"), 1L).otherwise(0L)).as("n_untouched"))
-        merged.crossJoin(broadcast(audit))
-          .orderBy(col("df").desc, col("term"))
-          .limit(20)
+        TextAnalysis.mergeIndex(standing,
+          TextAnalysis.termIndex(drain(s, OutputMode.Append())(st)))
       },
       Some(graft.operators.TextAnalysis.incrementalIndexOracle))
   ,
@@ -2756,7 +2570,8 @@ object StreamingQueries {
     // is measured, truncated to the L=512 budget and bucket-assigned in
     // ONE stateless per-row projection (integer bit arithmetic, zero
     // state stores); the drained (source, bucket, kept, ntr) rows roll
-    // up batch-side into exactly q272's per-source waste report. This
+    // up batch-side into exactly q272's per-source waste report
+    // (TrainingDataOps.packBuckets / packCosts). This
     // twin is possible BECAUSE bucketed first-fit is arrival-order
     // independent — every sequence but the ragged last is full, so
     // n_seqs = ceil(n_bucket / cap) and all token sums are order-free;
@@ -2766,33 +2581,21 @@ object StreamingQueries {
     QueryDef(
       "s42_stream_pack_accounting",
       (s, dir) => {
-        val L = 512L
-        val st = documentsStreamParts(s, dir)
+        import graft.operators.TrainingDataOps.{PackLen, packBuckets, packCosts}
+        val st = packBuckets(documentsStreamParts(s, dir)
           .select(col("doc_id"), col("source"),
             expr("size(filter(split(text, ' '), w -> w <> ''))")
-              .cast("long").as("nw"))
-          .filter(col("nw") > 0L)
-          .withColumn("kept", least(col("nw"), lit(L)))
-          .withColumn("ntr", col("nw") - col("kept"))
-          .withColumn("bucket", expr(
-            "CASE WHEN kept = 1 THEN 1L " +
-              "ELSE shiftleft(1L, length(bin(kept - 1))) END"))
-        val rows = drain(s, OutputMode.Append())(st)
-        val byBucket = rows.groupBy("source", "bucket")
+              .cast("long").as("nw")), "nw")
+        val byBucket = drain(s, OutputMode.Append())(st)
+          .groupBy("source", "bucket")
           .agg(count(lit(1)).as("n"), sum("nw").as("tw"),
             sum("kept").as("tk"), sum("ntr").as("tt"))
-          .withColumn("cap", expr(s"$L div bucket"))
+          .withColumn("cap", expr(s"$PackLen div bucket"))
           .withColumn("n_seqs", expr("(n + cap - 1) div cap"))
-        byBucket.groupBy("source")
+        packCosts(byBucket.groupBy("source")
           .agg(sum("n").as("n_docs"), sum("n_seqs").as("n_seqs"),
             sum("tw").as("tokens_total"), sum("tk").as("tokens_kept"),
-            sum("tt").as("tokens_trunc"))
-          .select(col("source"), col("n_docs"), col("n_seqs"),
-            col("tokens_total"), col("tokens_kept"), col("tokens_trunc"),
-            (col("n_seqs") * L - col("tokens_kept")).as("tokens_pad"),
-            expr(s"tokens_kept * 1000000 div (n_seqs * $L)").as("util_ppm"),
-            expr("tokens_trunc * 1000000 div tokens_total").as("trunc_ppm"))
-          .orderBy("source")
+            sum("tt").as("tokens_trunc")))
       },
       Some(graft.operators.TrainingDataOps.packAccountingOracle))
   ,
@@ -2827,7 +2630,8 @@ object StreamingQueries {
     // Batch-side the drained hits count per doc, zero-hit docs are
     // recovered by the left join against the static corpus (a stream
     // can't emit what never matched), and the tier rollup reproduces
-    // exactly q277's report — same oracle VERBATIM.
+    // exactly q277's report (TrainingDataOps.severityReport) — same
+    // oracle VERBATIM.
     QueryDef(
       "s44_stream_contamination_severity",
       (s, dir) => {
@@ -2835,14 +2639,11 @@ object StreamingQueries {
         // spread + persist (r14): the benchmark gram set was rebuilt
         // from the one-task scan on EVERY micro-batch of the
         // stream-static probe below
-        val bg = graft.Tables.spread(docs.filter(col("doc_id") % 13 === 0),
-              col("doc_id"))
-          .select(concat_ws(" ",
-            slice(split(col("text"), " "), 6, 20)).as("text"))
-          .select(explode(
-            call_function("graft_word_ngrams", col("text"), lit(5)))
-            .as("g"))
-          .distinct()
+        // spread + persist (r14): the benchmark gram set was rebuilt
+        // from the one-task scan on EVERY micro-batch of the
+        // stream-static probe below
+        val bg = graft.operators.TrainingDataOps.severityBenchGrams(graft.Tables.spread(
+            docs.filter(col("doc_id") % 13 === 0), col("doc_id")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = documentsStreamParts(s, dir)
           .select(col("doc_id"),
@@ -2851,19 +2652,8 @@ object StreamingQueries {
               .as("g"))
           .join(bg, "g") // stream-static probe: only hits survive
           .select("doc_id")
-        val hits = drain(s, OutputMode.Append())(st)
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-        docs.select("doc_id", "source")
-          .join(hits, Seq("doc_id"), "left")
-          .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-          .withColumn("tier",
-            when(col("n_hit") === 0L, "t0_none")
-              .when(col("n_hit") <= 2L, "t1_low")
-              .when(col("n_hit") <= 9L, "t2_med")
-              .otherwise("t3_high"))
-          .groupBy("source", "tier")
-          .agg(count(lit(1)).as("n_docs"), sum("n_hit").as("hits_total"))
-          .orderBy("source", "tier")
+        graft.operators.TrainingDataOps.severityReport(docs,
+          drain(s, OutputMode.Append())(st))
       },
       Some(graft.operators.TrainingDataOps.contaminationSeverityOracle))
   ,
@@ -2878,7 +2668,7 @@ object StreamingQueries {
     // inner probe, novelty needs the MISSES, so the left join carries
     // every stream gram downstream with a seen/null flag — still
     // stateless, zero state stores, append mode. The drained rows roll
-    // up batch-side into exactly q279's per-source novelty report —
+    // up batch-side through q279's Dedup.noveltyReport —
     // oracle VERBATIM, so a dropped tick or a stale standing set
     // cannot hash-match.
     QueryDef(
@@ -2887,12 +2677,9 @@ object StreamingQueries {
         // static side derived from the session-shared gram frame
         // (GramFrames — shared with q103/q279); the distinct-reduced
         // standing set persists so each micro-batch probes, not rebuilds
-        val standing =
-          graft.operators.GramFrames.word8(s, dir)
-            .filter(col("doc_id") % 5 =!= 4)
-            .select("h").distinct()
-            .withColumn("seen", lit(1L))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val standing = graft.operators.Dedup.noveltyStanding(
+            graft.operators.GramFrames.word8(s, dir))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val st = documentsStreamParts(s, dir)
           .filter(col("doc_id") % 5 === 4)
           .select(col("doc_id"), col("source"),
@@ -2901,21 +2688,7 @@ object StreamingQueries {
               .as("g"))
           .select(col("doc_id"), col("source"), sha2(col("g"), 256).as("h"))
           .join(standing, Seq("h"), "left")
-        val scored = drain(s, OutputMode.Append())(st)
-          .groupBy("doc_id", "source")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
-          .withColumn("novelty_ppm", expr("n_novel * 1000000 div n_grams"))
-        scored.groupBy("source")
-          .agg(count(lit(1)).as("n_docs"),
-            sum("n_grams").as("grams_total"),
-            sum("n_novel").as("grams_novel"),
-            expr("sum(novelty_ppm) div count(1)").as("mean_novelty_ppm"),
-            sum(when(col("novelty_ppm") >= 900000L, 1L).otherwise(0L))
-              .as("n_mostly_new"),
-            sum(when(col("novelty_ppm") <= 100000L, 1L).otherwise(0L))
-              .as("n_mostly_seen"))
-          .orderBy("source")
+        graft.operators.Dedup.noveltyReport(drain(s, OutputMode.Append())(st))
       },
       Some(graft.operators.Dedup.noveltyOracle))
   ,
@@ -2929,8 +2702,8 @@ object StreamingQueries {
     // drained cell stream aggregates batch-side into the 4×256 sketch
     // by pure ADDITION, which is exactly why CMS works as a
     // distributed/streaming summary: cells from any partition of the
-    // stream merge by +. The same top-20 audit then probes the
-    // stream-built sketch and must produce q285's estimates
+    // stream merge by +. The same top-20 audit (ScaleTechniques.
+    // cmsEstimates) then probes the stream-built sketch and must produce q285's estimates
     // bit-for-bit — oracle VERBATIM, so a dropped tick or double
     // count cannot hash-match.
     QueryDef(
@@ -2938,33 +2711,17 @@ object StreamingQueries {
       (s, dir) => {
         // spread (r14, guide §2.5): one-task scan serialized the exact-
         // side token explode + count
+        import graft.operators.ScaleTechniques.{
+          cmsBucket, cmsEstimates, cmsRows, cmsTokens}
         val docsT = graft.Tables.spread(
           graft.Tables(s, dir, "documents"), col("doc_id"))
-        val rws = s.range(0, 4).select(col("id").cast("int").as("r"))
-        val bucketSql =
-          "cast(conv(substr(md5(concat('r', cast(r AS STRING), ':', " +
-            "word)), 1, 15), 16, 10) AS BIGINT) % 256"
-        val st = documentsStreamParts(s, dir)
-          .select(explode(split(col("text"), " ")).as("word"))
-          .filter(col("word") =!= "")
+        val rws = cmsRows(s)
+        val st = cmsTokens(documentsStreamParts(s, dir))
           .crossJoin(rws) // stream-static cross with the 4-row hash-row table
-          .select(col("r"), expr(bucketSql).as("b"))
+          .select(col("r"), expr(cmsBucket).as("b"))
         val sketch = drain(s, OutputMode.Append())(st)
           .groupBy("r", "b").agg(count(lit(1)).as("c"))
-        val exact = docsT
-          .select(explode(split(col("text"), " ")).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy("word").agg(count(lit(1)).as("n_exact"))
-        exact.orderBy(col("n_exact").desc, col("word")).limit(20)
-          .crossJoin(rws)
-          .withColumn("b", expr(bucketSql))
-          .join(sketch, Seq("r", "b"))
-          .groupBy("word")
-          .agg(max("n_exact").as("n_exact"), min("c").as("n_est"))
-          .select(col("word"), col("n_exact"), col("n_est"),
-            (col("n_est") - col("n_exact")).as("overcount"),
-            expr("(n_est - n_exact) * 1000000 div n_exact").as("over_ppm"))
-          .orderBy(col("n_exact").desc, col("word"))
+        cmsEstimates(cmsTokens(docsT), rws, sketch)
       },
       Some(graft.operators.ScaleTechniques.countminOracle))
   ,
@@ -3038,7 +2795,7 @@ object StreamingQueries {
     // flags its prediction-set membership against the two literal
     // thresholds. The calibration coin is per-row arithmetic, so the
     // stream itself drops calibration docs. Drained eval flags roll up
-    // to exactly q308's coverage report — oracle VERBATIM, so a stale
+    // through q308's Profiling.conformalCoverage — oracle VERBATIM, so a stale
     // threshold, a dropped tick, or a scoring drift cannot hash-match.
     QueryDef(
       "s49_stream_conformal_gate",
@@ -3072,9 +2829,7 @@ object StreamingQueries {
           .withColumn("cum", sum("c").over(wDn))
           .filter(col("cum") >= rb).agg(max("sc")).head().getLong(0)
         // --- stream side: stateless per-row score + set membership ---
-        val wtMap = ClassifierArtifacts.weights(s, dir).collect() // bounded: ≤ 4096 weight rows
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        val mapCol = typedLit(wtMap)
+        val mapCol = typedLit(ClassifierArtifacts.weightMap(s, dir))
         val st = documentsStreamParts(s, dir)
           .select(col("doc_id"), Profiling.classifierGoodExpr,
             call_function("graft_char_ngrams", col("text"), lit(3)).as("gr"))
@@ -3093,24 +2848,10 @@ object StreamingQueries {
           .select(col("good"),
             (col("score_ppm") >= lit(tg)).as("in_g"),
             (col("score_ppm") <= lit(tb)).as("in_b"))
-        drain(s, OutputMode.Append())(st)
-          .agg(count(lit(1)).as("n_eval"),
-            sum(when(col("good"), 1L).otherwise(0L)).as("n_eval_good"),
-            sum(when(col("good") && col("in_g"), 1L).otherwise(0L))
-              .as("cov_g"),
-            sum(when(!col("good") && col("in_b"), 1L).otherwise(0L))
-              .as("cov_b"),
-            sum(expr("""CASE WHEN in_g THEN 1L ELSE 0L END
-                        + CASE WHEN in_b THEN 1L ELSE 0L END"""))
-              .as("set_sum"))
-          .select(lit(ng).as("n_cal_good"), lit(rg).as("r_good"),
-            lit(nb).as("n_cal_bad"), lit(rb).as("r_bad"),
-            lit(tg).as("thr_good_ppm"), lit(tb).as("thr_bad_ppm"),
-            col("n_eval"),
-            expr("cov_g * 1000000 div n_eval_good").as("cov_good_ppm"),
-            expr("cov_b * 1000000 div (n_eval - n_eval_good)")
-              .as("cov_bad_ppm"),
-            expr("set_sum * 1000 div n_eval").as("avg_set_milli"))
+        Profiling.conformalCoverage(drain(s, OutputMode.Append())(st).groupBy(),
+          lit(ng).as("n_cal_good"), lit(rg).as("r_good"),
+          lit(nb).as("n_cal_bad"), lit(rb).as("r_bad"),
+          lit(tg).as("thr_good_ppm"), lit(tb).as("thr_bad_ppm"))
       },
       Some(graft.operators.Profiling.conformalOracle))
   ,
@@ -3618,24 +3359,12 @@ object StreamingQueries {
       Some(graft.operators.TrainingDataOps.noveltyTickOracle))
   )
 
-  /** q107's ingest-batch construction, shared by s37's final report and
-    * [[ingestBatchStreamParts]] so the streamed ticks and the verdict
-    * join read the SAME derived corpus: every 9th doc re-arrives with
-    * its last word dropped (a true near-dup), every 9th+1 doc is
-    * genuinely novel. */
-  private def ingestBatch(corpus: DataFrame): DataFrame =
-    corpus.filter(col("doc_id") % 9 === 0)
-      .select((col("doc_id") + 500000).as("doc_id"),
-        regexp_replace(col("text"), " \\S+$", "").as("text"))
-      .unionByName(corpus.filter(col("doc_id") % 9 === 1)
-        .select((col("doc_id") + 600000).as("doc_id"),
-          concat(lit("novel content batch item "),
-            col("doc_id").cast("string")).as("text")))
-
-  /** The ingest batch as ranged arrivals, one tick per part. */
+  /** q107's ingest batch ([[graft.operators.Dedup.ingestBatch]]) as
+    * ranged arrivals, one tick per part; s37's verdict join reads the
+    * same derived corpus. */
   private def ingestBatchStreamParts(s: SparkSession, dir: String): DataFrame =
-    rangedArrivals(s, "stream_ingest_parts", dir,
-      ingestBatch(s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")))
+    rangedArrivals(s, "stream_ingest_parts", dir, graft.operators.Dedup.ingestBatch(
+      s.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")))
 
   /** s70's arrival wave as ranged arrivals — the SHARED q371 plant
     * (TrainingDataOps.novelArrivals: verbatim re-crawls + fresh

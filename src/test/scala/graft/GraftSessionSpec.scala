@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Unit tier: the scoped-conf helper every temporary conf pin uses. */
+/** Unit tier: conf pins stay scoped — withConf's, and q88's recursion
+  * limit, which rides a GraftSession.sibling. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("withConf restores the previous value or unsets the key, also on throw") {
@@ -22,5 +23,16 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(s.conf.get(key) == "outer", "a thrown body must restore the previous value")
     assert(GraftSession.withConf(s, key, "inner")(s.conf.get(key)) == "inner")
     assert(s.conf.get(key) == "outer")
+  }
+
+  test("q88 keeps its recursion row limit off the caller's session") {
+    val s = SparkSpec.spark.newSession()
+    val key = "spark.sql.cteRecursionRowLimit"
+    assert(!s.conf.getAll.contains(key))
+    val rows = SparkEntry.queries("q88_recursive_order_chain")(
+      s, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    val leaked = s.conf.getAll.get(key)
+    assert(leaked.isEmpty, s"q88 left $key=${leaked.orNull} on the caller's session")
   }
 }
