@@ -15,8 +15,8 @@ import graft.pipeline.{Pipeline, PipelineConfig}
   * Each query materializes a deterministic job workload from the
   * `documents` fixture (one file per document, content = `text`), runs the
   * REAL pipeline — JSON parse (P1), validate-split (P2), config lookup
-  * (J1), factory dispatch (T2), local backend (S4/K2), temp-staged
-  * transfer map (T1), DLQ projection (E1/E2) — and returns aggregate
+  * (J1), factory dispatch (T2), local backend (S4/K2), staged transfer
+  * map (T1), DLQ projection (E1/E2) — and returns aggregate
   * outcome counts that a DuckDB oracle can predict from the fixture alone
   * (texts are ASCII, so transferred bytes == n_chars; verified in
   * PipelineSpec at byte level).
@@ -65,10 +65,11 @@ object PipelineQueries {
       concat(lit(s"$base/src/doc_"), col("doc_id"), lit(".txt")),
       concat(lit(s"$base/dst/doc_"), col("doc_id"), lit(".txt")))
 
-  /** Run the pipeline and return outcome counts. */
+  /** Run the pipeline and return outcome counts; the transfers run on
+    * the counts' first action. */
   private def statusCounts(spark: SparkSession, raw: DataFrame, pc: PipelineConfig): DataFrame = {
     val (results, _) = Pipeline.run(raw, pc)
-    Pipeline.executeOnce(results.toDF()).groupBy("status", "error_type")
+    results.groupBy("status", "error_type")
       .agg(count(lit(1)).as("n_jobs"), sum("bytes").as("total_bytes"))
       .orderBy("status", "error_type")
   }
@@ -90,7 +91,9 @@ object PipelineQueries {
     val raw = jobMessages(docs, lit("bulkftp"), lit("bulkftp"),
       concat(lit("/src/doc_"), col("doc_id"), lit(".txt")),
       concat(lit("/dst/doc_"), col("doc_id"), lit(".txt")))
-    statusCounts(s, raw, pc)
+    val counts = statusCounts(s, raw, pc)
+    counts.count() // the transfers run here, while the server is up
+    counts
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -148,10 +151,9 @@ object PipelineQueries {
           .select(concat(lit("{invalid json "), substring(col("text"), 1, 20)).as("value"))
         val raw = good.unionByName(corrupt)
         val (results, dlq) = Pipeline.run(raw, localConfig)
-        val r = Pipeline.executeOnce(results.toDF())
         // Outcome union: executed jobs by status + parse-failure DLQ rows,
         // proving per-error-class routing incl. the error message prefix.
-        r.groupBy("status", "error_type").agg(count(lit(1)).as("n"))
+        results.groupBy("status", "error_type").agg(count(lit(1)).as("n"))
           .unionByName(
             dlq.filter(col("error_type") === "parse")
               .select(lit("dlq_raw").as("status"),
@@ -223,7 +225,8 @@ object PipelineQueries {
     // FTP pool_size=4; harness tests/test_e2e.py:397-491). Runs the REAL
     // FTP stack: raw-socket client, passive mode, per-executor pool of 4
     // (reference parity) against an in-process server. Up to 1,000 files
-    // (doc_id < 1000) download-from-FTP → temp → upload-to-FTP per job.
+    // (doc_id < 1000) download-from-FTP → in-memory stage → upload-to-FTP
+    // per job.
     // The bench duration of this query ÷ file count is the files/s number
     // comparable to BASELINE.md's 21.73.
     QueryDef(
@@ -259,13 +262,13 @@ object PipelineQueries {
         val docs = Tables(s, dir, "documents")
         Staging.writeDocFiles(docs.filter(col("doc_id") % 10 =!= 0), s"$base/src", "txt")
         val raw = localJobs(docs, base)
-        val (results1, dlq1) = Pipeline.run(raw, localConfig)
-        // the first pass executes here, BEFORE the fix below
-        val r1 = Pipeline.executeOnce(results1.toDF())
+        val (r1, dlq1) = Pipeline.run(raw, localConfig)
+        // the first pass executes here, BEFORE the fix below; its
+        // outcomes stay cached for the counts and the replay
+        r1.count()
         // operator intervention: the missing files appear
         Staging.writeDocFiles(docs.filter(col("doc_id") % 10 === 0), s"$base/src", "txt")
-        val (results2, dlq2) = Pipeline.replayDlq(dlq1, localConfig)
-        val r2 = Pipeline.executeOnce(results2.toDF())
+        val (r2, dlq2) = Pipeline.replayDlq(dlq1, localConfig)
         val first = r1.groupBy("status")
           .agg(count(lit(1)).as("n_jobs"), sum("bytes").as("total_bytes"))
           .select(lit("first").as("phase"), col("status"), col("n_jobs"), col("total_bytes"))
@@ -300,9 +303,9 @@ object PipelineQueries {
     // up to 10,000 files (doc_id < 10000 — the full corpus at sf≤0.1,
     // 10k exactly at sf1) through the same 4-connection FTP pool, PLUS
     // an oracle-gated temp-cleanup audit p06 lacks: runOne's two-phase
-    // map (download→temp→upload, consumer.py:152-186) must delete its
-    // graft-transfer-*.tmp staging file on EVERY path, and at 10k jobs
-    // a leak would strand 10k files in the tmpdir — the audit row
+    // map (download→stage→upload, consumer.py:152-186) must delete any
+    // graft-transfer-*.tmp file its stage spilled on EVERY path, and at
+    // 10k jobs a leak would strand 10k files in the tmpdir — the audit row
     // counts stranded NEW temp files after the drain (snapshot-diff, so
     // leftovers from unrelated crashed JVMs can't false-fail) and the
     // oracle pins it at zero. files/s here ÷ p06's rate is the

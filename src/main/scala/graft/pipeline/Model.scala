@@ -37,6 +37,20 @@ final case class TransferResult(
     bytes: Long,
     duration_ms: Long)
 
+/** One parsed message: a valid job, or — when `original_message` is set —
+  * a message that failed to parse or validate, with its DLQ error. */
+final case class ParsedMessage(
+    job_id: String,
+    source: Endpoint,
+    destination: Endpoint,
+    original_message: String, // null for a valid job
+    error: String)
+
+/** One row of a micro-batch's outcome frame: the transfer result of a job,
+  * or a parse failure (status "dlq", error_type "parse") carrying its
+  * `original_message`. */
+final case class Outcome(result: TransferResult, original_message: String)
+
 object Model {
 
   /** message.py:88-97 — the job message schema used by from_json. */

@@ -1,7 +1,7 @@
 package graft.pipeline.transfer
 
 import java.io.FileNotFoundException
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.pipeline.ServerConfig
 
@@ -10,7 +10,9 @@ import graft.pipeline.ServerConfig
   * Mirrors /root/reference/src/etl/transfer/base.py:
   *  - connect/disconnect bracketing with disconnect guaranteed on
   *    exception (base.py:21-70) — expressed here as `withConnection`;
-  *  - download = remote→local, upload = local→remote (base.py:40-60);
+  *  - download = remote→local, upload = local→remote (base.py:40-60),
+  *    here remote→[[Stage]] and Stage→remote: a backend streams into and
+  *    out of the stage, which decides between memory and a temp file;
   *  - the factory registry keyed by server type, case-insensitive, with
   *    an error listing supported types for unknown ones (base.py:73-108).
   */
@@ -19,13 +21,23 @@ trait TransferBackend extends AutoCloseable {
   def disconnect(): Unit
   override def close(): Unit = disconnect()
 
-  /** Copy remote `remotePath` to local `localPath`; parent dirs created.
+  /** Copy remote `remotePath` into `stage`.
     * Missing source → FileNotFoundException; other failures → IOException. */
-  def download(remotePath: String, localPath: String): Unit
+  def download(remotePath: String, stage: Stage): Unit
 
-  /** Copy local `localPath` to remote `remotePath`; remote parent dirs
-    * created. Missing local source → FileNotFoundException. */
-  def upload(localPath: String, remotePath: String): Unit
+  /** Copy `stage`'s bytes to remote `remotePath`; remote parent dirs
+    * created. */
+  def upload(stage: Stage, remotePath: String): Unit
+
+  /** Path form of download: `localPath` is the stage (parent dirs
+    * created). */
+  def download(remotePath: String, localPath: String): Unit =
+    download(remotePath, Stage.at(Paths.get(localPath)))
+
+  /** Path form of upload: the local file `localPath` is the stage.
+    * Missing local source → FileNotFoundException. */
+  def upload(localPath: String, remotePath: String): Unit =
+    upload(Stage.at(Paths.get(localPath)), remotePath)
 }
 
 object TransferBackend {
@@ -47,21 +59,22 @@ final class LocalBackend extends TransferBackend {
   override def connect(): Unit = () // local.py:42-44 — no-op
   override def disconnect(): Unit = () // local.py:46-48 — no-op
 
-  private def copy(src: String, dst: String, missingMsg: String): Unit = {
-    val s = Paths.get(src)
-    if (!Files.exists(s)) throw new FileNotFoundException(s"$missingMsg: $src")
-    val d = Paths.get(dst)
-    Option(d.getParent).foreach(Files.createDirectories(_))
-    Files.copy(s, d, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.COPY_ATTRIBUTES)
+  private def copy(src: Path, dst: Path, srcName: String): Unit = {
+    if (!Files.exists(src)) throw new FileNotFoundException(s"Source file not found: $srcName")
+    Option(dst.getParent).foreach(Files.createDirectories(_))
+    Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.COPY_ATTRIBUTES)
   }
 
   // local.py:50-71 / :73-94 — identical copy in both directions; BOTH
   // directions use "Source file not found" (local.py:64,87 — only the
-  // FTP backend's upload says "Local file not found", ftp.py:168).
-  override def download(remotePath: String, localPath: String): Unit =
-    copy(remotePath, localPath, "Source file not found")
-  override def upload(localPath: String, remotePath: String): Unit =
-    copy(localPath, remotePath, "Source file not found")
+  // FTP backend's upload says "Local file not found", ftp.py:168). The
+  // stage's path keeps the attributes across the two copies.
+  override def download(remotePath: String, stage: Stage): Unit =
+    copy(Paths.get(remotePath), stage.path(), remotePath)
+  override def upload(stage: Stage, remotePath: String): Unit = {
+    val src = stage.path()
+    copy(src, Paths.get(remotePath), src.toString)
+  }
 }
 
 /** base.py:73-108 — type→backend registry. Case-insensitive keys; unknown

@@ -3,7 +3,7 @@ package graft.pipeline.transfer
 import java.io.{BufferedReader, FileNotFoundException, IOException, InputStream, InputStreamReader, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.US_ASCII
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import graft.pipeline.ServerConfig
 
@@ -129,53 +129,29 @@ final class FtpClient(host: String, port: Int, timeoutMs: Int = 30000) {
     }
   }
 
-  /** Binary RETR to a local file — ftp.py:115-150. */
-  def retr(remotePath: String, localPath: Path): Unit =
+  /** Binary RETR — ftp.py:115-150. Once the server accepts the command,
+    * `read` consumes the data stream; its value is returned after the
+    * transfer-complete reply. A 550 reply → FileNotFoundException, any
+    * other failure → IOException (ftp.py:143-150). */
+  def retr[A](remotePath: String)(read: InputStream => A): A =
     dataConnection(s"RETR $remotePath") { (pre, data) =>
       if (pre.code == 550)
         throw new FileNotFoundException(s"Remote file not found: $remotePath")
       if (pre.code >= 400) throw new IOException(s"RETR failed: ${pre.text}")
-      Option(localPath.getParent).foreach(Files.createDirectories(_))
-      val os = Files.newOutputStream(localPath)
-      try pipe(data.getInputStream, os)
-      finally os.close()
+      val a = read(data.getInputStream)
       val fin = readReply()
       if (!fin.ok) throw new IOException(s"RETR transfer failed: ${fin.text}")
+      a
     }
 
-  /** Binary RETR straight to memory — for consumers that want the bytes
-    * (the DataSource V2 reader), skipping the temp-file write+read the
-    * transfer pipeline's staging path needs. */
-  def retrBytes(remotePath: String): Array[Byte] =
-    dataConnection(s"RETR $remotePath") { (pre, data) =>
-      if (pre.code == 550)
-        throw new FileNotFoundException(s"Remote file not found: $remotePath")
-      if (pre.code >= 400) throw new IOException(s"RETR failed: ${pre.text}")
-      val os = new java.io.ByteArrayOutputStream()
-      pipe(data.getInputStream, os)
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"RETR transfer failed: ${fin.text}")
-      os.toByteArray
-    }
-
-  /** Binary STOR straight from memory — the write twin of retrBytes. */
-  def storBytes(bytes: Array[Byte], remotePath: String): Unit =
+  /** Binary STOR — ftp.py:152-184. Once the server accepts the command,
+    * `write` streams the payload into the data connection, which is then
+    * half-closed to end the file. Failures → IOException. */
+  def stor(remotePath: String)(write: OutputStream => Unit): Unit =
     dataConnection(s"STOR $remotePath") { (pre, data) =>
       if (pre.code >= 400) throw new IOException(s"STOR failed: ${pre.text}")
-      data.getOutputStream.write(bytes)
+      write(data.getOutputStream)
       data.getOutputStream.flush()
-      data.shutdownOutput()
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"STOR transfer failed: ${fin.text}")
-    }
-
-  /** Binary STOR from a local file — ftp.py:152-184. */
-  def stor(localPath: Path, remotePath: String): Unit =
-    dataConnection(s"STOR $remotePath") { (pre, data) =>
-      if (pre.code >= 400) throw new IOException(s"STOR failed: ${pre.text}")
-      val is = Files.newInputStream(localPath)
-      try pipe(is, data.getOutputStream)
-      finally is.close()
       data.shutdownOutput()
       val fin = readReply()
       if (!fin.ok) throw new IOException(s"STOR transfer failed: ${fin.text}")
@@ -277,13 +253,6 @@ final class FtpClient(host: String, port: Int, timeoutMs: Int = 30000) {
     }
   }
 
-  private def pipe(is: InputStream, os: OutputStream): Unit = {
-    val buf = new Array[Byte](64 * 1024)
-    var n = is.read(buf)
-    while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = is.read(buf) }
-    os.flush()
-  }
-
   def quit(): Unit = {
     try if (isConnected) cmd("QUIT")
     catch { case _: IOException => () }
@@ -298,10 +267,12 @@ final class FtpClient(host: String, port: Int, timeoutMs: Int = 30000) {
   * Semantics preserved (SURVEY §2.4):
   *  - passive mode default true, toggleable per config (ftp.py:80-82);
   *  - download: 550 → FileNotFoundException, other errors → IOException
-  *    (ftp.py:143-150); local parent dirs created (ftp.py:131-136);
-  *  - upload checks local-source existence first (ftp.py:167-168), then
-  *    walks/creates the remote directory tree (ftp.py:186-212) ignoring
-  *    permission errors, resetting to "/" afterwards.
+  *    (ftp.py:143-150); its path form creates local parent dirs
+  *    (ftp.py:131-136);
+  *  - the path form of upload checks local-source existence first
+  *    (ftp.py:167-168); every upload walks/creates the remote directory
+  *    tree (ftp.py:186-212) ignoring permission errors, resetting to "/"
+  *    afterwards.
   */
 final class FtpBackend(cfg: ServerConfig, passiveMode: Boolean = true) extends TransferBackend {
   private[transfer] var client: FtpClient = _
@@ -346,17 +317,28 @@ final class FtpBackend(cfg: ServerConfig, passiveMode: Boolean = true) extends T
     if (r.code == 213) r.text.drop(4).trim.toLong else -1L
   }
 
-  override def download(remotePath: String, localPath: String): Unit =
-    client.retr(remotePath, Paths.get(localPath))
+  override def download(remotePath: String, stage: Stage): Unit =
+    client.retr(remotePath)(stage.fill)
+
+  override def upload(stage: Stage, remotePath: String): Unit = {
+    ensureRemoteDir(parentOf(remotePath))
+    client.stor(remotePath)(stage.writeTo)
+  }
+
+  override def upload(localPath: String, remotePath: String): Unit = {
+    if (!Files.exists(Paths.get(localPath)))
+      throw new FileNotFoundException(s"Local file not found: $localPath")
+    super.upload(localPath, remotePath)
+  }
 
   /** Download a remote file's bytes without touching local disk. */
   def downloadBytes(remotePath: String): Array[Byte] =
-    client.retrBytes(remotePath)
+    client.retr(remotePath)(_.readAllBytes())
 
   /** Upload bytes directly (no local staging), creating parent dirs. */
   def uploadBytes(bytes: Array[Byte], remotePath: String): Unit = {
     ensureRemoteDir(parentOf(remotePath))
-    client.storBytes(bytes, remotePath)
+    client.stor(remotePath)(_.write(bytes))
   }
 
   /** Rename a remote file (RNFR/RNTO). */
@@ -364,14 +346,6 @@ final class FtpBackend(cfg: ServerConfig, passiveMode: Boolean = true) extends T
 
   /** Delete a remote file (DELE). */
   def delete(remotePath: String): Unit = client.delete(remotePath)
-
-  override def upload(localPath: String, remotePath: String): Unit = {
-    val lp = Paths.get(localPath)
-    if (!Files.exists(lp))
-      throw new FileNotFoundException(s"Local file not found: $localPath")
-    ensureRemoteDir(parentOf(remotePath))
-    client.stor(lp, remotePath)
-  }
 
   private def parentOf(p: String): String = {
     val i = p.lastIndexOf('/')

@@ -40,6 +40,13 @@ object StreamPipeline {
     * engine, writing successes to `resultsDir` and DLQ records (tagged
     * with the per-topic DLQ route, config.py:76-85) to `dlqDir`, each
     * into a per-batch `batch_id=` partition so replays are idempotent.
+    *
+    * One pass per micro-batch, 2 Spark jobs: the batch's persisted
+    * outcome frame ([[Pipeline.outcomes]]) parses each message once, and
+    * the results write is the action that runs the transfers and fills
+    * its cache; the DLQ write is a filter plus a projection of the cached
+    * frame — no second source scan, no re-parse. Transfers stage their
+    * bytes in memory up to 8 MiB ([[graft.pipeline.transfer.Stage]]).
     */
   def start(
       spark: SparkSession,
@@ -58,17 +65,15 @@ object StreamPipeline {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (results, dlq) = Pipeline.run(batch, pc)
-        val r = results.toDF()
+        val outcomes = Pipeline.outcomes(batch, pc)
         try {
-          Pipeline.executeOnce(r)
           // Idempotent on retry: each micro-batch owns its batch_id=<id>
           // partition, and dynamic partition overwrite REPLACES exactly
           // that partition — a batch replayed after a crash between the
           // sink write and the checkpoint commit converges instead of
           // appending duplicate rows. (Transfers themselves are already
           // idempotent overwrites; this closes the sink-side gap.)
-          r.withColumn("batch_id", lit(batchId))
+          Pipeline.resultsOf(outcomes).withColumn("batch_id", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
@@ -76,7 +81,7 @@ object StreamPipeline {
           // DLQ send failures are swallowed-and-logged, never fatal to the
           // batch (consumer.py:224-225, pinned by test_consumer.py:346-357).
           try StreamConnector.writeDlq(
-            dlq
+            Pipeline.dlqOf(outcomes)
               .withColumn("dlq_topic", lit(pc.dlqTopic(topic)))
               // the reference serializes the DLQ timestamp as an ISO-8601
               // UTC string (message.py:127-129) — rendered here at the sink
@@ -88,7 +93,7 @@ object StreamPipeline {
             case NonFatal(e) =>
               System.err.println(s"[stream] DLQ write failed (swallowed): ${e.getMessage}")
           }
-        } finally r.unpersist()
+        } finally outcomes.unpersist()
       }
       .start()
   }

@@ -169,8 +169,8 @@ class FtpSpec extends AnyFunSuite with BeforeAndAfterAll {
     // → DLQ class io, distinct from not_found
     val c = new graft.pipeline.transfer.FtpClient("127.0.0.1", server.port)
     c.connect(); c.login("u", "p")
-    val src = Files.write(local.resolve("taxo.txt"), "x".getBytes)
-    val e2 = intercept[java.io.IOException](c.stor(src, "/no/such/parent/taxo.txt"))
+    val e2 = intercept[java.io.IOException](
+      c.stor("/no/such/parent/taxo.txt")(_.write("x".getBytes)))
     assert(!e2.isInstanceOf[FileNotFoundException])
     assert(Model.ErrorType.of(e2) == Model.ErrorType.Io)
     c.quit(); c.close()

@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory}
+import graft.pipeline.transfer.{FtpPools, Stage, TransferBackend, TransferFactory}
 import graft.pipeline.testkit.FakeFtpServer
 
 /** E2E tier (top of the SURVEY §5 pyramid): full pipeline runs with
@@ -169,14 +169,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runOne: a non-fatal error is a DLQ row, a fatal one propagates; no temp file survives") {
-    // a backend whose download fails AFTER the temp file exists, with the
-    // error its host names: IOException is a transfer outcome, while an
+    // a backend whose download fails AFTER the temp file exists (it asks
+    // the stage for a path, which spills it), with the error its host
+    // names: IOException is a transfer outcome, while an
     // InterruptedException (a cancelled task) must reach the executor
     class Failing(error: () => Throwable) extends TransferBackend {
       def connect(): Unit = ()
       def disconnect(): Unit = ()
-      def download(remotePath: String, localPath: String): Unit = throw error()
-      def upload(localPath: String, remotePath: String): Unit = ()
+      def download(remotePath: String, stage: Stage): Unit = {
+        assert(Files.exists(stage.path()))
+        throw error()
+      }
+      def upload(stage: Stage, remotePath: String): Unit = ()
     }
     TransferFactory.register("failing-io",
       _ => new Failing(() => new java.io.IOException("disk gone")))
@@ -195,6 +199,59 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(staging() == before, "the failed transfer's temp file survived")
     intercept[InterruptedException](Pipeline.runOne(job("intr"), fpc))
     assert(staging() == before, "the interrupted transfer's temp file survived")
+  }
+
+  test("staging boundary: at the bound FTP→FTP stays in memory; one byte over spills, byte-exact") {
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(7)
+    def payload(n: Int) = { val b = new Array[Byte](n); rnd.nextBytes(b); b }
+    val bytes = Map("at" -> payload(Stage.MemoryBound), "over" -> payload(Stage.MemoryBound + 1))
+    Files.createDirectories(ftpRoot.resolve("bound"))
+    bytes.foreach { case (n, b) => Files.write(ftpRoot.resolve(s"bound/$n.bin"), b) }
+    def job(n: String) = FileTransferJob(s"bound-$n", Endpoint("fakeftp", s"/bound/$n.bin"),
+      Endpoint("fakeftp", s"/bound/out/$n.bin"))
+    // a temp file created and removed within one transfer leaves no trace
+    // in a listing, so watch the temp dir for creations instead
+    val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
+    val watcher = tmpDir.getFileSystem.newWatchService()
+    def created(waitMs: Long, enough: Seq[String] => Boolean): Seq[String] = {
+      val deadline = System.currentTimeMillis() + waitMs
+      var names = Seq.empty[String]
+      while (!enough(names) && System.currentTimeMillis() < deadline) {
+        val key = watcher.poll(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+        if (key != null) {
+          names ++= key.pollEvents().asScala.flatMap(e => Option(e.context)).map(_.toString)
+            .filter(n => n.startsWith("graft-transfer-") && n.endsWith(".tmp"))
+          key.reset()
+        }
+      }
+      names
+    }
+    try {
+      tmpDir.register(watcher, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+      val before = staging()
+      val at = Pipeline.runOne(job("at"), pc)
+      assert(at.status == "success" && at.bytes == Stage.MemoryBound, s"got $at")
+      assert(created(1000, _ => false).isEmpty, "a file at the bound created a temp file")
+      val over = Pipeline.runOne(job("over"), pc)
+      assert(over.status == "success" && over.bytes == Stage.MemoryBound + 1L, s"got $over")
+      assert(created(5000, _.nonEmpty).nonEmpty, "a file past the bound must spill to a temp file")
+      assert(staging() == before, "the spilled temp file survived")
+      bytes.foreach { case (n, b) =>
+        assert(Files.readAllBytes(ftpRoot.resolve(s"bound/out/$n.bin")).sameElements(b), n)
+      }
+    } finally watcher.close()
+  }
+
+  test("staging: local→local keeps the source's mtime (copy2 parity, local.py:70,93)") {
+    val src = writeSrc("in/mtime.txt", "keep my mtime")
+    val old = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    Files.setLastModifiedTime(src, old)
+    val dst = work.resolve("out/mtime.txt")
+    val r = Pipeline.runOne(FileTransferJob("mtime", Endpoint("src", src.toString),
+      Endpoint("dst", dst.toString)), pc)
+    assert(r.status == "success", s"got $r")
+    assert(Files.getLastModifiedTime(dst) == old)
   }
 
   test("p08 order-up FTP bulk: full corpus succeeds, temp audit pinned at 0") {

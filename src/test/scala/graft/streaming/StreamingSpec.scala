@@ -106,6 +106,99 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cfg.serverConfig("a").serverType == "local")
   }
 
+  test("one micro-batch runs 2 Spark jobs, scans its source once, pins its outputs") {
+    // a good job, a missing source, an unknown destination host and an
+    // unparseable line: every outcome class of the sink in one batch
+    val good = base.resolve("files/one/good.txt")
+    Files.createDirectories(good.getParent)
+    Files.write(good, "one pass".getBytes)
+    val ghost = base.resolve("files/one/ghost.txt")
+    val out = base.resolve("out/one")
+    val in = base.resolve("in-one"); Files.createDirectories(in)
+    val messages = Seq(
+      jobLine("one-ok", good.toString, s"$out/good.txt"),
+      jobLine("one-miss", ghost.toString, s"$out/ghost.txt"),
+      jobLine("one-host", good.toString, s"$out/host.txt").replace("\"dst\"", "\"nohost\""),
+      "{not json")
+    // one message per file: four input splits, one per core, as a
+    // partitioned topic feeds a consumer group
+    messages.zipWithIndex.foreach { case (m, i) =>
+      Files.write(in.resolve(s"b$i.jsonl"), m.getBytes("UTF-8")) }
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobsEnded.incrementAndGet()
+    }
+    // every distinct scan of the micro-batch's rows in the executed plans,
+    // cached plans included: rows read from the source = the sum of their
+    // output rows (a scan that is planned but never run adds 0)
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val sourceScans = java.util.Collections.synchronizedSet(
+      java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]))
+    val scans = new org.apache.spark.sql.util.QueryExecutionListener
+        with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      private def walk(p: SparkPlan): Unit = foreach(p) {
+        case s: RDDScanExec => sourceScans.add(s)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case _ =>
+      }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = walk(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(scans)
+    try {
+      val q = StreamPipeline.start(spark, in.toString, pc, "jobs-one",
+        base.resolve("r-one").toString, base.resolve("d-one").toString,
+        base.resolve("cp-one").toString)
+      q.awaitTermination()
+      // the listener bus is asynchronous: wait until every started job has
+      // ended and no job or scan arrived for 300 ms
+      val deadline = System.nanoTime() + 10000000000L
+      var seen = (-1, -1)
+      while ((jobs.get != jobsEnded.get || seen != ((jobs.get, sourceScans.size))) &&
+          System.nanoTime() < deadline) {
+        seen = (jobs.get, sourceScans.size)
+        Thread.sleep(300)
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(scans)
+    }
+    assert(jobs.get == 2, s"a micro-batch must run 2 Spark jobs, ran ${jobs.get}")
+    val rowsRead = sourceScans.toArray(Array.empty[SparkPlan])
+      .map(_.metrics("numOutputRows").value).sum
+    assert(rowsRead == messages.length,
+      s"the source must be scanned once: ${messages.length} messages, $rowsRead rows read")
+
+    // outputs as the 5-job sink wrote them
+    val notFound = s"FileNotFoundException: Source file not found: $ghost"
+    val noHost = "NoSuchElementException: Server type not found for hostname: nohost"
+    val results = spark.read.parquet(base.resolve("r-one").toString)
+      .select("job_id", "status", "error_type", "error", "bytes", "batch_id")
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(results == Seq(
+      s"one-host|dlq|config|$noHost|0|0",
+      s"one-miss|dlq|not_found|$notFound|0|0",
+      "one-ok|success|null|null|8|0"))
+    def job(id: String, src: Path, dstHost: String, dst: String) =
+      s"""{"job_id":"$id","source":{"hostname":"src","path":"$src"},""" +
+        s""""destination":{"hostname":"$dstHost","path":"$out/$dst"}}"""
+    val dlq = spark.read.parquet(base.resolve("d-one").toString)
+      .select("original_message", "error", "error_type", "retry_count", "dlq_topic", "batch_id")
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(dlq == Seq(
+      s"${job("one-host", good, "nohost", "host.txt")}|$noHost|config|0|jobs-one-dlq|0",
+      s"${job("one-miss", ghost, "dst", "ghost.txt")}|$notFound|not_found|0|jobs-one-dlq|0",
+      """{"raw":"{not json"}|Failed to parse message: {not json|parse|0|jobs-one-dlq|0"""))
+    assert(Files.readAllBytes(out.resolve("good.txt")).sameElements("one pass".getBytes))
+  }
+
   test("DLQ sink failure is swallowed, batch still commits (consumer.py:224-225)") {
     val src = base.resolve("files/sw.txt")
     Files.createDirectories(src.getParent)
