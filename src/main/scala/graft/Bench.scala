@@ -105,7 +105,9 @@ final class CacheEvents extends org.apache.spark.scheduler.SparkListener {
 
 /** Per-slot stage anatomy, the record's answer to "where did this slot's
   * time go": jobs, stages, tasks, Σ task run time, the longest task,
-  * shuffle and spill volume, effective parallelism and serial stages.
+  * shuffle and spill volume, effective parallelism, serial stages, and
+  * the Janino compiles the drain paid ([[compiled]]): a query that
+  * recompiles its code on every run shows here.
   *
   * Attribution is by slot, not by timing: Bench sets [[StageAnatomy.Key]]
   * as a local property around each measured drain ([[StageAnatomy.within]]).
@@ -126,7 +128,7 @@ final class StageAnatomy extends org.apache.spark.scheduler.SparkListener {
   import org.apache.spark.scheduler._
   private final class Slot {
     var jobs = 0
-    var tasks, runMs, maxMs, readB, writeB, spillB = 0L
+    var tasks, runMs, maxMs, readB, writeB, spillB, compiles, compileNs = 0L
     // (stage, attempt) -> (Σ run ms, longest task ms)
     val stages = scala.collection.mutable.Map.empty[(Int, Int), (Long, Long)]
   }
@@ -144,6 +146,12 @@ final class StageAnatomy extends org.apache.spark.scheduler.SparkListener {
     s.stages((stage, attempt)) = (sum + runMs, math.max(max, runMs))
   }
 
+  /** Adds a drain's compile deltas ([[StageAnatomy.compiles]]) to `slot`. */
+  def compiled(slot: String, count: Long, ns: Long): Unit = synchronized {
+    val s = slots.getOrElseUpdate(slot, new Slot)
+    s.compiles += count; s.compileNs += ns
+  }
+
   /** The slot's anatomy over a drain of `wallSec` on `cores` cores. */
   def summary(slot: String, wallSec: Double, cores: Int)
       : StageAnatomy.Summary = synchronized {
@@ -153,7 +161,7 @@ final class StageAnatomy extends org.apache.spark.scheduler.SparkListener {
     StageAnatomy.Summary(s.jobs, s.stages.size, s.tasks, s.runMs / 1e3,
       s.maxMs / 1e3, s.readB / 1e6, s.writeB / 1e6, s.spillB / 1e6,
       s.runMs / 1e3 / (math.max(wallSec, 1e-3) * cores),
-      serial.size, serial.map(_._1).sum / 1e3)
+      serial.size, serial.map(_._1).sum / 1e3, s.compiles, s.compileNs / 1e9)
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -179,13 +187,20 @@ object StageAnatomy {
   final case class Summary(jobs: Int, stages: Int, tasks: Long,
       taskRunS: Double, taskMaxS: Double, shuffleReadMb: Double,
       shuffleWriteMb: Double, spillMb: Double, effParallelism: Double,
-      serialStages: Int, serialS: Double)
+      serialStages: Int, serialS: Double, compiles: Long, compileS: Double)
 
   /** Runs `body` with every job it submits attributed to `slot`. */
   def within[T](sc: org.apache.spark.SparkContext, slot: String)(body: => T): T = {
     sc.setLocalProperty(Key, slot)
     try body finally sc.setLocalProperty(Key, null)
   }
+
+  /** The JVM's Janino compiles so far: (classes, nanoseconds). A codegen
+    * cache hit adds to neither, so the delta over a drain is what that
+    * drain compiled. */
+  def compiles: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 }
 
 object Bench {
@@ -477,6 +492,7 @@ object Bench {
               if (family == "s") graft.streaming.StreamDrainStats.reset()
               val bt0 = graft.operators.SharedBuilds.timingCount
               val key = s"$name#$i"
+              val (cg0, cgNs0) = StageAnatomy.compiles
               val sec = StageAnatomy.within(spark.sparkContext, key) {
                 val t0 = System.nanoTime()
                 // release stays INSIDE the timed region (floor
@@ -487,6 +503,8 @@ object Bench {
                 drain(spark, name)
                 (System.nanoTime() - t0) / 1e9
               }
+              val (cg1, cgNs1) = StageAnatomy.compiles
+              anatomy.compiled(key, cg1 - cg0, cgNs1 - cgNs0)
               val bSec = graft.operators.SharedBuilds
                 .timingsSince(bt0).map(_._2).sum
               val split =
@@ -681,7 +699,8 @@ object Bench {
         "task_max_s" -> fmt(a.taskMaxS), "shuffle_read_mb" -> fmt(a.shuffleReadMb),
         "shuffle_write_mb" -> fmt(a.shuffleWriteMb), "spill_mb" -> fmt(a.spillMb),
         "eff_parallelism" -> fmt(a.effParallelism),
-        "serial_stages" -> a.serialStages.toString, "serial_s" -> fmt(a.serialS)))
+        "serial_stages" -> a.serialStages.toString, "serial_s" -> fmt(a.serialS),
+        "compiles" -> a.compiles.toString, "compile_s" -> fmt(a.compileS)))
     })
     val fullWritten =
       try {

@@ -37,9 +37,10 @@ import graft.pipeline.transfer.{FtpPools, Stage, TransferBackend, TransferFactor
 object Pipeline {
 
   /** Parse and validate each message once: one row per message with the
-    * ParsedMessage columns. A valid job has job_id defaulted to a UUID
-    * (message.py:94) and a null `original_message`; a failure carries the
-    * DLQ `original_message` and `error`.
+    * ParsedMessage columns. A valid job has a null `original_message` and
+    * its `job_id` as sent (null if missing: the transfer map and [[parse]]
+    * default it to a UUID, message.py:94); a failure carries the DLQ
+    * `original_message` and `error`.
     *
     * Error messages mirror the reference:
     *  - unparseable JSON → "Failed to parse message: ..." with the raw
@@ -62,7 +63,7 @@ object Pipeline {
     val invalid = corrupt || missingSource || missingDest
 
     parsed.select(
-      when(!invalid, coalesce(col("job_id"), expr("uuid()"))).as("job_id"),
+      when(!invalid, col("job_id")).as("job_id"),
       col("source"), col("destination"),
       when(corrupt, to_json(struct(col("value").as("raw"))))
         .when(invalid, to_json(struct(col("job_id"), col("source"), col("destination"))))
@@ -79,18 +80,22 @@ object Pipeline {
     * Returns (jobs, dlqInput) where `jobs` has columns
     * (job_id, source, destination) and `dlqInput` matches Model.dlqSchema
     * minus the timestamp (stamped at sink time) plus error_type. The
-    * rules are [[classify]]'s.
+    * rules are [[classify]]'s; a missing job_id becomes `uuid()`.
     */
   def parse(raw: DataFrame): (DataFrame, DataFrame) = {
     val messages = classify(raw)
     val failed = col("original_message").isNotNull
-    (messages.filter(!failed).select("job_id", "source", "destination"),
+    (messages.filter(!failed)
+      .select(coalesce(col("job_id"), expr("uuid()")).as("job_id"), col("source"), col("destination")),
       messages.filter(failed).select(col("original_message"), col("error"),
         lit(Model.ErrorType.Parse).as("error_type")))
   }
 
-  /** The transfer map (T1) over parsed messages: a job runs [[runOne]], a
-    * parse failure becomes its DLQ outcome untouched.
+  /** The transfer map (T1) over parsed messages: a job runs [[runOne]],
+    * with a missing job_id defaulted to a UUID here rather than by
+    * `uuid()` (whose per-query seed is a literal in the generated code,
+    * so each micro-batch would compile it anew); a parse failure becomes
+    * its DLQ outcome untouched.
     *
     * Idempotence note (SURVEY §7.4): both backends overwrite on upload
     * (STOR / REPLACE_EXISTING), so task retries and micro-batch replays
@@ -98,7 +103,8 @@ object Pipeline {
     * of the reference (consumer.py:123,137) is matched by at-least-once
     * execution + idempotent effects.
     */
-  def execute(messages: Dataset[ParsedMessage], pc: PipelineConfig): Dataset[Outcome] = {
+  private def execute(messages: Dataset[ParsedMessage], splits: Int,
+      pc: PipelineConfig): Dataset[Outcome] = {
     val spark = messages.sparkSession
     import spark.implicits._
     // Fan the side-effecting map out across all cores — the Spark analogue
@@ -108,14 +114,15 @@ object Pipeline {
     // round-robin repartition is the balanced assignment Kafka gives a
     // consumer group. Skipped when the source already has enough splits.
     val target = spark.sparkContext.defaultParallelism
-    val spread =
-      if (messages.rdd.getNumPartitions >= target) messages
-      else messages.repartition(target)
+    val spread = if (splits >= target) messages else messages.repartition(target)
     spread.mapPartitions(_.map { m =>
       if (m.original_message != null)
         Outcome(TransferResult(null, null, null, null, null, status = "dlq", error = m.error,
           error_type = Model.ErrorType.Parse, bytes = 0L, duration_ms = 0L), m.original_message)
-      else Outcome(runOne(FileTransferJob(m.job_id, m.source, m.destination), pc), null)
+      else {
+        val id = if (m.job_id != null) m.job_id else java.util.UUID.randomUUID().toString
+        Outcome(runOne(FileTransferJob(id, m.source, m.destination), pc), null)
+      }
     })
   }
 
@@ -164,12 +171,16 @@ object Pipeline {
   /** The outcome frame of `raw`: one Outcome row per message, persisted
     * (lazily) so that the transfer map runs exactly once however many
     * frames — results, DLQ, status counts — later read it. Its cache is
-    * the caller's to free (`unpersist`, or the query boundary). */
+    * the caller's to free (`unpersist`, or the query boundary).
+    *
+    * The parse is narrow, so the fan-out reads the split count of `raw`:
+    * that plans the source only (for a micro-batch, a scan of the batch's
+    * already-planned rows), never the parsed frame a second time. */
   def outcomes(raw: DataFrame, pc: PipelineConfig): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    execute(classify(raw).as[ParsedMessage], pc).toDF()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    execute(classify(raw).as[ParsedMessage], raw.queryExecution.toRdd.getNumPartitions, pc)
+      .toDF().persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The transfer results of an outcome frame: every row but the parse
@@ -187,10 +198,18 @@ object Pipeline {
     struct(col("source_hostname").as("hostname"), col("source_path").as("path")).as("source"),
     struct(col("dest_hostname").as("hostname"), col("dest_path").as("path")).as("destination")))
 
-  /** Stamps DLQ rows with a UTC timestamp and retry_count=0 (never
-    * incremented — reference parity, message.py:112-130). */
+  /** The wall clock, read as each row is computed. `current_timestamp()`
+    * is folded into a literal of the query's start time, which the
+    * generated code inlines, so every micro-batch would compile its DLQ
+    * writer anew; a UDF's code is the same in every batch. */
+  private val now = udf(() => java.time.Instant.now())
+
+  /** Stamps DLQ rows with a UTC timestamp, read per row when the row is
+    * written (the reference stamps each record as it builds it), and
+    * retry_count=0 (never incremented — reference parity,
+    * message.py:112-130). */
   private def stamped(dlq: DataFrame): DataFrame =
-    dlq.withColumn("timestamp", current_timestamp())
+    dlq.withColumn("timestamp", now())
       .withColumn("retry_count", lit(0))
 
   /** The DLQ records of an outcome frame (E1/E2, message.py:132-153):
@@ -252,7 +271,7 @@ object Pipeline {
     val replayable = dlq.filter(col("error_type") =!= lit(Model.ErrorType.Parse))
     val unrecoverable = dlq.filter(col("error_type") === lit(Model.ErrorType.Parse))
       .withColumn("retry_count", col("retry_count") + 1)
-      .withColumn("timestamp", current_timestamp())
+      .withColumn("timestamp", now())
     val retries = replayable.groupBy("original_message")
       .agg(max("retry_count").as("prev_retries"))
     val o = outcomes(replayable.select(col("original_message").as("value")), pc)

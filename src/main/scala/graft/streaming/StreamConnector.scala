@@ -72,16 +72,17 @@ object StreamConnector {
         .selectExpr("CAST(value AS STRING) AS value") // utf-8 decode parity
   }
 
+  /** The `batch_id=<id>` partition directory of one micro-batch under a
+    * file sink's `dir`: a reader of `dir` sees `batch_id` as a partition
+    * column, and overwriting the directory replaces exactly that batch. */
+  def batchPartition(dir: String, batchId: Long): String = s"$dir/batch_id=$batchId"
+
   /** K3: write one micro-batch's DLQ records. File: per-batch partition
     * overwrite, replay-idempotent. Kafka: the whole record JSON-serialized
     * into `value` (message.py:155-166 to_json parity). */
   def writeDlq(dlq: DataFrame, sink: DlqSink, batchId: Long): Unit = sink match {
     case FileDlqSink(dir) =>
-      dlq.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(dir)
+      dlq.write.mode("overwrite").parquet(batchPartition(dir, batchId))
     case k: KafkaDlqSink =>
       dlq.select(to_json(struct(dlq.columns.map(col).toSeq: _*)).as("value"))
         .write.format("kafka").options(sinkOptions(k)).save()

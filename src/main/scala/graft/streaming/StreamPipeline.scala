@@ -68,16 +68,15 @@ object StreamPipeline {
         val outcomes = Pipeline.outcomes(batch, pc)
         try {
           // Idempotent on retry: each micro-batch owns its batch_id=<id>
-          // partition, and dynamic partition overwrite REPLACES exactly
+          // partition, and an overwrite of that directory REPLACES exactly
           // that partition — a batch replayed after a crash between the
           // sink write and the checkpoint commit converges instead of
           // appending duplicate rows. (Transfers themselves are already
-          // idempotent overwrites; this closes the sink-side gap.)
-          Pipeline.resultsOf(outcomes).withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(resultsDir)
+          // idempotent overwrites; this closes the sink-side gap.) The
+          // batch id is in the path, not a column: a `lit(batchId)` would
+          // make each batch's writer new code to compile.
+          Pipeline.resultsOf(outcomes).write.mode("overwrite")
+            .parquet(StreamConnector.batchPartition(resultsDir, batchId))
           // DLQ send failures are swallowed-and-logged, never fatal to the
           // batch (consumer.py:224-225, pinned by test_consumer.py:346-357).
           try StreamConnector.writeDlq(

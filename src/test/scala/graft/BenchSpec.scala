@@ -60,6 +60,12 @@ class BenchSpec extends AnyFunSuite {
     assert(a.summary("one", 1.0, 4).serialStages == 2)
     // a slot that never ran a task reads as zeros, not a failure
     assert(a.summary("absent", 1.0, 4).tasks == 0)
+    // compile deltas add up per slot
+    a.compiled("wide", 3, 250000000L)
+    a.compiled("wide", 1, 50000000L)
+    val cg = a.summary("wide", 2.0, 4)
+    assert(cg.compiles == 4 && math.abs(cg.compileS - 0.3) < 1e-9)
+    assert(a.summary("one", 1.0, 4).compiles == 0)
   }
 
   test("suspect triggers: >2x floor always fires; 1.5-2x band needs GC or excess") {
@@ -199,7 +205,7 @@ class BenchSpec extends AnyFunSuite {
     // all three phases, every timed build tag, 10 serial slots
     val names = (1 to 449).map(i => f"q$i%03d")
     val serial = StageAnatomy.Summary(54, 120, 900, 99.99, 88.88, 1.0, 1.0,
-      0.0, 0.08, 13, 123.45)
+      0.0, 0.08, 13, 123.45, 9999, 99.99)
     val tags = Seq("shingles", "corpus-shingles", "bands", "corpus-bands",
       "pairs", "cc-labels", "grams", "bpe-words", "bpe-merges", "bm25",
       "copurchase-items", "copurchase-pairs", "word8-grams", "word8-grams-pos")

@@ -25,6 +25,21 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(s.conf.get(key) == "outer")
   }
 
+  test("a GraftSession's file: FileSystem is graft's, whatever the JVM cached first") {
+    import org.apache.hadoop.fs.FileSystem
+    val root = java.net.URI.create("file:///")
+    def sessionFs = FileSystem.get(root, SparkSpec.spark.sessionState.newHadoopConf())
+    // Hadoop's FileSystem cache is JVM-wide and ignores the conf that asks:
+    // put the classpath's default `file:` FileSystem there, as a bare
+    // Hadoop call made before any GraftSession would
+    sessionFs.close()
+    val bare = FileSystem.get(root, new org.apache.hadoop.conf.Configuration())
+    assert(!bare.isInstanceOf[NioLocalFileSystem])
+    assert(sessionFs eq bare)
+    GraftSession.local(4, "graft-test")
+    assert(sessionFs.isInstanceOf[NioLocalFileSystem])
+  }
+
   test("q88 keeps its recursion row limit off the caller's session") {
     val s = SparkSpec.spark.newSession()
     val key = "spark.sql.cteRecursionRowLimit"

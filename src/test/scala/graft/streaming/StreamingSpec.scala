@@ -199,6 +199,102 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.readAllBytes(out.resolve("good.txt")).sameElements("one pass".getBytes))
   }
 
+  /** Runs a stream over a fresh input twice on one checkpoint: batch 0,
+    * then one more message file resumed as batch 1, the steady state
+    * (a new query, so a new cloned session). Returns the second run's
+    * `measure` reading and the results directory. */
+  private def resumedBatch[M](name: String)(measure: (=> Unit) => M): (M, Path) = {
+    val src = base.resolve(s"files/$name.txt")
+    Files.createDirectories(src.getParent)
+    Files.write(src, name.getBytes)
+    val in = base.resolve(s"in-$name"); Files.createDirectories(in)
+    val (results, dlq) = (base.resolve(s"r-$name"), base.resolve(s"d-$name"))
+    def run(batch: Int): Unit = {
+      Files.write(in.resolve(s"b$batch.jsonl"), Seq(
+        jobLine(s"$name-$batch", src.toString, base.resolve(s"out/$name-$batch.txt").toString),
+        "{not json").mkString("\n").getBytes("UTF-8"))
+      val q = StreamPipeline.start(spark, in.toString, pc, s"jobs-$name",
+        results.toString, dlq.toString, base.resolve(s"cp-$name").toString)
+      q.awaitTermination()
+    }
+    run(0)
+    val m = measure(run(1))
+    assert(spark.read.parquet(results.toString).select("batch_id").distinct().count() == 2)
+    (m, results)
+  }
+
+  test("a resumed micro-batch compiles no code: its generated code is batch 0's") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (compiles, _) = resumedBatch("codegen") { batch =>
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      batch
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+    }
+    assert(compiles == 0, s"batch 1 compiled $compiles classes that batch 0 had compiled")
+  }
+
+  test("a micro-batch starts no process; its files carry Hadoop's permissions") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+    // a Recording, not a RecordingStream: stop + dump hands over every
+    // event of the window, where a stream delivers on its own schedule
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = base.resolve("forks.jfr")
+    val (_, results) = resumedBatch("forks") { batch =>
+      rec.start()
+      try batch finally { rec.stop(); rec.dump(dump); rec.close() }
+    }
+    // JVM housekeeping that may land in the window is not the batch's: a
+    // `Cleaner-*` thread deletes an unreachable earlier session's artifact
+    // directory (`rm -rf`) when the GC collects it, and the heartbeater
+    // probes the page size (`getconf`) once per JVM
+    val housekeeping = Seq("Cleaner-", "driver-heartbeater")
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .filterNot(e => Option(e.getThread).map(_.getJavaName)
+        .exists(t => housekeeping.exists(t.startsWith)))
+      .map(_.getString("command"))
+    assert(starts.size == 0, s"a micro-batch started ${starts.size} processes: ${starts.take(5)}")
+
+    // permission parity: Hadoop's own RawLocalFileSystem under the same conf
+    // (and so the same umask) creates the mode bits graft's sets without chmod
+    val conf = spark.sessionState.newHadoopConf()
+    val hadoop = new RawLocalFileSystem()
+    hadoop.initialize(java.net.URI.create("file:///"), conf)
+    val ref = base.resolve("perm-ref")
+    hadoop.mkdirs(new HPath(ref.resolve("dir").toUri))
+    hadoop.create(new HPath(ref.resolve("file").toUri), true).close()
+    def mode(p: Path) = java.nio.file.attribute.PosixFilePermissions.toString(
+      Files.getPosixFilePermissions(p))
+    val partDir = results.resolve("batch_id=1")
+    val part = Files.list(partDir).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val offset = base.resolve("cp-forks/offsets/1")
+    assert(mode(part) == mode(ref.resolve("file")))
+    assert(mode(offset) == mode(ref.resolve("file")))
+    assert(mode(partDir) == mode(ref.resolve("dir")))
+  }
+
+  test("a job without job_id gets a UUID job_id through the stream sink (message.py:94)") {
+    val src = base.resolve("files/noid.txt")
+    Files.createDirectories(src.getParent)
+    Files.write(src, "no id".getBytes)
+    val in = base.resolve("in-noid"); Files.createDirectories(in)
+    Files.write(in.resolve("b.jsonl"),
+      (s"""{"source":{"hostname":"src","path":"$src"},""" +
+        s""""destination":{"hostname":"dst","path":"${base.resolve("out/noid.txt")}"}}""")
+        .getBytes("UTF-8"))
+    val q = StreamPipeline.start(spark, in.toString, pc, "jobs-noid",
+      base.resolve("r-noid").toString, base.resolve("d-noid").toString,
+      base.resolve("cp-noid").toString)
+    q.awaitTermination()
+    val Array(row) = spark.read.parquet(base.resolve("r-noid").toString)
+      .select("job_id", "status").collect()
+    assert(row.getString(1) == "success")
+    assert(java.util.UUID.fromString(row.getString(0)) != null) // parses as a UUID
+    assert(Files.readAllBytes(base.resolve("out/noid.txt")).sameElements("no id".getBytes))
+  }
+
   test("DLQ sink failure is swallowed, batch still commits (consumer.py:224-225)") {
     val src = base.resolve("files/sw.txt")
     Files.createDirectories(src.getParent)
